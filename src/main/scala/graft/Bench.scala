@@ -5,9 +5,11 @@ import graft.local.Graphs
 import graft.spark.{SparkFrontier, SparkCrawler, ScoreStrategy, GraphTables}
 
 /** Benchmark driver. Headline = `get_next_requests` throughput (URLs/sec)
-  * of a full BFS crawl over a synthetic multi-host frontier, run at two
-  * parallelism levels (local[8] vs local[32], shuffle partitions scaled
-  * with cores) to evidence the N→4N scaling-efficiency criterion, plus
+  * of a full BFS crawl over a synthetic multi-host frontier, run at three
+  * parallelism levels — local[lo] with lo = max(1, cpus/8), local[4·lo]
+  * (at most cpus) and local[cpus], with `cpus` from SPARK_GRAFT_CPUS and
+  * shuffle partitions scaled with cores — to evidence the N→4N
+  * scaling-efficiency criterion at the two lower levels, plus
   * per-operator timings of the oracle-checked query suite.
   * Reference baseline: a single Frontera spider sustains ≈20 pages/s
   * (docs/source/topics/cluster-setup.rst:12). */
@@ -39,14 +41,14 @@ object Bench {
     val frontier = new SparkFrontier(spark, root,
       partitions = spark.sparkContext.defaultParallelism,
       stateBuckets = spark.sparkContext.defaultParallelism,
-      strategy = ScoreStrategy.BFS, globalOrder = false,
-      asyncDequeueCommit = true)
+      strategy = ScoreStrategy.BFS, globalOrder = false)
     val t0 = System.nanoTime()
     frontier.addSeeds(graph.seeds)
     val crawler = new SparkCrawler(frontier, web, mnrPerPartition,
       collectSequence = false, verifyPayloadOnFetch = true)
     crawler.run()
     val sec = (System.nanoTime() - t0) / 1e9
+    frontier.awaitQueueCommit()
     web.unpersist()
     deleteRec(new java.io.File(root))
     (crawler.urlsCrawled, sec, crawler.payloadFailures)
@@ -142,8 +144,7 @@ object Bench {
     val frontier = new SparkFrontier(spark, root,
       partitions = storeParts,
       stateBuckets = storeParts,
-      strategy = ScoreStrategy.BFS, globalOrder = false,
-      asyncDequeueCommit = true)
+      strategy = ScoreStrategy.BFS, globalOrder = false)
     frontier.bulkSchedule(spark.range(n).select(
       concat(lit("http://host"), $"id" % hosts, lit(".example/p/"), $"id").as("url"),
       (($"id" % 100).cast("double") / 100.0).as("score"),
@@ -170,6 +171,7 @@ object Bench {
             graft.images.ImageSynth.rowFor(url, depth, 64, 64)) }
         .filter(!_).count()
       wb.unpersist()
+      wf.awaitQueueCommit()
       deleteRec(new java.io.File(wroot))
     }
     val t0 = System.nanoTime()
@@ -202,6 +204,7 @@ object Bench {
       continue = cnt > 0
     }
     val sec = (System.nanoTime() - t0) / 1e9
+    frontier.awaitQueueCommit()
     deleteRec(new java.io.File(root))
     (crawled, sec, failures, scanFraction)
   }
@@ -327,6 +330,7 @@ object Bench {
       batch.count()
       batch.unpersist()
       val frac = f.lastScan.scannedPaths.toDouble / f.lastScan.totalPaths
+      f.awaitQueueCommit()
       s.stop()
       deleteRec(new java.io.File(root))
       frac

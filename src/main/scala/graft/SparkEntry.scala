@@ -49,15 +49,13 @@ object SparkEntry {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-crawl").toString
     val graph = Graphs.site01
-    // asyncDequeueCommit overlaps each epoch's residue-rewrite commit
-    // with the fetch/collect stage — an engine feature, same sequence
     // useBloom off: on a <=30-row states table the per-epoch sidecar
     // build+persist (2 Spark actions) buys nothing over the exact
     // anti-join fallback it fronts — identical sequence either way; the
     // bloom path stays exercised by BloomSeenSpec and the bench crawls
     val frontier = new SparkFrontier(spark, root, partitions = 4,
       stateBuckets = 4, strategy = ScoreStrategy.DFS, globalOrder = true,
-      asyncDequeueCommit = true, useBloom = false)
+      useBloom = false)
     frontier.addSeeds(graph.seeds)
     val crawler = new SparkCrawler(frontier, GraphTables.webDF(spark, graph), 10)
     crawler.run().zipWithIndex.toDF("url", "crawl_pos")
@@ -76,8 +74,7 @@ object SparkEntry {
     val root = java.nio.file.Files.createTempDirectory("graft-disc").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.Basic, globalOrder = true,
-      ordering = graft.local.QueueOrdering.ScoreCreatedDesc,
-      asyncDequeueCommit = true, useBloom = false,
+      ordering = graft.local.QueueOrdering.ScoreCreatedDesc, useBloom = false,
       discovery = Some(DiscoveryConfig(maxPagesPerDomain = 100,
         sameDomainOnly = true, justifyScores = true)))
     val robotsBody =
@@ -106,7 +103,7 @@ object SparkEntry {
     val graph = Graphs.site02
     val frontier = new SparkFrontier(spark, root, partitions = 4,
       stateBuckets = 4, strategy = ScoreStrategy.BFS, globalOrder = true,
-      asyncDequeueCommit = true, useBloom = false)
+      useBloom = false)
     frontier.addSeeds(graph.seeds)
     val crawler = new SparkCrawler(frontier, GraphTables.webDF(spark, graph), 100)
     crawler.run().zipWithIndex.toDF("url", "crawl_pos")

@@ -457,12 +457,15 @@ object ImageSynth {
       val len = be32(pos)
       val typ = be32(pos + 4)
       val dataStart = pos + 8
+      // a hostile length must fail here: a negative one would move `pos`
+      // back or nowhere (an endless walk), an overlong one (payload + CRC
+      // past the end) would step outside the file
+      if (len < 0 || dataStart.toLong + len + 4 > bytes.length) return null
       if (typ == 0x49454E44) { // IEND
         done = true
       } else if (typ == 0x49444154) { // IDAT
         var i = dataStart
         val end = dataStart + len
-        if (end > bytes.length) return null
         if (!zlibHeaderSeen) {
           if (len < 2 || u8(i) != 0x78) return null
           i += 2

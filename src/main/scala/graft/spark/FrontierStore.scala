@@ -4,6 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths, Path, StandardCopyOption, StandardOpenOption}
 import java.nio.channels.FileChannel
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
 
 /** Bucket-partitioned, manifest-committed table — Iceberg-style semantics
   * on plain parquet (this environment ships no Iceberg runtime; in
@@ -61,22 +65,33 @@ final class BucketStore(val root: String, val bucketCol: String,
   def readManifest(): Manifest = {
     val v = currentVersion
     if (v < 0) return Manifest(-1, -1, Map.empty, Map.empty)
-    val json = ujsonParse(Files.readString(manifestPath(v)))
-    Manifest(v,
-      json("epoch").toLong,
-      json("buckets").obj.map { case (k, paths) =>
-        k.toInt -> paths.arr.map(_.str)
-      },
-      json("counters").obj.map { case (k, n) => k -> n.toLong },
-      json.obj.get("rows").map(_.obj.map { case (k, n) => k -> n.toLong })
-        .getOrElse(Map.empty),
-      json.obj.get("bucketv").map(_.obj.map { case (k, n) => k.toInt -> n.toLong })
-        .getOrElse(Map.empty),
-      json.obj.get("props").map(_.obj.map { case (k, s) => k -> s.str })
-        .getOrElse(Map.empty),
-      json.obj.get("pathmax").map(_.obj.map { case (k, n) => k -> n.toLong })
-        .getOrElse(Map.empty))
+    val file = manifestPath(v)
+    parseManifest(v, Files.readString(file), file.toString)
   }
+
+  /** Manifest `v` from its JSON; a malformed document fails naming `file`.
+    * Keys added after the first format (rows, bucketv, props, pathmax)
+    * read as empty when absent. */
+  private[spark] def parseManifest(v: Long, json: String, file: String): Manifest =
+    try {
+      val j = BucketStore.json.readTree(json)
+      def fields(k: String): List[(String, JsonNode)] =
+        Option(j.get(k)).toList.flatMap(_.properties().asScala.map(e => e.getKey -> e.getValue))
+      def longs(k: String): Map[String, Long] = fields(k).map { case (f, n) => f -> n.asLong() }.toMap
+      Manifest(v,
+        j.required("epoch").asLong(),
+        j.required("buckets").properties().asScala.map { e =>
+          e.getKey.toInt -> e.getValue.asScala.map(_.asText()).toList
+        }.toMap,
+        j.required("counters").properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap,
+        longs("rows"),
+        longs("bucketv").map { case (k, n) => k.toInt -> n },
+        fields("props").map { case (f, n) => f -> n.asText() }.toMap,
+        longs("pathmax"))
+    } catch {
+      case NonFatal(e) =>
+        throw new IllegalStateException(s"unreadable manifest $file: ${e.getMessage}", e)
+    }
 
   /** Band index of a leaf path (banded stores only); -1 marks a LEGACY
     * path written before the store was banded (no band= level) — the
@@ -89,28 +104,26 @@ final class BucketStore(val root: String, val bucketCol: String,
     case None => 0
   }
 
-  // -- minimal JSON (flat, known shape) -------------------------------
-  private def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  /** The manifest document: keys in a fixed order, maps sorted by key. */
+  private[spark] def manifestJson(m: Manifest): String = {
+    def obj(kvs: Seq[(String, Any)]): java.util.Map[String, Any] = {
+      val o = new java.util.LinkedHashMap[String, Any]
+      kvs.foreach { case (k, v) => o.put(k, v) }
+      o
+    }
+    def byKey(kvs: Map[String, _]) = obj(kvs.toSeq.sortBy(_._1))
+    def byBucket(kvs: Map[Int, _]) =
+      obj(kvs.toSeq.sortBy(_._1).map { case (k, v) => k.toString -> v })
+    BucketStore.json.writeValueAsString(obj(Seq(
+      "epoch" -> m.epoch,
+      "buckets" -> byBucket(m.bucketPaths.map { case (k, ps) => k -> ps.asJava }),
+      "counters" -> byKey(m.counters), "rows" -> byKey(m.pathRows),
+      "bucketv" -> byBucket(m.bucketVersions), "props" -> byKey(m.props),
+      "pathmax" -> byKey(m.pathMax))))
+  }
+
   private def writeManifest(m: Manifest): Unit = {
-    val bucketsJson = m.bucketPaths.toSeq.sortBy(_._1).map { case (k, ps) =>
-      s"${jstr(k.toString)}:[${ps.map(jstr).mkString(",")}]"
-    }.mkString("{", ",", "}")
-    val countersJson = m.counters.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${jstr(k)}:$v"
-    }.mkString("{", ",", "}")
-    val rowsJson = m.pathRows.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${jstr(k)}:$v"
-    }.mkString("{", ",", "}")
-    val bvJson = m.bucketVersions.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${jstr(k.toString)}:$v"
-    }.mkString("{", ",", "}")
-    val propsJson = m.props.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${jstr(k)}:${jstr(v)}"
-    }.mkString("{", ",", "}")
-    val pathMaxJson = m.pathMax.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${jstr(k)}:$v"
-    }.mkString("{", ",", "}")
-    val json = s"""{"epoch":${m.epoch},"buckets":$bucketsJson,"counters":$countersJson,"rows":$rowsJson,"bucketv":$bvJson,"props":$propsJson,"pathmax":$pathMaxJson}"""
+    val json = manifestJson(m)
     Files.createDirectories(manifestPath(m.version).getParent)
     Files.writeString(manifestPath(m.version), json)
     val tmp = Paths.get(root, s"_CURRENT.tmp${m.version}")
@@ -400,70 +413,13 @@ final class BucketStore(val root: String, val bucketCol: String,
       writeManifest(Manifest(m.version + 1, epoch, m.bucketPaths, counters,
         m.pathRows, m.bucketVersions, m.props ++ props, m.pathMax))
     }
-
-  // -- tiny JSON parser for the manifest shape we write ----------------
-  private def ujsonParse(s: String): JVal = new JParser(s).parseValue()
-  private[spark] sealed trait JVal {
-    def obj: Map[String, JVal] = this.asInstanceOf[JObj].m
-    def arr: List[JVal] = this.asInstanceOf[JArr].l
-    def str: String = this.asInstanceOf[JStr].s
-    def toLong: Long = this.asInstanceOf[JNum].n.toLong
-    def apply(k: String): JVal = obj(k)
-  }
-  private[spark] case class JObj(m: Map[String, JVal]) extends JVal
-  private[spark] case class JArr(l: List[JVal]) extends JVal
-  private[spark] case class JStr(s: String) extends JVal
-  private[spark] case class JNum(n: Double) extends JVal
-  private final class JParser(s: String) {
-    private var i = 0
-    private def ws(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    def parseValue(): JVal = {
-      ws()
-      s.charAt(i) match {
-        case '{' =>
-          i += 1; ws()
-          val m = scala.collection.mutable.LinkedHashMap.empty[String, JVal]
-          if (s.charAt(i) == '}') { i += 1; return JObj(m.toMap) }
-          var done = false
-          while (!done) {
-            ws()
-            val k = parseValue().str
-            ws(); require(s.charAt(i) == ':'); i += 1
-            m(k) = parseValue()
-            ws()
-            if (s.charAt(i) == ',') i += 1 else { require(s.charAt(i) == '}'); i += 1; done = true }
-          }
-          JObj(m.toMap)
-        case '[' =>
-          i += 1; ws()
-          val l = scala.collection.mutable.ListBuffer.empty[JVal]
-          if (s.charAt(i) == ']') { i += 1; return JArr(l.toList) }
-          var done = false
-          while (!done) {
-            l.append(parseValue())
-            ws()
-            if (s.charAt(i) == ',') i += 1 else { require(s.charAt(i) == ']'); i += 1; done = true }
-          }
-          JArr(l.toList)
-        case '"' =>
-          i += 1
-          val sb = new StringBuilder
-          while (s.charAt(i) != '"') {
-            if (s.charAt(i) == '\\') { i += 1 }
-            sb.append(s.charAt(i)); i += 1
-          }
-          i += 1
-          JStr(sb.toString)
-        case _ =>
-          val start = i
-          while (i < s.length && (s.charAt(i).isDigit || "+-.eE".contains(s.charAt(i)))) i += 1
-          JNum(s.substring(start, i).toDouble)
-      }
-    }
-  }
 }
 
 object BucketStore {
+  /** manifest JSON (thread-safe once built); stores written before the
+    * writer escaped control characters still read */
+  private[spark] val json = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
   private val monitors = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def monitorFor(root: String): Object =
     monitors.computeIfAbsent(root, _ => new Object)

@@ -49,13 +49,8 @@ final class SparkCrawler(
   var epochsRun = 0
   var urlsCrawled = 0L
   var payloadFailures = 0L
-  /** wall-seconds of the last epoch's phases (probe attribution only):
-    * dequeue+fetch/verify action vs the processCrawled commit pipeline */
-  @volatile var lastFetchSec = 0.0
-  @volatile var lastProcessSec = 0.0
 
   def crawlOnce(epochNo: Long): Boolean = {
-    val tEpoch0 = System.nanoTime()
     val batch = frontier.nextBatch(maxNextRequests, atEpoch = epochNo)
     // domain buckets of the batch's hosts, computed for free from the
     // collected sequence — lets processCrawled prune its per-epoch
@@ -65,15 +60,8 @@ final class SparkCrawler(
       if (collectSequence) {
         // within-batch order follows the queue ordering (a LIFO batch is
         // consumed most-recent-first, like the reference scheduler)
-        val orderCols = frontier.ordering match {
-          case graft.local.QueueOrdering.Fifo =>
-            Seq($"created_at".asc, $"url".asc)
-          case graft.local.QueueOrdering.Lifo =>
-            Seq($"created_at".desc, $"url".asc)
-          case graft.local.QueueOrdering.ScoreCreatedDesc =>
-            Seq($"score".desc, $"created_at".asc, $"url".asc)
-          case _ => Seq($"score".asc, $"created_at".asc, $"url".asc)
-        }
+        val orderCols = frontier.batchOrder.map { case (c, asc) =>
+          if (asc) col(c).asc else col(c).desc } :+ $"url".asc
         // coalesce(1) + sortWithinPartitions == a global orderBy here,
         // minus the range-partitioner SAMPLING job a global sort runs
         // first (2 jobs -> 1 per epoch; conformance batches are <= a few
@@ -104,7 +92,6 @@ final class SparkCrawler(
         payloadFailures += fails
         cnt
       } else batch.count()
-    lastFetchSec = (System.nanoTime() - tEpoch0) / 1e9
     if (n == 0) { batch.unpersist(); return false }
     urlsCrawled += n
 
@@ -194,12 +181,10 @@ final class SparkCrawler(
           $"body".as("robots_body"))
         (webLinks.unionByName(robotsLinks).unionByName(sitemapLinks), Some(dd))
     }
-    val tProc0 = System.nanoTime()
     frontier.processCrawled(pages, links, epochNo,
       nPages = if (fetchError.isEmpty) n else -1L, errors = errs,
       domainData = domainData, aliasSeen = aliasSeen,
       redirectPairs = redirectPairs, parentDBuckets = batchDBuckets)
-    lastProcessSec = (System.nanoTime() - tProc0) / 1e9
     batch.unpersist()
     if (compactEveryEpochs > 0 && epochNo % compactEveryEpochs == 0) {
       frontier.compactQueue()

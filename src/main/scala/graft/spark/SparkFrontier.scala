@@ -189,17 +189,6 @@ final class SparkFrontier(
       * results are processed. Off by default (the synchronous epoch loop
       * is self-gating); enable for pipelined/async fetching. */
     val flowControl: Boolean = false,
-    /** overlap the dequeue's residue-rewrite commit with the caller's
-      * fetch stage: `nextBatch` returns as soon as the batch is
-      * materialized and commits the rewrite on a background thread;
-      * every other queue-store entry point joins the pending commit
-      * first, so store state is always consistent at the API surface.
-      * Crash semantics are unchanged (same atomic manifest flip — a
-      * crash before it replays the batch, exactly like crashing between
-      * scan and rewrite today). This is how a real cluster hides commit
-      * latency behind fetch I/O. Off by default: the conformance suites
-      * assert on-disk layout immediately after nextBatch returns. */
-    val asyncDequeueCommit: Boolean = false,
     /** DELAY_ON_EMPTY analog (reference scrapy scheduler,
       * contrib/scrapy/schedulers/frontier.py:141-152: after an empty
       * get_next_requests the scheduler won't call the frontier again
@@ -211,21 +200,12 @@ final class SparkFrontier(
       * with future `crawl_at` rows is polled at the backoff cadence
       * instead of re-planning every call. 0 = off (conformance loops
       * stop on the first empty batch and never re-poll). */
-    val delayOnEmptyEpochs: Int = 0,
-    /** File-listing strategy threshold for the store's multi-leaf reads
-      * (`spark.sql.sources.parallelPartitionDiscovery.threshold`). A
-      * band-pruned dequeue hands Spark hundreds of leaf dirs; above the
-      * Spark default (32) every such read first runs a DISTRIBUTED
-      * listing job, which on a local/attached filesystem costs ~0.3-0.5 s
-      * of pure job latency per dequeue to replace sub-millisecond driver
-      * stats (measured: drain nextBatch sync 0.5 -> 0.15 s/epoch).
-      * Listing strategy only — never affects results. Default keeps
-      * listing driver-side up to 10k leaves; LOWER it for object-store
-      * deployments where a driver-serial listing of thousands of prefixes
-      * is the slower side. Set ≤32 to restore Spark's default behavior. */
-    val listingJobThreshold: Int = 10000) extends Serializable {
+    val delayOnEmptyEpochs: Int = 0) extends Serializable {
 
   import spark.implicits._
+
+  /** store reads list up to this many leaf paths in-process, not as a job */
+  private val localListingMaxPaths = 10000
 
   /** Label the Spark jobs of a phase (guide: setJobDescription is
     * thread-local, so concurrent side commits keep distinct labels). */
@@ -265,11 +245,15 @@ final class SparkFrontier(
     * file layout: the dequeue reads only the best bands until the budget
     * is met and rewrites only those files, so each epoch's queue I/O is
     * O(batch), not O(queue). */
-  // listing-strategy knob for this session's multi-leaf store reads —
-  // see `listingJobThreshold` above; value semantics are Spark's own
-  // (number of paths above which listing becomes a distributed job)
+  // File-listing strategy for the store's multi-leaf reads: a band-pruned
+  // dequeue hands Spark hundreds of leaf dirs, and above Spark's default
+  // threshold (32) every such read first runs a DISTRIBUTED listing job —
+  // ~0.3-0.5 s of job latency per dequeue to replace sub-millisecond
+  // local stats (measured: drain nextBatch 0.5 -> 0.15 s/epoch). Listing
+  // strategy only, never results. Every frontier sets the same value, so
+  // no frontier's reads depend on which one was constructed last.
   spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
-    listingJobThreshold)
+    localListingMaxPaths)
 
   val queue = new BucketStore(s"$root/queue", "partition_id", partitions,
     bandCol = Some("band"), statCol = Some("crawl_at"))
@@ -328,6 +312,19 @@ final class SparkFrontier(
     Map(bandsKey -> scoreBands.toString)
   private def withBand(df: DataFrame): DataFrame =
     df.withColumn("band", bandExpr)
+
+  /** Within-batch order under `ordering`, as (batch column, ascending),
+    * before the url tiebreak: the order a crawler consumes a batch in,
+    * which the links pipeline reproduces to attribute links to pages. */
+  private[spark] def batchOrder: Seq[(String, Boolean)] = ordering match {
+    case graft.local.QueueOrdering.Fifo => Seq("created_at" -> true)
+    case graft.local.QueueOrdering.Lifo => Seq("created_at" -> false)
+    case graft.local.QueueOrdering.ScoreCreatedDesc => Seq("score" -> false, "created_at" -> true)
+    case _ => Seq("score" -> true, "created_at" -> true)
+  }
+  /** the link-frame column carrying the parent page's batch column */
+  private val parentCol = Map("score" -> "parent_score",
+    "created_at" -> "parent_created", "url" -> "parent_url")
 
   /** Decorate a url column with the frontier identity columns. */
   private def identity(df: DataFrame, urlCol: String): DataFrame =
@@ -654,7 +651,7 @@ final class SparkFrontier(
     * rewrite side is band-pruned regardless. Returns the number of
     * rows re-scored. */
   def updateScores(updates: DataFrame): Long = {
-    // join the pending async dequeue commit BEFORE taking the table lock:
+    // join the pending dequeue commit BEFORE taking the table lock:
     // the commit thread needs that lock, so awaiting inside it deadlocks
     awaitQueueCommit()
     updateScoresLocked(updates)
@@ -746,10 +743,9 @@ final class SparkFrontier(
   }
 
   /** Dequeue scan statistics of the last nextBatch (for tests and
-    * lineage): files read vs files in the queue, deepening tries, and
-    * phase wall-times (scan+rank+select vs rewrite commit). */
+    * lineage): files read vs files in the queue and deepening tries.
+    * Written once per call, before `nextBatch` returns. */
   final case class ScanStats(scannedPaths: Int, totalPaths: Int, tries: Int,
-      scanSec: Double = 0.0, rewriteSec: Double = 0.0,
       /** true when the dequeue was short-circuited by the
         * delayOnEmptyEpochs backoff (no scan happened at all) */
       skippedOnEmpty: Boolean = false)
@@ -758,29 +754,34 @@ final class SparkFrontier(
     * (delayOnEmptyEpochs backoff); MinValue = no backoff armed */
   @volatile private var emptyBackoffUntil: Long = Long.MinValue
 
-  /** In-flight background dequeue commit (asyncDequeueCommit mode). */
-  @transient @volatile private var pendingCommit: java.util.concurrent.Future[_] = null
-  /** Monitor pairing pendingCommit's handoff (submit) with its join —
+  /** In-flight background dequeue commit, on its own short-lived thread
+    * (like processCrawled's side commits); `failure` holds what it threw. */
+  private final class QueueCommit(body: () => Unit) extends Thread("graft-queue-commit") {
+    @volatile var failure: Throwable = null
+    setDaemon(true)
+    override def run(): Unit = try body() catch { case t: Throwable => failure = t }
+  }
+  @transient @volatile private var pendingCommit: QueueCommit = null
+  /** Monitor pairing pendingCommit's handoff (start) with its join —
     * without it, two threads racing through entry points could both see
     * the field mid-transition and one would proceed against the
     * pre-commit manifest (double-serving the just-dequeued rows). */
   @transient private lazy val commitGate = new Object
-  @transient private lazy val commitPool =
-    java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, "graft-queue-commit"); t.setDaemon(true); t
-    })
-  /** Join the in-flight dequeue commit before any other queue-store
-    * access — store state is always consistent at the API surface; a
-    * failed background commit resurfaces here (to the FIRST joining
-    * thread; later threads see a cleanly-absent commit). A concurrent
-    * joiner blocks until the first one's get() returns — atomic
-    * check-then-act, so no thread can slip past a still-running
-    * commit. */
-  private def awaitQueueCommit(): Unit = commitGate.synchronized {
+  /** Join the in-flight dequeue commit. Every queue-store entry point of
+    * this class calls it first, so store state is always consistent at
+    * the API surface; callers that read `queue` directly after a
+    * `nextBatch` call it themselves. A failed background commit
+    * resurfaces here (to the FIRST joining thread; later threads see a
+    * cleanly-absent commit). A concurrent joiner blocks until the first
+    * one's join returns — atomic check-then-act, so no thread can slip
+    * past a still-running commit. */
+  def awaitQueueCommit(): Unit = commitGate.synchronized {
     val p = pendingCommit
     if (p != null) {
-      try p.get() // rethrows an ExecutionException wrapping the failure
-      finally pendingCommit = null
+      try {
+        p.join()
+        if (p.failure != null) throw p.failure
+      } finally pendingCommit = null
     }
   }
 
@@ -799,11 +800,16 @@ final class SparkFrontier(
     * I/O is O(batch + touched bands), not O(queue).
     *
     * `minHosts` > 0 additionally deepens (≤3 retries, reference
-    * GET_RETRIES) while a bucket's batch has fewer distinct hosts. */
+    * GET_RETRIES) while a bucket's batch has fewer distinct hosts.
+    *
+    * The batch is returned as soon as it is planned; the residue rewrite
+    * commits on a background thread, overlapping the caller's fetch (how
+    * a cluster hides commit latency behind fetch I/O). Crash semantics
+    * are those of one atomic manifest flip: a crash before it replays the
+    * batch. */
   def nextBatch(maxNextRequests: Int, atEpoch: Long = -1L,
       minHosts: Int = 0): DataFrame = {
     awaitQueueCommit()
-    val tStart = System.nanoTime()
     // crawl_at visibility (delayed revisit): invisible rows stay queued
     val nowEpoch = if (atEpoch >= 0) atEpoch else epoch
     // DELAY_ON_EMPTY backoff: a recent empty dequeue means the frontier
@@ -1018,25 +1024,23 @@ final class SparkFrontier(
 
     val scannedN =
       prefix.valuesIterator.map(_.iterator.map(_._2.size).sum).sum
-    val scanSecV = (System.nanoTime() - tStart) / 1e9
-    lastScan = ScanStats(scannedN, totalPaths, tries, scanSec = scanSecV)
+    lastScan = ScanStats(scannedN, totalPaths, tries)
     // the commit epoch must be read BEFORE handing off to the background
     // thread (epoch() itself joins pending commits)
     val commitEpoch = epoch
     val taggedRef = tagged
     val prefixRef = prefix
-    val triesRef = tries
     val doCommit: () => Unit = () => labeled("dequeue residue rewrite") {
       // touched (bucket, band) groups: only bands that lost rows are
       // rewritten; all other files stay referenced by the new manifest.
       // Derived from `batch`, so this action also MATERIALIZES the batch
-      // + tagged caches. In async mode the whole groups-collect → commit
-      // chain runs on the commit thread: the caller's fetch/verify job
-      // then overlaps the scan+rank COMPUTE itself, not just the residue
-      // rewrite (the caches are shared — whichever job reaches a
-      // partition first computes it, the other reads it back), and every
-      // queue entry point still joins via awaitQueueCommit() before
-      // reading backoff/manifest state.
+      // + tagged caches. The whole groups-collect → commit chain runs on
+      // the commit thread: the caller's fetch/verify job then overlaps
+      // the scan+rank COMPUTE itself, not just the residue rewrite (the
+      // caches are shared — whichever job reaches a partition first
+      // computes it, the other reads it back), and every queue entry
+      // point still joins via awaitQueueCommit() before reading
+      // backoff/manifest state.
       val batchGroups = labeled("dequeue scan+rank+select")(batch
         .select($"partition_id", bandExpr.as("band"))
         .groupBy($"partition_id", $"band").count()
@@ -1061,7 +1065,6 @@ final class SparkFrontier(
       val batchCounts = batchGroups.map { case (b, band, n) => (b, band) -> n }.toMap
       val touchedGroups = (batchGroups.map(t => (t._1, t._2)) ++ blGroups).distinct
         .map { case (b, band) => (b, band, batchCounts.getOrElse((b, band), 0L)) }
-      val tRewrite0 = System.nanoTime()
       if (touchedGroups.nonEmpty) {
         val touchedKeys = touchedGroups.map { case (b, band, _) => s"${b}_$band" }.toSet
         val removePaths = touchedGroups.flatMap { case (b, band, _) =>
@@ -1083,20 +1086,14 @@ final class SparkFrontier(
           props = fcProps)
       }
       taggedRef.unpersist()
-      lastScan = ScanStats(scannedN, totalPaths, triesRef, scanSec = scanSecV,
-        rewriteSec = (System.nanoTime() - tRewrite0) / 1e9)
     }
-    if (asyncDequeueCommit)
-      // overlap the groups collect + residue rewrite with the caller's
-      // fetch stage; every queue-store entry point joins it via
-      // awaitQueueCommit() (the commitGate makes the handoff atomic with
-      // those joins)
-      commitGate.synchronized {
-        pendingCommit = commitPool.submit(new Runnable {
-          override def run(): Unit = doCommit()
-        })
-      }
-    else doCommit()
+    // every queue-store entry point joins it via awaitQueueCommit() (the
+    // commitGate makes the handoff atomic with those joins)
+    commitGate.synchronized {
+      val c = new QueueCommit(doCommit)
+      c.start()
+      pendingCommit = c
+    }
     batch
   }
 
@@ -1121,7 +1118,8 @@ final class SparkFrontier(
     *
     * Pipeline (reference links_extracted, SURVEY §3.2): identity columns →
     * in-batch first-occurrence dedup → URL-seen anti-join (states ∪ this
-    * batch's pages) → strategy score → queue append + states merge.
+    * batch's pages at or before the link's parent) → strategy score →
+    * queue append + states merge.
     *
     * Errors (reference request_error, core/manager.py:572-580): the
     * failed request's state becomes ERROR=3 and its metadata records the
@@ -1278,16 +1276,8 @@ final class SparkFrontier(
           $"link_url".asc)
       case None => Seq($"link_idx".asc, $"link_url".asc)
     }
-    val parentOrder = ordering match {
-      case graft.local.QueueOrdering.Fifo =>
-        $"parent_created".asc +: linkTiebreak
-      case graft.local.QueueOrdering.Lifo =>
-        $"parent_created".desc +: linkTiebreak
-      case graft.local.QueueOrdering.ScoreCreatedDesc =>
-        Seq($"parent_score".desc, $"parent_created".asc) ++ linkTiebreak
-      case _ =>
-        Seq($"parent_score".asc, $"parent_created".asc) ++ linkTiebreak
-    }
+    val parentOrder = batchOrder.map { case (c, asc) =>
+      if (asc) col(parentCol(c)).asc else col(parentCol(c)).desc } ++ linkTiebreak
     val firstW = Window.partitionBy($"fingerprint").orderBy(parentOrder: _*)
     val deduped = l0.withColumn("__occ", row_number().over(firstW))
       .filter($"__occ" === 1).drop("__occ")
@@ -1302,10 +1292,9 @@ final class SparkFrontier(
     // last states commit routes through the exact join instead of being
     // declared definitely-unseen (a crash between the states commit and
     // the sidecar write can therefore never drop a seen URL).
-    // Links to pages crawled in THIS batch are seen too (manager
-    // processes page_crawled before the next page's links_extracted) —
-    // they're not in the persisted bloom yet, so that check is a separate
-    // broadcast anti-join against the (small) batch.
+    // Links to pages crawled in THIS batch can be seen too — they're not
+    // in the persisted bloom yet, so that check is a separate broadcast
+    // anti-join against the (small) batch (below).
     var probeCache: Option[DataFrame] = None
     // domain buckets present among this epoch's links, for the A4
     // budget join's domain_metadata pruning (at 10^10 URLs the table
@@ -1367,12 +1356,31 @@ final class SparkFrontier(
     // ERROR state is merged below, and links to them must not reschedule
     val errorStates = errors.map(_.select($"fingerprint").distinct()
       .withColumn("state", lit(graft.local.States.Error)))
-    val seenThisBatch = errorStates match {
-      case Some(es) => pageStates.select($"fingerprint").union(es.select($"fingerprint"))
-      case None => pageStates.select($"fingerprint")
-    }
-    val fresh0 = notSeenPersisted.join(
-      broadcast(seenThisBatch), Seq("fingerprint"), "left_anti")
+    // A batch page is seen by a link only once page_crawled has run for
+    // it: the reference manager processes the batch in order, each
+    // page's page_crawled then its links_extracted, so a link sees the
+    // pages at or before its parent in the batch order — a link to a
+    // seed dequeued LATER in the same batch (no persisted state yet)
+    // schedules it again. Errors and redirect aliases are seen by every
+    // link of the batch. Keys: (page column, link's parent column,
+    // ascending) of the batch order.
+    val batchOrderKeys: Seq[(String, String, Boolean)] = (batchOrder ++
+      (if (notSeenPersisted.columns.contains("parent_url")) Seq("url" -> true) else Nil))
+      .map { case (c, asc) => (c, parentCol(c), asc) }
+    // lexicographic page-key <= parent-key; an unknown (null) key counts
+    // as before, i.e. seen
+    val atOrBeforeParent = coalesce(batchOrderKeys.foldRight(lit(true)) {
+      case ((pc, lc, asc), rest) =>
+        val (a, b) = (col(s"__s_$pc"), col(lc))
+        (if (asc) a < b else a > b) || (a === b && rest)
+    }, lit(true))
+    val seenPages = pages.select(($"fingerprint".as("__sfp") +: lit(false).as("__sall") +:
+      batchOrderKeys.map { case (pc, _, _) => col(pc).as(s"__s_$pc") }): _*)
+    val seenAlways = (aliasStates.toSeq ++ errorStates).map(_.select($"fingerprint".as("__sfp"),
+      lit(true).as("__sall")))
+    val seenThisBatch = seenAlways.foldLeft(seenPages)(_.unionByName(_, allowMissingColumns = true))
+    val fresh0 = notSeenPersisted.join(broadcast(seenThisBatch),
+      $"fingerprint" === $"__sfp" && ($"__sall" || atOrBeforeParent), "left_anti")
     // MAX_SITEMAPS guard (discovery/__init__.py:21,359-362): a sitemap
     // index can enumerate unbounded sub-sitemaps — cap probe links per
     // parent response (first N by extraction order; with a randomSeed,

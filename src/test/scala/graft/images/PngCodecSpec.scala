@@ -52,6 +52,26 @@ class PngCodecSpec extends AnyFunSuite {
     assert(rgbOf(decoded, 48, 48).sameElements(px.map(_ & 0xffffff)))
   }
 
+  test("hostile chunk lengths fail cleanly instead of looping") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val png = ImageSynth.encodePng(ImageSynth.pixels("http://host6.example/p/6", 8, 8), 8, 8)
+    // an ancillary chunk right after IHDR (offset 33) whose length is
+    // -12 (pos would stand still) or past the end of the file
+    def withChunkLength(len: Int): Array[Byte] = {
+      val chunk = java.nio.ByteBuffer.allocate(12).putInt(len)
+        .put("tEXt".getBytes("US-ASCII")).putInt(0).array()
+      png.take(33) ++ chunk ++ png.drop(33)
+    }
+    for (len <- Seq(-12, -1, Int.MinValue, Int.MaxValue, 1 << 20)) {
+      // either a decoded image or a decoder exception; never a hang
+      val done = Future(scala.util.Try(ImageSynth.decode(withChunkLength(len))))
+      assert(scala.util.Try(Await.result(done, 20.seconds)).isSuccess,
+        s"decode did not return for chunk length $len")
+    }
+  }
+
   test("reused JPEG output stream: interleaved sizes stay independent") {
     // encode a larger JPEG, then a smaller one, then the larger again —
     // a stale high-water mark or flushedPos in the reused stream would

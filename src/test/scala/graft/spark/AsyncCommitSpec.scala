@@ -4,11 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** asyncDequeueCommit: the dequeue's residue-rewrite commit overlaps the
-  * caller's fetch stage. Every other queue entry point joins the pending
-  * commit, so the mode must be OBSERVATIONALLY IDENTICAL to the
-  * synchronous default — same per-epoch batches, same final store
-  * state — including when writes interleave with the drain. */
+/** The dequeue's residue-rewrite commit runs on a background thread and
+  * overlaps the caller's consumption of the batch. Every other queue
+  * entry point joins the pending commit, so the overlap must be
+  * OBSERVATIONALLY IDENTICAL to joining the commit before consuming —
+  * same per-epoch batches, same final store state — including when
+  * writes interleave with the drain. */
 class AsyncCommitSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -20,17 +21,21 @@ class AsyncCommitSpec extends AnyFunSuite {
       (($"id" % 10).cast("double") / 10.0).as("score"),
       lit(0).as("depth")))
 
-  private def mk(async: Boolean): SparkFrontier =
+  private def mk(): SparkFrontier =
     new SparkFrontier(spark,
-      Files.createTempDirectory(s"graft-async$async").toString,
+      Files.createTempDirectory("graft-async").toString,
       partitions = 4, stateBuckets = 4, strategy = ScoreStrategy.BFS,
-      globalOrder = false, asyncDequeueCommit = async)
+      globalOrder = false)
 
-  private def drain(f: SparkFrontier, budget: Int): Seq[Set[String]] = {
+  /** `joinFirst`: wait for each batch's commit before consuming it,
+    * instead of consuming while it runs */
+  private def drain(f: SparkFrontier, budget: Int,
+      joinFirst: Boolean = false): Seq[Set[String]] = {
     val out = Seq.newBuilder[Set[String]]
     var continue = true
     while (continue) {
       val b = f.nextBatch(budget)
+      if (joinFirst) f.awaitQueueCommit()
       val urls = b.select($"url").as[String].collect().toSet
       b.unpersist()
       if (urls.nonEmpty) out += urls
@@ -39,19 +44,37 @@ class AsyncCommitSpec extends AnyFunSuite {
     out.result()
   }
 
-  test("async drain == sync drain (same epoch batches, same final state)") {
-    val sync = mk(async = false)
-    val async = mk(async = true)
-    prefill(sync, 500)
-    prefill(async, 500)
-    val bs = drain(sync, 40)
-    val ba = drain(async, 40)
-    assert(ba == bs, "per-epoch batch sets must match the sync mode")
-    assert(async.queueSize() == 0L && sync.queueSize() == 0L)
+  test("overlapped drain == joined drain (same epoch batches, same final state)") {
+    val joined = mk()
+    val overlapped = mk()
+    prefill(joined, 500)
+    prefill(overlapped, 500)
+    val bj = drain(joined, 40, joinFirst = true)
+    val bo = drain(overlapped, 40)
+    assert(bo == bj, "per-epoch batch sets must match the joined drain")
+    assert(overlapped.queueSize() == 0L && joined.queueSize() == 0L)
+  }
+
+  test("joined commits leave no commit thread behind") {
+    def commitThreads = Thread.getAllStackTraces.keySet.toArray
+      .map(_.asInstanceOf[Thread])
+      .filter(t => t.getName == "graft-queue-commit" && t.isAlive).toSet
+    // commits of frontiers other suites never joined are not this test's
+    val before = commitThreads
+    (0 until 3).foreach { _ =>
+      val f = mk()
+      prefill(f, 60)
+      val b = f.nextBatch(5)
+      b.count()
+      b.unpersist()
+      f.awaitQueueCommit()
+    }
+    val left = commitThreads -- before
+    assert(left.isEmpty, s"${left.size} commit thread(s) alive after every frontier joined")
   }
 
   test("updateScores right behind an in-flight commit: no deadlock, consistent") {
-    val f = mk(async = true)
+    val f = mk()
     prefill(f, 300)
     val b = f.nextBatch(20)
     val dequeued = b.count(); b.unpersist()
@@ -65,7 +88,7 @@ class AsyncCommitSpec extends AnyFunSuite {
   }
 
   test("append interleaved with an in-flight commit is not lost") {
-    val f = mk(async = true)
+    val f = mk()
     prefill(f, 300)
     val b1 = f.nextBatch(30)
     val n1 = b1.count(); b1.unpersist()

@@ -43,6 +43,7 @@ class BandedDequeueSpec extends AnyFunSuite {
       s"scan should read a small fraction: ${f.lastScan.scannedPaths}/$totalPaths")
 
     // exactness: per partition, no remaining row may beat a selected row
+    f.awaitQueueCommit()
     val full = f.queue.read(spark) // post-rewrite queue
     assert(full.count() == 2000 - 20)
     val selByPart = batch.groupBy($"partition_id").agg(max($"score").as("ws"))
@@ -143,6 +144,7 @@ class BandedDequeueSpec extends AnyFunSuite {
       continue = n > 0
     }
     assert(drained == 50, s"migration must not lose or duplicate rows: $drained")
+    f.awaitQueueCommit()
     val m = f.queue.readManifest()
     assert(m.bucketPaths.valuesIterator.flatten.forall(p => f.queue.bandOf(p) >= 0),
       "all paths banded after migration")
@@ -168,6 +170,7 @@ class BandedDequeueSpec extends AnyFunSuite {
     }
     assert(drained.length == 300 && drained.map(_._2).distinct.size == 300,
       s"re-banding must not lose or duplicate rows: ${drained.length}")
+    f20.awaitQueueCommit()
     val m = f20.queue.readManifest()
     assert(m.props.get("queue.scoreBands").contains("20"), m.props.toString)
     // a THIRD open at the same 20 bands must not re-migrate
@@ -178,6 +181,7 @@ class BandedDequeueSpec extends AnyFunSuite {
       concat(lit("http://rb0.com/q/"), $"id").as("url"),
       lit(0.31).as("score"), lit(0).as("depth")))
     assert(f20b.nextBatch(5).count() == 5)
+    f20b.awaitQueueCommit()
     val m2 = f20b.queue.readManifest()
     assert(m2.bucketPaths.valuesIterator.flatten
       .forall(p => f20b.queue.bandOf(p) >= 0 && f20b.queue.bandOf(p) < 20),

@@ -63,6 +63,22 @@ class SparkFrontierSpec extends AnyFunSuite {
     assert(sparkSeq == localSeq)
   }
 
+  test("BFS three seeds, w1 links to the later seed w2: order + URL-seen set match the oracle") {
+    // one batch holds all three seeds; w2.example/ has no state yet when
+    // w1.example/'s links are processed, so the oracle schedules it again
+    val graph = CrawlGraph(Vector(
+      "http://w0.example/" -> Vector("http://w0.example/p1"),
+      "http://w1.example/" -> Vector("http://w2.example/", "http://w1.example/p1"),
+      "http://w2.example/" -> Vector("http://w2.example/p1"),
+      "http://w0.example/p1" -> Vector("http://w1.example/")),
+      Vector("http://w0.example/", "http://w1.example/", "http://w2.example/"))
+    val (localSeq, localStates) = localRun(graph, new BFSStrategy, 4)
+    assert(localSeq.count(_ == "http://w2.example/") == 2, localSeq.toString)
+    val (sparkSeq, sparkStates) = sparkRun(graph, ScoreStrategy.BFS, 4, "xseed")
+    assert(sparkSeq == localSeq)
+    assert(sparkStates == localStates)
+  }
+
   private def localRunOrdered(graph: CrawlGraph, strategy: graft.local.CrawlStrategy,
       ordering: QueueOrdering, mnr: Int): List[String] = {
     val f = new LocalFrontier(strategy, ordering = ordering)

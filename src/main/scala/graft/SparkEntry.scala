@@ -49,13 +49,8 @@ object SparkEntry {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-crawl").toString
     val graph = Graphs.site01
-    // useBloom off: on a <=30-row states table the per-epoch sidecar
-    // build+persist (2 Spark actions) buys nothing over the exact
-    // anti-join fallback it fronts — identical sequence either way; the
-    // bloom path stays exercised by BloomSeenSpec and the bench crawls
     val frontier = new SparkFrontier(spark, root, partitions = 4,
-      stateBuckets = 4, strategy = ScoreStrategy.DFS, globalOrder = true,
-      useBloom = false)
+      stateBuckets = 4, strategy = ScoreStrategy.DFS, globalOrder = true)
     frontier.addSeeds(graph.seeds)
     val crawler = new SparkCrawler(frontier, GraphTables.webDF(spark, graph), 10)
     crawler.run().zipWithIndex.toDF("url", "crawl_pos")
@@ -74,7 +69,7 @@ object SparkEntry {
     val root = java.nio.file.Files.createTempDirectory("graft-disc").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.Basic, globalOrder = true,
-      ordering = graft.local.QueueOrdering.ScoreCreatedDesc, useBloom = false,
+      ordering = graft.local.QueueOrdering.ScoreCreatedDesc,
       discovery = Some(DiscoveryConfig(maxPagesPerDomain = 100,
         sameDomainOnly = true, justifyScores = true)))
     val robotsBody =
@@ -102,8 +97,7 @@ object SparkEntry {
     val root = java.nio.file.Files.createTempDirectory("graft-bfs").toString
     val graph = Graphs.site02
     val frontier = new SparkFrontier(spark, root, partitions = 4,
-      stateBuckets = 4, strategy = ScoreStrategy.BFS, globalOrder = true,
-      useBloom = false)
+      stateBuckets = 4, strategy = ScoreStrategy.BFS, globalOrder = true)
     frontier.addSeeds(graph.seeds)
     val crawler = new SparkCrawler(frontier, GraphTables.webDF(spark, graph), 100)
     crawler.run().zipWithIndex.toDF("url", "crawl_pos")

@@ -526,14 +526,19 @@ object ImageSynth {
     val iis = new ByteArrayImageInputStream(bytes)
     try {
       reader.setInput(iis, true, true)
-      // decode into the reused thread-local destination raster when the
-      // frame matches (the hot path is all 64x64) — the per-decode
-      // BufferedImage allocation was the kernel's biggest GC source
-      val w = reader.getWidth(0)
-      val h = reader.getHeight(0)
-      val param = reader.getDefaultReadParam
-      param.setDestination(scratch.get().decodeImage(w, h))
-      reader.read(0, param)
+      // decode 8-bit 3-band frames (the hot path is all 64x64 RGB) into
+      // the reused thread-local BGR raster — the per-decode BufferedImage
+      // allocation was the kernel's biggest GC source; grayscale, alpha
+      // and palette frames have other band counts and decode as they are
+      val raw = reader.getRawImageType(0)
+      if (raw == null || raw.getNumBands != 3 ||
+          raw.getSampleModel.getDataType != java.awt.image.DataBuffer.TYPE_BYTE)
+        reader.read(0)
+      else {
+        val param = reader.getDefaultReadParam
+        param.setDestination(scratch.get().decodeImage(reader.getWidth(0), reader.getHeight(0)))
+        reader.read(0, param)
+      }
     } finally iis.close()
   }
 

@@ -1,8 +1,10 @@
 package graft.spark
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, BinaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, UnaryExpression, BinaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -136,6 +138,25 @@ case class BloomSeenProbe(
     copy(left = l, right = r)
 }
 
+/** A long the generated code reads from the plan's reference array
+  * instead of inlining it as a Java literal (the way `BloomSeenProbe`
+  * carries its broadcast). Plans that differ only in this value — the
+  * epoch in every per-epoch plan — generate the same class text, so
+  * Spark's code cache compiles their shape once. Not foldable: constant
+  * folding would turn it back into a literal. */
+case class BoundLong(value: Long) extends LeafExpression {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("boundLong", java.lang.Long.valueOf(value),
+      classOf[java.lang.Long].getName)
+    ev.copy(code = code"final long ${ev.value} = $ref.longValue();",
+      isNull = FalseLiteral)
+  }
+}
+
 /** Column-level API. */
 object FrontierExprs {
   import org.apache.spark.sql.functions.lit
@@ -174,6 +195,7 @@ object FrontierExprs {
     floor(abs(signed_crc32(host).cast("double") / 2147483647.0) * 10) / 10.0 +
       greatest(lit(0.01), score - 0.01) / 10.0
   }
+  def bound_long(v: Long): Column = col(BoundLong(v))
   def bloom_seen_probe(
       blooms: org.apache.spark.broadcast.Broadcast[
         Map[Int, org.apache.spark.util.sketch.BloomFilter]],

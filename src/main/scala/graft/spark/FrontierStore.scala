@@ -356,25 +356,69 @@ final class BucketStore(val root: String, val bucketCol: String,
     withCommitLock {
       val m = readManifest()
       val v = m.version + 1
-      val written = writeEpochData(df, v)
-      val writtenByBucket = written.groupBy(_.bucket)
-      val touched = writtenByBucket.keySet ++
-        m.bucketPaths.collect { case (k, ps) if ps.exists(removePaths) => k }
-      val merged = (m.bucketPaths.keySet ++ writtenByBucket.keySet).flatMap { k =>
-        val kept = m.bucketPaths.getOrElse(k, Nil).filterNot(removePaths)
-        val added = writtenByBucket.getOrElse(k, Nil).map(_.path)
-        val all = kept ++ added
-        if (all.isEmpty) None else Some(k -> all)
-      }.toMap
-      val keptPaths = merged.values.flatten.toSet
-      val rows = m.pathRows.view.filterKeys(keptPaths).toMap ++
-        written.map(l => l.path -> l.rows)
-      val pmax = m.pathMax.view.filterKeys(keptPaths).toMap ++
-        written.flatMap(l => l.statMax.map(l.path -> _))
-      val bv = m.bucketVersions ++ touched.map(_ -> v)
-      writeManifest(Manifest(v, epoch, merged, counters, rows, bv,
-        m.props ++ props, pmax))
+      commitReplaced(m, v, epoch, writeEpochData(df, v), removePaths, counters, props)
     }
+
+  /** Rewrite leaf groups that may have lost rows: `df` holds every row
+    * that remains in `groups` ((bucket, band) -> its current paths), and
+    * no row grows a group. A group whose new leaf holds as many rows as
+    * the manifest records for its paths lost nothing: the new leaf is
+    * deleted and the paths stay referenced. Every other group (also one
+    * with a path of unknown row count) is replaced by its new leaf, or
+    * emptied. `meta` turns the rows each replaced group lost into the
+    * commit's counters and props. Nothing is committed when no group
+    * lost a row, and nothing is written when the groups hold no row.
+    * Returns the rows lost per replaced group. */
+  def rewriteLeaves(df: DataFrame, epoch: Long, groups: Map[(Int, Int), Seq[String]],
+      meta: Map[(Int, Int), Long] => (Map[String, Long], Map[String, String]))
+      : Map[(Int, Int), Long] =
+    withCommitLock {
+      val m = readManifest()
+      if (groups.valuesIterator.flatten.forall(p => m.pathRows.get(p).contains(0L))) Map.empty
+      else {
+        val v = m.version + 1
+        val written = writeEpochData(df, v)
+        val newLeaf = written.map(l => (l.bucket, bandOf(l.path)) -> l).toMap
+        val lost = groups.flatMap { case (g, paths) =>
+          val old = paths.map(m.pathRows.get)
+          val kept = newLeaf.get(g).fold(0L)(_.rows)
+          if (old.forall(_.isDefined) && old.flatten.sum == kept) None
+          else Some(g -> math.max(0L, old.flatten.sum - kept))
+        }
+        val dropped = newLeaf.collect { case (g, l) if groups.contains(g) && !lost.contains(g) => l }
+        if (lost.isEmpty) deleteRecursively(Paths.get(root, "data", s"commit=$v"))
+        else {
+          dropped.foreach(l => deleteRecursively(Paths.get(l.path)))
+          val (counters, props) = meta(lost)
+          commitReplaced(m, v, epoch, written.filterNot(dropped.toSet),
+            lost.keysIterator.flatMap(groups).toSet, counters, props)
+        }
+        lost
+      }
+    }
+
+  /** Commit version `v` over `m`: drop `removePaths`, add `written`. */
+  private def commitReplaced(m: Manifest, v: Long, epoch: Long, written: Seq[LeafDir],
+      removePaths: Set[String], counters: Map[String, Long],
+      props: Map[String, String]): Unit = {
+    val writtenByBucket = written.groupBy(_.bucket)
+    val touched = writtenByBucket.keySet ++
+      m.bucketPaths.collect { case (k, ps) if ps.exists(removePaths) => k }
+    val merged = (m.bucketPaths.keySet ++ writtenByBucket.keySet).flatMap { k =>
+      val kept = m.bucketPaths.getOrElse(k, Nil).filterNot(removePaths)
+      val added = writtenByBucket.getOrElse(k, Nil).map(_.path)
+      val all = kept ++ added
+      if (all.isEmpty) None else Some(k -> all)
+    }.toMap
+    val keptPaths = merged.values.flatten.toSet
+    val rows = m.pathRows.view.filterKeys(keptPaths).toMap ++
+      written.map(l => l.path -> l.rows)
+    val pmax = m.pathMax.view.filterKeys(keptPaths).toMap ++
+      written.flatMap(l => l.statMax.map(l.path -> _))
+    val bv = m.bucketVersions ++ touched.map(_ -> v)
+    writeManifest(Manifest(v, epoch, merged, counters, rows, bv,
+      m.props ++ props, pmax))
+  }
 
   /** Compact leaves whose file count exceeds `maxPathsPerLeaf`: appends
     * accumulate one dir per commit in bands the dequeue never rewrites

@@ -1,7 +1,10 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Epoch-loop crawl driver — the Spark analog of the reference
   * FrontierTester (frontera/utils/tester.py:13-95). The synthetic web is
@@ -59,15 +62,13 @@ final class SparkCrawler(
     val n =
       if (collectSequence) {
         // within-batch order follows the queue ordering (a LIFO batch is
-        // consumed most-recent-first, like the reference scheduler)
-        val orderCols = frontier.batchOrder.map { case (c, asc) =>
-          if (asc) col(c).asc else col(c).desc } :+ $"url".asc
-        // coalesce(1) + sortWithinPartitions == a global orderBy here,
-        // minus the range-partitioner SAMPLING job a global sort runs
-        // first (2 jobs -> 1 per epoch; conformance batches are <= a few
-        // hundred cached rows, so the single-partition sort is free)
-        val ordered = batch.coalesce(1).sortWithinPartitions(orderCols: _*)
-          .select($"url").as[String].collect().toList
+        // consumed most-recent-first, like the reference scheduler); the
+        // batch is collected anyway, so it is sorted on the driver: no
+        // sort plan to compile and run each epoch
+        val keys = frontier.batchOrder :+ ("url" -> true)
+        val sel = batch.select(keys.map(k => col(k._1)): _*)
+        val ordered = SparkCrawler.sortRows(sel.collect().toSeq, sel.schema, keys.map(_._2))
+          .map(_.getString(keys.length - 1)).toList
         if (ordered.nonEmpty) sequence.append(ordered)
         batchDBuckets = Some(ordered.map { u =>
           graft.core.Hashing.crc32Partition(
@@ -92,7 +93,12 @@ final class SparkCrawler(
         payloadFailures += fails
         cnt
       } else batch.count()
-    if (n == 0) { batch.unpersist(); return false }
+    if (n == 0) {
+      // the crawl may end here: leave no commit running behind it
+      frontier.awaitQueueCommit()
+      batch.unpersist()
+      return false
+    }
     urlsCrawled += n
 
     // request_error path: failed fetches split off before page/link
@@ -216,5 +222,21 @@ final class SparkCrawler(
       epochsRun += 1
     }
     sequence.toList.flatten
+  }
+}
+
+object SparkCrawler {
+  /** `rows` of `schema` sorted by Spark's own ordering on all their
+    * columns, column `i` ascending (nulls first) iff `asc(i)`, else
+    * descending (nulls last) — what `orderBy(col.asc / col.desc)` gives. */
+  private[spark] def sortRows(rows: Seq[Row], schema: StructType,
+      asc: Seq[Boolean]): Seq[Row] = {
+    val ordering = new InterpretedOrdering(schema.fields.toSeq.zip(asc).zipWithIndex.map {
+      case ((f, a), i) =>
+        SortOrder(BoundReference(i, f.dataType, f.nullable), if (a) Ascending else Descending)
+    })
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    rows.map(r => (toInternal(r).asInstanceOf[InternalRow], r))
+      .sortBy(_._1)(ordering).map(_._2)
   }
 }

@@ -88,6 +88,11 @@ final case class DiscoveryConfig(
       * deterministic first-N extraction order. */
     randomSeed: Option[Long] = None)
 
+/** One (bucket, band) group of a dequeue scan: capped visible, selected
+  * and blacklisted rows, and the selected rows' hosts. */
+private final case class ScanGroup(bucket: Int, band: Int, capped: Long,
+    selected: Long, blacklisted: Long, hosts: Seq[String])
+
 /** Spark-native crawl frontier over bucketed snapshot tables.
   *
   * One epoch = one pass of the reference's distributed loop (SURVEY §3):
@@ -152,9 +157,6 @@ final class SparkFrontier(
     /** revisit scheduling (S5/2.10): crawled pages re-enter the queue
       * `interval` epochs later (crawl_at visibility at dequeue) */
     val revisitIntervalEpochs: Option[Long] = None,
-    /** partitioned Bloom prefilter in front of the exact URL-seen
-      * anti-join (north rule); purely join-pruning, set stays exact */
-    val useBloom: Boolean = true,
     /** discovery-lite strategy (same-domain filter, class scoring with
       * host-hash justification, per-domain max_pages budget). When set,
       * link scores come from the discovery classifier, not `strategy`,
@@ -398,7 +400,8 @@ final class SparkFrontier(
     // keep the states manifest's CURRENT epoch: seeds must not advance
     // the replay guard of an in-flight crawl epoch (a crash between that
     // epoch's queue append and its states merge must still heal)
-    mergeStateUpdates(updates, touched, states.readManifest().epoch, Map.empty)
+    val sm = states.readManifest()
+    mergeStateUpdates(updates, touched, sm.epoch, bloomPays(sm), Map.empty)
     fresh.unpersist()
   }
 
@@ -414,9 +417,30 @@ final class SparkFrontier(
     m.bucketPaths.getOrElse(b, Nil).isEmpty ||
       m.bucketVersions.get(b).exists(v => bloomSeen.version(b).exists(_ >= v))
 
+  /** The Bloom sidecars are probed, maintained and broadcast only when
+    * the states table `m` is too large to broadcast: at or below
+    * `spark.sql.autoBroadcastJoinThreshold` the exact anti-join is
+    * already one in-memory hash probe, and the sidecars only add cost
+    * each epoch (load, broadcast, a cached probe frame, the delta-keys
+    * job, persisted sidecars). Crossing the size is safe: a bucket with
+    * data but no fresh sidecar goes through the exact join, and its
+    * sidecar is rebuilt at its next merge. */
+  private def bloomPays(m: BucketStore#Manifest): Boolean =
+    statesBytes(m) > spark.sessionState.conf.autoBroadcastJoinThreshold
+
+  /** Size of the exact anti-join's build side over states `m`: its rows
+    * (manifest row counts) times a fingerprint's 40-byte SHA-1 hex
+    * digest. A path without a row count (a store written before row
+    * counts) makes the size unbounded. */
+  private[spark] def statesBytes(m: BucketStore#Manifest): Long = {
+    val rows = m.bucketPaths.valuesIterator.flatten.map(m.pathRows.get).toSeq
+    if (rows.forall(_.isDefined)) rows.flatten.sum * 40L else Long.MaxValue
+  }
+
   /** Merge state rows (fingerprint, state, sbucket) into the states
     * store + refresh the touched buckets' Bloom sidecars incrementally
-    * (shared by the epoch pipeline and the seed path).
+    * when `bloom` (the caller's `bloomPays`) holds (shared by the epoch
+    * pipeline and the seed path).
     *
     * LSM write path (the scale-critical property — reference anchor: the
     * HBase states store is a KV point-write log, hbase/__init__.py:
@@ -432,7 +456,7 @@ final class SparkFrontier(
     * to the epoch loop) can neither interleave its commit between our
     * snapshot and append, nor race the sidecar load-merge-persist. */
   private def mergeStateUpdates(updates: DataFrame, touched: Set[Int],
-      epochNo: Long, counters: Map[String, Long],
+      epochNo: Long, bloom: Boolean, counters: Map[String, Long],
       props: Map[String, String] = Map.empty,
       /** delta keys prebuilt from `updates` (lets the epoch loop run
         * the collect job concurrently with its other store commits) */
@@ -446,7 +470,7 @@ final class SparkFrontier(
       // it complete
       val pre = states.readManifest()
       states.append(updates, epochNo, counters, props)
-      if (useBloom) {
+      if (bloom) {
         val newV = states.currentVersion
         // incremental merge of the update keys into fresh sidecars —
         // cost O(update); only buckets with an absent/stale sidecar pay
@@ -496,7 +520,7 @@ final class SparkFrontier(
       states.replaceBuckets(readStatesLatest(Some(overgrown)), m.epoch,
         alsoClear = overgrown,
         counters = Map("compacted_state_buckets" -> overgrown.size.toLong))
-      if (useBloom && freshBefore.nonEmpty) {
+      if (freshBefore.nonEmpty && bloomPays(m)) {
         // the fold changed no membership — carry the stamp forward so the
         // rewrite doesn't demote fresh sidecars to stale
         val newV = states.currentVersion
@@ -762,6 +786,9 @@ final class SparkFrontier(
     override def run(): Unit = try body() catch { case t: Throwable => failure = t }
   }
   @transient @volatile private var pendingCommit: QueueCommit = null
+  /** The last dequeue's scan cache: its batch is derived from it, so it is
+    * dropped only at the next dequeue, when that batch has been consumed. */
+  @transient private var lastTagged: DataFrame = null
   /** Monitor pairing pendingCommit's handoff (start) with its join —
     * without it, two threads racing through entry points could both see
     * the field mid-transition and one would proceed against the
@@ -810,6 +837,7 @@ final class SparkFrontier(
   def nextBatch(maxNextRequests: Int, atEpoch: Long = -1L,
       minHosts: Int = 0): DataFrame = {
     awaitQueueCommit()
+    if (lastTagged != null) { lastTagged.unpersist(); lastTagged = null }
     // crawl_at visibility (delayed revisit): invisible rows stay queued
     val nowEpoch = if (atEpoch >= 0) atEpoch else epoch
     // DELAY_ON_EMPTY backoff: a recent empty dequeue means the frontier
@@ -929,7 +957,7 @@ final class SparkFrontier(
     // identical to the former union's tags.
     def tagVisibilityAware(scanned0: DataFrame): DataFrame = {
       val scanned = scanned0.withColumn("__bl", blCond)
-        .withColumn("__vis", !$"__bl" && $"crawl_at" <= nowEpoch)
+        .withColumn("__vis", !$"__bl" && $"crawl_at" <= bound_long(nowEpoch))
       def visKeyed(keys: Column*): WindowSpec =
         Window.partitionBy(keys: _*).orderBy(orderCols: _*)
       if (maxPerHost > 0) {
@@ -964,10 +992,27 @@ final class SparkFrontier(
       }
     }
 
+    // per (bucket, band) of a scan: capped visible, selected and
+    // blacklisted rows, and the selected hosts (one job)
+    def scanStats(t: DataFrame): Array[ScanGroup] =
+      t.groupBy($"partition_id", bandExpr.as("band")).agg(
+          sum(when($"__rank" < Int.MaxValue, 1L).otherwise(0L)),
+          sum(when($"__sel", 1L).otherwise(0L)),
+          sum(when($"__bl", 1L).otherwise(0L)),
+          collect_set(when($"__sel", $"host")))
+        .as[(Int, Int, Long, Long, Long, Seq[String])].collect()
+        .map { case (b, band, capped, sel, bl, hosts) =>
+          ScanGroup(b, band, capped, sel, bl, hosts) }
+
     var tries = 0
     var limit = math.max(1, maxNextRequests).toDouble
     var prefix = prefixFor(limit)
     var tagged: DataFrame = null
+    // stats of the current `tagged`, when the deepening check ran them
+    var stats: Array[ScanGroup] = null
+    // the final prefix is proven (manifest maxima) to hold only visible
+    // rows, with no cap or blacklist holding any back
+    var visibleOnly = false
     var done = false
     def nPaths(p: Map[Int, Vector[(Int, Vector[String])]]) =
       p.valuesIterator.map(_.iterator.map(_._2.size).sum).sum
@@ -975,6 +1020,7 @@ final class SparkFrontier(
       val paths = prefix.valuesIterator.flatMap(_.flatMap(_._2)).toSeq
       if (tagged != null) tagged.unpersist()
       tagged = tagVisibilityAware(queue.readPaths(spark, paths)).cache()
+      stats = null
       // a prefix is provably sufficient WITHOUT a stats job when it
       // covers the whole queue, or when (no politeness caps and) the
       // manifest's per-path crawl_at maxima prove every scanned row
@@ -985,24 +1031,22 @@ final class SparkFrontier(
           m.pathMax.get(p).exists(_ <= nowEpoch))
       if (nPaths(prefix) == totalPaths || provablyVisible) {
         done = true
+        visibleOnly = provablyVisible
       } else {
-        val stats = tagged.groupBy($"partition_id").agg(
-            sum(when($"__rank" < Int.MaxValue, 1L).otherwise(0L)),
-            sum(when($"__sel", 1L).otherwise(0L)),
-            countDistinct(when($"__sel", $"host")))
-          .as[(Int, Long, Long, Long)].collect()
-          .map(t => t._1 -> t).toMap
+        stats = scanStats(tagged)
+        val byBucket = stats.groupBy(_.bucket)
         val needMore = bandsByBucket.exists { case (b, bands) =>
           val unread = bands.length > prefix.getOrElse(b, Vector.empty).length
           if (!unread) false
           else {
-            val (_, cappedN, _, hostsN) = stats.getOrElse(b, (b, 0L, 0L, 0L))
+            val gs = byBucket.getOrElse(b, Array.empty[ScanGroup])
             // exactness: the prefix must hold >= budget capped visible
             // rows (else deeper bands could hold batch rows we'd miss) —
             // also the reference's `count < min_requests -> retry`
-            cappedN < maxNextRequests ||
+            gs.map(_.capped).sum < maxNextRequests ||
               // reference min_hosts diversity retry (<= 3 tries)
-              (minHosts > 0 && hostsN < minHosts && tries < 3)
+              (minHosts > 0 && gs.flatMap(_.hosts).distinct.length < minHosts &&
+                tries < 3)
           }
         }
         if (!needMore) done = true
@@ -1029,63 +1073,72 @@ final class SparkFrontier(
     // thread (epoch() itself joins pending commits)
     val commitEpoch = epoch
     val taggedRef = tagged
-    val prefixRef = prefix
+    val scanned: Map[(Int, Int), Seq[String]] =
+      for ((b, bands) <- prefix; (band, ps) <- bands) yield (b, band) -> ps
+    // A score-pruned prefix proven visible holds only the best bands
+    // that cover the budget, and every row it loses is a selected one, so
+    // the bands that lost rows show in row counts alone: the commit
+    // rewrites the prefix's bands and keeps a new leaf only where it holds
+    // fewer rows than the manifest records for the band's paths — no
+    // Spark job to find the touched groups. Any other scan (a created_at
+    // ordering or deepening reads the whole queue) takes the stats job,
+    // which rewrites only the bands the batch touched.
+    val byRowCounts = scorePruned && visibleOnly &&
+      scanned.valuesIterator.flatten.forall(m.pathRows.contains)
+    val statsRef = stats
+    // counters and flow-control props of a commit that dequeued
+    // `taken` rows per touched (bucket, band)
+    def commitMeta(taken: Map[(Int, Int), Long]): (Map[String, Long], Map[String, String]) = {
+      val perPartition = taken.groupMapReduce(_._1._1)(_._2)(_ + _)
+      // A7: bump the in-flight gauge of every partition this batch drew from
+      val fcProps =
+        if (!flowControl) Map.empty[String, String]
+        else perPartition.map { case (b, n) => s"fc.p$b" -> (inflight(b) + n).toString }
+      (Map("dequeued" -> taken.values.sum) ++
+        perPartition.map { case (p, n) => s"dequeued.p$p" -> n }, fcProps)
+    }
     val doCommit: () => Unit = () => labeled("dequeue residue rewrite") {
-      // touched (bucket, band) groups: only bands that lost rows are
-      // rewritten; all other files stay referenced by the new manifest.
-      // Derived from `batch`, so this action also MATERIALIZES the batch
-      // + tagged caches. The whole groups-collect → commit chain runs on
-      // the commit thread: the caller's fetch/verify job then overlaps
-      // the scan+rank COMPUTE itself, not just the residue rewrite (the
-      // caches are shared — whichever job reaches a partition first
-      // computes it, the other reads it back), and every queue entry
-      // point still joins via awaitQueueCommit() before reading
-      // backoff/manifest state.
-      val batchGroups = labeled("dequeue scan+rank+select")(batch
-        .select($"partition_id", bandExpr.as("band"))
-        .groupBy($"partition_id", $"band").count()
-        .as[(Int, Int, Long)].collect())
-      // blacklisted rows the scan surfaced force their bands into the
-      // rewrite too — that's how they get DELETED even when no selectable
-      // row shares their band (reference: dropped at batch generation)
-      val blGroups =
-        if (domainsBlacklist.isEmpty) Array.empty[(Int, Int)]
-        else taggedRef.filter($"__bl")
-          .select($"partition_id", bandExpr.as("band")).distinct()
-          .as[(Int, Int)].collect()
+      // The whole chain runs on the commit thread, so the caller's fetch
+      // overlaps the scan+rank compute itself (the tagged cache is
+      // shared — whichever job reaches a partition first computes it).
+      val taken: Map[(Int, Int), Long] =
+        if (byRowCounts)
+          queue.rewriteLeaves(
+            withBand(taggedRef.filter(!$"__sel").select(queueSchema.fieldNames.map(col): _*)),
+            commitEpoch, scanned, commitMeta)
+        else {
+          val gs = if (statsRef != null) statsRef
+            else labeled("dequeue scan stats")(scanStats(taggedRef))
+          // blacklisted rows the scan surfaced force their bands into the
+          // rewrite too — that's how they get DELETED even when no
+          // selectable row shares their band (reference: dropped at batch
+          // generation)
+          val touched = gs.filter(g => g.selected > 0 || g.blacklisted > 0)
+            .map(g => (g.bucket, g.band) -> g.selected).toMap
+          if (touched.nonEmpty) {
+            val touchedKeys = touched.keys.map { case (b, band) => s"${b}_$band" }.toSet
+            val groupKey = concat_ws("_", $"partition_id", bandExpr)
+            val remaining = taggedRef
+              .filter(!$"__sel" && !$"__bl" && groupKey.isInCollection(touchedKeys))
+              .select(queueSchema.fieldNames.map(col): _*)
+            val (counters, props) = commitMeta(touched)
+            queue.replacePaths(withBand(remaining), commitEpoch,
+              touched.keys.flatMap(scanned).toSet, counters, props)
+          }
+          touched
+        }
       // arm/clear the DELAY_ON_EMPTY backoff (reference: delay set on an
       // empty poll, reset to 0 by any non-empty one). An empty batch with
       // flow-control-excluded buckets is "busy", not "drained" — never
       // arms (see fcExcludedBuckets above).
+      val empty = taken.values.sum == 0L
       if (delayOnEmptyEpochs > 0)
         emptyBackoffUntil =
-          if (batchGroups.isEmpty && !fcExcludedBuckets)
-            nowEpoch + delayOnEmptyEpochs
+          if (empty && !fcExcludedBuckets) nowEpoch + delayOnEmptyEpochs
           else Long.MinValue
-      val batchCounts = batchGroups.map { case (b, band, n) => (b, band) -> n }.toMap
-      val touchedGroups = (batchGroups.map(t => (t._1, t._2)) ++ blGroups).distinct
-        .map { case (b, band) => (b, band, batchCounts.getOrElse((b, band), 0L)) }
-      if (touchedGroups.nonEmpty) {
-        val touchedKeys = touchedGroups.map { case (b, band, _) => s"${b}_$band" }.toSet
-        val removePaths = touchedGroups.flatMap { case (b, band, _) =>
-          prefixRef.getOrElse(b, Vector.empty).collect { case (`band`, ps) => ps }.flatten
-        }.toSet
-        val groupKey = concat_ws("_", $"partition_id", bandExpr)
-        val remaining = taggedRef
-          .filter(!$"__sel" && !$"__bl" && groupKey.isInCollection(touchedKeys))
-          .select(queueSchema.fieldNames.map(col): _*)
-        val perPartition = touchedGroups.groupBy(_._1).view.mapValues(_.map(_._3).sum)
-        // A7: bump the in-flight gauge of every partition this batch drew from
-        val fcProps =
-          if (!flowControl) Map.empty[String, String]
-          else perPartition.map { case (b, n) =>
-            s"fc.p$b" -> (inflight(b) + n).toString }.toMap
-        queue.replacePaths(withBand(remaining), commitEpoch, removePaths,
-          counters = Map("dequeued" -> touchedGroups.map(_._3).sum) ++
-            perPartition.map { case (p, n) => s"dequeued.p$p" -> n },
-          props = fcProps)
-      }
-      taggedRef.unpersist()
+      // an empty batch needs no scan cache; otherwise it stays until the
+      // next dequeue, so the caller's batch always reads it
+      if (empty) taggedRef.unpersist()
     }
     // every queue-store entry point joins it via awaitQueueCommit() (the
     // commitGate makes the handoff atomic with those joins)
@@ -1094,6 +1147,7 @@ final class SparkFrontier(
       c.start()
       pendingCommit = c
     }
+    lastTagged = taggedRef
     batch
   }
 
@@ -1282,8 +1336,9 @@ final class SparkFrontier(
     val deduped = l0.withColumn("__occ", row_number().over(firstW))
       .filter($"__occ" === 1).drop("__occ")
 
-    // URL-seen: partitioned-Bloom prefilter, then the exact anti-join
-    // against the states store. Bloom-negative links are definitely
+    // URL-seen: partitioned-Bloom prefilter (only past the broadcast
+    // size, see bloomPays), then the exact anti-join against the states
+    // store. Bloom-negative links are definitely
     // unseen and skip the join (at 10^10 rows that's most of the probe
     // side); positives go through the exact join — pruned to the buckets
     // that actually hold candidates — so the seen SET stays exact.
@@ -1305,12 +1360,13 @@ final class SparkFrontier(
     var budgetDBuckets: Option[Set[Int]] = parentDB
     val wantDB = discovery.exists(_.maxPagesPerDomain > 0) && parentDB.isEmpty
     val statesManifest = states.readManifest()
+    val bloomOn = bloomPays(statesManifest)
     val notSeenPersisted =
       if (statesManifest.bucketPaths.isEmpty)
         // states empty (first epochs): nothing is seen — skip the probe
         // job and the anti-join entirely (per-epoch fixed cost)
         deduped
-      else if (useBloom) {
+      else if (bloomOn) {
         val sm = statesManifest
         val fresh = (0 until stateBuckets).filter(b => bloomFresh(sm, b)).toSet
         val bc = bloomSeen.broadcastFor(spark, fresh)
@@ -1434,7 +1490,7 @@ final class SparkFrontier(
     val scheduled0 = fresh
       .withColumn("depth", $"parent_depth" + 1)
       .withColumn("score", scoreCol)
-      .withColumn("created_at", lit(epochBase) + seqCol)
+      .withColumn("created_at", bound_long(epochBase) + seqCol)
       .withColumn("crawl_at", lit(0L))
       .select(col("link_url").as("url"), $"fingerprint", $"host",
         $"partition_id", $"score", $"created_at", $"depth", $"crawl_at")
@@ -1519,7 +1575,7 @@ final class SparkFrontier(
         val revisits = pages
           .withColumn("host", url_host($"url"))
           .withColumn("partition_id", host_partition($"host", partitions))
-          .withColumn("crawl_at", lit(epochNo + interval))
+          .withColumn("crawl_at", bound_long(epochNo + interval))
           .select(queueSchema.fieldNames.map(col): _*)
         scheduled.union(revisits)
       case None => scheduled
@@ -1593,7 +1649,7 @@ final class SparkFrontier(
           metadata.readManifest().epoch < epochNo) {
         val okMeta = pages
           .select($"fingerprint", $"url", $"depth", $"score", $"created_at")
-          .withColumn("fetched_epoch", lit(epochNo))
+          .withColumn("fetched_epoch", bound_long(epochNo))
           .withColumn("status", lit("200"))
         val allMeta = errors match {
           case Some(err) =>
@@ -1604,7 +1660,7 @@ final class SparkFrontier(
               err.select($"fingerprint", $"url", $"depth", $"score",
                 errCreated.as("created_at"),
                 coalesce($"error", lit("error")).as("status"))
-                .withColumn("fetched_epoch", lit(epochNo)))
+                .withColumn("fetched_epoch", bound_long(epochNo)))
           case None => okMeta
         }
         metadata.append(
@@ -1627,7 +1683,7 @@ final class SparkFrontier(
       Seq(() => labeled("queue append")(commitQueue()),
         () => labeled("domain-metadata append")(commitDomainMeta()),
         () => labeled("metadata append")(commitMetadata())) ++
-        (if (useBloom && willMergeStates)
+        (if (bloomOn && willMergeStates)
           Seq(() => labeled("bloom delta keys")(
             { prebuiltDeltas = Some(bloomSeen.buildDeltas(updates)) }))
         else Nil)
@@ -1643,7 +1699,7 @@ final class SparkFrontier(
     // manifest flip, and a crash anywhere earlier leaves it unset
     if (willMergeStates) labeled("states merge") {
       val nCrawled = if (nPages >= 0) nPages else pages.count()
-      mergeStateUpdates(updates, touched, epochNo,
+      mergeStateUpdates(updates, touched, epochNo, bloomOn,
         Map("crawled" -> nCrawled, "queued" -> nScheduled),
         props = Map(jidKey -> epochNo.toString),
         prebuiltDeltas = prebuiltDeltas)

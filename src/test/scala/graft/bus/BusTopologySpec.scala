@@ -169,7 +169,7 @@ class BusTopologySpec extends AnyFunSuite {
     val seam: MessageBus = bus
     val frontier = new SparkFrontier(spark, tmp("bus-e2e-store"),
       partitions = 2, stateBuckets = 2, strategy = ScoreStrategy.BFS,
-      globalOrder = true, useBloom = false)
+      globalOrder = true)
     frontier.addSeeds(graph.seeds)
     val spiderObjs = (0 until spiders).map(p =>
       new BusSpider(seam, p, web, codec, verifyPayload = true))
@@ -199,7 +199,7 @@ class BusTopologySpec extends AnyFunSuite {
     val web = GraphTables.webDF(spark, graph)
     val frontier = new SparkFrontier(spark, tmp("bus-direct-store"),
       partitions = 2, stateBuckets = 2, strategy = ScoreStrategy.BFS,
-      globalOrder = true, useBloom = false)
+      globalOrder = true)
     frontier.addSeeds(graph.seeds)
     val crawler = new SparkCrawler(frontier, web, 16)
     val order = crawler.run()
@@ -256,8 +256,7 @@ class BusTopologySpec extends AnyFunSuite {
     val frontier = new SparkFrontier(spark, tmp("bus-scoring-store"),
       partitions = 2, stateBuckets = 2, strategy = ScoreStrategy.Basic,
       globalOrder = true,
-      ordering = graft.local.QueueOrdering.ScoreCreatedDesc,
-      useBloom = false)
+      ordering = graft.local.QueueOrdering.ScoreCreatedDesc)
     val urls = Seq("http://ha.com/x", "http://hb.com/x", "http://hc.com/x")
     frontier.addSeeds(urls)
     val codec: BusCodec = BusCodec.Msgpack
@@ -296,7 +295,7 @@ class BusTopologySpec extends AnyFunSuite {
       spiderFeedPartitions = 2, maxNextRequests = 64)
     def mkFrontier() = new SparkFrontier(spark, storeDir,
       partitions = 2, stateBuckets = 2, strategy = ScoreStrategy.BFS,
-      globalOrder = true, useBloom = false)
+      globalOrder = true)
     val bus1 = mkBus()
     val f1 = mkFrontier()
     f1.addSeeds(graph.seeds)

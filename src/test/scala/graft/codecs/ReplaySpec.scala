@@ -20,7 +20,7 @@ class ReplaySpec extends AnyFunSuite {
   private def mkFrontier(): SparkFrontier =
     new SparkFrontier(spark, Files.createTempDirectory("graft-replay").toString,
       partitions = 2, stateBuckets = 2, strategy = ScoreStrategy.BFS,
-      globalOrder = true, useBloom = false)
+      globalOrder = true)
 
   private def meta(depth: Long): CDict =
     CDict(Vector(bytes("depth") -> CLong(depth)))

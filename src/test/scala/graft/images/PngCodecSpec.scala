@@ -52,6 +52,34 @@ class PngCodecSpec extends AnyFunSuite {
     assert(rgbOf(decoded, 48, 48).sameElements(px.map(_ & 0xffffff)))
   }
 
+  private def pngOf(img: java.awt.image.BufferedImage): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    bos.toByteArray
+  }
+
+  test("grayscale PNG decodes through the ImageIO fallback") {
+    val img = new java.awt.image.BufferedImage(16, 8,
+      java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val raster = img.getRaster
+    for (y <- 0 until 8; x <- 0 until 16) raster.setSample(x, y, 0, (x * 16 + y) & 0xff)
+    val decoded = ImageSynth.decode(pngOf(img))
+    assert(decoded.getWidth == 16 && decoded.getHeight == 8)
+    assert(decoded.getRGB(0, 0, 16, 8, null, 0, 16)
+      .sameElements(img.getRGB(0, 0, 16, 8, null, 0, 16)))
+  }
+
+  test("alpha PNG decodes through the ImageIO fallback, alpha kept") {
+    val img = new java.awt.image.BufferedImage(12, 12,
+      java.awt.image.BufferedImage.TYPE_INT_ARGB)
+    for (y <- 0 until 12; x <- 0 until 12)
+      img.setRGB(x, y, ((x * 20) << 24) | (y * 20 << 16) | (x * 7 << 8) | (x + y))
+    val decoded = ImageSynth.decode(pngOf(img))
+    assert(decoded.getColorModel.hasAlpha)
+    assert(decoded.getRGB(0, 0, 12, 12, null, 0, 12)
+      .sameElements(img.getRGB(0, 0, 12, 12, null, 0, 12)))
+  }
+
   test("hostile chunk lengths fail cleanly instead of looping") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global

@@ -19,7 +19,7 @@ class BandedDequeueSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-band").toString
     new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, maxPerHost = maxPerHost,
-      globalOrder = false, useBloom = false)
+      globalOrder = false)
   }
 
   test("dequeue reads a strict subset of files and rewrites only touched bands") {
@@ -134,7 +134,7 @@ class BandedDequeueSpec extends AnyFunSuite {
 
     // a new (banded) frontier over the same root resumes and migrates
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.BFS, globalOrder = false, useBloom = false)
+      strategy = ScoreStrategy.BFS, globalOrder = false)
     assert(f.epoch == 2, "manifest epoch must survive the upgrade")
     var drained = 0L
     var continue = true
@@ -153,14 +153,14 @@ class BandedDequeueSpec extends AnyFunSuite {
   test("scoreBands knob: a store opened under different banding re-bands once, loses nothing") {
     val root = Files.createTempDirectory("graft-reband").toString
     val f100 = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.BFS, globalOrder = false, useBloom = false)
+      strategy = ScoreStrategy.BFS, globalOrder = false)
     f100.bulkSchedule(spark.range(300).select(
       concat(lit("http://rb"), $"id" % 12, lit(".com/p/"), $"id").as("url"),
       (($"id" % 100).cast("double") / 100.0).as("score"), lit(0).as("depth")))
 
     // reopen at 20 bands: first dequeue re-bands the whole store once
     val f20 = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.BFS, globalOrder = false, useBloom = false,
+      strategy = ScoreStrategy.BFS, globalOrder = false,
       scoreBands = 20)
     var drained = Vector.empty[(Double, String)]
     var continue = true
@@ -175,7 +175,7 @@ class BandedDequeueSpec extends AnyFunSuite {
     assert(m.props.get("queue.scoreBands").contains("20"), m.props.toString)
     // a THIRD open at the same 20 bands must not re-migrate
     val f20b = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.BFS, globalOrder = false, useBloom = false,
+      strategy = ScoreStrategy.BFS, globalOrder = false,
       scoreBands = 20)
     f20b.bulkSchedule(spark.range(5).select(
       concat(lit("http://rb0.com/q/"), $"id").as("url"),

@@ -5,7 +5,10 @@ import graft.local.{Graphs, LocalFrontier, FrontierTester, DFSStrategy, QueueOrd
 import java.nio.file.Files
 
 /** The Bloom prefilter must be invisible to correctness: crawl order and
-  * URL-seen set identical with and without it; sidecars survive restart. */
+  * URL-seen set identical with and without it; sidecars survive restart.
+  * The frontier runs its Bloom side only for a states table above the
+  * broadcast threshold, so the crawls that need it run in
+  * `SparkTestBase.bloomSide`, where the threshold is off. */
 class BloomSeenSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
@@ -48,21 +51,25 @@ class BloomSeenSpec extends AnyFunSuite {
   }
 
   test("stale sidecar never causes a re-crawl: bloom enabled on a bloomless store") {
-    // run epochs with useBloom=false (no sidecars), then continue the
-    // SAME store with useBloom=true: every bucket's sidecar is absent ⇒
-    // stale ⇒ rows route through the exact anti-join; the crawl must not
-    // re-schedule seen URLs (ADVICE: 'missing bloom != no seen keys')
+    // run epochs in the default session (a tiny states table: no
+    // sidecars), then continue the SAME store on the Bloom side: every
+    // bucket's sidecar is absent ⇒ stale ⇒ rows route through the exact
+    // anti-join; the crawl must not re-schedule seen URLs (ADVICE:
+    // 'missing bloom != no seen keys')
     val root = Files.createTempDirectory("bloom-stale").toString
     val f1 = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.DFS, globalOrder = true, useBloom = false)
+      strategy = ScoreStrategy.DFS, globalOrder = true)
     f1.addSeeds(Graphs.site03.seeds)
     val c1 = new SparkCrawler(f1, GraphTables.webDF(spark, Graphs.site03), 5)
     c1.crawlOnce(1); c1.crawlOnce(2) // partial crawl, states populated
     val seen1 = f1.stateSnapshot()
+    assert((0 until 4).forall(b => f1.bloomSeen.version(b).isEmpty),
+      "a table below the broadcast threshold must not build sidecars")
 
-    val f2 = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.DFS, globalOrder = true, useBloom = true)
-    val c2 = new SparkCrawler(f2, GraphTables.webDF(spark, Graphs.site03), 5)
+    val bs = SparkTestBase.bloomSide
+    val f2 = new SparkFrontier(bs, root, partitions = 4, stateBuckets = 4,
+      strategy = ScoreStrategy.DFS, globalOrder = true)
+    val c2 = new SparkCrawler(f2, GraphTables.webDF(bs, Graphs.site03), 5)
     c2.run(maxEpochs = 100)
     val all = c1.sequence.flatten ++ c2.sequence.flatten
     assert(all.distinct.size == all.size,
@@ -71,23 +78,50 @@ class BloomSeenSpec extends AnyFunSuite {
     assert(seen1.keySet.subsetOf(f2.stateSnapshot().keySet))
   }
 
+  private def oracle(batch: Int): (List[String], Map[String, Int]) = {
+    val lf = new LocalFrontier(new DFSStrategy, ordering = QueueOrdering.ScoreCreated)
+    val t = new FrontierTester(lf, Graphs.site03, batch)
+    t.run()
+    (t.urlSequence, lf.states.snapshot)
+  }
+
   test("bloom-prefiltered crawl == exact crawl == oracle (order + states)") {
-    def sparkRun(useBloom: Boolean): (List[String], Map[String, Int]) = {
-      val root = Files.createTempDirectory(s"bloom-$useBloom").toString
-      val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-        strategy = ScoreStrategy.DFS, globalOrder = true, useBloom = useBloom)
+    def sparkRun(s: org.apache.spark.sql.SparkSession): (List[String], Map[String, Int]) = {
+      val root = Files.createTempDirectory("bloom-crawl").toString
+      val f = new SparkFrontier(s, root, partitions = 4, stateBuckets = 4,
+        strategy = ScoreStrategy.DFS, globalOrder = true)
       f.addSeeds(Graphs.site03.seeds)
-      val c = new SparkCrawler(f, GraphTables.webDF(spark, Graphs.site03), 5)
+      val c = new SparkCrawler(f, GraphTables.webDF(s, Graphs.site03), 5)
       (c.run(), f.stateSnapshot())
     }
-    val (seqB, statesB) = sparkRun(useBloom = true)
-    val (seqE, statesE) = sparkRun(useBloom = false)
-    val lf = new LocalFrontier(new DFSStrategy, ordering = QueueOrdering.ScoreCreated)
-    val t = new FrontierTester(lf, Graphs.site03, 5)
-    t.run()
-    assert(seqB == t.urlSequence)
+    val (seqB, statesB) = sparkRun(SparkTestBase.bloomSide)
+    val (seqE, statesE) = sparkRun(spark)
+    val (seqO, statesO) = oracle(5)
+    assert(seqB == seqO)
     assert(seqB == seqE)
     assert(statesB == statesE)
-    assert(statesB == lf.states.snapshot)
+    assert(statesB == statesO)
+  }
+
+  test("a states table crossing the broadcast threshold mid-crawl == oracle") {
+    val s = spark.newSession()
+    val root = Files.createTempDirectory("bloom-cross").toString
+    val f = new SparkFrontier(s, root, partitions = 4, stateBuckets = 4,
+      strategy = ScoreStrategy.DFS, globalOrder = true)
+    f.addSeeds(Graphs.site03.seeds)
+    val c = new SparkCrawler(f, GraphTables.webDF(s, Graphs.site03), 2)
+    def sidecars = (0 until 4).count(b => f.bloomSeen.version(b).isDefined)
+    assert(c.crawlOnce(1))
+    // the threshold is the states table's size after epoch 1: epoch 2
+    // still runs the exact join alone, every later epoch the Bloom side
+    val size = f.statesBytes(f.states.readManifest())
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", size.toString)
+    assert(c.crawlOnce(2))
+    assert(sidecars == 0, "below the threshold no sidecar is built")
+    c.run(maxEpochs = 100)
+    assert(sidecars > 0, "past the threshold the merges build sidecars")
+    val (seqO, statesO) = oracle(2)
+    assert(c.sequence.flatten.toList == seqO)
+    assert(f.stateSnapshot() == statesO)
   }
 }

@@ -47,71 +47,75 @@ class DiscoverySpec extends AnyFunSuite {
   }
 
   test("per-domain max_pages budget stops each domain at the budget (SITE_09)") {
-    val root = Files.createTempDirectory("graft-disc").toString
-    val budget = 2
-    val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.Basic, globalOrder = true,
-      discovery = Some(DiscoveryConfig(maxPagesPerDomain = budget,
-        sameDomainOnly = false, justifyScores = true)))
-    f.addSeeds(Graphs.site09.seeds)
-    val c = new SparkCrawler(f, GraphTables.webDF(spark, Graphs.site09), 100)
-    val seq = c.run()
+    for ((side, s) <- SparkTestBase.sides) withClue(s"$side: ") {
+      val root = Files.createTempDirectory("graft-disc").toString
+      val budget = 2
+      val f = new SparkFrontier(s, root, partitions = 4, stateBuckets = 4,
+        strategy = ScoreStrategy.Basic, globalOrder = true,
+        discovery = Some(DiscoveryConfig(maxPagesPerDomain = budget,
+          sameDomainOnly = false, justifyScores = true)))
+      f.addSeeds(Graphs.site09.seeds)
+      val c = new SparkCrawler(f, GraphTables.webDF(s, Graphs.site09), 100)
+      val seq = c.run()
 
-    // persistent counters: every domain stops at the budget
-    val counters = f.readDomainMeta()
-      .select($"domain", $"queued_pages").as[(String, Long)].collect().toMap
-    assert(counters.nonEmpty)
-    counters.foreach { case (d, n) =>
-      assert(n <= budget, s"domain $d queued $n > budget $budget")
+      // persistent counters: every domain stops at the budget
+      val counters = f.readDomainMeta()
+        .select($"domain", $"queued_pages").as[(String, Long)].collect().toMap
+      assert(counters.nonEmpty)
+      counters.foreach { case (d, n) =>
+        assert(n <= budget, s"domain $d queued $n > budget $budget")
+      }
+
+      // crawled pages per domain <= budget (+1 for a seed, which the
+      // reference injects outside the budget)
+      val seedDomains = Graphs.site09.seeds.map(u => UrlUtil.sld(UrlUtil.slotKey(u)))
+      seq.groupBy(u => UrlUtil.sld(UrlUtil.slotKey(u))).foreach { case (d, urls) =>
+        val allowance = budget + seedDomains.count(_ == d)
+        assert(urls.size <= allowance,
+          s"domain $d crawled ${urls.size} > $allowance: $urls")
+      }
+      // budget actually binds: SITE_09's a.com alone has 7 links
+      assert(seq.size < Graphs.site09.nodes.size)
+
+      // the budget survives a restart (domain_metadata is persistent):
+      // a fresh frontier over the same root schedules nothing new
+      val f2 = new SparkFrontier(s, root, partitions = 4, stateBuckets = 4,
+        strategy = ScoreStrategy.Basic, globalOrder = true,
+        discovery = Some(DiscoveryConfig(maxPagesPerDomain = budget,
+          sameDomainOnly = false)))
+      val c2 = new SparkCrawler(f2, GraphTables.webDF(s, Graphs.site09), 100)
+      c2.run()
+      val counters2 = f2.readDomainMeta()
+        .select($"domain", $"queued_pages").as[(String, Long)].collect().toMap
+      counters2.foreach { case (d, n) => assert(n <= budget, s"$d: $n") }
     }
-
-    // crawled pages per domain <= budget (+1 for a seed, which the
-    // reference injects outside the budget)
-    val seedDomains = Graphs.site09.seeds.map(u => UrlUtil.sld(UrlUtil.slotKey(u)))
-    seq.groupBy(u => UrlUtil.sld(UrlUtil.slotKey(u))).foreach { case (d, urls) =>
-      val allowance = budget + seedDomains.count(_ == d)
-      assert(urls.size <= allowance,
-        s"domain $d crawled ${urls.size} > $allowance: $urls")
-    }
-    // budget actually binds: SITE_09's a.com alone has 7 links
-    assert(seq.size < Graphs.site09.nodes.size)
-
-    // the budget survives a restart (domain_metadata is persistent):
-    // a fresh frontier over the same root schedules nothing new
-    val f2 = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.Basic, globalOrder = true,
-      discovery = Some(DiscoveryConfig(maxPagesPerDomain = budget,
-        sameDomainOnly = false)))
-    val c2 = new SparkCrawler(f2, GraphTables.webDF(spark, Graphs.site09), 100)
-    c2.run()
-    val counters2 = f2.readDomainMeta()
-      .select($"domain", $"queued_pages").as[(String, Long)].collect().toMap
-    counters2.foreach { case (d, n) => assert(n <= budget, s"$d: $n") }
   }
 
   test("same-domain filter keeps the crawl inside the seeds' 2nd-level domains") {
-    val root = Files.createTempDirectory("graft-samedom").toString
-    val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.Basic, globalOrder = true,
-      discovery = Some(DiscoveryConfig(maxPagesPerDomain = 100,
-        sameDomainOnly = true)))
-    f.addSeeds(Graphs.site09.seeds)
-    val c = new SparkCrawler(f, GraphTables.webDF(spark, Graphs.site09), 100)
-    val seq = c.run()
-    val seedSlds = Graphs.site09.seeds.map(u => UrlUtil.sld(UrlUtil.slotKey(u))).toSet
-    assert(seedSlds == Set("a.com", "b.com"))
-    seq.foreach { u =>
-      assert(seedSlds.contains(UrlUtil.sld(UrlUtil.slotKey(u))),
-        s"crawl left the seed domains: $u")
+    for ((side, s) <- SparkTestBase.sides) withClue(s"$side: ") {
+      val root = Files.createTempDirectory("graft-samedom").toString
+      val f = new SparkFrontier(s, root, partitions = 4, stateBuckets = 4,
+        strategy = ScoreStrategy.Basic, globalOrder = true,
+        discovery = Some(DiscoveryConfig(maxPagesPerDomain = 100,
+          sameDomainOnly = true)))
+      f.addSeeds(Graphs.site09.seeds)
+      val c = new SparkCrawler(f, GraphTables.webDF(s, Graphs.site09), 100)
+      val seq = c.run()
+      val seedSlds = Graphs.site09.seeds.map(u => UrlUtil.sld(UrlUtil.slotKey(u))).toSet
+      assert(seedSlds == Set("a.com", "b.com"))
+      seq.foreach { u =>
+        assert(seedSlds.contains(UrlUtil.sld(UrlUtil.slotKey(u))),
+          s"crawl left the seed domains: $u")
+      }
+      // cross-domain targets exist in the graph and were NOT crawled
+      assert(Graphs.site09.nodes.exists(u => !seedSlds.contains(UrlUtil.sld(UrlUtil.slotKey(u)))))
+      // home pages outrank non-home links of the same domain: b.com's
+      // self-link is a home page scored 0.8... under the min-queue LOWER
+      // pops first, so home (0.8 class) pops after interest/other (0.5) —
+      // verify the classifier wired by checking queue scores were written
+      // in the 0.x justify form
+      val meta = f.metadata.read(s).select($"score").as[Double].collect()
+      assert(meta.forall(s => s >= 0.0 && s <= 1.01))
     }
-    // cross-domain targets exist in the graph and were NOT crawled
-    assert(Graphs.site09.nodes.exists(u => !seedSlds.contains(UrlUtil.sld(UrlUtil.slotKey(u)))))
-    // home pages outrank non-home links of the same domain: b.com's
-    // self-link is a home page scored 0.8... under the min-queue LOWER
-    // pops first, so home (0.8 class) pops after interest/other (0.5) —
-    // verify the classifier wired by checking queue scores were written
-    // in the 0.x justify form
-    val meta = f.metadata.read(spark).select($"score").as[Double].collect()
-    assert(meta.forall(s => s >= 0.0 && s <= 1.01))
   }
 }

@@ -68,7 +68,7 @@ class DomainControlSpec extends AnyFunSuite {
   test("DOMAINS_BLACKLIST drops blacklisted hosts at dequeue and deletes them with the band") {
     val root = Files.createTempDirectory("graft-bl").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.BFS, globalOrder = false, useBloom = false,
+      strategy = ScoreStrategy.BFS, globalOrder = false,
       domainsBlacklist = Set("BAD.com")) // case-insensitive match
     f.bulkSchedule(spark.range(40).select(
       when($"id" < 20, concat(lit("http://bad.com/p/"), $"id"))
@@ -91,7 +91,7 @@ class DomainControlSpec extends AnyFunSuite {
   test("updateScores (dont_queue): rows move across bands, order follows, nothing duplicates") {
     val root = Files.createTempDirectory("graft-upsc").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.BFS, globalOrder = true, useBloom = false)
+      strategy = ScoreStrategy.BFS, globalOrder = true)
     f.bulkSchedule(spark.range(100).select(
       concat(lit("http://u"), $"id" % 10, lit(".com/p/"), $"id").as("url"),
       lit(0.5).as("score"), lit(0).as("depth")))
@@ -118,7 +118,7 @@ class DomainControlSpec extends AnyFunSuite {
   test("updateScores: duplicate updates for one URL apply last-wins, no queue fan-out") {
     val root = Files.createTempDirectory("graft-updup").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.BFS, globalOrder = true, useBloom = false)
+      strategy = ScoreStrategy.BFS, globalOrder = true)
     f.bulkSchedule(spark.range(10).select(
       concat(lit("http://du.com/p/"), $"id").as("url"),
       lit(0.5).as("score"), lit(0).as("depth")))
@@ -138,7 +138,7 @@ class DomainControlSpec extends AnyFunSuite {
   test("updateScores on a store written under a different scoreBands re-bands first (no row loss)") {
     val root = Files.createTempDirectory("graft-upreband").toString
     val f50 = new SparkFrontier(spark, root, partitions = 2, stateBuckets = 2,
-      strategy = ScoreStrategy.BFS, globalOrder = true, useBloom = false,
+      strategy = ScoreStrategy.BFS, globalOrder = true,
       scoreBands = 50)
     f50.bulkSchedule(spark.range(20).select(
       concat(lit("http://rb.com/p/"), $"id").as("url"),
@@ -148,7 +148,7 @@ class DomainControlSpec extends AnyFunSuite {
     // so without the migration a removed file could hold rows whose
     // 100-band id is untouched (dropped from the rewrite = row loss)
     val f100 = new SparkFrontier(spark, root, partitions = 2, stateBuckets = 2,
-      strategy = ScoreStrategy.BFS, globalOrder = true, useBloom = false)
+      strategy = ScoreStrategy.BFS, globalOrder = true)
     val n = f100.updateScores(
       Seq(("http://rb.com/p/7", 0.05)).toDF("url", "score"))
     assert(n == 1L)

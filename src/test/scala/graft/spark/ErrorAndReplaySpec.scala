@@ -125,7 +125,7 @@ class ErrorAndReplaySpec extends AnyFunSuite {
   test("A7 flow control: busy partitions yield no batch until results are processed") {
     val root = Files.createTempDirectory("graft-fc").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.BFS, globalOrder = false, useBloom = false,
+      strategy = ScoreStrategy.BFS, globalOrder = false,
       flowControl = true)
     f.bulkSchedule(spark.range(200).select(
       concat(lit("http://fc"), $"id" % 20, lit(".com/p/"), $"id").as("url"),
@@ -156,7 +156,7 @@ class ErrorAndReplaySpec extends AnyFunSuite {
     // cleared. Busy-empty must not arm; genuinely-drained still must.
     val root = Files.createTempDirectory("graft-fcdelay").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.BFS, globalOrder = false, useBloom = false,
+      strategy = ScoreStrategy.BFS, globalOrder = false,
       flowControl = true, delayOnEmptyEpochs = 100)
     f.bulkSchedule(spark.range(40).select(
       concat(lit("http://fcd"), $"id" % 8, lit(".com/p/"), $"id").as("url"),

@@ -62,6 +62,26 @@ class FrontierExprsSpec extends AnyFunSuite {
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"), plan)
   }
 
+  test("bound_long: same value interpreted and compiled, never folded to a literal") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{InterpretedUnsafeProjection, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    for (v <- Seq(0L, 40L, -3L, Long.MaxValue, Long.MinValue)) {
+      val e = Seq(BoundLong(v))
+      assert(GenerateUnsafeProjection.generate(e)(InternalRow.empty).getLong(0) == v)
+      assert(InterpretedUnsafeProjection.createProjection(e)(InternalRow.empty).getLong(0) == v)
+    }
+    val df = spark.range(3).select((bound_long(40L) + 2).as("x"))
+    assert(df.as[Long].collect().toSeq == Seq(42L, 42L, 42L))
+    val exprs = df.queryExecution.optimizedPlan.expressions
+    assert(exprs.exists(_.exists(_.isInstanceOf[BoundLong])), exprs.toString)
+    assert(!exprs.exists(_.exists {
+      case l: Literal => l.value == 42L || l.value == 40L
+      case _ => false
+    }), exprs.toString)
+  }
+
   test("null propagates") {
     import spark.implicits._
     val df = Seq(Some("http://a.com/x"), None).toDF("url")

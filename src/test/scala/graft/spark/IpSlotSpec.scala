@@ -21,7 +21,7 @@ class IpSlotSpec extends AnyFunSuite {
       case _ => "10.9.9.9"
     }
     val f = new SparkFrontier(spark, root, partitions = 2, stateBuckets = 2,
-      strategy = ScoreStrategy.BFS, globalOrder = true, useBloom = false,
+      strategy = ScoreStrategy.BFS, globalOrder = true,
       maxPerHost = 4, slotKeyMode = "ip", ipResolver = resolver)
     f.bulkSchedule(spark.range(30).select(
       when($"id" < 10, concat(lit("http://a.com/p/"), $"id"))
@@ -43,7 +43,7 @@ class IpSlotSpec extends AnyFunSuite {
   test("host mode (default) unchanged: per-hostname budgets") {
     val root = Files.createTempDirectory("graft-hostslot").toString
     val f = new SparkFrontier(spark, root, partitions = 2, stateBuckets = 2,
-      strategy = ScoreStrategy.BFS, globalOrder = true, useBloom = false,
+      strategy = ScoreStrategy.BFS, globalOrder = true,
       maxPerHost = 4)
     f.bulkSchedule(spark.range(20).select(
       when($"id" < 10, concat(lit("http://a.com/p/"), $"id"))

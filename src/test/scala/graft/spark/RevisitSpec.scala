@@ -12,35 +12,37 @@ class RevisitSpec extends AnyFunSuite {
   import org.apache.spark.sql.functions._
 
   test("crawled URLs reappear after the revisit interval; metadata logs every fetch") {
-    val root = Files.createTempDirectory("graft-revisit").toString
-    val graph = Graphs.site01
-    val frontier = new SparkFrontier(spark, root, partitions = 4,
-      stateBuckets = 4, strategy = ScoreStrategy.BFS, globalOrder = true,
-      revisitIntervalEpochs = Some(2))
-    frontier.addSeeds(graph.seeds)
-    val crawler = new SparkCrawler(frontier, GraphTables.webDF(spark, graph), 100)
-    val seq = crawler.runEpochs(8)
-    val counts = seq.groupBy(identity).view.mapValues(_.size).toMap
-    // every page crawled at least once, and revisits happened
-    assert(counts.keySet == Graphs.site01.nodes)
-    assert(counts.values.exists(_ >= 2), s"no URL was revisited: $counts")
-    // a revisited URL must wait ≥ interval epochs between fetches
-    val epochOf = crawler.sequence.toList.zipWithIndex.flatMap {
-      case (batch, i) => batch.map(u => u -> i)
-    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    epochOf.values.foreach { es =>
-      es.sliding(2).foreach {
-        case List(a, b) => assert(b - a >= 2, s"revisit too early: $es")
-        case _ =>
+    for ((side, s) <- SparkTestBase.sides) withClue(s"$side: ") {
+      val root = Files.createTempDirectory("graft-revisit").toString
+      val graph = Graphs.site01
+      val frontier = new SparkFrontier(s, root, partitions = 4,
+        stateBuckets = 4, strategy = ScoreStrategy.BFS, globalOrder = true,
+        revisitIntervalEpochs = Some(2))
+      frontier.addSeeds(graph.seeds)
+      val crawler = new SparkCrawler(frontier, GraphTables.webDF(s, graph), 100)
+      val seq = crawler.runEpochs(8)
+      val counts = seq.groupBy(identity).view.mapValues(_.size).toMap
+      // every page crawled at least once, and revisits happened
+      assert(counts.keySet == Graphs.site01.nodes)
+      assert(counts.values.exists(_ >= 2), s"no URL was revisited: $counts")
+      // a revisited URL must wait ≥ interval epochs between fetches
+      val epochOf = crawler.sequence.toList.zipWithIndex.flatMap {
+        case (batch, i) => batch.map(u => u -> i)
+      }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      epochOf.values.foreach { es =>
+        es.sliding(2).foreach {
+          case List(a, b) => assert(b - a >= 2, s"revisit too early: $es")
+          case _ =>
+        }
       }
+      // metadata sink: one record per fetch (crawls + revisits)
+      val meta = frontier.metadata.read(s)
+      assert(meta.count() == seq.length)
+      assert(meta.select("status").distinct().collect().map(_.getString(0)).toSet == Set("200"))
+      // per-document fetch history is queryable
+      val perDoc = meta.groupBy("url").agg(count(lit(1)).as("n"))
+      assert(perDoc.filter(col("n") >= 2).count() >= 1)
     }
-    // metadata sink: one record per fetch (crawls + revisits)
-    val meta = frontier.metadata.read(spark)
-    assert(meta.count() == seq.length)
-    assert(meta.select("status").distinct().collect().map(_.getString(0)).toSet == Set("200"))
-    // per-document fetch history is queryable
-    val perDoc = meta.groupBy("url").agg(count(lit(1)).as("n"))
-    assert(perDoc.filter(col("n") >= 2).count() >= 1)
   }
 
   test("DELAY_ON_EMPTY backoff: empty dequeues skip the scan until the " +

@@ -1,6 +1,7 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.local.{Graphs, CrawlGraph, LocalFrontier, FrontierTester, BFSStrategy, DFSStrategy, QueueOrdering}
 import java.nio.file.Files
@@ -11,10 +12,8 @@ import java.nio.file.Files
 class SparkFrontierSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
-  private def webDF(graph: CrawlGraph) = {
-    import spark.implicits._
-    graph.pages.map { case (u, ls) => (u, ls) }.toDF("url", "outlinks")
-  }
+  private def webDF(graph: CrawlGraph, s: SparkSession = spark) =
+    GraphTables.webDF(s, graph)
 
   private def localRun(graph: CrawlGraph, strategy: graft.local.CrawlStrategy,
       mnr: Int): (List[String], Map[String, Int]) = {
@@ -25,12 +24,12 @@ class SparkFrontierSpec extends AnyFunSuite {
   }
 
   private def sparkRun(graph: CrawlGraph, strategy: ScoreStrategy, mnr: Int,
-      tag: String): (List[String], Map[String, Int]) = {
+      tag: String, s: SparkSession = spark): (List[String], Map[String, Int]) = {
     val root = Files.createTempDirectory(s"graft-$tag").toString
-    val frontier = new SparkFrontier(spark, root, partitions = 4,
+    val frontier = new SparkFrontier(s, root, partitions = 4,
       stateBuckets = 4, strategy = strategy, globalOrder = true)
     frontier.addSeeds(graph.seeds)
-    val crawler = new SparkCrawler(frontier, webDF(graph), mnr)
+    val crawler = new SparkCrawler(frontier, webDF(graph, s), mnr)
     val seq = crawler.run()
     (seq, frontier.stateSnapshot())
   }
@@ -39,9 +38,11 @@ class SparkFrontierSpec extends AnyFunSuite {
 
   test("BFS SITE_01 mnr=1: crawl order + URL-seen set match the oracle") {
     val (localSeq, localStates) = localRun(Graphs.site01, new BFSStrategy, 1)
-    val (sparkSeq, sparkStates) = sparkRun(Graphs.site01, ScoreStrategy.BFS, 1, "b1")
-    assert(sparkSeq == localSeq)
-    assert(sparkStates == localStates)
+    for ((side, s) <- SparkTestBase.sides) {
+      val (sparkSeq, sparkStates) = sparkRun(Graphs.site01, ScoreStrategy.BFS, 1, "b1", s)
+      assert(sparkSeq == localSeq, side)
+      assert(sparkStates == localStates, side)
+    }
   }
 
   test("BFS SITE_02 mnr=100: crawl order matches the oracle") {
@@ -74,9 +75,11 @@ class SparkFrontierSpec extends AnyFunSuite {
       Vector("http://w0.example/", "http://w1.example/", "http://w2.example/"))
     val (localSeq, localStates) = localRun(graph, new BFSStrategy, 4)
     assert(localSeq.count(_ == "http://w2.example/") == 2, localSeq.toString)
-    val (sparkSeq, sparkStates) = sparkRun(graph, ScoreStrategy.BFS, 4, "xseed")
-    assert(sparkSeq == localSeq)
-    assert(sparkStates == localStates)
+    for ((side, s) <- SparkTestBase.sides) {
+      val (sparkSeq, sparkStates) = sparkRun(graph, ScoreStrategy.BFS, 4, "xseed", s)
+      assert(sparkSeq == localSeq, side)
+      assert(sparkStates == localStates, side)
+    }
   }
 
   private def localRunOrdered(graph: CrawlGraph, strategy: graft.local.CrawlStrategy,
@@ -88,32 +91,33 @@ class SparkFrontierSpec extends AnyFunSuite {
   }
 
   private def sparkRunOrdered(graph: CrawlGraph, strategy: ScoreStrategy,
-      ordering: QueueOrdering, mnr: Int, tag: String): List[String] = {
+      ordering: QueueOrdering, mnr: Int, tag: String,
+      s: SparkSession = spark): List[String] = {
     val root = Files.createTempDirectory(s"graft-$tag").toString
-    val frontier = new SparkFrontier(spark, root, partitions = 4,
+    val frontier = new SparkFrontier(s, root, partitions = 4,
       stateBuckets = 4, strategy = strategy, globalOrder = true,
       ordering = ordering)
     frontier.addSeeds(graph.seeds)
-    new SparkCrawler(frontier, webDF(graph), mnr).run()
+    new SparkCrawler(frontier, webDF(graph, s), mnr).run()
   }
 
   test("FIFO ordering (created ASC) SITE_02 matches the oracle at mnr=1 and 5") {
-    for (mnr <- Seq(1, 5)) {
+    for (mnr <- Seq(1, 5); (side, s) <- SparkTestBase.sides) {
       val local = localRunOrdered(Graphs.site02,
         new graft.local.BasicStrategy, QueueOrdering.Fifo, mnr)
       val spk = sparkRunOrdered(Graphs.site02, ScoreStrategy.Basic,
-        QueueOrdering.Fifo, mnr, s"fifo$mnr")
-      assert(spk == local, s"mnr=$mnr")
+        QueueOrdering.Fifo, mnr, s"fifo$mnr", s)
+      assert(spk == local, s"mnr=$mnr $side")
     }
   }
 
   test("LIFO ordering (created DESC) SITE_01 matches the oracle at mnr=1 and 2") {
-    for (mnr <- Seq(1, 2)) {
+    for (mnr <- Seq(1, 2); (side, s) <- SparkTestBase.sides) {
       val local = localRunOrdered(Graphs.site01,
         new graft.local.BasicStrategy, QueueOrdering.Lifo, mnr)
       val spk = sparkRunOrdered(Graphs.site01, ScoreStrategy.Basic,
-        QueueOrdering.Lifo, mnr, s"lifo$mnr")
-      assert(spk == local, s"mnr=$mnr")
+        QueueOrdering.Lifo, mnr, s"lifo$mnr", s)
+      assert(spk == local, s"mnr=$mnr $side")
     }
   }
 
@@ -173,5 +177,27 @@ class SparkFrontierSpec extends AnyFunSuite {
     // nothing lost: all reachable pages crawled exactly once
     assert(seq.toSet == graph.nodes)
     assert(seq.length == graph.nodes.size)
+  }
+
+  test("the crawler's driver-side batch sort == Spark's orderBy (nulls, NaN, -0.0, desc)") {
+    import spark.implicits._
+    val df = Seq[(Option[Double], Option[Long], String)](
+      (Some(Double.NaN), Some(1L), "a"), (Some(-0.0), Some(2L), "b"),
+      (Some(0.0), Some(1L), "c"), (None, Some(3L), "d"), (Some(1.5), None, "e"),
+      (Some(-1.0), Some(1L), "f"), (Some(0.0), Some(1L), "\u00e9"),
+      (Some(0.0), Some(1L), "\ud83d\ude00"), (Some(0.0), Some(1L), "\uffee"),
+      (Some(Double.NegativeInfinity), Some(5L), "g"), (Some(Double.NaN), None, "h"),
+      (Some(0.0), Some(1L), "c0"), (None, None, "i"))
+      .toDF("score", "created_at", "url")
+    for (order <- Seq(Seq("score" -> true, "created_at" -> true),
+        Seq("score" -> false, "created_at" -> true), Seq("created_at" -> false))) {
+      val keys = order :+ ("url" -> true)
+      val bySpark = df.orderBy(keys.map { case (c, asc) =>
+        if (asc) col(c).asc else col(c).desc }: _*).select($"url").as[String].collect().toList
+      val sel = df.select(keys.map(k => col(k._1)): _*)
+      val byDriver = SparkCrawler.sortRows(sel.collect().toSeq, sel.schema, keys.map(_._2))
+        .map(_.getString(keys.length - 1)).toList
+      assert(byDriver == bySpark, s"order $order")
+    }
   }
 }

@@ -20,4 +20,18 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A child session in which no table is small enough to broadcast, so
+    * every frontier runs its Bloom side (sidecars probed, maintained and
+    * broadcast) however small its states table is. */
+  lazy val bloomSide: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
+
+  /** Both sides of the URL-seen step, for specs that must hold on each:
+    * the default session (a small states table takes the exact anti-join
+    * alone) and `bloomSide`. */
+  lazy val sides: Seq[(String, SparkSession)] = Seq("exact" -> spark, "bloom" -> bloomSide)
 }

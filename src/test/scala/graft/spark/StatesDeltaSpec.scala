@@ -11,14 +11,15 @@ import java.nio.file.{Files, Paths}
   * last-state-wins by commit version; compaction folds deltas between
   * epochs. Plus the bloom-freshness regression: a states manifest with
   * data but no per-bucket versions (a pre-versioning build) must be
-  * treated STALE, never vacuously fresh. */
+  * treated STALE, never vacuously fresh. Runs on the Bloom side, so the
+  * sidecars are kept however small the table. */
 class StatesDeltaSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+  lazy val spark = SparkTestBase.bloomSide
   import spark.implicits._
 
-  private def frontier(root: String, useBloom: Boolean = false) =
+  private def frontier(root: String) =
     new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.BFS, globalOrder = true, useBloom = useBloom)
+      strategy = ScoreStrategy.BFS, globalOrder = true)
 
   private def pagesDF(rows: (String, String)*) =
     rows.map { case (fp, u) => (fp, u, 0, 0.0, 1L) }
@@ -64,7 +65,7 @@ class StatesDeltaSpec extends AnyFunSuite {
 
   test("compactStates folds deltas to one file per bucket; view and bloom freshness survive") {
     val root = Files.createTempDirectory("lsm-compact").toString
-    val f = frontier(root, useBloom = true)
+    val f = frontier(root)
     // 6 epochs: each crawls the url the previous epoch queued (its QUEUED
     // delta is superseded by a CRAWLED one) and queues the next
     (1 to 6).foreach { e =>
@@ -106,7 +107,7 @@ class StatesDeltaSpec extends AnyFunSuite {
     def crawlSite02(compactEvery: Int): (List[String], Map[String, Int], Int) = {
       val root = Files.createTempDirectory(s"lsm-auto$compactEvery").toString
       val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-        strategy = ScoreStrategy.DFS, globalOrder = true, useBloom = true)
+        strategy = ScoreStrategy.DFS, globalOrder = true)
       f.addSeeds(Graphs.site02.seeds)
       val c = new SparkCrawler(f, GraphTables.webDF(spark, Graphs.site02), 2,
         compactEveryEpochs = compactEvery)
@@ -130,7 +131,7 @@ class StatesDeltaSpec extends AnyFunSuite {
     // and the first merge must REBUILD the sidecars, not stamp
     // delta-only blooms as complete
     val root = Files.createTempDirectory("lsm-legacy").toString
-    val f1 = frontier(root, useBloom = true)
+    val f1 = frontier(root)
     f1.addSeeds(Graphs.site03.seeds)
     val c1 = new SparkCrawler(f1, GraphTables.webDF(spark, Graphs.site03), 5)
     c1.crawlOnce(1); c1.crawlOnce(2)
@@ -146,7 +147,7 @@ class StatesDeltaSpec extends AnyFunSuite {
       try s.forEach(p => Files.delete(p)) finally s.close() }
     assert(f1.states.readManifest().bucketVersions.isEmpty, "fixture: no bucketv")
 
-    val f2 = frontier(root, useBloom = true)
+    val f2 = frontier(root)
     val c2 = new SparkCrawler(f2, GraphTables.webDF(spark, Graphs.site03), 5)
     c2.run(maxEpochs = 100)
     val all = c1.sequence.flatten ++ c2.sequence.flatten

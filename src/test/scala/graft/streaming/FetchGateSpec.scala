@@ -127,8 +127,7 @@ class FetchGateSpec extends AnyFunSuite {
     import graft.spark.{SparkFrontier, ScoreStrategy}
     val root = java.nio.file.Files.createTempDirectory("gate-seam").toString
     val frontier = new SparkFrontier(spark, root, partitions = 2,
-      stateBuckets = 2, strategy = ScoreStrategy.BFS, globalOrder = true,
-      useBloom = false)
+      stateBuckets = 2, strategy = ScoreStrategy.BFS, globalOrder = true)
     val floodUrls = (1 to 6).map(i => s"http://flood.example/p/$i")
     val quietUrls = (1 to 2).map(i => s"http://quiet.example/p/$i")
     frontier.addSeeds(scala.util.Random.shuffle(floodUrls ++ quietUrls))

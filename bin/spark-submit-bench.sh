@@ -3,7 +3,7 @@
 # mode), against the plain `sbt package` jar — no assembly needed, the
 # engine has no dependencies beyond Spark itself.
 #
-#   ./bin/spark-submit-bench.sh [sf-dir] [cpus]
+#   ./bin/spark-submit-bench.sh [sf-dir] [cpus]    (cpus defaults to nproc)
 #
 # The Bench main itself runs the same job at local[N] and local[4N]
 # (cluster-size pair, shuffle partitions scaled) and prints one JSON line
@@ -13,7 +13,7 @@
 # change with executor count.
 set -euo pipefail
 SF_DIR="${1:-/root/testdata/sf0.1}"
-CPUS="${2:-32}"
+CPUS="${2:-$(nproc)}"
 JAR="$(dirname "$0")/../target/scala-2.13/fronteraspark_2.13-0.1.0.jar"
 [ -f "$JAR" ] || { echo "run 'sbt package' first" >&2; exit 1; }
 # local mode runs driver + executors in ONE JVM: spark-submit's 1g default

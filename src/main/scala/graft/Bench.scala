@@ -7,8 +7,9 @@ import graft.spark.{SparkFrontier, SparkCrawler, ScoreStrategy, GraphTables}
 /** Benchmark driver. Headline = `get_next_requests` throughput (URLs/sec)
   * of a full BFS crawl over a synthetic multi-host frontier, run at three
   * parallelism levels — local[lo] with lo = max(1, cpus/8), local[4·lo]
-  * (at most cpus) and local[cpus], with `cpus` from SPARK_GRAFT_CPUS and
-  * shuffle partitions scaled with cores — to evidence the N→4N
+  * (at most cpus) and local[cpus], with `cpus` from SPARK_GRAFT_CPUS
+  * (default: the machine's core count) and shuffle partitions scaled with
+  * cores — to evidence the N→4N
   * scaling-efficiency criterion at the two lower levels, plus
   * per-operator timings of the oracle-checked query suite.
   * Reference baseline: a single Frontera spider sustains ≈20 pages/s
@@ -211,7 +212,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val sf = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1).toDouble).getOrElse(0.1)
     // frontier size tracks SF: sf0.1 → 600 hosts × 585 urls ≈ 351k URLs
     val hosts = math.max(6, (sf * 6000).toInt)

@@ -1,7 +1,10 @@
 package graft.codecs
 
 import scala.collection.immutable.ArraySeq
-import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
 import CValue._
 
 /** S9: the reference's JSON bus codec
@@ -199,102 +202,41 @@ object JsonCodec {
 
   // ---------------------------------------------------------------- decode
 
-  /** Minimal JSON reader for the codec subset (arrays, strings, numbers,
-    * true/false/null) — no dependencies, like the manifest parser. */
-  private final class P(s: String) {
-    private var i = 0
-    private def ws(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    def parse(): Any = { ws(); parseValue() }
-    private def parseValue(): Any = {
-      ws()
-      s.charAt(i) match {
-        case '[' =>
-          i += 1; ws()
-          val b = Vector.newBuilder[Any]
-          if (s.charAt(i) == ']') { i += 1 }
-          else {
-            var more = true
-            while (more) {
-              b += parseValue(); ws()
-              s.charAt(i) match {
-                case ',' => i += 1
-                case ']' => i += 1; more = false
-                case c => sys.error(s"bad array at $i: $c")
-              }
-            }
-          }
-          b.result()
-        case '"' => parseString()
-        case 't' => expect("true"); java.lang.Boolean.TRUE
-        case 'f' => expect("false"); java.lang.Boolean.FALSE
-        case 'n' => expect("null"); null
-        case _ => parseNumber()
-      }
-    }
-    private def expect(lit: String): Unit = {
-      require(s.regionMatches(i, lit, 0, lit.length), s"expected $lit at $i")
-      i += lit.length
-    }
-    private def parseString(): String = {
-      i += 1
-      val sb = new StringBuilder
-      while (s.charAt(i) != '"') {
-        val c = s.charAt(i)
-        if (c == '\\') {
-          i += 1
-          s.charAt(i) match {
-            case '"' => sb.append('"'); case '\\' => sb.append('\\')
-            case '/' => sb.append('/'); case 'n' => sb.append('\n')
-            case 'r' => sb.append('\r'); case 't' => sb.append('\t')
-            case 'b' => sb.append('\b'); case 'f' => sb.append('\f')
-            case 'u' =>
-              sb.append(Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar)
-              i += 4
-            case e => sys.error(s"bad escape \\$e")
-          }
-        } else sb.append(c)
-        i += 1
-      }
-      i += 1
-      sb.toString
-    }
-    private def parseNumber(): Any = {
-      val start = i
-      while (i < s.length && "+-0123456789.eE".indexOf(s.charAt(i)) >= 0) i += 1
-      val tok = s.substring(start, i)
-      if (tok.exists(c => c == '.' || c == 'e' || c == 'E')) tok.toDouble
-      else tok.toLong
-    }
-  }
+  /** The frame reader: Jackson, also accepting python's `NaN`,
+    * `Infinity` and `-Infinity` (what `json.dumps` writes for non-finite
+    * floats, and `fmtDouble` with it). Thread-safe once built. */
+  private val json = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS).build()
 
   /** `_convert_from_saved_type`: the tagged tree back to CValue. */
-  private def fromSaved(o: Any): CValue = o match {
-    case v: Vector[_] =>
-      require(v.length == 2, s"tagged pair expected: $v")
-      (v(0), v(1)) match {
-        case ("bytes", s: String) => bytes(s)
-        case ("dict", items: Vector[_]) => CDict(items.map {
-          case p: Vector[_] => (fromSaved(p(0)), fromSaved(p(1)))
-          case x => sys.error(s"bad dict pair $x")
-        })
-        case ("list", items: Vector[_]) => CList(items.map(fromSaved))
-        case ("tuple", items: Vector[_]) => CTuple(items.map(fromSaved))
-        case ("other", x) => scalar(x)
-        case (t, _) => sys.error(s"unknown tag $t")
-      }
-    case x => sys.error(s"tagged pair expected, got $x")
+  private def fromSaved(n: JsonNode): CValue = {
+    require(n.isArray && n.size == 2, s"tagged pair expected, got $n")
+    val v = n.get(1)
+    def items = v.asScala.toVector
+    n.get(0).textValue match {
+      case "bytes" if v.isTextual => bytes(v.textValue)
+      case "dict" if v.isArray => CDict(items.map { p =>
+        require(p.isArray && p.size == 2, s"bad dict pair $p")
+        (fromSaved(p.get(0)), fromSaved(p.get(1)))
+      })
+      case "list" if v.isArray => CList(items.map(fromSaved))
+      case "tuple" if v.isArray => CTuple(items.map(fromSaved))
+      case "other" => scalar(v)
+      case t => sys.error(s"unknown tag $t")
+    }
   }
 
-  private def scalar(x: Any): CValue = x match {
-    case null => CNull
-    case b: java.lang.Boolean => CBool(b)
-    case n: Long => CLong(n)
-    case d: Double => CDouble(d)
-    case s: String => CStr(s)
-    case other => sys.error(s"unexpected scalar $other")
-  }
+  /** Integer tokens read as CLong, tokens with a fraction or exponent (and
+    * the non-finite names) as CDouble — python's int/float split. */
+  private def scalar(n: JsonNode): CValue =
+    if (n.isNull) CNull
+    else if (n.isBoolean) CBool(n.booleanValue)
+    else if (n.isIntegralNumber && n.canConvertToLong) CLong(n.longValue)
+    else if (n.isFloatingPointNumber) CDouble(n.doubleValue)
+    else if (n.isTextual) CStr(n.textValue)
+    else sys.error(s"unexpected scalar $n")
 
-  def decodeValue(s: String): CValue = fromSaved(new P(s).parse())
+  def decodeValue(s: String): CValue = fromSaved(json.readTree(s))
 
   private def get(d: CDict, key: String): CValue =
     d.items.collectFirst { case (CStr(`key`), v) => v }

@@ -29,7 +29,11 @@ import com.fasterxml.jackson.databind.json.JsonMapper
   *  - replacePaths = rewrite only the named leaf dirs (a dequeue touches
   *    only the best score bands); other paths stay referenced untouched
   *  - commit = write manifest, then atomically flip _CURRENT; a crashed
-  *    epoch leaves the previous snapshot intact (resume-from-checkpoint)
+  *    epoch leaves the previous snapshot intact (resume-from-checkpoint);
+  *    every commit merges the manifest in one place (`commitReplaced`)
+  *  - readVersioned carries each row's commit version (the commit=V dir
+  *    level), so merge-on-read views resolve deltas without knowing the
+  *    layout
   *  - per-path row counts ride in the manifest (parquet footer stats at
   *    commit time) so a dequeue plans its band prefix without any read
   *  - commits are serialized (JVM monitor + OS file lock) and clean up
@@ -136,13 +140,19 @@ final class BucketStore(val root: String, val bucketCol: String,
   def read(spark: SparkSession): DataFrame = readBuckets(spark, None)
 
   /** Read only the given buckets — partition pruning by construction. */
-  def readBuckets(spark: SparkSession, only: Option[Set[Int]]): DataFrame = {
-    val m = readManifest()
-    val paths = m.bucketPaths
+  def readBuckets(spark: SparkSession, only: Option[Set[Int]]): DataFrame =
+    readPaths(spark, pathsOf(only))
+
+  /** `readBuckets` plus the `commit` column: the version of the commit
+    * that wrote each row (strictly monotonic — the Iceberg sequence-number
+    * analog), which merge-on-read views resolve by. */
+  def readVersioned(spark: SparkSession, only: Option[Set[Int]] = None): DataFrame =
+    scan(spark, pathsOf(only), versioned = true)
+
+  private def pathsOf(only: Option[Set[Int]]): Seq[String] =
+    readManifest().bucketPaths
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .values.flatten.toSeq.distinct
-    readPaths(spark, paths)
-  }
 
   /** Read only the given leaf dirs (band-pruned dequeue scans).
     * Reads are normalized to `schema` (the commit=… / band=… dir levels
@@ -150,20 +160,25 @@ final class BucketStore(val root: String, val bucketCol: String,
     * files predate are filled with typed nulls — additive schema
     * evolution, the Iceberg add-column semantics (a store written before
     * a column existed keeps reading after the upgrade). */
-  def readPaths(spark: SparkSession, paths: Seq[String]): DataFrame = {
+  def readPaths(spark: SparkSession, paths: Seq[String]): DataFrame =
+    scan(spark, paths, versioned = false)
+
+  private def scan(spark: SparkSession, paths: Seq[String], versioned: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.LongType
     val schema = emptySchema.getOrElse(sys.error(s"$root: schema not set"))
     if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      import org.apache.spark.sql.functions.col
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        if (versioned) schema.add(BucketStore.CommitCol, LongType) else schema)
+    else
       // explicit schema: skips the per-read parquet schema-inference job
       // (a visible slice of the per-epoch fixed cost — each store read
-      // paid one), reads bucket/band values from the partition dirs, and
-      // fills fields absent from older files with typed nulls
+      // paid one), reads bucket/band/commit values from the partition
+      // dirs, and fills fields absent from older files with typed nulls
       spark.read.option("basePath", s"$root/data").schema(schema)
         .parquet(paths: _*)
-        .select(schema.fieldNames.map(col(_)): _*)
-    }
+        .select(schema.fieldNames.map(col(_)) ++
+          (if (versioned) Seq(col(BucketStore.CommitCol).cast(LongType)) else Nil): _*)
   }
 
   /** Declared schema (also used for reads before the first commit). */
@@ -305,46 +320,7 @@ final class BucketStore(val root: String, val bucketCol: String,
     * Untouched buckets unchanged. */
   def append(df: DataFrame, epoch: Long, counters: Map[String, Long] = Map.empty,
       props: Map[String, String] = Map.empty): Unit =
-    withCommitLock {
-      val m = readManifest()
-      val v = m.version + 1
-      val added = writeEpochData(df, v)
-      val addedByBucket = added.groupBy(_.bucket)
-      val merged = (m.bucketPaths.keySet ++ addedByBucket.keySet).map { k =>
-        k -> (m.bucketPaths.getOrElse(k, Nil) ++
-          addedByBucket.getOrElse(k, Nil).map(_.path))
-      }.toMap
-      val rows = m.pathRows ++ added.map(l => l.path -> l.rows)
-      val pmax = m.pathMax ++ added.flatMap(l => l.statMax.map(l.path -> _))
-      val bv = m.bucketVersions ++ addedByBucket.keySet.map(_ -> v)
-      writeManifest(Manifest(v, epoch, merged, counters, rows, bv,
-        m.props ++ props, pmax))
-    }
-
-  /** Replace the full content of the buckets present in `df` (and of
-    * `alsoClear` buckets, which become empty). Other buckets untouched. */
-  def replaceBuckets(df: DataFrame, epoch: Long,
-      alsoClear: Set[Int] = Set.empty,
-      counters: Map[String, Long] = Map.empty): Unit =
-    withCommitLock {
-      val m = readManifest()
-      val v = m.version + 1
-      val written = writeEpochData(df, v)
-      val writtenByBucket = written.groupBy(_.bucket)
-      val touched = writtenByBucket.keySet ++ alsoClear
-      val merged = (m.bucketPaths.keySet ++ writtenByBucket.keySet).flatMap { k =>
-        if (writtenByBucket.contains(k)) Some(k -> writtenByBucket(k).map(_.path).toList)
-        else if (alsoClear.contains(k)) None
-        else Some(k -> m.bucketPaths(k))
-      }.toMap
-      val keptPaths = merged.values.flatten.toSet
-      val rows = m.pathRows.view.filterKeys(keptPaths).toMap ++
-        written.map(l => l.path -> l.rows)
-      val pmax = m.pathMax.view.filterKeys(keptPaths).toMap ++
-        written.flatMap(l => l.statMax.map(l.path -> _))
-      val bv = m.bucketVersions ++ touched.map(_ -> v)
-      writeManifest(Manifest(v, epoch, merged, counters, rows, bv, m.props, pmax))
-    }
+    replacePaths(df, epoch, Set.empty, counters, props)
 
   /** Replace only the named leaf dirs: the new manifest drops
     * `removePaths` and adds whatever `df` writes — the band-pruned
@@ -397,7 +373,11 @@ final class BucketStore(val root: String, val bucketCol: String,
       }
     }
 
-  /** Commit version `v` over `m`: drop `removePaths`, add `written`. */
+  /** Commit version `v` over `m`: drop `removePaths`, add `written` —
+    * the one manifest merge every commit goes through. Paths, row counts
+    * and `statCol` maxima stay in step (a row count or maximum per
+    * referenced path only), and exactly the buckets that gain or lose a
+    * path get `v` as their last-touched version. */
   private def commitReplaced(m: Manifest, v: Long, epoch: Long, written: Seq[LeafDir],
       removePaths: Set[String], counters: Map[String, Long],
       props: Map[String, String]): Unit = {
@@ -428,24 +408,27 @@ final class BucketStore(val root: String, val bucketCol: String,
     * whole read+rewrite — a concurrent dequeue/append can never commit
     * between compaction's snapshot and its rewrite (which would
     * resurrect removed rows) — it is the Iceberg `rewrite_data_files`
-    * analog. Returns the number of leaves compacted. */
+    * analog. `decorate` maps the leaves' versioned read (`readVersioned`'s
+    * columns) to the rows written back: it re-adds write-path partition
+    * columns the read drops (the queue's band, derived from score) or
+    * resolves a merge-on-read delta log by `commit` (the fold is then
+    * also a dedup); a `commit` column it leaves is dropped. Returns the
+    * buckets whose leaves were compacted. */
   def compact(spark: SparkSession, maxPathsPerLeaf: Int = 8,
-      decorate: DataFrame => DataFrame = identity): Int = withCommitLock {
+      decorate: DataFrame => DataFrame = identity): Set[Int] = withCommitLock {
     val m = readManifest()
     // group leaf paths by (bucket, band); collect the overgrown groups
-    val overgrown = m.bucketPaths.toSeq.flatMap { case (_, ps) =>
-      ps.groupBy(bandOf).collect {
-        case (_, paths) if paths.size > maxPathsPerLeaf => paths
-      }
+    val overgrown = for {
+      (b, ps) <- m.bucketPaths.toSeq
+      paths <- ps.groupBy(bandOf).values if paths.size > maxPathsPerLeaf
+    } yield b -> paths
+    if (overgrown.nonEmpty) {
+      val paths = overgrown.flatMap(_._2)
+      replacePaths(
+        decorate(scan(spark, paths, versioned = true)).drop(BucketStore.CommitCol),
+        m.epoch, paths.toSet, counters = Map("compacted_leaves" -> overgrown.size.toLong))
     }
-    if (overgrown.isEmpty) return 0
-    val paths = overgrown.flatten
-    // `decorate` re-adds write-path partition columns the read drops
-    // (e.g. the queue's band column, derived from score)
-    val df = decorate(readPaths(spark, paths))
-    replacePaths(df, m.epoch, paths.toSet,
-      counters = Map("compacted_leaves" -> overgrown.size.toLong))
-    overgrown.size
+    overgrown.map(_._1).toSet
   }
 
   /** Atomically append to this store as part of epoch bookkeeping only
@@ -454,12 +437,13 @@ final class BucketStore(val root: String, val bucketCol: String,
       props: Map[String, String] = Map.empty): Unit =
     withCommitLock {
       val m = readManifest()
-      writeManifest(Manifest(m.version + 1, epoch, m.bucketPaths, counters,
-        m.pathRows, m.bucketVersions, m.props ++ props, m.pathMax))
+      commitReplaced(m, m.version + 1, epoch, Nil, Set.empty, counters, props)
     }
 }
 
 object BucketStore {
+  /** the column `readVersioned` adds: the version of a row's commit */
+  val CommitCol = "commit"
   /** manifest JSON (thread-safe once built); stores written before the
     * writer escaped control characters still read */
   private[spark] val json = JsonMapper.builder()

@@ -129,19 +129,18 @@ final class SparkFrontier(
       * groups instead of one straggler task, while the host-global cap
       * stays ≤ maxPerHost. Requires maxPerHost % hostSalts == 0. */
     val hostSalts: Int = 1,
-    /** politeness slot-key mode (reference get_slot_key key_type,
+    /** politeness slot key (reference get_slot_key key_type,
       * core/__init__.py:10-25, feeding OverusedBuffer and the queue's
-      * host-cap collection): "host" (default) budgets per hostname;
-      * "ip" budgets per RESOLVED address via `ipResolver`, so co-hosted
-      * hostnames share one `maxPerHost` budget. */
-    val slotKeyMode: String = "host",
-    /** injected resolver for ip mode (network lookups don't belong in a
-      * deterministic operator): production wires a cached
-      * `InetAddress.getByName(_).getHostAddress`; the default is the
-      * deterministic offline stub. A host the resolver fails on keeps
-      * its hostname slot, like the reference's fallthrough. Must be
-      * serializable (it ships to executors inside a UDF). */
-    val ipResolver: String => String = graft.core.UrlUtil.fakeResolver,
+      * host-cap collection): None (default) budgets per hostname; a
+      * resolver selects ip mode, budgeting per RESOLVED address so
+      * co-hosted hostnames share one `maxPerHost` budget. Injected
+      * because network lookups don't belong in a deterministic operator:
+      * production wires a cached `InetAddress.getByName(_).getHostAddress`
+      * (`graft.core.UrlUtil.fakeResolver` is the offline stub). A host the
+      * resolver fails on keeps its hostname slot, like the reference's
+      * fallthrough. Must be serializable (it ships to executors inside a
+      * UDF). */
+    val ipResolver: Option[String => String] = None,
     /** conformance mode: single global (score, created) order like the
       * single-partition reference; scale mode: per-partition top-k */
     val globalOrder: Boolean = false,
@@ -150,10 +149,6 @@ final class SparkFrontier(
       * ASC; Lifo = created DESC. Fifo/Lifo scan all bands (the file
       * banding is a score order — pruning only applies to score mode). */
     val ordering: graft.local.QueueOrdering = graft.local.QueueOrdering.ScoreCreated,
-    /** domain metadata for robots allow/deny (F3): (host, robots_body).
-      * Small relative to the frontier ⇒ joined broadcast-style; at 100 TB
-      * it lives co-partitioned on the same host buckets as the queue. */
-    val robots: Option[DataFrame] = None,
     /** revisit scheduling (S5/2.10): crawled pages re-enter the queue
       * `interval` epochs later (crawl_at visibility at dequeue) */
     val revisitIntervalEpochs: Option[Long] = None,
@@ -488,18 +483,16 @@ final class SparkFrontier(
   }
 
   /** Merge-on-read states view: last state wins per fingerprint, ordered
-    * by the commit version embedded in the delta-file path (strictly
-    * monotonic — the Iceberg sequence-number analog), tie-broken by the
-    * state's lifecycle rank. This is the resolved view the LSM write
-    * path defers; the URL-seen anti-joins skip it (membership is
-    * monotone — any row means seen). */
-  def readStatesLatest(only: Option[Set[Int]] = None): DataFrame = {
-    val raw = states.readBuckets(spark, only)
-    if (states.readManifest().bucketPaths.isEmpty) return raw
-    val versioned = raw.withColumn("__v",
-      regexp_extract(input_file_name(), "commit=(\\d+)/", 1).cast(LongType))
+    * by commit version, tie-broken by the state's lifecycle rank. This is
+    * the resolved view the LSM write path defers; the URL-seen anti-joins
+    * skip it (membership is monotone — any row means seen). */
+  def readStatesLatest(only: Option[Set[Int]] = None): DataFrame =
+    lastStates(states.readVersioned(spark, only))
+
+  /** Last state per fingerprint of a versioned states read. */
+  private def lastStates(versioned: DataFrame): DataFrame = {
     val w = Window.partitionBy($"fingerprint")
-      .orderBy($"__v".desc, $"state".desc)
+      .orderBy(col(BucketStore.CommitCol).desc, $"state".desc)
     versioned.withColumn("__rn", row_number().over(w))
       .filter($"__rn" === 1)
       .select(statesSchema.fieldNames.map(col): _*)
@@ -511,25 +504,15 @@ final class SparkFrontier(
     * are re-stamped (membership unchanged) when they were fresh. */
   def compactStates(maxFilesPerBucket: Int = 8): Int = states.withTableLock {
     val m = states.readManifest()
-    val overgrown = m.bucketPaths.collect {
-      case (b, ps) if ps.size > maxFilesPerBucket => b
-    }.toSet
-    if (overgrown.isEmpty) 0
-    else {
-      val freshBefore = overgrown.filter(b => bloomFresh(m, b))
-      states.replaceBuckets(readStatesLatest(Some(overgrown)), m.epoch,
-        alsoClear = overgrown,
-        counters = Map("compacted_state_buckets" -> overgrown.size.toLong))
-      if (freshBefore.nonEmpty && bloomPays(m)) {
-        // the fold changed no membership — carry the stamp forward so the
-        // rewrite doesn't demote fresh sidecars to stale
-        val newV = states.currentVersion
-        bloomSeen.mergeUpdates(
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            statesSchema), freshBefore, newV)
-      }
-      overgrown.size
-    }
+    val folded = states.compact(spark, maxFilesPerBucket, lastStates)
+    val freshBefore = folded.filter(b => bloomFresh(m, b))
+    if (freshBefore.nonEmpty && bloomPays(m))
+      // the fold changed no membership — carry the stamp forward so the
+      // rewrite doesn't demote fresh sidecars to stale
+      bloomSeen.mergeUpdates(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          statesSchema), freshBefore, states.currentVersion)
+    folded.size
   }
 
   /** Canonical domain-metadata contribution shape: any subset of the
@@ -590,14 +573,12 @@ final class SparkFrontier(
 
   /** Merge-on-read domain_metadata view: resolve the delta log with the
     * commutative fold; robots bodies keep the latest non-null by commit
-    * version (strictly monotonic, embedded in the delta-file path). */
-  def readDomainMeta(only: Option[Set[Int]] = None): DataFrame = {
-    val raw = domainMeta.readBuckets(spark, only)
-    if (domainMeta.readManifest().bucketPaths.isEmpty) return raw
-    val versioned = raw.withColumn("__v",
-      regexp_extract(input_file_name(), "commit=(\\d+)/", 1).cast(LongType))
-    foldDomainRows(versioned, "queued_pages", $"__v")
-  }
+    * version. */
+  def readDomainMeta(only: Option[Set[Int]] = None): DataFrame =
+    foldDomainVersions(domainMeta.readVersioned(spark, only))
+
+  private def foldDomainVersions(versioned: DataFrame): DataFrame =
+    foldDomainRows(versioned, "queued_pages", col(BucketStore.CommitCol))
 
   /** (paths read, paths in domain_metadata) of the last per-epoch robots
     * read — the bucket-pruning evidence for the plan-quality specs. */
@@ -617,13 +598,9 @@ final class SparkFrontier(
       case None => total
     }
     lastRobotsScan = (scanned, total)
-    val raw = domainMeta.readBuckets(spark, only)
-      .filter($"robots_body".isNotNull)
-    if (m.bucketPaths.isEmpty) return raw.select($"domain", $"robots_body")
-    val w = Window.partitionBy($"domain").orderBy(
-      regexp_extract(input_file_name(), "commit=(\\d+)/", 1)
-        .cast(LongType).desc)
-    raw.withColumn("__rn", row_number().over(w)).filter($"__rn" === 1)
+    val w = Window.partitionBy($"domain").orderBy(col(BucketStore.CommitCol).desc)
+    domainMeta.readVersioned(spark, only).filter($"robots_body".isNotNull)
+      .withColumn("__rn", row_number().over(w)).filter($"__rn" === 1)
       .select($"domain", $"robots_body")
   }
 
@@ -632,19 +609,7 @@ final class SparkFrontier(
     * The fold IS the resolve, so folded rows carry totals — later
     * deltas keep summing on top. */
   def compactDomainMeta(maxFilesPerBucket: Int = 8): Int =
-    domainMeta.withTableLock {
-      val m = domainMeta.readManifest()
-      val overgrown = m.bucketPaths.collect {
-        case (b, ps) if ps.size > maxFilesPerBucket => b
-      }.toSet
-      if (overgrown.isEmpty) 0
-      else {
-        domainMeta.replaceBuckets(readDomainMeta(Some(overgrown)), m.epoch,
-          alsoClear = overgrown,
-          counters = Map("compacted_domain_buckets" -> overgrown.size.toLong))
-        overgrown.size
-      }
-    }
+    domainMeta.compact(spark, maxFilesPerBucket, foldDomainVersions).size
 
   /** Operator/strategy ban switch (the reference's `'banned' in domain`
     * check, discovery/__init__.py:43-44): marks 2nd-level domains banned
@@ -908,13 +873,8 @@ final class SparkFrontier(
         }
       }
 
-    val orderCols = ordering match {
-      case QueueOrdering.Fifo => Seq($"created_at".asc, $"url".asc)
-      case QueueOrdering.Lifo => Seq($"created_at".desc, $"url".asc)
-      case QueueOrdering.ScoreCreatedDesc =>
-        Seq($"score".desc, $"created_at".asc, $"url".asc)
-      case _ => Seq($"score".asc, $"created_at".asc, $"url".asc)
-    }
+    val orderCols = (batchOrder :+ ("url" -> true)).map { case (c, asc) =>
+      if (asc) col(c).asc else col(c).desc }
     // one pass over the scanned bands: per-host politeness rank first,
     // then batch rank over the CAPPED rows only — the reference's
     // collection loop (hbase/__init__.py:239-256) skips over-cap rows and
@@ -927,16 +887,16 @@ final class SparkFrontier(
     // sharing one budget (reference OverusedBuffer key_type='ip'). The
     // resolver UDF runs only in ip mode; the default host path stays in
     // whole-stage codegen.
-    val slotCol: Column =
-      if (slotKeyMode == "ip") {
-        val resolve = ipResolver
+    val slotCol: Column = ipResolver match {
+      case Some(resolve) =>
         udf { (h: String) =>
           try {
             val ip = resolve(h)
             if (ip != null && ip.nonEmpty) ip else h
           } catch { case _: Exception => h }
         }.apply($"host")
-      } else $"host"
+      case None => $"host"
+    }
     // F4: DOMAINS_BLACKLIST at batch-generation position (reference
     // batch_generator._is_domain_blacklisted): blacklisted hosts are
     // never selected AND are dropped from the rewrite residue — deleted
@@ -1293,24 +1253,18 @@ final class SparkFrontier(
       }
     // F2/F3: filter_extracted_links — robots deny before the states
     // lookup (saves the KV fetch, exactly the reference's motivation).
-    // The robots source is either the caller-supplied static table or,
-    // under discovery, the robots bodies persisted in domain_metadata
-    // (keyed by 2nd-level domain, like the reference's domain dict),
-    // read bucket-pruned to this epoch's parent domains.
-    val l0raw = (robots, discovery) match {
-      case (Some(dm), _) =>
-        l1d.join(broadcast(dm.select($"host", $"robots_body")), Seq("host"), "left_outer")
-          .filter(FrontierExprs.robots_can_fetch($"link_url",
-            coalesce($"robots_body", lit(""))))
-          .drop("robots_body")
-      case (None, Some(_)) =>
+    // Under discovery the robots bodies are those persisted in
+    // domain_metadata (keyed by 2nd-level domain, like the reference's
+    // domain dict), read bucket-pruned to this epoch's parent domains.
+    val l0raw = discovery match {
+      case Some(_) =>
         val dmRobots = readDomainRobots(parentDB)
           .select($"domain".as("__rdom"), $"robots_body")
         l1d.join(dmRobots, FrontierExprs.sld($"host") === $"__rdom", "left_outer")
           .filter(FrontierExprs.robots_can_fetch($"link_url",
             coalesce($"robots_body", lit(""))) || parentIsProbe)
           .drop("__rdom", "robots_body")
-      case _ => l1d
+      case None => l1d
     }
     // discovery consumes the filtered links TWICE (dedup/anti-join chain
     // + the subdomain-set aggregation) — cache so each epoch makes one
@@ -1731,15 +1685,15 @@ final class SparkFrontier(
   /** Compact queue bands whose file count grew past the threshold
     * (appends add one dir per commit; cold bands the dequeue never
     * rewrites accumulate them — run between epochs, like Iceberg's
-    * rewrite_data_files). Returns leaves compacted. */
+    * rewrite_data_files). Returns the number of buckets compacted. */
   def compactQueue(maxFilesPerBand: Int = 8): Int = {
     awaitQueueCommit()
-    queue.compact(spark, maxFilesPerBand, withBand)
+    queue.compact(spark, maxFilesPerBand, withBand).size
   }
 
   /** Compact the append-only metadata table's buckets. */
   def compactMetadata(maxFilesPerBucket: Int = 16): Int =
-    metadata.compact(spark, maxFilesPerBucket)
+    metadata.compact(spark, maxFilesPerBucket).size
 
   /** URL-seen membership snapshot (conformance checks) — the resolved
     * merge-on-read view (last state wins over the LSM delta log). */

@@ -143,4 +143,21 @@ class JsonCodecSpec extends AnyFunSuite {
     assert(JsonCodec.encodeValue(CStr("a" + 0x80.toChar + "b")) ==
       "[\"other\", \"a\\u0080b\"]")
   }
+
+  test("non-finite floats round-trip; a truncated frame fails as a JSON parse error") {
+    // python json.dumps writes NaN/Infinity/-Infinity bare (allow_nan)
+    for ((d, text) <- Seq(Double.NaN -> "NaN", Double.PositiveInfinity -> "Infinity",
+        Double.NegativeInfinity -> "-Infinity")) {
+      val wire = JsonCodec.encodeValue(CDouble(d))
+      assert(wire == s"[\"other\", $text]")
+      // CDouble(NaN) != CDouble(NaN): compare the payload
+      JsonCodec.decodeValue(wire) match {
+        case CDouble(x) => assert(if (d.isNaN) x.isNaN else x == d, wire)
+        case other => fail(s"$wire decoded to $other")
+      }
+    }
+    val frame = JsonCodec.encode(Offset(3, 17))
+    intercept[com.fasterxml.jackson.core.JsonProcessingException](
+      JsonCodec.decode(frame.take(frame.length - 3)))
+  }
 }

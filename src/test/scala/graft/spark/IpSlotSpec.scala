@@ -22,7 +22,7 @@ class IpSlotSpec extends AnyFunSuite {
     }
     val f = new SparkFrontier(spark, root, partitions = 2, stateBuckets = 2,
       strategy = ScoreStrategy.BFS, globalOrder = true,
-      maxPerHost = 4, slotKeyMode = "ip", ipResolver = resolver)
+      maxPerHost = 4, ipResolver = Some(resolver))
     f.bulkSchedule(spark.range(30).select(
       when($"id" < 10, concat(lit("http://a.com/p/"), $"id"))
         .when($"id" < 20, concat(lit("http://b.com/p/"), $"id"))

@@ -1,11 +1,15 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
 
 /** The BucketStore manifest document: the on-disk format stays readable,
-  * the writer reproduces it byte for byte, and a damaged manifest fails
-  * with an error that names the file. */
+  * the writer reproduces it byte for byte, a damaged manifest fails
+  * with an error that names the file, and every commit keeps it in step
+  * with the leaves it references. */
 class ManifestSpec extends AnyFunSuite {
 
   private def store() =
@@ -50,5 +54,72 @@ class ManifestSpec extends AnyFunSuite {
     Files.writeString(file, "")
     val e2 = intercept[IllegalStateException](s.readManifest())
     assert(e2.getMessage.contains(file.toString), e2.getMessage)
+  }
+
+  test("append, replacePaths, rewriteLeaves and compact keep paths, row counts and bucket versions in step") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    for (banded <- Seq(true, false)) {
+      val s = new BucketStore(Files.createTempDirectory("graft-merge").toString,
+        "bucket", 4, bandCol = if (banded) Some("band") else None)
+      s.emptySchema = Some(StructType(Seq(StructField("fingerprint", StringType),
+        StructField("bucket", IntegerType)) ++
+        (if (banded) Seq(StructField("band", IntegerType)) else Nil)))
+      def rows(ids: Range, bucket: Int => Int): DataFrame = {
+        val df = ids.map(i => (s"fp-$i", bucket(i), i % 2)).toDF("fingerprint", "bucket", "band")
+        if (banded) df else df.drop("band")
+      }
+      // a versioned read carries each row's commit version, typed even empty
+      def versions(buckets: Set[Int]): Set[Long] =
+        s.readVersioned(spark).filter($"bucket".isInCollection(buckets))
+          .select(BucketStore.CommitCol).as[Long].collect().toSet
+      assert(s.readVersioned(spark).schema(BucketStore.CommitCol).dataType == LongType)
+      var prev = s.readManifest()
+      // after each commit: one row count per referenced path, equal to the
+      // leaf's parquet rows, and a new version for exactly `touched`
+      def committed(what: String, touched: Set[Int]): Unit = {
+        val m = s.readManifest()
+        val ctx = s"${if (banded) "banded" else "unbanded"} $what"
+        assert(m.version == prev.version + 1, ctx)
+        val referenced = m.bucketPaths.values.flatten.toSet
+        assert(m.pathRows.keySet == referenced, ctx)
+        referenced.foreach(p => assert(m.pathRows(p) == spark.read.parquet(p).count(), s"$ctx: $p"))
+        val bumped = m.bucketVersions.collect {
+          case (b, v) if !prev.bucketVersions.get(b).contains(v) => b }.toSet
+        assert(bumped == touched, ctx)
+        assert(touched.forall(b => m.bucketVersions(b) == m.version), ctx)
+        prev = m
+      }
+      s.append(rows(0 until 40, _ % 3), 1)
+      committed("append", Set(0, 1, 2))
+      assert(versions(Set(0, 1, 2)) == Set(s.currentVersion))
+      s.append(rows(40 until 80, _ % 2), 2)
+      committed("second append", Set(0, 1))
+
+      // bucket 2 keeps one row (fp-20); bucket 3 gains its first
+      val b2 = s.readManifest().bucketPaths(2)
+      s.replacePaths(s.readPaths(spark, b2).filter($"fingerprint".endsWith("0"))
+        .unionByName(rows(80 until 81, _ => 3)), 3, b2.toSet)
+      committed("replacePaths", Set(2, 3))
+
+      // buckets 0 and 1 rewritten; only bucket 0 loses rows
+      val m = s.readManifest()
+      val groups = for (b <- Seq(0, 1); (band, ps) <- m.bucketPaths(b).groupBy(s.bandOf))
+        yield (b, band) -> ps
+      val lost = s.rewriteLeaves(
+        s.readBuckets(spark, Some(Set(0, 1))).filter($"fingerprint" =!= "fp-0"), 4,
+        groups.toMap, l => (Map("lost" -> l.values.sum), Map.empty))
+      assert(lost == Map((0, 0) -> 1L))
+      committed("rewriteLeaves", Set(0))
+
+      val rowsBefore = s.read(spark).count()
+      val overgrown = s.readManifest().bucketPaths.collect {
+        case (b, ps) if ps.groupBy(s.bandOf).values.exists(_.size > 1) => b }.toSet
+      assert(overgrown.contains(1))
+      assert(s.compact(spark, maxPathsPerLeaf = 1) == overgrown)
+      committed("compact", overgrown)
+      assert(versions(overgrown).max == s.currentVersion)
+      assert(s.read(spark).count() == rowsBefore)
+    }
   }
 }

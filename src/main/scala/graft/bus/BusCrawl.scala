@@ -326,8 +326,12 @@ final class SparkBusWorker(
     * producer — a Kafka producer flushes on close; an ABRUPT crash
     * instead loses only what sat in this in-memory buffer, the same
     * producer-buffer window the reference DB worker has) and publish
-    * the final counters. */
+    * the final counters. The frontier's background dequeue commit is
+    * joined first: a worker restarted over the same store must not read
+    * the queue before it lands (it would dequeue those rows again, and
+    * the late commit would put back rows the new worker had taken). */
   def close(): Unit = {
+    frontier.awaitQueueCommit()
     pending.keys.toSeq.foreach { p =>
       if (pending(p).nonEmpty) {
         feedProducer.sendTo(p, pending(p): _*)

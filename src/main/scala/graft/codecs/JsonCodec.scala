@@ -3,7 +3,7 @@ package graft.codecs
 import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.core.json.JsonReadFeature
-import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import CValue._
 
@@ -204,9 +204,12 @@ object JsonCodec {
 
   /** The frame reader: Jackson, also accepting python's `NaN`,
     * `Infinity` and `-Infinity` (what `json.dumps` writes for non-finite
-    * floats, and `fmtDouble` with it). Thread-safe once built. */
+    * floats, and `fmtDouble` with it), and rejecting content after the
+    * frame's value, as `json.loads` does ("Extra data"). Thread-safe once
+    * built. */
   private val json = JsonMapper.builder()
-    .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS).build()
+    .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS).build()
 
   /** `_convert_from_saved_type`: the tagged tree back to CValue. */
   private def fromSaved(n: JsonNode): CValue = {

@@ -1,12 +1,13 @@
 package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Paths, Path, StandardCopyOption, StandardOpenOption}
 import java.nio.channels.FileChannel
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import com.fasterxml.jackson.core.json.JsonReadFeature
-import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
 import com.fasterxml.jackson.databind.json.JsonMapper
 
 /** Bucket-partitioned, manifest-committed table — Iceberg-style semantics
@@ -19,8 +20,9 @@ import com.fasterxml.jackson.databind.json.JsonMapper
   * reference hbase/__init__.py:129-196):
   * {{{
   * root/data/commit=V/<bucketCol>=K[/<bandCol>=B]/part-*.parquet
-  * root/manifest/m<V>.json   — bucket -> leaf dirs, per-path row counts,
-  *                             per-bucket last-touched version, counters
+  * root/manifest/m<V>.json   — bucket -> leaf dirs, per-path row counts
+  *                             and file lists, per-bucket last-touched
+  *                             version, counters
   * root/_CURRENT             — current manifest version (atomic rename)
   * }}}
   *
@@ -36,6 +38,9 @@ import com.fasterxml.jackson.databind.json.JsonMapper
   *    layout
   *  - per-path row counts ride in the manifest (parquet footer stats at
   *    commit time) so a dequeue plans its band prefix without any read
+  *  - per-path file names and lengths ride in the manifest too, and every
+  *    read is planned from them: no directory is listed (an Iceberg scan
+  *    plans from its manifests' file lists the same way)
   *  - commits are serialized (JVM monitor + OS file lock) and clean up
   *    orphan commit dirs from crashed writers, so a crash between the
   *    data write and the _CURRENT flip never bricks the store
@@ -64,7 +69,10 @@ final class BucketStore(val root: String, val bucketCol: String,
       bucketVersions: Map[Int, Long] = Map.empty,
       props: Map[String, String] = Map.empty,
       /** per-path max of statCol (absent = unknown, be conservative) */
-      pathMax: Map[String, Long] = Map.empty)
+      pathMax: Map[String, Long] = Map.empty,
+      /** per-path `.parquet` file name -> byte length (absent = written
+        * before file lists: Spark lists that dir) */
+      pathFiles: Map[String, Map[String, Long]] = Map.empty)
 
   def readManifest(): Manifest = {
     val v = currentVersion
@@ -74,8 +82,8 @@ final class BucketStore(val root: String, val bucketCol: String,
   }
 
   /** Manifest `v` from its JSON; a malformed document fails naming `file`.
-    * Keys added after the first format (rows, bucketv, props, pathmax)
-    * read as empty when absent. */
+    * Keys added after the first format (rows, bucketv, props, pathmax,
+    * files) read as empty when absent. */
   private[spark] def parseManifest(v: Long, json: String, file: String): Manifest =
     try {
       val j = BucketStore.json.readTree(json)
@@ -91,7 +99,10 @@ final class BucketStore(val root: String, val bucketCol: String,
         longs("rows"),
         longs("bucketv").map { case (k, n) => k.toInt -> n },
         fields("props").map { case (f, n) => f -> n.asText() }.toMap,
-        longs("pathmax"))
+        longs("pathmax"),
+        fields("files").map { case (p, n) =>
+          p -> n.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
+        }.toMap)
     } catch {
       case NonFatal(e) =>
         throw new IllegalStateException(s"unreadable manifest $file: ${e.getMessage}", e)
@@ -108,7 +119,8 @@ final class BucketStore(val root: String, val bucketCol: String,
     case None => 0
   }
 
-  /** The manifest document: keys in a fixed order, maps sorted by key. */
+  /** The manifest document: keys in a fixed order, maps sorted by key;
+    * `files` only when some path has a file list. */
   private[spark] def manifestJson(m: Manifest): String = {
     def obj(kvs: Seq[(String, Any)]): java.util.Map[String, Any] = {
       val o = new java.util.LinkedHashMap[String, Any]
@@ -123,7 +135,9 @@ final class BucketStore(val root: String, val bucketCol: String,
       "buckets" -> byBucket(m.bucketPaths.map { case (k, ps) => k -> ps.asJava }),
       "counters" -> byKey(m.counters), "rows" -> byKey(m.pathRows),
       "bucketv" -> byBucket(m.bucketVersions), "props" -> byKey(m.props),
-      "pathmax" -> byKey(m.pathMax))))
+      "pathmax" -> byKey(m.pathMax)) ++
+      (if (m.pathFiles.isEmpty) Nil
+       else Seq("files" -> byKey(m.pathFiles.map { case (p, fs) => p -> byKey(fs) })))))
   }
 
   private def writeManifest(m: Manifest): Unit = {
@@ -140,17 +154,31 @@ final class BucketStore(val root: String, val bucketCol: String,
   def read(spark: SparkSession): DataFrame = readBuckets(spark, None)
 
   /** Read only the given buckets — partition pruning by construction. */
-  def readBuckets(spark: SparkSession, only: Option[Set[Int]]): DataFrame =
-    readPaths(spark, pathsOf(only))
+  def readBuckets(spark: SparkSession, only: Option[Set[Int]]): DataFrame = {
+    val m = readManifest()
+    scan(spark, m, pathsOf(m, only), versioned = false)
+  }
 
   /** `readBuckets` plus the `commit` column: the version of the commit
     * that wrote each row (strictly monotonic — the Iceberg sequence-number
     * analog), which merge-on-read views resolve by. */
-  def readVersioned(spark: SparkSession, only: Option[Set[Int]] = None): DataFrame =
-    scan(spark, pathsOf(only), versioned = true)
+  def readVersioned(spark: SparkSession, only: Option[Set[Int]] = None): DataFrame = {
+    val m = readManifest()
+    scan(spark, m, pathsOf(m, only), versioned = true)
+  }
 
-  private def pathsOf(only: Option[Set[Int]]): Seq[String] =
-    readManifest().bucketPaths
+  /** Spark's size estimate of reading `columns` of the whole table at
+    * `m` (the optimized plan's `sizeInBytes`, the number its broadcast
+    * decision compares). A table with no path has size 0: Spark's
+    * estimate of an empty frame is its default size, not 0. */
+  def sizeInBytes(spark: SparkSession, m: Manifest, columns: String*): Long =
+    if (m.bucketPaths.isEmpty) 0L
+    else scan(spark, m, pathsOf(m, None), versioned = false)
+      .select(columns.map(col): _*)
+      .queryExecution.optimizedPlan.stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong
+
+  private def pathsOf(m: Manifest, only: Option[Set[Int]]): Seq[String] =
+    m.bucketPaths
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .values.flatten.toSeq.distinct
 
@@ -161,31 +189,58 @@ final class BucketStore(val root: String, val bucketCol: String,
     * evolution, the Iceberg add-column semantics (a store written before
     * a column existed keeps reading after the upgrade). */
   def readPaths(spark: SparkSession, paths: Seq[String]): DataFrame =
-    scan(spark, paths, versioned = false)
+    scan(spark, readManifest(), paths, versioned = false)
 
-  private def scan(spark: SparkSession, paths: Seq[String], versioned: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.LongType
+  /** The one store read: `paths` as a parquet relation whose files come
+    * from `m`'s file lists (leaf dirs are immutable, so any manifest that
+    * records a path records its files). Spark's file index asks its
+    * status cache for each leaf dir before it lists one; the cache here
+    * answers from the manifest, so planning lists nothing and runs no
+    * job. A path without a file list (a manifest written before file
+    * lists) misses, and Spark lists that dir. */
+  private def scan(spark: SparkSession, m: Manifest, paths: Seq[String],
+      versioned: Boolean): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.types.{LongType, StructType}
     val schema = emptySchema.getOrElse(sys.error(s"$root: schema not set"))
     if (paths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         if (versioned) schema.add(BucketStore.CommitCol, LongType) else schema)
-    else
-      // explicit schema: skips the per-read parquet schema-inference job
-      // (a visible slice of the per-epoch fixed cost — each store read
-      // paid one), reads bucket/band/commit values from the partition
-      // dirs, and fills fields absent from older files with typed nulls
-      spark.read.option("basePath", s"$root/data").schema(schema)
-        .parquet(paths: _*)
+    else {
+      val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val blockSize = fs.getDefaultBlockSize(new HPath(root))
+      val dirs = paths.map(p => p -> fs.makeQualified(new HPath(p)))
+      val recorded: Map[HPath, Array[FileStatus]] = dirs.flatMap { case (p, dir) =>
+        m.pathFiles.get(p).map(files => dir -> files.toArray.sortBy(_._1).map {
+          case (name, len) => new FileStatus(len, false, 1, blockSize, 0L, new HPath(dir, name))
+        })
+      }.toMap
+      val manifestFiles = new FileStatusCache {
+        override def getLeafFiles(dir: HPath): Option[Array[FileStatus]] = recorded.get(dir)
+        def putLeafFiles(dir: HPath, files: Array[FileStatus]): Unit = ()
+        def invalidateAll(): Unit = ()
+      }
+      // the declared schema types the partition values (bucket, band;
+      // `commit` is inferred) and spares a schema-inference job; fields
+      // absent from older files read as typed nulls
+      val index = new InMemoryFileIndex(spark, dirs.map(_._2),
+        Map("basePath" -> s"$root/data"), Some(schema), manifestFiles)
+      val dataSchema = StructType(schema.filterNot(f =>
+        index.partitionSchema.fieldNames.contains(f.name)))
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+          dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
         .select(schema.fieldNames.map(col(_)) ++
           (if (versioned) Seq(col(BucketStore.CommitCol).cast(LongType)) else Nil): _*)
+    }
   }
 
   /** Declared schema (also used for reads before the first commit). */
   @transient var emptySchema: Option[org.apache.spark.sql.types.StructType] = None
 
   private final case class LeafDir(bucket: Int, path: String, rows: Long,
-      statMax: Option[Long])
+      statMax: Option[Long], files: Map[String, Long])
 
   /** List a directory's entries, materialized. `Files.list` holds an open
     * DirectoryStream (one fd) until closed — leaking it per leaf dir per
@@ -197,9 +252,9 @@ final class BucketStore(val root: String, val bucketCol: String,
   }
 
   /** Walk the committed dir: bucket level, plus band level when banded;
-    * row counts + statCol max from the parquet footers (driver-side
-    * metadata only, no Spark job — the Iceberg-manifest file-stats
-    * analog). */
+    * row counts + statCol max from the parquet footers, and the files'
+    * names and lengths (driver-side metadata only, no Spark job — the
+    * Iceberg-manifest file-stats analog). */
   private def leafDirs(commitDir: Path): Seq[LeafDir] = {
     if (!Files.exists(commitDir)) return Nil
     def rel(p: Path): String =
@@ -225,21 +280,23 @@ final class BucketStore(val root: String, val bucketCol: String,
     implicit val ec: scala.concurrent.ExecutionContext = BucketStore.footerEc
     Await.result(
       Future.traverse(leafPaths) { case (bucket, p) => Future {
-        val (rows, mx) = footerStats(p)
-        LeafDir(bucket, s"$root/${rel(p)}", rows, mx)
+        val (rows, mx, files) = footerStats(p)
+        LeafDir(bucket, s"$root/${rel(p)}", rows, mx, files)
       }},
       Duration.Inf)
   }
 
-  private def footerStats(dir: Path): (Long, Option[Long]) = {
+  private def footerStats(dir: Path): (Long, Option[Long], Map[String, Long]) = {
     var rows = 0L
     var mx: Option[Long] = statCol.map(_ => Long.MinValue)
+    val files = Map.newBuilder[String, Long]
     listDir(dir)
       .filter(p => p.getFileName.toString.endsWith(".parquet"))
       .foreach { p =>
         val hpath = new org.apache.hadoop.fs.Path(p.toUri)
         val conf = new org.apache.hadoop.conf.Configuration()
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hpath, conf)
+        files += p.getFileName.toString -> in.getLength
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try {
           rows += r.getRecordCount
@@ -263,7 +320,7 @@ final class BucketStore(val root: String, val bucketCol: String,
           }
         } finally r.close()
       }
-    (rows, mx.filter(_ != Long.MinValue))
+    (rows, mx.filter(_ != Long.MinValue), files.result())
   }
 
   private def writeEpochData(df: DataFrame, commitV: Long): Seq[LeafDir] = {
@@ -277,7 +334,6 @@ final class BucketStore(val root: String, val bucketCol: String,
     // cluster by the partition dirs before the partitioned write: one
     // file per leaf instead of (tasks × leaves) shards — file count
     // stays flat as parallelism grows
-    import org.apache.spark.sql.functions.col
     val partCols = bucketCol +: bandCol.toSeq
     df.repartition(partCols.map(col): _*)
       .write.mode("errorifexists").partitionBy(partCols: _*).parquet(dir.toString)
@@ -374,8 +430,8 @@ final class BucketStore(val root: String, val bucketCol: String,
     }
 
   /** Commit version `v` over `m`: drop `removePaths`, add `written` —
-    * the one manifest merge every commit goes through. Paths, row counts
-    * and `statCol` maxima stay in step (a row count or maximum per
+    * the one manifest merge every commit goes through. Paths, row counts,
+    * file lists and `statCol` maxima stay in step (one entry per
     * referenced path only), and exactly the buckets that gain or lose a
     * path get `v` as their last-touched version. */
   private def commitReplaced(m: Manifest, v: Long, epoch: Long, written: Seq[LeafDir],
@@ -395,9 +451,11 @@ final class BucketStore(val root: String, val bucketCol: String,
       written.map(l => l.path -> l.rows)
     val pmax = m.pathMax.view.filterKeys(keptPaths).toMap ++
       written.flatMap(l => l.statMax.map(l.path -> _))
+    val files = m.pathFiles.view.filterKeys(keptPaths).toMap ++
+      written.map(l => l.path -> l.files)
     val bv = m.bucketVersions ++ touched.map(_ -> v)
     writeManifest(Manifest(v, epoch, merged, counters, rows, bv,
-      m.props ++ props, pmax))
+      m.props ++ props, pmax, files))
   }
 
   /** Compact leaves whose file count exceeds `maxPathsPerLeaf`: appends
@@ -425,7 +483,7 @@ final class BucketStore(val root: String, val bucketCol: String,
     if (overgrown.nonEmpty) {
       val paths = overgrown.flatMap(_._2)
       replacePaths(
-        decorate(scan(spark, paths, versioned = true)).drop(BucketStore.CommitCol),
+        decorate(scan(spark, m, paths, versioned = true)).drop(BucketStore.CommitCol),
         m.epoch, paths.toSet, counters = Map("compacted_leaves" -> overgrown.size.toLong))
     }
     overgrown.map(_._1).toSet
@@ -445,9 +503,11 @@ object BucketStore {
   /** the column `readVersioned` adds: the version of a row's commit */
   val CommitCol = "commit"
   /** manifest JSON (thread-safe once built); stores written before the
-    * writer escaped control characters still read */
+    * writer escaped control characters still read; content after the
+    * document is an error, not ignored */
   private[spark] val json = JsonMapper.builder()
-    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
+    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS).build()
   private val monitors = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def monitorFor(root: String): Object =
     monitors.computeIfAbsent(root, _ => new Object)

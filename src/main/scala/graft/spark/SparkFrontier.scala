@@ -47,7 +47,7 @@ object ScoreStrategy {
 
 /** Discovery-lite strategy config (reference strategy/discovery/__init__.py —
   * the only production-grade shipped strategy): same-domain link filter
-  * (:516-523), home/interest/other link scoring (0.8/0.7/0.5, :374-401),
+  * (:516-523), home/other link scoring (0.8/0.5, :374-401),
   * host-hash score justification (:47-50), and a per-domain max_pages
   * budget (:414-454, DISCOVERY_MAX_PAGES=100) backed by the persistent
   * `domain_metadata` table (core/components.py:137-181). */
@@ -58,9 +58,6 @@ final case class DiscoveryConfig(
     sameDomainOnly: Boolean = true,
     /** spread per-domain scores into host-hash deciles */
     justifyScores: Boolean = true,
-    /** links matching this regex score 0.7 ("of interest", the
-      * is_link_of_interest subclass hook); others 0.5, home pages 0.8 */
-    interestPattern: Option[String] = None,
     /** fetch-error strings matching this regex mark the domain
       * `fatal_error` — no further scheduling into it (reference
       * request_error, discovery/__init__.py:267-276: DNSLookupError is
@@ -81,7 +78,7 @@ final case class DiscoveryConfig(
       * that matter at scale — while every run with the same seed is
       * bit-reproducible (what makes the conformance oracles possible;
       * the reference's nondeterministic `random` has no oracle at all).
-      * Score-class precedence (probes > home > interest > other) is
+      * Score-class precedence (probes > home > other) is
       * unchanged: the permutation only replaces the within-class
       * tiebreak, exactly like the reference randomizes within each
       * _schedule_requests call but not across score classes. None =
@@ -201,9 +198,6 @@ final class SparkFrontier(
 
   import spark.implicits._
 
-  /** store reads list up to this many leaf paths in-process, not as a job */
-  private val localListingMaxPaths = 10000
-
   /** Label the Spark jobs of a phase (guide: setJobDescription is
     * thread-local, so concurrent side commits keep distinct labels). */
   private def labeled[T](desc: String)(body: => T): T = {
@@ -242,16 +236,6 @@ final class SparkFrontier(
     * file layout: the dequeue reads only the best bands until the budget
     * is met and rewrites only those files, so each epoch's queue I/O is
     * O(batch), not O(queue). */
-  // File-listing strategy for the store's multi-leaf reads: a band-pruned
-  // dequeue hands Spark hundreds of leaf dirs, and above Spark's default
-  // threshold (32) every such read first runs a DISTRIBUTED listing job —
-  // ~0.3-0.5 s of job latency per dequeue to replace sub-millisecond
-  // local stats (measured: drain nextBatch 0.5 -> 0.15 s/epoch). Listing
-  // strategy only, never results. Every frontier sets the same value, so
-  // no frontier's reads depend on which one was constructed last.
-  spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
-    localListingMaxPaths)
-
   val queue = new BucketStore(s"$root/queue", "partition_id", partitions,
     bandCol = Some("band"), statCol = Some("crawl_at"))
   val states = new BucketStore(s"$root/states", "sbucket", stateBuckets)
@@ -420,17 +404,14 @@ final class SparkFrontier(
     * job, persisted sidecars). Crossing the size is safe: a bucket with
     * data but no fresh sidecar goes through the exact join, and its
     * sidecar is rebuilt at its next merge. */
-  private def bloomPays(m: BucketStore#Manifest): Boolean =
-    statesBytes(m) > spark.sessionState.conf.autoBroadcastJoinThreshold
+  private def bloomPays(m: states.Manifest): Boolean =
+    seenSetBytes(m) > spark.sessionState.conf.autoBroadcastJoinThreshold
 
-  /** Size of the exact anti-join's build side over states `m`: its rows
-    * (manifest row counts) times a fingerprint's 40-byte SHA-1 hex
-    * digest. A path without a row count (a store written before row
-    * counts) makes the size unbounded. */
-  private[spark] def statesBytes(m: BucketStore#Manifest): Long = {
-    val rows = m.bucketPaths.valuesIterator.flatten.map(m.pathRows.get).toSeq
-    if (rows.forall(_.isDefined)) rows.flatten.sum * 40L else Long.MaxValue
-  }
+  /** Spark's size estimate of the exact anti-join's build side over
+    * states `m` (its fingerprints) — the number Spark compares with the
+    * same threshold when it plans that join; 0 while the table is empty. */
+  private[spark] def seenSetBytes(m: states.Manifest): Long =
+    states.sizeInBytes(spark, m, "fingerprint")
 
   /** Merge state rows (fingerprint, state, sbucket) into the states
     * store + refresh the touched buckets' Bloom sidecars incrementally
@@ -1424,19 +1405,17 @@ final class SparkFrontier(
         val w = Window.partitionBy($"partition_id").orderBy(parentOrder: _*)
         row_number().over(w).cast(LongType) * partitions + $"partition_id"
       }
-    // F7: link scoring — discovery classifies home(0.8)/interest(0.7)/
-    // other(0.5) and justifies by host hash (discovery/__init__.py:
-    // 374-401, 47-50); otherwise the strategy's score expression
+    // F7: link scoring — discovery classifies home(0.8)/other(0.5) and
+    // justifies by host hash (discovery/__init__.py:374-401, 47-50);
+    // otherwise the strategy's score expression
     val scoreCol = discovery match {
       case Some(d) =>
         // probes (robots/sitemap fetches issued by the strategy) 0.9 >
-        // home 0.8 > interest 0.7 > other 0.5 — dequeued highest-first
-        // under ScoreCreatedDesc
+        // home 0.8 > other 0.5 — dequeued highest-first under
+        // ScoreCreatedDesc
         val classScore = when(parentIsProbe && isProbeUrl($"link_url"), lit(0.9))
           .otherwise(when(FrontierExprs.is_home_page($"link_url"), lit(0.8))
-            .otherwise(d.interestPattern
-              .map(p => when($"link_url".rlike(p), lit(0.7)).otherwise(lit(0.5)))
-              .getOrElse(lit(0.5))))
+            .otherwise(lit(0.5)))
         if (d.justifyScores) FrontierExprs.justify_score($"host", classScore)
         else classScore
       case None => strategy.linkScore($"parent_depth")

@@ -160,4 +160,11 @@ class JsonCodecSpec extends AnyFunSuite {
     intercept[com.fasterxml.jackson.core.JsonProcessingException](
       JsonCodec.decode(frame.take(frame.length - 3)))
   }
+
+  test("content after a frame's value fails as a JSON parse error, as json.loads's \"Extra data\"") {
+    for (wire <- Seq("[\"other\", 1]]]", "[\"other\", 1] [\"other\", 2]"))
+      intercept[com.fasterxml.jackson.core.JsonProcessingException](JsonCodec.decodeValue(wire))
+    // trailing whitespace is not content
+    assert(JsonCodec.decodeValue("[\"other\", 1] \n") == CLong(1))
+  }
 }

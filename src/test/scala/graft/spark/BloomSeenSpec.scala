@@ -114,7 +114,7 @@ class BloomSeenSpec extends AnyFunSuite {
     assert(c.crawlOnce(1))
     // the threshold is the states table's size after epoch 1: epoch 2
     // still runs the exact join alone, every later epoch the Bloom side
-    val size = f.statesBytes(f.states.readManifest())
+    val size = f.seenSetBytes(f.states.readManifest())
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", size.toString)
     assert(c.crawlOnce(2))
     assert(sidecars == 0, "below the threshold no sidecar is built")

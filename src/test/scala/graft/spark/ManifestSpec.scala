@@ -5,11 +5,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** The BucketStore manifest document: the on-disk format stays readable,
   * the writer reproduces it byte for byte, a damaged manifest fails
-  * with an error that names the file, and every commit keeps it in step
-  * with the leaves it references. */
+  * with an error that names the file, every commit keeps it in step
+  * with the leaves it references, and reads are planned from it without
+  * listing a directory. */
 class ManifestSpec extends AnyFunSuite {
 
   private def store() =
@@ -54,6 +56,52 @@ class ManifestSpec extends AnyFunSuite {
     Files.writeString(file, "")
     val e2 = intercept[IllegalStateException](s.readManifest())
     assert(e2.getMessage.contains(file.toString), e2.getMessage)
+    // and a second document after the first
+    Files.writeString(file, json + json)
+    val e3 = intercept[IllegalStateException](s.readManifest())
+    assert(e3.getMessage.contains(file.toString), e3.getMessage)
+  }
+
+  test("a frontier leaves the session conf alone, and planning a store read starts no job") {
+    val s = SparkTestBase.spark.newSession()
+    import s.implicits._
+    val listingThreshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert(s.conf.get(listingThreshold) == "32", "fixture: Spark's default listing threshold")
+    val before = s.conf.getAll
+    val f = new SparkFrontier(s, Files.createTempDirectory("graft-nolist").toString, partitions = 4)
+    assert(s.conf.getAll == before)
+    // 16 hosts over 4 buckets, 20 score bands: more leaves than the threshold
+    val rows = for (h <- 0 until 16; b <- 0 until 20)
+      yield (s"http://h$h.example/p$b", (b + 0.5) / 100, 0)
+    f.bulkSchedule(rows.toDF("url", "score", "depth"))
+    assert(f.queue.readManifest().bucketPaths.valuesIterator.flatten.size > 32)
+    assert(s.conf.getAll == before)
+
+    // jobs of this thread's group; a marker job ends the count, since the
+    // listener bus delivers job starts in order
+    val sc = s.sparkContext
+    val group = "graft-manifest-plan"
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          started.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "plan")
+      f.queue.read(s).queryExecution.optimizedPlan
+      sc.setJobGroup(group, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val jobs = Iterator.continually(Option(started.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(fail("the marker job's start never arrived")))
+        .takeWhile(_ != "marker").toList
+      assert(jobs.isEmpty, s"planning started ${jobs.size} job(s)")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(f.queueSize() == rows.size)
   }
 
   test("append, replacePaths, rewriteLeaves and compact keep paths, row counts and bucket versions in step") {
@@ -76,7 +124,9 @@ class ManifestSpec extends AnyFunSuite {
       assert(s.readVersioned(spark).schema(BucketStore.CommitCol).dataType == LongType)
       var prev = s.readManifest()
       // after each commit: one row count per referenced path, equal to the
-      // leaf's parquet rows, and a new version for exactly `touched`
+      // leaf's parquet rows, one file list per referenced path, equal to
+      // the leaf's parquet files and lengths, and a new version for
+      // exactly `touched`
       def committed(what: String, touched: Set[Int]): Unit = {
         val m = s.readManifest()
         val ctx = s"${if (banded) "banded" else "unbanded"} $what"
@@ -84,6 +134,14 @@ class ManifestSpec extends AnyFunSuite {
         val referenced = m.bucketPaths.values.flatten.toSet
         assert(m.pathRows.keySet == referenced, ctx)
         referenced.foreach(p => assert(m.pathRows(p) == spark.read.parquet(p).count(), s"$ctx: $p"))
+        assert(m.pathFiles.keySet == referenced, ctx)
+        referenced.foreach { p =>
+          val onDisk = Files.list(Paths.get(p))
+          val files = try onDisk.iterator.asScala.map(_.toFile)
+            .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.length).toMap
+          finally onDisk.close()
+          assert(m.pathFiles(p) == files, s"$ctx: $p")
+        }
         val bumped = m.bucketVersions.collect {
           case (b, v) if !prev.bucketVersions.get(b).contains(v) => b }.toSet
         assert(bumped == touched, ctx)
@@ -120,6 +178,18 @@ class ManifestSpec extends AnyFunSuite {
       committed("compact", overgrown)
       assert(versions(overgrown).max == s.currentVersion)
       assert(s.read(spark).count() == rowsBefore)
+
+      s.commitCounters(6, Map("epochs" -> 6L))
+      committed("commitCounters", Set.empty)
+
+      // a manifest without file lists, as written before them: Spark
+      // lists the leaves, and the read holds the same rows
+      val rowsNow = s.read(spark).collect().toSet
+      val file = Paths.get(s.root, "manifest", s"m${s.currentVersion}.json")
+      Files.writeString(file, s.manifestJson(s.readManifest().copy(pathFiles = Map.empty)))
+      assert(!Files.readString(file).contains("\"files\""))
+      assert(s.readManifest().pathFiles.isEmpty)
+      assert(s.read(spark).collect().toSet == rowsNow)
     }
   }
 }

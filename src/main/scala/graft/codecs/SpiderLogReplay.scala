@@ -3,6 +3,7 @@ package graft.codecs
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.spark.{FrontierExprs, SparkFrontier}
+import scala.jdk.CollectionConverters._
 
 /** S6/S9 interop: replay a reference deployment's captured bus log into
   * the Spark engine. A frontera cluster's spider log is a stream of
@@ -78,22 +79,24 @@ object SpiderLogReplay {
     import spark.implicits._
     val ev = events.toDF().cache()
     try {
-      val fp = FrontierExprs.url_fingerprint($"url")
-      val pages = ev.filter($"kind" === "pc").select(
-        fp.as("fingerprint"), $"url", $"depth", $"score",
-        lit(0L).as("created_at"))
+      // the batch's fetches, pages and failed ones, in one small collect
+      // (one epoch's worth): the engine reads them as local relations
+      val fetched = ev.filter($"kind" === "pc" || $"kind" === "re").select($"kind",
+        FrontierExprs.url_fingerprint($"url").as("fingerprint"), $"url", $"depth",
+        $"score", lit(0L).as("created_at"), $"error")
+      val rows = fetched.collect().toSeq
+      def local(kind: String): DataFrame = spark.createDataFrame(
+        rows.filter(_.getString(0) == kind).asJava, fetched.schema).drop("kind")
+      val pages = local("pc").drop("error")
       val links = ev.filter($"kind" === "le")
         .select($"url".as("parent_url"), $"score".as("parent_score"),
           lit(0L).as("parent_created"), $"depth".as("parent_depth"),
           posexplode($"links"))
         .withColumnRenamed("pos", "link_idx")
         .withColumnRenamed("col", "link_url")
-      val errs = ev.filter($"kind" === "re").select(
-        fp.as("fingerprint"), $"url", $"depth", $"score",
-        lit(0L).as("created_at"), $"error")
-      val hasErrs = errs.limit(1).count() > 0
+      val hasErrs = rows.exists(_.getString(0) == "re")
       frontier.processCrawled(pages, links, epochNo,
-        errors = if (hasErrs) Some(errs) else None)
+        errors = if (hasErrs) Some(local("re")) else None)
       val us = ev.filter($"kind" === "us" && !$"schedule")
         .select($"url", $"score")
       if (us.limit(1).count() > 0) frontier.updateScores(us) else 0L

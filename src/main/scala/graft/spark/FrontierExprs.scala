@@ -2,8 +2,8 @@ package graft.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, UnaryExpression, BinaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, LeafExpression, UnaryExpression, BinaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -157,6 +157,111 @@ case class BoundLong(value: Long) extends LeafExpression {
   }
 }
 
+/** One batch's pages for the in-batch seen check (`InBatchSeen`), built
+  * on the driver: by fingerprint, each page's batch-order key, or null
+  * for a page every link sees (a failed fetch, a redirect alias). A page
+  * is seen by a link when it is at or before the link's parent in the
+  * batch order: keys compare lexicographically, column `i` ascending iff
+  * `ascending(i)`, as SQL's three-valued `a < b OR (a = b AND rest)` with
+  * an unknown result (a null key) counting as seen. */
+final class BatchPages(keyTypes: Seq[DataType], ascending: Seq[Boolean],
+    pages: Map[UTF8String, Seq[InternalRow]]) extends Serializable {
+  @transient private lazy val orderings =
+    keyTypes.map(org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering).toArray
+  private val asc = ascending.toArray
+
+  def seen(fingerprint: UTF8String, parent: InternalRow): Boolean =
+    pages.get(fingerprint).exists(_.exists(p => p == null || atOrBefore(p, parent)))
+
+  private def atOrBefore(page: InternalRow, parent: InternalRow): Boolean = {
+    // `rest` of the lexicographic comparison, right to left; null = unknown
+    var rest: java.lang.Boolean = true
+    var i = orderings.length - 1
+    while (i >= 0) {
+      rest =
+        if (page.isNullAt(i) || parent.isNullAt(i)) null
+        else {
+          val dt = keyTypes(i)
+          val c = orderings(i).compare(page.get(i, dt), parent.get(i, dt))
+          if (if (asc(i)) c < 0 else c > 0) true
+          else if (c != 0) false
+          else rest
+        }
+      i -= 1
+    }
+    rest == null || rest
+  }
+}
+
+/** Whether a link's target is a page of this batch that the link sees
+  * (`BatchPages.seen`): `children` are the link's fingerprint, then its
+  * parent's batch-order key, typed as the pages' keys. The pages ride in
+  * a broadcast variable read from the plan's reference array, so plans
+  * of different batches generate the same class text; a null
+  * fingerprint is never seen. */
+case class InBatchSeen(pages: org.apache.spark.broadcast.Broadcast[BatchPages],
+    children: Seq[Expression]) extends Expression {
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = {
+    val fp = children.head.eval(input)
+    fp != null && pages.value.seen(fp.asInstanceOf[UTF8String],
+      new GenericInternalRow(children.tail.map(_.eval(input)).toArray))
+  }
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("batchPages", pages, classOf[Object].getName)
+    val fp = children.head.genCode(ctx)
+    val keys = children.tail.map(_.genCode(ctx))
+    val arr = ctx.freshName("parentKey")
+    val fill = keys.zip(children.tail).zipWithIndex.map { case ((k, e), i) =>
+      val boxed =
+        if (CodeGenerator.isPrimitiveType(e.dataType))
+          s"${CodeGenerator.boxedType(e.dataType)}.valueOf(${k.value})"
+        else k.value.toString
+      s"${k.code}\n$arr[$i] = ${k.isNull} ? null : $boxed;"
+    }.mkString("\n")
+    ev.copy(code = code"""
+      ${fp.code}
+      Object[] $arr = new Object[${keys.length}];
+      $fill
+      boolean ${ev.value} = !${fp.isNull} && graft.spark.SparkFun.inBatchSeen($ref,
+        ${fp.value}, new ${classOf[GenericInternalRow].getName}($arr));""",
+      isNull = FalseLiteral)
+  }
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    copy(children = c)
+}
+
+/** A string-keyed lookup bound into the plan: the value `table` holds for
+  * the child's value, null when it holds none. Values are Catalyst
+  * values of `dataType`, an object (not a primitive) type. The table
+  * rides in a broadcast variable read from the plan's reference array
+  * (as `InBatchSeen`'s pages do), so the class text does not change
+  * with its contents. */
+case class BoundLookup(table: org.apache.spark.broadcast.Broadcast[Map[UTF8String, Any]],
+    dataType: DataType, child: Expression) extends UnaryExpression {
+  override def nullable: Boolean = true
+  // folding would inline the table's value into the generated code
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = {
+    val k = child.eval(input)
+    if (k == null) null else table.value.getOrElse(k.asInstanceOf[UTF8String], null)
+  }
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("boundLookup", table, classOf[Object].getName)
+    val k = child.genCode(ctx)
+    val javaType = CodeGenerator.javaType(dataType)
+    ev.copy(code = code"""
+      ${k.code}
+      $javaType ${ev.value} = null;
+      if (!${k.isNull}) {
+        ${ev.value} = ($javaType) graft.spark.SparkFun.boundLookup($ref, ${k.value});
+      }
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 /** Column-level API. */
 object FrontierExprs {
   import org.apache.spark.sql.functions.lit
@@ -196,6 +301,14 @@ object FrontierExprs {
       greatest(lit(0.01), score - 0.01) / 10.0
   }
   def bound_long(v: Long): Column = col(BoundLong(v))
+  /** `InBatchSeen` of a link: its `fingerprint` and its parent's
+    * batch-order key `parentKey` */
+  def in_batch_seen(pages: org.apache.spark.broadcast.Broadcast[BatchPages],
+      fingerprint: Column, parentKey: Seq[Column]): Column =
+    col(InBatchSeen(pages, (fingerprint +: parentKey).map(expr)))
+  def bound_lookup(table: org.apache.spark.broadcast.Broadcast[Map[UTF8String, Any]],
+      dataType: DataType, key: Column): Column =
+    col(BoundLookup(table, dataType, expr(key)))
   def bloom_seen_probe(
       blooms: org.apache.spark.broadcast.Broadcast[
         Map[Int, org.apache.spark.util.sketch.BloomFilter]],

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Paths, Path, StandardCopyOption, StandardOpenOption}
 import java.nio.channels.FileChannel
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import com.fasterxml.jackson.core.json.JsonReadFeature
@@ -74,12 +75,26 @@ final class BucketStore(val root: String, val bucketCol: String,
         * before file lists: Spark lists that dir) */
       pathFiles: Map[String, Map[String, Long]] = Map.empty)
 
+  /** The manifest `_CURRENT` names. A committed version never changes,
+    * so the last one parsed is kept and returned again while `_CURRENT`
+    * still names it: a call reads `_CURRENT` and the manifest file's
+    * size and time, and parses only a version it has not seen (a file
+    * rewritten in place, by a repair or by damage, is parsed again). */
   def readManifest(): Manifest = {
     val v = currentVersion
     if (v < 0) return Manifest(-1, -1, Map.empty, Map.empty)
     val file = manifestPath(v)
-    parseManifest(v, Files.readString(file), file.toString)
+    val attrs = Files.readAttributes(file, classOf[BasicFileAttributes])
+    val stamp = (v, attrs.size, attrs.lastModifiedTime)
+    val last = lastParsed
+    if (last != null && last._1 == stamp) last._2
+    else {
+      val m = parseManifest(v, Files.readString(file), file.toString)
+      lastParsed = (stamp, m)
+      m
+    }
   }
+  @transient @volatile private var lastParsed: ((Long, Long, FileTime), Manifest) = null
 
   /** Manifest `v` from its JSON; a malformed document fails naming `file`.
     * Keys added after the first format (rows, bucketv, props, pathmax,
@@ -154,10 +169,12 @@ final class BucketStore(val root: String, val bucketCol: String,
   def read(spark: SparkSession): DataFrame = readBuckets(spark, None)
 
   /** Read only the given buckets — partition pruning by construction. */
-  def readBuckets(spark: SparkSession, only: Option[Set[Int]]): DataFrame = {
-    val m = readManifest()
+  def readBuckets(spark: SparkSession, only: Option[Set[Int]]): DataFrame =
+    readAt(spark, readManifest(), only)
+
+  /** `readBuckets` of the table at manifest `m`. */
+  def readAt(spark: SparkSession, m: Manifest, only: Option[Set[Int]] = None): DataFrame =
     scan(spark, m, pathsOf(m, only), versioned = false)
-  }
 
   /** `readBuckets` plus the `commit` column: the version of the commit
     * that wrote each row (strictly monotonic — the Iceberg sequence-number
@@ -167,15 +184,13 @@ final class BucketStore(val root: String, val bucketCol: String,
     scan(spark, m, pathsOf(m, only), versioned = true)
   }
 
-  /** Spark's size estimate of reading `columns` of the whole table at
-    * `m` (the optimized plan's `sizeInBytes`, the number its broadcast
-    * decision compares). A table with no path has size 0: Spark's
-    * estimate of an empty frame is its default size, not 0. */
-  def sizeInBytes(spark: SparkSession, m: Manifest, columns: String*): Long =
+  /** Spark's size estimate of `read`, a read of the table at `m` (the
+    * optimized plan's `sizeInBytes`, the number its broadcast decision
+    * compares). A table with no path has size 0: Spark's estimate of an
+    * empty frame is its default size, not 0. */
+  def sizeInBytes(m: Manifest, read: DataFrame): Long =
     if (m.bucketPaths.isEmpty) 0L
-    else scan(spark, m, pathsOf(m, None), versioned = false)
-      .select(columns.map(col): _*)
-      .queryExecution.optimizedPlan.stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong
+    else read.queryExecution.optimizedPlan.stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong
 
   private def pathsOf(m: Manifest, only: Option[Set[Int]]): Seq[String] =
     m.bucketPaths
@@ -333,9 +348,13 @@ final class BucketStore(val root: String, val bucketCol: String,
     if (Files.exists(dir)) deleteRecursively(dir)
     // cluster by the partition dirs before the partitioned write: one
     // file per leaf instead of (tasks × leaves) shards — file count
-    // stays flat as parallelism grows
+    // stays flat as parallelism grows. The partition columns go first:
+    // stores whose partition columns have the same types then share the
+    // generated classes of the shuffle, the sort and the leaf path (the
+    // files keep the other columns, in their order)
     val partCols = bucketCol +: bandCol.toSeq
-    df.repartition(partCols.map(col): _*)
+    df.select((partCols ++ df.columns.filterNot(partCols.contains)).map(col): _*)
+      .repartition(partCols.map(col): _*)
       .write.mode("errorifexists").partitionBy(partCols: _*).parquet(dir.toString)
     leafDirs(dir)
   }

@@ -4,7 +4,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Epoch-loop crawl driver — the Spark analog of the reference
   * FrontierTester (frontera/utils/tester.py:13-95). The synthetic web is
@@ -54,34 +57,29 @@ final class SparkCrawler(
   var payloadFailures = 0L
 
   def crawlOnce(epochNo: Long): Boolean = {
-    val batch = frontier.nextBatch(maxNextRequests, atEpoch = epochNo)
-    // domain buckets of the batch's hosts, computed for free from the
-    // collected sequence — lets processCrawled prune its per-epoch
-    // domain_metadata reads without an extra job
-    var batchDBuckets: Option[Set[Int]] = None
-    val n =
+    val dequeued = frontier.nextBatch(maxNextRequests, atEpoch = epochNo)
+    // the batch the epoch reads (the collected rows when the sequence is
+    // collected, else the dequeued frame) and its size
+    val (batch, n) =
       if (collectSequence) {
         // within-batch order follows the queue ordering (a LIFO batch is
-        // consumed most-recent-first, like the reference scheduler); the
-        // batch is collected anyway, so it is sorted on the driver: no
-        // sort plan to compile and run each epoch
-        val keys = frontier.batchOrder :+ ("url" -> true)
-        val sel = batch.select(keys.map(k => col(k._1)): _*)
-        val ordered = SparkCrawler.sortRows(sel.collect().toSeq, sel.schema, keys.map(_._2))
-          .map(_.getString(keys.length - 1)).toList
+        // consumed most-recent-first, like the reference scheduler). The
+        // whole batch is collected in one job and sorted on the driver
+        // (no sort plan to compile and run each epoch), and the rest of
+        // the epoch reads it as a local relation: no job reads it again
+        val toRow = CatalystTypeConverters.createToScalaConverter(dequeued.schema)
+        val rows = SparkCrawler.sortRows(
+          SparkFrontier.collectInternal(dequeued).map(toRow(_).asInstanceOf[Row]),
+          dequeued.schema, frontier.batchOrder :+ ("url" -> true))
+        val ordered = rows.map(_.getAs[String]("url")).toList
         if (ordered.nonEmpty) sequence.append(ordered)
-        batchDBuckets = Some(ordered.map { u =>
-          graft.core.Hashing.crc32Partition(
-            graft.core.UrlUtil.sld(graft.core.UrlUtil.slotKey(u)),
-            frontier.partitions)
-        }.toSet)
-        ordered.length.toLong
+        (spark.createDataFrame(rows.asJava, dequeued.schema), ordered.length.toLong)
       } else if (verifyPayloadOnFetch) {
         // one job: the "fetch" — synthesize the deterministic payload,
         // decode it, check the PSNR/caption invariant (executor-side) —
         // fused with the batch count; rebalanced across all cores (the
         // per-row codec work is the heavy part, not the row count)
-        val (cnt, fails) = batch
+        val (cnt, fails) = dequeued
           .repartition(spark.sparkContext.defaultParallelism)
           .select($"url", $"depth").as[(String, Int)]
           .map { case (url, depth) =>
@@ -91,12 +89,11 @@ final class SparkCrawler(
           .agg(coalesce(sum($"c"), lit(0L)), coalesce(sum($"f"), lit(0L)))
           .as[(Long, Long)].first()
         payloadFailures += fails
-        cnt
-      } else batch.count()
+        (dequeued, cnt)
+      } else (dequeued, dequeued.count())
     if (n == 0) {
       // the crawl may end here: leave no commit running behind it
       frontier.awaitQueueCommit()
-      batch.unpersist()
       return false
     }
     urlsCrawled += n
@@ -142,13 +139,24 @@ final class SparkCrawler(
         (content, Some(alias), Some(pairs))
       case None => (ok.withColumn("__curl", $"url"), None, None)
     }
-    val webLinks = okContent
-      .join(web.withColumnRenamed("url", "__wurl"),
-        okContent("__curl") === col("__wurl"), "left_outer")
-      .select($"url".as("parent_url"),
-        $"score".as("parent_score"), $"created_at".as("parent_created"),
-        $"depth".as("parent_depth"),
-        posexplode_outer(coalesce($"outlinks", array())))
+    // each page's links come from its content url's row of the web. The
+    // pages are few and collected (no job while the batch is local), so
+    // they ride into the web scan as a lookup bound into the plan,
+    // content url -> the pages fetched from it: no join, no broadcast job
+    val parentsOf = okContent.select($"__curl", $"url".as("parent_url"),
+      $"score".as("parent_score"), $"created_at".as("parent_created"),
+      $"depth".as("parent_depth"))
+    val parentType = StructType(parentsOf.schema.tail)
+    val contentParents = spark.sparkContext.broadcast[Map[UTF8String, Any]](
+      SparkFrontier.collectInternal(parentsOf).filter(!_.isNullAt(0))
+        .groupBy(_.getUTF8String(0)).map { case (u, rs) =>
+          u -> new GenericArrayData(rs.map(r => InternalRow.fromSeq(
+            parentType.fields.indices.map(i => r.get(i + 1, parentType(i).dataType)))))
+        })
+    val webLinks = web
+      .select(explode(FrontierExprs.bound_lookup(contentParents, ArrayType(parentType, false),
+        $"url")).as("__p"), $"outlinks")
+      .select($"__p.*", posexplode_outer(coalesce($"outlinks", array())))
       .withColumnRenamed("pos", "link_idx")
       .withColumnRenamed("col", "link_url")
       .filter($"link_url".isNotNull)
@@ -187,11 +195,10 @@ final class SparkCrawler(
           $"body".as("robots_body"))
         (webLinks.unionByName(robotsLinks).unionByName(sitemapLinks), Some(dd))
     }
-    frontier.processCrawled(pages, links, epochNo,
-      nPages = if (fetchError.isEmpty) n else -1L, errors = errs,
+    frontier.processCrawled(pages, links, epochNo, errors = errs,
       domainData = domainData, aliasSeen = aliasSeen,
-      redirectPairs = redirectPairs, parentDBuckets = batchDBuckets)
-    batch.unpersist()
+      redirectPairs = redirectPairs)
+    contentParents.destroy()
     if (compactEveryEpochs > 0 && epochNo % compactEveryEpochs == 0) {
       frontier.compactQueue()
       frontier.compactStates()
@@ -226,14 +233,15 @@ final class SparkCrawler(
 }
 
 object SparkCrawler {
-  /** `rows` of `schema` sorted by Spark's own ordering on all their
-    * columns, column `i` ascending (nulls first) iff `asc(i)`, else
+  /** `rows` of `schema` sorted by Spark's own ordering on the `keys`
+    * columns, each ascending (nulls first) when its flag is set, else
     * descending (nulls last) — what `orderBy(col.asc / col.desc)` gives. */
   private[spark] def sortRows(rows: Seq[Row], schema: StructType,
-      asc: Seq[Boolean]): Seq[Row] = {
-    val ordering = new InterpretedOrdering(schema.fields.toSeq.zip(asc).zipWithIndex.map {
-      case ((f, a), i) =>
-        SortOrder(BoundReference(i, f.dataType, f.nullable), if (a) Ascending else Descending)
+      keys: Seq[(String, Boolean)]): Seq[Row] = {
+    val ordering = new InterpretedOrdering(keys.map { case (c, a) =>
+      val i = schema.fieldIndex(c)
+      val f = schema(i)
+      SortOrder(BoundReference(i, f.dataType, f.nullable), if (a) Ascending else Descending)
     })
     val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
     rows.map(r => (toInternal(r).asInstanceOf[InternalRow], r))

@@ -4,7 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.unsafe.types.UTF8String
 import graft.spark.FrontierExprs._
+import scala.jdk.CollectionConverters._
 
 /** Scoring strategy as Catalyst column expressions — the Spark-native form
   * of the reference's CrawlingStrategy score functions
@@ -380,7 +384,7 @@ final class SparkFrontier(
     // the replay guard of an in-flight crawl epoch (a crash between that
     // epoch's queue append and its states merge must still heal)
     val sm = states.readManifest()
-    mergeStateUpdates(updates, touched, sm.epoch, bloomPays(sm), Map.empty)
+    mergeStateUpdates(updates, touched, sm.epoch, bloomPays(seenSetBytes(sm)), Map.empty)
     fresh.unpersist()
   }
 
@@ -397,21 +401,26 @@ final class SparkFrontier(
       m.bucketVersions.get(b).exists(v => bloomSeen.version(b).exists(_ >= v))
 
   /** The Bloom sidecars are probed, maintained and broadcast only when
-    * the states table `m` is too large to broadcast: at or below
+    * the states table is too large to broadcast (`seenSetBytes`, the
+    * size of its fingerprints, above the threshold): at or below
     * `spark.sql.autoBroadcastJoinThreshold` the exact anti-join is
     * already one in-memory hash probe, and the sidecars only add cost
     * each epoch (load, broadcast, a cached probe frame, the delta-keys
     * job, persisted sidecars). Crossing the size is safe: a bucket with
     * data but no fresh sidecar goes through the exact join, and its
     * sidecar is rebuilt at its next merge. */
-  private def bloomPays(m: states.Manifest): Boolean =
-    seenSetBytes(m) > spark.sessionState.conf.autoBroadcastJoinThreshold
+  private def bloomPays(seenSetBytes: Long): Boolean =
+    seenSetBytes > spark.sessionState.conf.autoBroadcastJoinThreshold
 
-  /** Spark's size estimate of the exact anti-join's build side over
-    * states `m` (its fingerprints) — the number Spark compares with the
-    * same threshold when it plans that join; 0 while the table is empty. */
+  /** The exact anti-join's build side over states `m`: its fingerprints. */
+  private def seenSet(m: states.Manifest): DataFrame =
+    states.readAt(spark, m).select($"fingerprint")
+
+  /** Spark's size estimate of `seenSet(m)` — the number Spark compares
+    * with the same threshold when it plans that join; 0 while the table
+    * is empty. */
   private[spark] def seenSetBytes(m: states.Manifest): Long =
-    states.sizeInBytes(spark, m, "fingerprint")
+    states.sizeInBytes(m, seenSet(m))
 
   /** Merge state rows (fingerprint, state, sbucket) into the states
     * store + refresh the touched buckets' Bloom sidecars incrementally
@@ -487,7 +496,7 @@ final class SparkFrontier(
     val m = states.readManifest()
     val folded = states.compact(spark, maxFilesPerBucket, lastStates)
     val freshBefore = folded.filter(b => bloomFresh(m, b))
-    if (freshBefore.nonEmpty && bloomPays(m))
+    if (freshBefore.nonEmpty && bloomPays(seenSetBytes(m)))
       // the fold changed no membership — carry the stamp forward so the
       // rewrite doesn't demote fresh sidecars to stale
       bloomSeen.mergeUpdates(
@@ -1004,8 +1013,10 @@ final class SparkFrontier(
         }
       }
     }
+    // a filter of the scan cache, read by the caller once or twice: no
+    // cache of its own
     val batch = tagged.filter($"__sel")
-      .select(queueSchema.fieldNames.map(col): _*).cache()
+      .select(queueSchema.fieldNames.map(col): _*)
 
     val scannedN =
       prefix.valuesIterator.map(_.iterator.map(_._2.size).sum).sum
@@ -1126,7 +1137,7 @@ final class SparkFrontier(
     * manifest) is dropped wholesale — replays of already-applied bus
     * events are idempotent. */
   def processCrawled(pages: DataFrame, links: DataFrame, epochNo: Long,
-      nPages: Long = -1L, errors: Option[DataFrame] = None,
+      errors: Option[DataFrame] = None,
       /** discovery: robots bodies fetched this epoch, (domain, robots_body) —
         * merged into domain_metadata (reference _process_robots_txt,
         * discovery/__init__.py:284-333) */
@@ -1141,21 +1152,22 @@ final class SparkFrontier(
         * (from_host, to_host) — feeds both domains' capped
         * redirect_from/redirect_to sets in domain_metadata (reference
         * _get_domain_after_redirects, discovery/__init__.py:478-507) */
-      redirectPairs: Option[DataFrame] = None,
-      /** domain buckets (host_partition of sld) of this epoch's PARENT
-        * hosts, when the caller already knows them (the crawler computes
-        * them for free from a collected batch). Under sameDomainOnly
-        * every schedulable link shares its parent's 2nd-level domain, so
-        * this one small set prunes BOTH per-epoch domain_metadata reads
-        * (the F3 robots deny and the A4 budget join). */
-      parentDBuckets: Option[Set[Int]] = None): Unit = {
+      redirectPairs: Option[DataFrame] = None): Unit = {
     if (epochNo <= lastProcessedEpoch) return // stale replay (jid filter)
-    val aliasStates = aliasSeen.map(_.select($"fingerprint").distinct()
-      .withColumn("state", lit(graft.local.States.Crawled)))
-    val pageStates0 = pages.select($"fingerprint").distinct()
-      .withColumn("state", lit(graft.local.States.Crawled))
-    val pageStates = aliasStates.fold(pageStates0)(a =>
-      pageStates0.unionByName(a).dropDuplicates("fingerprint"))
+    // The batch's pages and failed fetches, collected once: at most the
+    // dequeue budget of rows, which the crawler (and the log replay)
+    // hands over as local relations, collected with no job. They give
+    // the parent domains, the in-batch seen check and the fetches' own
+    // state updates.
+    val pageCols = Seq("fingerprint", "url", "score", "created_at")
+    val pageRows = SparkFrontier.collectInternal(pages.select(pageCols.map(col): _*))
+    val errorRows = errors.toSeq.flatMap(e =>
+      SparkFrontier.collectInternal(e.select($"fingerprint", $"url")))
+    def fingerprints(rows: Seq[InternalRow]): Seq[UTF8String] =
+      rows.map(r => if (r.isNullAt(0)) null else r.getUTF8String(0))
+    val (pageFps, errorFps) = (fingerprints(pageRows), fingerprints(errorRows))
+    val aliasFps = aliasSeen.toSeq.flatMap(a =>
+      fingerprints(SparkFrontier.collectInternal(a.select($"fingerprint"))))
 
     def isProbeUrl(u: Column): Column =
       u.endsWith("/robots.txt") || u.rlike("sitemap[^/]*\\.xml$")
@@ -1211,27 +1223,22 @@ final class SparkFrontier(
       case _ => l1
     }
     val sameD = discovery.exists(_.sameDomainOnly)
-    // the pruning set: supplied by the crawler when it collected the
-    // batch anyway, else one small job over the page batch (O(batch),
-    // vs the O(all domains) read it prunes). ERRORED fetches are parents
-    // too — the home-page fallback above synthesizes links whose parent
-    // is the failed probe, and pruning domain_metadata to page domains
-    // only would hide the failed domain's banned/fatal/budget row from
-    // the very checks that must drop its fallback link. Without
-    // sameDomainOnly the link domains are unbounded — fall back to
-    // unpruned reads.
+    // Under sameDomainOnly every schedulable link shares its parent's
+    // 2nd-level domain, so the domain buckets (host_partition of sld) of
+    // the parents' hosts prune BOTH per-epoch domain_metadata reads (the
+    // F3 robots deny and the A4 budget join), computed on the driver from
+    // the collected rows. ERRORED fetches are parents too — the home-page
+    // fallback above synthesizes links whose parent is the failed probe,
+    // and pruning domain_metadata to page domains only would hide the
+    // failed domain's banned/fatal/budget row from the very checks that
+    // must drop its fallback link. Without sameDomainOnly the link
+    // domains are unbounded — fall back to unpruned reads.
     val parentDB: Option[Set[Int]] =
       if (!sameD) None
-      else parentDBuckets.orElse {
-        val parentUrls = errors match {
-          case Some(err) => pages.select($"url")
-            .unionByName(err.select($"url"))
-          case None => pages.select($"url")
-        }
-        Some(parentUrls.select(host_partition(
-            FrontierExprs.sld(url_host($"url")), partitions).as("db"))
-          .distinct().as[Int].collect().toSet)
-      }
+      else Some((pageRows ++ errorRows).collect { case r if !r.isNullAt(1) =>
+        graft.core.Hashing.crc32Partition(graft.core.UrlUtil.sld(
+          graft.core.UrlUtil.slotKey(r.getUTF8String(1).toString)), partitions)
+      }.toSet)
     // F2/F3: filter_extracted_links — robots deny before the states
     // lookup (saves the KV fetch, exactly the reference's motivation).
     // Under discovery the robots bodies are those persisted in
@@ -1283,9 +1290,11 @@ final class SparkFrontier(
     // declared definitely-unseen (a crash between the states commit and
     // the sidecar write can therefore never drop a seen URL).
     // Links to pages crawled in THIS batch can be seen too — they're not
-    // in the persisted bloom yet, so that check is a separate broadcast
-    // anti-join against the (small) batch (below).
+    // in the persisted bloom yet, so that check is a separate filter
+    // against the (small) batch (below).
     var probeCache: Option[DataFrame] = None
+    // the epoch's broadcast variables, destroyed once its commits are done
+    val broadcasts = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.broadcast.Broadcast[_]]
     // domain buckets present among this epoch's links, for the A4
     // budget join's domain_metadata pruning (at 10^10 URLs the table
     // spans every bucket; an epoch's links touch a few). With the
@@ -1295,7 +1304,10 @@ final class SparkFrontier(
     var budgetDBuckets: Option[Set[Int]] = parentDB
     val wantDB = discovery.exists(_.maxPagesPerDomain > 0) && parentDB.isEmpty
     val statesManifest = states.readManifest()
-    val bloomOn = bloomPays(statesManifest)
+    // the exact anti-join's build side, planned once: its size estimate
+    // decides the Bloom side, and the join reads the same scan
+    val seenPersisted = seenSet(statesManifest)
+    val bloomOn = bloomPays(states.sizeInBytes(statesManifest, seenPersisted))
     val notSeenPersisted =
       if (statesManifest.bucketPaths.isEmpty)
         // states empty (first epochs): nothing is seen — skip the probe
@@ -1305,6 +1317,7 @@ final class SparkFrontier(
         val sm = statesManifest
         val fresh = (0 until stateBuckets).filter(b => bloomFresh(sm, b)).toSet
         val bc = bloomSeen.broadcastFor(spark, fresh)
+        broadcasts += bc
         val withB = deduped.withColumn("__sb", sbucketCol($"fingerprint"))
         // native expression — the probe stays in whole-stage codegen,
         // evaluated once per row (no UDF ser/de, no double pass)
@@ -1340,38 +1353,43 @@ final class SparkFrontier(
           maybeSeen.join(
             states.readBuckets(spark, Some(maybeBuckets)).select($"fingerprint"),
             Seq("fingerprint"), "left_anti"))
-      } else
-        deduped.join(states.read(spark).select($"fingerprint"),
-          Seq("fingerprint"), "left_anti")
-    // errored fetches become part of this epoch's seen set too: their
-    // ERROR state is merged below, and links to them must not reschedule
-    val errorStates = errors.map(_.select($"fingerprint").distinct()
-      .withColumn("state", lit(graft.local.States.Error)))
+      } else {
+        // at or below the broadcast size the states' fingerprints are
+        // collected — the rows a broadcast join would ship — into a lookup
+        // bound into the plan: no broadcast exchange, whose job's tasks
+        // compile their stage anew every epoch
+        val seen = spark.sparkContext.broadcast[Map[UTF8String, Any]](
+          SparkFrontier.collectInternal(seenPersisted).collect {
+            case r if !r.isNullAt(0) => r.getUTF8String(0) -> r.getUTF8String(0) }.toMap)
+        broadcasts += seen
+        deduped.filter(bound_lookup(seen, StringType, $"fingerprint").isNull)
+      }
     // A batch page is seen by a link only once page_crawled has run for
     // it: the reference manager processes the batch in order, each
     // page's page_crawled then its links_extracted, so a link sees the
     // pages at or before its parent in the batch order — a link to a
     // seed dequeued LATER in the same batch (no persisted state yet)
     // schedules it again. Errors and redirect aliases are seen by every
-    // link of the batch. Keys: (page column, link's parent column,
-    // ascending) of the batch order.
+    // link of the batch (errored fetches are part of this epoch's seen
+    // set: their ERROR state is merged below). Keys: (page column, link's
+    // parent column, ascending) of the batch order.
     val batchOrderKeys: Seq[(String, String, Boolean)] = (batchOrder ++
       (if (notSeenPersisted.columns.contains("parent_url")) Seq("url" -> true) else Nil))
       .map { case (c, asc) => (c, parentCol(c), asc) }
-    // lexicographic page-key <= parent-key; an unknown (null) key counts
-    // as before, i.e. seen
-    val atOrBeforeParent = coalesce(batchOrderKeys.foldRight(lit(true)) {
-      case ((pc, lc, asc), rest) =>
-        val (a, b) = (col(s"__s_$pc"), col(lc))
-        (if (asc) a < b else a > b) || (a === b && rest)
-    }, lit(true))
-    val seenPages = pages.select(($"fingerprint".as("__sfp") +: lit(false).as("__sall") +:
-      batchOrderKeys.map { case (pc, _, _) => col(pc).as(s"__s_$pc") }): _*)
-    val seenAlways = (aliasStates.toSeq ++ errorStates).map(_.select($"fingerprint".as("__sfp"),
-      lit(true).as("__sall")))
-    val seenThisBatch = seenAlways.foldLeft(seenPages)(_.unionByName(_, allowMissingColumns = true))
-    val fresh0 = notSeenPersisted.join(broadcast(seenThisBatch),
-      $"fingerprint" === $"__sfp" && ($"__sall" || atOrBeforeParent), "left_anti")
+    // The check is a lookup bound into the plan, built on the driver from
+    // the collected rows; links compare their parent's key in the type
+    // of the page's
+    val keyTypes = batchOrderKeys.map { case (pc, _, _) => pages.schema(pc).dataType }
+    val batchPages = spark.sparkContext.broadcast(new BatchPages(keyTypes,
+      batchOrderKeys.map(_._3),
+      (pageFps.zip(pageRows).collect { case (f, r) if f != null =>
+          f -> (new GenericInternalRow(batchOrderKeys.zip(keyTypes).map { case ((pc, _, _), t) =>
+            r.get(pageCols.indexOf(pc), t) }.toArray): InternalRow) } ++
+        (aliasFps ++ errorFps).filter(_ != null).map(_ -> (null: InternalRow)))
+        .groupMap(_._1)(_._2)))
+    broadcasts += batchPages
+    val fresh0 = notSeenPersisted.filter(!in_batch_seen(batchPages, $"fingerprint",
+      batchOrderKeys.zip(keyTypes).map { case ((_, lc, _), t) => col(lc).cast(t) }))
     // MAX_SITEMAPS guard (discovery/__init__.py:21,359-362): a sitemap
     // index can enumerate unbounded sub-sitemaps — cap probe links per
     // parent response (first N by extraction order; with a randomSeed,
@@ -1477,28 +1495,36 @@ final class SparkFrontier(
       case _ => scheduled0
     }).select(queueSchema.fieldNames.map(col): _*).cache()
 
+    // the fetches' own states, from the rows collected above: pages and
+    // redirect aliases CRAWLED, failed fetches ERROR, one row per
+    // fingerprint each
+    def stateRows(fps: Seq[UTF8String], state: Int): Seq[org.apache.spark.sql.Row] =
+      fps.distinct.map(f => org.apache.spark.sql.Row(Option(f).map(_.toString).orNull, state))
+    val fetchStates = spark.createDataFrame(
+      (stateRows(pageFps ++ aliasFps, graft.local.States.Crawled) ++
+        stateRows(errorFps, graft.local.States.Error)).asJava,
+      StructType(statesSchema.filter(_.name != "sbucket")))
     // states updates (crawled CRAWLED + errored ERROR + scheduled QUEUED)
-    // built up front: ONE aggregation job yields both the scheduled count
-    // and the touched state buckets (epoch fixed cost matters — SURVEY
-    // §6's per-epoch overhead is per-job latency × job count)
-    val updates = errorStates.fold(pageStates)(pageStates.unionByName(_))
+    // built up front: ONE job yields both the scheduled count and the
+    // touched state buckets (epoch fixed cost matters — SURVEY §6's
+    // per-epoch overhead is per-job latency × job count). It materializes
+    // `scheduled`; `updates` itself is a projection of that cache and the
+    // driver's rows, so it has no cache of its own
+    val updates = fetchStates
       .union(scheduled.select($"fingerprint")
         .withColumn("state", lit(graft.local.States.Queued)))
       .withColumn("sbucket", sbucketCol($"fingerprint"))
       .select(statesSchema.fieldNames.map(col): _*)
-      .cache()
     val updStats = labeled("links pipeline + state-update stats")(
-      updates.groupBy($"sbucket", $"state").count()
-        .as[(Int, Int, Long)].collect())
-    val touched = updStats.map(_._1).toSet
-    val nScheduled = updStats.collect {
-      case (_, s, n) if s == graft.local.States.Queued => n }.sum
+      SparkFrontier.countRows(updates.select($"sbucket", $"state")))
+      .map { case (r, n) => (r.getInt(0), r.getInt(1)) -> n }
+    val touched = updStats.keySet.map(_._1)
+    def nInState(state: Int): Long = updStats.collect { case ((_, s), n) if s == state => n }.sum
+    val nScheduled = nInState(graft.local.States.Queued)
     // provable-emptiness counters (skip whole commits below): a nonempty
     // `pages`/`errors` frame always contributes CRAWLED/ERROR states
-    val nCrawledStates = updStats.collect {
-      case (_, s, n) if s == graft.local.States.Crawled => n }.sum
-    val nErrorStates = updStats.collect {
-      case (_, s, n) if s == graft.local.States.Error => n }.sum
+    val nCrawledStates = nInState(graft.local.States.Crawled)
+    val nErrorStates = nInState(graft.local.States.Error)
     probeCache.foreach(_.unpersist())
 
     // revisit: crawled pages re-enter the queue, visible `interval`
@@ -1631,7 +1657,7 @@ final class SparkFrontier(
     // "marker set" still implies "epoch fully applied" with no extra
     // manifest flip, and a crash anywhere earlier leaves it unset
     if (willMergeStates) labeled("states merge") {
-      val nCrawled = if (nPages >= 0) nPages else pages.count()
+      val nCrawled = pageRows.length.toLong
       mergeStateUpdates(updates, touched, epochNo, bloomOn,
         Map("crawled" -> nCrawled, "queued" -> nScheduled),
         props = Map(jidKey -> epochNo.toString),
@@ -1657,8 +1683,8 @@ final class SparkFrontier(
     }
 
     scheduled.unpersist()
-    updates.unpersist()
     if (discovery.isDefined) l0.unpersist()
+    broadcasts.foreach(_.destroy())
   }
 
   /** Compact queue bands whose file count grew past the threshold
@@ -1684,4 +1710,30 @@ final class SparkFrontier(
     awaitQueueCommit()
     queue.read(spark).count()
   }
+}
+
+object SparkFrontier {
+  /** `df`'s rows as Catalyst rows, collected without Dataset's generated
+    * deserializer: the collects of an epoch's few driver-side rows then
+    * add no class per schema to Spark's code cache. A local relation is
+    * collected with no job. */
+  private[spark] def collectInternal(df: DataFrame): Seq[InternalRow] =
+    df.queryExecution.executedPlan.executeCollect().toSeq
+
+  /** The distinct rows of `df` with their counts, in one job: each task
+    * counts its partition's rows and the driver adds the counts up. For
+    * frames with few distinct rows; a generated aggregate would add a
+    * shuffle and its classes to every epoch. */
+  private[spark] def countRows(df: DataFrame): Map[InternalRow, Long] =
+    df.queryExecution.toRdd.mapPartitions { rows =>
+      val counts = scala.collection.mutable.HashMap.empty[InternalRow, Long]
+      rows.foreach { r =>
+        // the iterator reuses its row: a new key keeps a copy
+        val n = counts.getOrElse(r, 0L)
+        if (n == 0L) counts(r.copy()) = 1L else counts(r) = n + 1
+      }
+      Iterator.single(counts.toMap)
+    }.collect().foldLeft(Map.empty[InternalRow, Long]) { (acc, m) =>
+      m.foldLeft(acc) { case (a, (r, n)) => a.updated(r, a.getOrElse(r, 0L) + n) }
+    }
 }

@@ -58,6 +58,19 @@ object SparkFun {
   def isHomePage(url: UTF8String): Boolean =
     UrlUtil.isHomePage(url.toString)
 
+  /** `InBatchSeen` codegen kernel: does the link to `fingerprint`, whose
+    * parent has batch-order key `parentKey`, see a page of the batch? */
+  def inBatchSeen(bc: Object, fingerprint: UTF8String,
+      parentKey: org.apache.spark.sql.catalyst.InternalRow): Boolean =
+    bc.asInstanceOf[org.apache.spark.broadcast.Broadcast[BatchPages]].value
+      .seen(fingerprint, parentKey)
+
+  /** `BoundLookup` codegen kernel: the broadcast table's value for `key`,
+    * or null. */
+  def boundLookup(bc: Object, key: UTF8String): Object =
+    bc.asInstanceOf[org.apache.spark.broadcast.Broadcast[Map[UTF8String, Any]]].value
+      .getOrElse(key, null).asInstanceOf[Object]
+
   /** Partitioned-Bloom probe (BloomSeenProbe codegen kernel): does the
     * bucket's Bloom possibly contain the seen-key? Absent bucket = no
     * seen keys = definite negative. `bc` is the broadcast

@@ -62,6 +62,20 @@ class ManifestSpec extends AnyFunSuite {
     assert(e3.getMessage.contains(file.toString), e3.getMessage)
   }
 
+  test("a manifest version is parsed once; a commit through another store on the root is seen") {
+    val s = store()
+    s.commitCounters(1, Map("seeds" -> 3L), Map("k" -> "v"))
+    val m = s.readManifest()
+    assert(s.readManifest() eq m)
+    // a second store on the same root commits the next version
+    val other = new BucketStore(s.root, "partition_id", 4, bandCol = Some("band"))
+    other.commitCounters(2, Map("seeds" -> 4L), Map("k" -> "w"))
+    val m2 = s.readManifest()
+    assert(m2.version == m.version + 1 && m2.epoch == 2 && m2.props("k") == "w")
+    assert(s.readManifest() eq m2)
+    assert(other.readManifest() == m2)
+  }
+
   test("a frontier leaves the session conf alone, and planning a store read starts no job") {
     val s = SparkTestBase.spark.newSession()
     import s.implicits._

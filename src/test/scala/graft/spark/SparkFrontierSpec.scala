@@ -82,6 +82,97 @@ class SparkFrontierSpec extends AnyFunSuite {
     }
   }
 
+  /** A local run of the same loop as `FrontierTester`, where the batch's
+    * `failed` fetches report `request_error` before its pages are
+    * crawled (the engine: errors are seen by every link of the batch). */
+  private def localRunFailing(graph: CrawlGraph, strategy: graft.local.CrawlStrategy,
+      ordering: QueueOrdering, mnr: Int, failed: Set[String]): (List[String], Map[String, Int]) = {
+    val f = new LocalFrontier(strategy, ordering = ordering)
+    f.addSeeds(graph.seeds)
+    val seq = List.newBuilder[String]
+    var batch = f.getNextRequests(mnr)
+    while (batch.nonEmpty) {
+      seq ++= batch.map(_.url)
+      batch.filter(r => failed(r.url)).foreach(f.requestError(_, "fetch failed"))
+      batch.filterNot(r => failed(r.url)).foreach { r =>
+        f.pageCrawled(r)
+        f.linksExtracted(r, graph.linksOf(r.url))
+      }
+      batch = f.getNextRequests(mnr)
+    }
+    (seq.result(), f.states.snapshot)
+  }
+
+  private def sparkRunFailing(graph: CrawlGraph, strategy: ScoreStrategy,
+      ordering: QueueOrdering, mnr: Int, failed: Set[String], tag: String,
+      s: SparkSession): (List[String], Map[String, Int]) = {
+    val frontier = new SparkFrontier(s, Files.createTempDirectory(s"graft-$tag").toString,
+      partitions = 4, stateBuckets = 4, strategy = strategy, globalOrder = true,
+      ordering = ordering)
+    frontier.addSeeds(graph.seeds)
+    val crawler = new SparkCrawler(frontier, webDF(graph, s), mnr,
+      fetchError = if (failed.isEmpty) None else Some(col("url").isin(failed.toSeq: _*)))
+    (crawler.run(), frontier.stateSnapshot())
+  }
+
+  /** One batch holds the three seeds w0, w1, w2; `links` are their
+    * outlinks. */
+  private def threeSeeds(links: (Int, Int)*): CrawlGraph = {
+    val seeds = Vector.tabulate(3)(i => s"http://w$i.example/")
+    CrawlGraph(seeds.zipWithIndex.map { case (u, i) =>
+      u -> (links.collect { case (from, to) if from == i => seeds(to) }.toVector :+ s"${u}p1")
+    }, seeds)
+  }
+
+  test("FIFO: a link sees the batch pages before its parent, not those after it") {
+    // FIFO batch order w0, w1, w2: w0 -> w2 schedules w2 again (later in
+    // the batch), w2 -> w0 does not (earlier)
+    val graph = threeSeeds(0 -> 2, 2 -> 0)
+    val (localSeq, localStates) = localRunFailing(graph, new graft.local.BasicStrategy,
+      QueueOrdering.Fifo, 4, Set.empty)
+    assert(localSeq.count(_ == "http://w2.example/") == 2, localSeq.toString)
+    assert(localSeq.count(_ == "http://w0.example/") == 1, localSeq.toString)
+    for ((side, s) <- SparkTestBase.sides) {
+      val (sparkSeq, sparkStates) = sparkRunFailing(graph, ScoreStrategy.Basic,
+        QueueOrdering.Fifo, 4, Set.empty, "inbatch-fifo", s)
+      assert(sparkSeq == localSeq, side)
+      assert(sparkStates == localStates, side)
+    }
+  }
+
+  test("LIFO: a link sees the batch pages before its parent, not those after it") {
+    // LIFO batch order w2, w1, w0: w2 -> w0 schedules w0 again (later in
+    // the batch), w0 -> w2 does not (earlier)
+    val graph = threeSeeds(2 -> 0, 0 -> 2)
+    val (localSeq, localStates) = localRunFailing(graph, new graft.local.BasicStrategy,
+      QueueOrdering.Lifo, 4, Set.empty)
+    assert(localSeq.count(_ == "http://w0.example/") == 2, localSeq.toString)
+    assert(localSeq.count(_ == "http://w2.example/") == 1, localSeq.toString)
+    for ((side, s) <- SparkTestBase.sides) {
+      val (sparkSeq, sparkStates) = sparkRunFailing(graph, ScoreStrategy.Basic,
+        QueueOrdering.Lifo, 4, Set.empty, "inbatch-lifo", s)
+      assert(sparkSeq == localSeq, side)
+      assert(sparkStates == localStates, side)
+    }
+  }
+
+  test("a failed fetch in the batch is seen by every link of the batch") {
+    // batch order w0, w1, w2 and w2 fails: w0 -> w2 would schedule w2
+    // again were it a page, but a failed fetch is seen by every link
+    val graph = threeSeeds(0 -> 2, 1 -> 0)
+    val failed = Set("http://w2.example/")
+    val (localSeq, localStates) = localRunFailing(graph, new BFSStrategy,
+      QueueOrdering.ScoreCreated, 4, failed)
+    assert(localSeq.count(_ == "http://w2.example/") == 1, localSeq.toString)
+    assert(localStates(fp("http://w2.example/")) == graft.local.States.Error)
+    for ((side, s) <- SparkTestBase.sides) {
+      val (sparkSeq, sparkStates) = sparkRunFailing(graph, ScoreStrategy.BFS,
+        QueueOrdering.ScoreCreated, 4, failed, "inbatch-err", s)
+      assert(sparkSeq == localSeq, side)
+      assert(sparkStates == localStates, side)
+    }
+  }
+
   private def localRunOrdered(graph: CrawlGraph, strategy: graft.local.CrawlStrategy,
       ordering: QueueOrdering, mnr: Int): List[String] = {
     val f = new LocalFrontier(strategy, ordering = ordering)
@@ -195,7 +286,7 @@ class SparkFrontierSpec extends AnyFunSuite {
       val bySpark = df.orderBy(keys.map { case (c, asc) =>
         if (asc) col(c).asc else col(c).desc }: _*).select($"url").as[String].collect().toList
       val sel = df.select(keys.map(k => col(k._1)): _*)
-      val byDriver = SparkCrawler.sortRows(sel.collect().toSeq, sel.schema, keys.map(_._2))
+      val byDriver = SparkCrawler.sortRows(sel.collect().toSeq, sel.schema, keys)
         .map(_.getString(keys.length - 1)).toList
       assert(byDriver == bySpark, s"order $order")
     }

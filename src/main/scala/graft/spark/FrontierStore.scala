@@ -2,6 +2,11 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.Exchange
 import java.nio.file.{Files, Paths, Path, StandardCopyOption, StandardOpenOption}
 import java.nio.channels.FileChannel
 import java.nio.file.attribute.{BasicFileAttributes, FileTime}
@@ -197,16 +202,78 @@ final class BucketStore(val root: String, val bucketCol: String,
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .values.flatten.toSeq.distinct
 
-  /** Read only the given leaf dirs (band-pruned dequeue scans).
-    * Reads are normalized to `schema` (the commit=… / band=… dir levels
-    * would otherwise surface as extra partition columns); fields the
-    * files predate are filled with typed nulls — additive schema
-    * evolution, the Iceberg add-column semantics (a store written before
-    * a column existed keeps reading after the upgrade). */
-  def readPaths(spark: SparkSession, paths: Seq[String]): DataFrame =
-    scan(spark, readManifest(), paths, versioned = false)
+  /** Read only the given leaf dirs (band-pruned dequeue scans), clustered
+    * by bucket: each bucket's files are read in one task — every file in
+    * one task when `oneTask` (or no path is given) — and the relation
+    * reports it to Spark (`KeyGroupedPartitioning` on `bucketCol`, or
+    * `SinglePartition`). A window, an aggregate or a write keyed by the
+    * bucket then needs no exchange: the rows are already where the
+    * bucket's task is. The files come from the manifest's lists; a path
+    * without one (a manifest written before file lists) is listed here.
+    * Spark's size estimate is the files' bytes, as for `scan`.
+    * Reads are normalized to `schema` (the band= dir level is dropped);
+    * fields the files predate are filled with typed nulls — additive
+    * schema evolution, the Iceberg add-column semantics (a store written
+    * before a column existed keeps reading after the upgrade). */
+  def readPaths(spark: SparkSession, paths: Seq[String], oneTask: Boolean = false): DataFrame = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.spark.paths.SparkPath
+    import org.apache.spark.sql.GraftColumnBridge
+    import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical.Statistics
+    import org.apache.spark.sql.catalyst.plans.physical.{KeyGroupedPartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD, PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.types.StructType
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val schema = emptySchema.getOrElse(sys.error(s"$root: schema not set"))
+    val m = readManifest()
+    val hadoopConf = classic.sessionState.newHadoopConf()
+    val fs = new HPath(root).getFileSystem(hadoopConf)
+    val bucketOf = m.bucketPaths.iterator.flatMap { case (b, ps) => ps.map(_ -> b) }.toMap
+    // the dir levels the schema declares: the bucket, and the band
+    val partSchema = StructType((bucketCol +: bandCol.toSeq).filter(schema.fieldNames.contains)
+      .map(schema(_)))
+    val dataSchema = StructType(schema.filterNot(f => partSchema.fieldNames.contains(f.name)))
+    // every file under `paths`, with its dir levels' values, by bucket
+    val byBucket = paths.distinct.groupBy(bucketOf).toSeq.sortBy(_._1).map { case (b, ps) =>
+      b -> ps.flatMap { p =>
+        val dir = fs.makeQualified(new HPath(p))
+        val values = InternalRow.fromSeq(b +: (if (partSchema.size > 1)
+          Seq(bandOf(p)).map(band => if (band >= 0) band else null) else Nil))
+        val files = m.pathFiles.get(p) match {
+          case Some(listed) => listed.toSeq.sortBy(_._1).map { case (n, len) => (new HPath(dir, n), len) }
+          case None => fs.listStatus(dir).toSeq
+            .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
+            .map(st => (st.getPath, st.getLen))
+        }
+        files.map { case (file, len) =>
+          PartitionedFile(values, SparkPath.fromPath(file), 0L, len, Array.empty[String],
+            0L, len, Map.empty)
+        }
+      }
+    }
+    val groups = if (oneTask || byBucket.isEmpty) Seq(byBucket.flatMap(_._2)) else byBucket.map(_._2)
+    // rows, not batches: the vectorized decoder still reads the pages
+    val reader = new ParquetFileFormat().buildReaderWithPartitionValues(classic, dataSchema,
+      partSchema, dataSchema, Nil, Map("returning_batch" -> "false"), hadoopConf)
+    val rdd = new FileScanRDD(classic, reader,
+      groups.zipWithIndex.map { case (files, i) => FilePartition(i, files.toArray) },
+      StructType(dataSchema ++ partSchema), Nil, Map.empty, new FileSourceOptions(Map.empty[String, String]))
+    val output = (dataSchema ++ partSchema).map(f => AttributeReference(f.name, f.dataType, f.nullable)())
+    val clustering =
+      if (groups.size == 1) SinglePartition
+      else KeyGroupedPartitioning(output.filter(_.name == bucketCol), byBucket.size,
+        byBucket.map { case (b, _) => InternalRow(b) })
+    val bytes = groups.iterator.flatten.map(_.fileSize).sum
+    GraftColumnBridge.ofRows(spark, LogicalRDD(output, rdd, clustering)(classic,
+        Some(Statistics(sizeInBytes = BigInt(bytes)))))
+      .select(schema.fieldNames.map(col(_)): _*)
+  }
 
-  /** The one store read: `paths` as a parquet relation whose files come
+  /** Every store read but `readPaths`: `paths` as a parquet relation
+    * (Spark packs the files into tasks by size) whose files come
     * from `m`'s file lists (leaf dirs are immutable, so any manifest that
     * records a path records its files). Spark's file index asks its
     * status cache for each leaf dir before it lists one; the cache here
@@ -346,15 +413,33 @@ final class BucketStore(val root: String, val bucketCol: String,
     // unreferenced by any manifest <= current, so it is safe to clear.
     val dir = Paths.get(root, "data", s"commit=$commitV")
     if (Files.exists(dir)) deleteRecursively(dir)
-    // cluster by the partition dirs before the partitioned write: one
-    // file per leaf instead of (tasks × leaves) shards — file count
-    // stays flat as parallelism grows. The partition columns go first:
-    // stores whose partition columns have the same types then share the
-    // generated classes of the shuffle, the sort and the leaf path (the
-    // files keep the other columns, in their order)
+    // one file per leaf instead of (tasks × leaves) shards — file count
+    // stays flat as parallelism grows: a frame whose plan has no exchange
+    // and already keeps each bucket in one task (a `readPaths` read and
+    // what derives from it) is written by those tasks; any other is
+    // clustered by the partition dirs first (adaptive execution may
+    // re-plan an exchange, never a plan without one). Only a frame over
+    // RDD scans and caches can report that, so no other is planned twice
+    // (planning a frame over local rows evaluates them on the driver).
+    // The partition columns go first: stores whose partition columns have
+    // the same types then share the generated classes of the shuffle, the
+    // sort and the leaf path (the files keep the other columns, in their
+    // order)
     val partCols = bucketCol +: bandCol.toSeq
-    df.select((partCols ++ df.columns.filterNot(partCols.contains)).map(col): _*)
-      .repartition(partCols.map(col): _*)
+    val ordered = df.select((partCols ++ df.columns.filterNot(partCols.contains)).map(col): _*)
+    def clustered: Boolean = {
+      val plan = ordered.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      plan.find(_.isInstanceOf[Exchange]).isEmpty && plan.outputPartitioning.satisfies(
+        ClusteredDistribution(plan.output.filter(_.name == bucketCol)))
+    }
+    val overRdds = ordered.queryExecution.withCachedData.collectLeaves().forall {
+      case _: LogicalRDD | _: InMemoryRelation => true
+      case _ => false
+    }
+    (if (overRdds && clustered) ordered else ordered.repartition(partCols.map(col): _*))
       .write.mode("errorifexists").partitionBy(partCols: _*).parquet(dir.toString)
     leafDirs(dir)
   }

@@ -126,9 +126,11 @@ final class SparkFrontier(
     val maxPerHost: Int = 0,
     /** salted skew-splitting of hot domains (north rule): the per-host
       * politeness window partitions by (host, salt) with the budget split
-      * across salts — a 10^8-URL host becomes `hostSalts` parallel window
-      * groups instead of one straggler task, while the host-global cap
-      * stays ≤ maxPerHost. Requires maxPerHost % hostSalts == 0. */
+      * across salts, while the host-global cap stays ≤ maxPerHost. The
+      * dequeue ranks each bucket in the task that reads it, so the salt
+      * groups of a host share that task: salts split the cap, they no
+      * longer spread a host over tasks. Requires maxPerHost % hostSalts
+      * == 0. */
     val hostSalts: Int = 1,
     /** politeness slot key (reference get_slot_key key_type,
       * core/__init__.py:10-25, feeding OverusedBuffer and the queue's
@@ -872,20 +874,23 @@ final class SparkFrontier(
     // never starves the batch. Batch, shortfall stats, and rewrite
     // residue all come from this pass. Over-cap and invisible rows get
     // __rank = MaxValue (never selected, ride into the rewrite residue).
-    // politeness slot key: the hostname, or (ip mode) its resolved
+    // politeness slot keys: the hostname, or (ip mode) its resolved
     // address — co-hosted hostnames then collapse into ONE window group
-    // sharing one budget (reference OverusedBuffer key_type='ip'). The
-    // resolver UDF runs only in ip mode; the default host path stays in
-    // whole-stage codegen.
-    val slotCol: Column = ipResolver match {
+    // sharing one budget (reference OverusedBuffer key_type='ip'). A
+    // hostname lies in one bucket, so keying it by its bucket too changes
+    // no group and lets the bucket's own scan task rank it; an address
+    // spans buckets, and Spark moves its rows together. The resolver UDF
+    // runs only in ip mode; the default host path stays in whole-stage
+    // codegen.
+    val slotKeys: Seq[Column] = ipResolver match {
       case Some(resolve) =>
-        udf { (h: String) =>
+        Seq(udf { (h: String) =>
           try {
             val ip = resolve(h)
             if (ip != null && ip.nonEmpty) ip else h
           } catch { case _: Exception => h }
-        }.apply($"host")
-      case None => $"host"
+        }.apply($"host"))
+      case None => Seq($"partition_id", $"host")
     }
     // F4: DOMAINS_BLACKLIST at batch-generation position (reference
     // batch_generator._is_domain_blacklisted): blacklisted hosts are
@@ -916,8 +921,8 @@ final class SparkFrontier(
         val (hw, perGroupCap) =
           if (hostSalts > 1) {
             val salt = pmod(xxhash64($"fingerprint"), lit(hostSalts))
-            (visKeyed(slotCol, salt, $"__vis"), maxPerHost / hostSalts)
-          } else (visKeyed(slotCol, $"__vis"), maxPerHost)
+            (visKeyed(slotKeys :+ salt :+ $"__vis": _*), maxPerHost / hostSalts)
+          } else (visKeyed(slotKeys :+ $"__vis": _*), maxPerHost)
         val rankVisW =
           if (globalOrder) visKeyed($"__capped")
           else visKeyed($"partition_id", $"__capped")
@@ -969,7 +974,17 @@ final class SparkFrontier(
     while (!done) {
       val paths = prefix.valuesIterator.flatMap(_.flatMap(_._2)).toSeq
       if (tagged != null) tagged.unpersist()
-      tagged = tagVisibilityAware(queue.readPaths(spark, paths)).cache()
+      // each bucket is read, ranked and cached in one task (all buckets
+      // in one under globalOrder, whose rank spans them): no exchange
+      // between the scan, the batch and the residue write
+      tagged = tagVisibilityAware(queue.readPaths(spark, paths, oneTask = globalOrder)).cache()
+      // plan the cache now. Under adaptive execution a frame read from a
+      // cache learns the cache's clustering only once the cache is built,
+      // so this builds it (one job, a task per bucket); the batch, the
+      // stats and the residue write are then planned with no exchange.
+      // Without adaptive execution the cache reports its clustering
+      // already, and this runs nothing
+      tagged.queryExecution.toRdd
       stats = null
       // a prefix is provably sufficient WITHOUT a stats job when it
       // covers the whole queue, or when (no politeness caps and) the

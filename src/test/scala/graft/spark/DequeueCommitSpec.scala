@@ -4,7 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import graft.local.QueueOrdering
 import java.nio.file.Files
 
@@ -14,18 +16,31 @@ import java.nio.file.Files
   * grouped stats job. Both must commit what a stats-driven commit
   * would: untouched bands keep their paths, and the `dequeued` counters
   * and flow-control gauges match the batch. Also: the batch plan
-  * compiles to the same code at every epoch. */
+  * compiles to the same code at every epoch; a bucket is scanned, ranked
+  * and rewritten in one task, with no exchange, and its rewritten leaves
+  * hold one file each. */
 class DequeueCommitSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def frontier(s: SparkSession = spark, globalOrder: Boolean = false,
       blacklist: Set[String] = Set.empty, flowControl: Boolean = false,
-      ordering: QueueOrdering = QueueOrdering.ScoreCreated) =
+      ordering: QueueOrdering = QueueOrdering.ScoreCreated, maxPerHost: Int = 0,
+      hostSalts: Int = 1) =
     new SparkFrontier(s, Files.createTempDirectory("graft-dqc").toString,
       partitions = 4, stateBuckets = 4, strategy = ScoreStrategy.BFS,
       globalOrder = globalOrder, domainsBlacklist = blacklist,
-      flowControl = flowControl, ordering = ordering)
+      flowControl = flowControl, ordering = ordering, maxPerHost = maxPerHost,
+      hostSalts = hostSalts)
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+  /** the shuffles of `df`'s executed plan and of the cached plans it reads */
+  private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] = {
+    def walk(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      Aqe.collect(p) { case x: ShuffleExchangeExec => x } ++
+        Aqe.collect(p) { case i: InMemoryTableScanExec => i.relation.cachedPlan }.flatMap(walk)
+    walk(df.queryExecution.executedPlan)
+  }
 
   private def prefill(f: SparkFrontier, n: Int, hosts: Int): Unit =
     f.bulkSchedule(spark.range(n).select(
@@ -62,6 +77,74 @@ class DequeueCommitSpec extends AnyFunSuite {
     val (c1, c2) = (codeAt(1), codeAt(2))
     assert(c1.size >= 2, "fixture: the scan's code and the batch's code")
     assert(c1 == c2, "the epoch must not be a literal of the generated code")
+  }
+
+  test("no exchange between the queue scan, the batch and a per-bucket aggregate") {
+    val cases = Seq(
+      "default order" -> frontier(),
+      "globalOrder" -> frontier(globalOrder = true),
+      "maxPerHost" -> frontier(maxPerHost = 2),
+      "maxPerHost over 2 salts" -> frontier(maxPerHost = 2, hostSalts = 2),
+      // the stats job's groupBy(partition_id, band) reads the same cache
+      "FIFO (stats job)" -> frontier(ordering = QueueOrdering.Fifo))
+    cases.foreach { case (name, f) =>
+      prefill(f, 400, hosts = 13)
+      val batch = f.nextBatch(7)
+      val perBucket = batch.groupBy($"partition_id", $"score").count()
+      assert(shuffles(batch).isEmpty, s"$name: the batch and its cached scan")
+      assert(shuffles(perBucket).isEmpty, s"$name: an aggregate keyed by the bucket")
+      assert(perBucket.collect().map(_.getLong(2)).sum == batch.count())
+      f.awaitQueueCommit()
+    }
+  }
+
+  test("ip mode: a slot spans buckets, so Spark moves the scanned rows to its window") {
+    // IpSlotSpec's fixture, with the co-hosted hostnames in two buckets
+    val hosts = ('a' to 'z').map(c => s"$c.com")
+    def inBucket(b: Int) = hosts.filter(h => graft.core.Hashing.crc32Partition(h, 2) == b)
+    val Seq(a, c) = inBucket(0).take(2)
+    val b = inBucket(1).head
+    val resolver: String => String = h => if (h == a || h == b) "10.0.0.1" else "10.9.9.9"
+    val f = new SparkFrontier(spark, Files.createTempDirectory("graft-dqc").toString,
+      partitions = 2, stateBuckets = 2, strategy = ScoreStrategy.BFS,
+      maxPerHost = 4, ipResolver = Some(resolver))
+    f.bulkSchedule(spark.range(30).select(
+      when($"id" < 10, concat(lit(s"http://$a/p/"), $"id"))
+        .when($"id" < 20, concat(lit(s"http://$b/p/"), $"id"))
+        .otherwise(concat(lit(s"http://$c/p/"), $"id")).as("url"),
+      lit(0.5).as("score"), lit(0).as("depth")))
+    val queued = f.queue.read(spark).as[DequeueModel.QRow].collect().toSeq
+    val batch = f.nextBatch(100)
+    assert(shuffles(batch).nonEmpty, "the slot window's exchange")
+    val model = DequeueModel.batch(DequeueModel.Case(queued, 2, QueueOrdering.ScoreCreated,
+      globalOrder = false, maxPerHost = 4, hostSalts = 1, blacklist = Set.empty, budget = 100,
+      now = f.epoch), r => resolver(r.host))
+    assert(batch.as[DequeueModel.QRow].collect().toSeq.sortBy(_.url) == model.sortBy(_.url))
+    assert(model.size == 8, "fixture: the co-hosted hostnames share one budget of 4")
+    f.awaitQueueCommit()
+  }
+
+  test("a residue rewrite writes one file per leaf") {
+    Seq("default order" -> frontier(), "globalOrder" -> frontier(globalOrder = true),
+        "FIFO (stats job, several bands per bucket)" -> frontier(ordering = QueueOrdering.Fifo))
+      .foreach { case (name, f) =>
+        prefill(f, 400, hosts = 13)
+        val before = f.queue.readManifest().bucketPaths.values.flatten.toSet
+        f.nextBatch(7)
+        f.awaitQueueCommit()
+        val m = f.queue.readManifest()
+        val written = m.bucketPaths.toSeq.flatMap { case (b, ps) => ps.filterNot(before).map(b -> _) }
+        assert(written.nonEmpty, s"$name: fixture: the dequeue rewrote leaves")
+        written.foreach { case (_, p) =>
+          assert(m.pathFiles(p).size == 1, s"$name: $p holds ${m.pathFiles(p)}")
+          val onDisk = Files.list(java.nio.file.Paths.get(p))
+          try assert(onDisk.filter(_.toString.endsWith(".parquet")).count() == 1, s"$name: $p")
+          finally onDisk.close()
+        }
+        if (name.startsWith("FIFO"))
+          assert(written.groupBy(_._1).values.exists(_.size > 1),
+            "fixture: a bucket with several rewritten bands")
+      }
   }
 
   test("globalOrder over 4 buckets, batch from one bucket: other scanned bands stay referenced") {

@@ -1,0 +1,123 @@
+package graft.spark
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+import graft.local.QueueOrdering
+import java.nio.file.Files
+
+/** The dequeue's rank rule in plain Scala, over a whole queue: per bucket
+  * (or over every bucket under `globalOrder`) the visible rows in
+  * `batchOrder` + url, each politeness slot (and salt) capped, blacklisted
+  * hosts dropped, the budget taken. */
+object DequeueModel {
+  final case class QRow(fingerprint: String, url: String, host: String, partition_id: Int,
+      score: Double, created_at: Long, depth: Int, crawl_at: Long)
+
+  final case class Case(rows: Seq[QRow], buckets: Int, ordering: QueueOrdering,
+      globalOrder: Boolean, maxPerHost: Int, hostSalts: Int, blacklist: Set[String],
+      budget: Int, now: Long)
+
+  def order(o: QueueOrdering): Ordering[QRow] = {
+    val byUrl = Ordering.by[QRow, String](_.url)
+    val created = Ordering.by[QRow, Long](_.created_at)
+    val score = Ordering.by[QRow, Double](_.score)
+    def andThen(a: Ordering[QRow], b: Ordering[QRow]): Ordering[QRow] =
+      (x, y) => { val c = a.compare(x, y); if (c != 0) c else b.compare(x, y) }
+    o match {
+      case QueueOrdering.Fifo => andThen(created, byUrl)
+      case QueueOrdering.Lifo => andThen(created.reverse, byUrl)
+      case QueueOrdering.ScoreCreatedDesc => andThen(andThen(score.reverse, created), byUrl)
+      case _ => andThen(andThen(score, created), byUrl)
+    }
+  }
+
+  /** Spark's `pmod(xxhash64(fingerprint), salts)` */
+  def salt(fingerprint: String, salts: Int): Long =
+    Math.floorMod(XxHash64Function.hash(UTF8String.fromString(fingerprint), StringType, 42L),
+      salts.toLong)
+
+  def blacklisted(c: Case)(r: QRow): Boolean =
+    c.blacklist.map(_.toLowerCase).contains(r.host.toLowerCase)
+
+  /** The batch of `c`; `slot` is the politeness key of a row. */
+  def batch(c: Case, slot: QRow => String = _.host): Seq[QRow] = {
+    val ord = order(c.ordering)
+    val visible = c.rows.filter(r => !blacklisted(c)(r) && r.crawl_at <= c.now)
+    val capped =
+      if (c.maxPerHost == 0) visible
+      else visible.groupBy(r => (slot(r), salt(r.fingerprint, c.hostSalts))).values
+        .flatMap(_.sorted(ord).take(c.maxPerHost / c.hostSalts)).toSeq
+    val ranked = if (c.globalOrder) Seq(capped) else capped.groupBy(_.partition_id).values.toSeq
+    ranked.flatMap(_.sorted(ord).take(c.budget))
+  }
+
+  def multiset[A](xs: Seq[A]): Map[A, Int] = xs.groupMapReduce(identity)(_ => 1)(_ + _)
+
+  val genCase: Gen[Case] = for {
+    buckets <- Gen.oneOf(1, 4)
+    hosts <- Gen.choose(1, 6)
+    ordering <- Gen.oneOf(QueueOrdering.Score, QueueOrdering.ScoreCreated,
+      QueueOrdering.ScoreCreatedDesc, QueueOrdering.Fifo, QueueOrdering.Lifo)
+    globalOrder <- Gen.oneOf(false, true)
+    maxPerHost <- Gen.oneOf(0, 0, 2, 4)
+    hostSalts <- if (maxPerHost == 4) Gen.oneOf(1, 2) else Gen.const(1)
+    blacklist <- Gen.oneOf(Set.empty[String], Set("H1.example"))
+    budget <- Gen.choose(1, 8)
+    n <- Gen.choose(0, 48)
+    // few scores and stamps: ties in every ordering; crawl_at 5 is hidden at epoch 3
+    rows <- Gen.listOfN(n, Gen.zip(Gen.choose(0, hosts - 1),
+      Gen.oneOf(0.1, 0.25, 0.5, 0.55, 0.9, 1.0), Gen.choose(0L, 4L),
+      Gen.frequency(4 -> 0L, 1 -> 5L)))
+  } yield Case(rows.zipWithIndex.map { case ((h, score, created, crawlAt), i) =>
+      val host = s"h$h.example"
+      QRow(f"fp$i%03d", s"http://$host/p/$i", host, graft.core.Hashing.crc32Partition(host, buckets),
+        score, created, 0, crawlAt)
+    }, buckets, ordering, globalOrder, maxPerHost, hostSalts, blacklist, budget, now = 3L)
+}
+
+/** `nextBatch` against `DequeueModel` over seeded random queues: the batch
+  * and the rows left in the queue, as multisets. */
+class DequeueModelSpec extends AnyFunSuite {
+  lazy val spark = SparkTestBase.spark
+  import spark.implicits._
+  import DequeueModel._
+
+  /** a frontier whose queue holds exactly `c.rows` */
+  def frontierOf(c: Case, ipResolver: Option[String => String] = None): SparkFrontier = {
+    val f = new SparkFrontier(spark, Files.createTempDirectory("graft-dqm").toString,
+      partitions = c.buckets, stateBuckets = 2, strategy = ScoreStrategy.BFS,
+      globalOrder = c.globalOrder, maxPerHost = c.maxPerHost, hostSalts = c.hostSalts,
+      domainsBlacklist = c.blacklist, ordering = c.ordering, ipResolver = ipResolver)
+    if (c.rows.nonEmpty)
+      f.queue.append(c.rows.toDF().withColumn("band",
+        least(greatest(floor($"score" * f.scoreBands).cast("int"), lit(0)), lit(f.scoreBands - 1))), 0L)
+    f
+  }
+
+  test("nextBatch and its residue equal the model over seeded random queues") {
+    val cases = (0 until 24).flatMap(i => genCase(Gen.Parameters.default, Seed(800L + i)))
+    assert(cases.size == 24)
+    assert(cases.exists(_.maxPerHost > 0) && cases.exists(_.globalOrder) &&
+      cases.exists(_.buckets == 4) && cases.exists(_.hostSalts == 2) &&
+      cases.exists(_.blacklist.nonEmpty) && cases.map(_.ordering).distinct.size == 5,
+      "fixture: the seeds cover caps, salts, a blacklist, both scopes and every ordering")
+    cases.foreach { c =>
+      val f = frontierOf(c)
+      val got = f.nextBatch(c.budget, atEpoch = c.now).as[QRow].collect().toSeq
+      f.awaitQueueCommit()
+      val left = f.queue.read(spark).as[QRow].collect().toSeq
+      val want = batch(c)
+      assert(multiset(got) == multiset(want), s"batch of $c")
+      // rows neither taken nor blacklisted stay queued; a blacklisted row
+      // may be deleted (when its band is rewritten), never added
+      val rest = multiset(c.rows.diff(want).filterNot(blacklisted(c)))
+      assert(multiset(left.filterNot(blacklisted(c))) == rest, s"residue of $c")
+      assert(left.filter(blacklisted(c)).forall(c.rows.contains), s"residue of $c")
+    }
+  }
+}

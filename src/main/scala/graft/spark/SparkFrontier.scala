@@ -365,9 +365,11 @@ final class SparkFrontier(
     * seeds, and mark them QUEUED — which also makes the streaming path
     * content-level exactly-once (a replayed or re-offered seed file
     * dedupes against the states table, while genuinely new URLs always
-    * schedule). */
+    * schedule). The identity columns are computed in Spark tasks, also
+    * for a frame of rows the driver holds, as in `bulkSchedule`: a
+    * projection over local rows would be evaluated on the driver. */
   def addSeedsDF(urls: DataFrame, props: Map[String, String] = Map.empty): Unit = {
-    val df = identity(urls.select(col("url")), "url")
+    val df = identity(SparkFrontier.overTasks(urls.select(col("url"))), "url")
       .withColumn("score", strategy.seedScore)
       .withColumn("created_at", pmod(xxhash64(col("url")), lit(1L << 40)))
       .withColumn("depth", lit(0))
@@ -381,7 +383,7 @@ final class SparkFrontier(
     val updates = fresh
       .select($"fingerprint", lit(graft.local.States.Queued).as("state"), $"sbucket")
       .select(statesSchema.fieldNames.map(col): _*)
-    val touched = updates.select($"sbucket").distinct().as[Int].collect().toSet
+    val touched = SparkFrontier.countRows(updates.select($"sbucket")).keySet.map(_.getInt(0))
     // keep the states manifest's CURRENT epoch: seeds must not advance
     // the replay guard of an in-flight crawl epoch (a crash between that
     // epoch's queue append and its states merge must still heal)
@@ -687,10 +689,15 @@ final class SparkFrontier(
 
   /** Bulk-schedule a frontier (bench/prefill path): df must carry
     * (url, score, depth); identity columns and partitioning are computed
-    * here, created_at from a hash (arbitrary-but-deterministic order). */
+    * here, created_at from a hash (arbitrary-but-deterministic order).
+    * The identity (each url canonicalized and hashed, its host, bucket,
+    * created_at and band) runs in the write's map-stage tasks, also for
+    * a frame of rows the driver holds (`SparkFrontier.overTasks`): a
+    * projection over local rows would be evaluated on the driver, one
+    * row at a time, while Spark plans the write. */
   def bulkSchedule(df: DataFrame): Unit = {
     awaitQueueCommit()
-    val rows = identity(df, "url")
+    val rows = identity(SparkFrontier.overTasks(df), "url")
       .withColumn("created_at", pmod(xxhash64(col("url")), lit(1L << 40)))
       .withColumn("crawl_at", lit(0L))
       .select(queueSchema.fieldNames.map(col): _*)
@@ -1728,6 +1735,25 @@ final class SparkFrontier(
 }
 
 object SparkFrontier {
+  /** `df` with its rows read by Spark tasks. When every leaf of its plan
+    * is a local relation (rows the driver holds, e.g. a `Seq.toDF`),
+    * Spark's optimizer folds a projection over it into a new local
+    * relation: it evaluates the projection row by row on the driver
+    * while it plans the query. Over an RDD of the same rows the
+    * projection runs in the tasks of the query's first stage instead.
+    * A frame with any other leaf is returned as it is, so Spark can
+    * still push projections into its source. */
+  private[spark] def overTasks(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    val qe = df.queryExecution
+    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) df
+    else GraftColumnBridge.ofRows(df.sparkSession, LogicalRDD(qe.analyzed.output, qe.toRdd)(
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      Some(qe.optimizedPlan.stats)))
+  }
+
   /** `df`'s rows as Catalyst rows, collected without Dataset's generated
     * deserializer: the collects of an epoch's few driver-side rows then
     * add no class per schema to Spark's code cache. A local relation is

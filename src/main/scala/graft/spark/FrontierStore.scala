@@ -2,11 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import org.apache.spark.sql.execution.exchange.Exchange
 import java.nio.file.{Files, Paths, Path, StandardCopyOption, StandardOpenOption}
 import java.nio.channels.FileChannel
 import java.nio.file.attribute.{BasicFileAttributes, FileTime}
@@ -15,6 +11,12 @@ import scala.util.control.NonFatal
 import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
 import com.fasterxml.jackson.databind.json.JsonMapper
+import java.nio.ByteBuffer
+import java.util.Base64
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.roaringbitmap.RoaringBitmap
 
 /** Bucket-partitioned, manifest-committed table — Iceberg-style semantics
   * on plain parquet (this environment ships no Iceberg runtime; in
@@ -27,15 +29,23 @@ import com.fasterxml.jackson.databind.json.JsonMapper
   * {{{
   * root/data/commit=V/<bucketCol>=K[/<bandCol>=B]/part-*.parquet
   * root/manifest/m<V>.json   — bucket -> leaf dirs, per-path row counts
-  *                             and file lists, per-bucket last-touched
-  *                             version, counters
+  *                             and file lists, per-file deletes, per-bucket
+  *                             last-touched version, counters
   * root/_CURRENT             — current manifest version (atomic rename)
   * }}}
+  * The manifest's `deletes` key (written only when some file has deleted
+  * rows) maps a path to its files' deleted positions: per file, one
+  * portable RoaringBitmap (base64) and its cardinality. A path's live
+  * rows are its row count less those cardinalities; a file whose rows
+  * are all deleted leaves the manifest.
   *
   * Scale properties:
   *  - append = add files to touched buckets/bands only (no rewrite)
-  *  - replacePaths = rewrite only the named leaf dirs (a dequeue touches
-  *    only the best score bands); other paths stay referenced untouched
+  *  - replacePaths = rewrite only the named leaf dirs; other paths stay
+  *    referenced untouched
+  *  - deletePositions = delete rows by position (the dequeue): the
+  *    manifest alone records them, no data file is written; every read
+  *    applies them in one place, `readPaths`' reader
   *  - commit = write manifest, then atomically flip _CURRENT; a crashed
   *    epoch leaves the previous snapshot intact (resume-from-checkpoint);
   *    every commit merges the manifest in one place (`commitReplaced`)
@@ -78,7 +88,17 @@ final class BucketStore(val root: String, val bucketCol: String,
       pathMax: Map[String, Long] = Map.empty,
       /** per-path `.parquet` file name -> byte length (absent = written
         * before file lists: Spark lists that dir) */
-      pathFiles: Map[String, Map[String, Long]] = Map.empty)
+      pathFiles: Map[String, Map[String, Long]] = Map.empty,
+      /** per-path file name -> the positions of its deleted rows (a file
+        * with no deleted row has no entry) */
+      pathDeletes: Map[String, Map[String, BucketStore.Deletes]] = Map.empty) {
+    /** rows of `path`'s files that a delete removed */
+    def deletedRows(path: String): Long =
+      pathDeletes.get(path).fold(0L)(_.valuesIterator.map(_.cardinality).sum)
+    /** rows a read of `path` returns: its row count less its deletes
+      * (absent = no recorded row count) */
+    def liveRows(path: String): Option[Long] = pathRows.get(path).map(_ - deletedRows(path))
+  }
 
   /** The manifest `_CURRENT` names. A committed version never changes,
     * so the last one parsed is kept and returned again while `_CURRENT`
@@ -103,7 +123,7 @@ final class BucketStore(val root: String, val bucketCol: String,
 
   /** Manifest `v` from its JSON; a malformed document fails naming `file`.
     * Keys added after the first format (rows, bucketv, props, pathmax,
-    * files) read as empty when absent. */
+    * files, deletes) read as empty when absent. */
   private[spark] def parseManifest(v: Long, json: String, file: String): Manifest =
     try {
       val j = BucketStore.json.readTree(json)
@@ -122,6 +142,12 @@ final class BucketStore(val root: String, val bucketCol: String,
         longs("pathmax"),
         fields("files").map { case (p, n) =>
           p -> n.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
+        }.toMap,
+        fields("deletes").map { case (p, n) =>
+          p -> n.properties().asScala.map { e =>
+            e.getKey -> BucketStore.Deletes(e.getValue.required("cardinality").asLong(),
+              e.getValue.required("bitmap").asText())
+          }.toMap
         }.toMap)
     } catch {
       case NonFatal(e) =>
@@ -140,7 +166,8 @@ final class BucketStore(val root: String, val bucketCol: String,
   }
 
   /** The manifest document: keys in a fixed order, maps sorted by key;
-    * `files` only when some path has a file list. */
+    * `files` only when some path has a file list, `deletes` only when
+    * some file has deleted rows. */
   private[spark] def manifestJson(m: Manifest): String = {
     def obj(kvs: Seq[(String, Any)]): java.util.Map[String, Any] = {
       val o = new java.util.LinkedHashMap[String, Any]
@@ -157,7 +184,12 @@ final class BucketStore(val root: String, val bucketCol: String,
       "bucketv" -> byBucket(m.bucketVersions), "props" -> byKey(m.props),
       "pathmax" -> byKey(m.pathMax)) ++
       (if (m.pathFiles.isEmpty) Nil
-       else Seq("files" -> byKey(m.pathFiles.map { case (p, fs) => p -> byKey(fs) })))))
+       else Seq("files" -> byKey(m.pathFiles.map { case (p, fs) => p -> byKey(fs) }))) ++
+      (if (m.pathDeletes.isEmpty) Nil
+       else Seq("deletes" -> byKey(m.pathDeletes.map { case (p, ds) =>
+         p -> byKey(ds.map { case (f, d) =>
+           f -> obj(Seq("cardinality" -> d.cardinality, "bitmap" -> d.bitmap)) })
+       })))))
   }
 
   private def writeManifest(m: Manifest): Unit = {
@@ -211,57 +243,96 @@ final class BucketStore(val root: String, val bucketCol: String,
     * bucket's task is. The files come from the manifest's lists; a path
     * without one (a manifest written before file lists) is listed here.
     * Spark's size estimate is the files' bytes, as for `scan`.
+    * Each file is read whole, in order from row 0, so a row's position
+    * in its file is its ordinal there; the positions the manifest marks
+    * deleted are dropped. With `positions`, each row also carries its
+    * file (`FileCol`, numbered as `deletePositions` takes it) and its
+    * position (`PosCol`).
     * Reads are normalized to `schema` (the band= dir level is dropped);
     * fields the files predate are filled with typed nulls — additive
     * schema evolution, the Iceberg add-column semantics (a store written
     * before a column existed keeps reading after the upgrade). */
-  def readPaths(spark: SparkSession, paths: Seq[String], oneTask: Boolean = false): DataFrame = {
+  def readPaths(spark: SparkSession, paths: Seq[String], oneTask: Boolean = false,
+      positions: Boolean = false): DataFrame =
+    readFiles(spark, readManifest(), paths, oneTask, positions, versioned = false)
+
+  /** The files of `paths` at `m`, numbered: path by path, each path's
+    * files by name. A leaf dir never changes, so any manifest that
+    * references a path numbers its files the same way. */
+  private def filesOf(m: Manifest, paths: Seq[String],
+      fs: org.apache.hadoop.fs.FileSystem): IndexedSeq[(String, String, Long)] =
+    paths.distinct.toIndexedSeq.flatMap { p =>
+      m.pathFiles.get(p) match {
+        case Some(listed) => listed.toSeq.sortBy(_._1).map { case (n, len) => (p, n, len) }
+        case None => fs.listStatus(fs.makeQualified(new org.apache.hadoop.fs.Path(p))).toSeq
+          .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
+          .map(st => (p, st.getPath.getName, st.getLen))
+      }
+    }
+
+  /** `readPaths` at `m`; `versioned` adds the `commit` column of
+    * `readVersioned` (the commit=V dir level of each file). */
+  private def readFiles(spark: SparkSession, m: Manifest, paths: Seq[String], oneTask: Boolean,
+      positions: Boolean, versioned: Boolean): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
     import org.apache.spark.paths.SparkPath
     import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
+    import org.apache.spark.sql.catalyst.FileSourceOptions
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.catalyst.plans.logical.Statistics
     import org.apache.spark.sql.catalyst.plans.physical.{KeyGroupedPartitioning, SinglePartition}
-    import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD, PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    import org.apache.spark.sql.types.StructType
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val schema = emptySchema.getOrElse(sys.error(s"$root: schema not set"))
-    val m = readManifest()
     val hadoopConf = classic.sessionState.newHadoopConf()
     val fs = new HPath(root).getFileSystem(hadoopConf)
     val bucketOf = m.bucketPaths.iterator.flatMap { case (b, ps) => ps.map(_ -> b) }.toMap
-    // the dir levels the schema declares: the bucket, and the band
-    val partSchema = StructType((bucketCol +: bandCol.toSeq).filter(schema.fieldNames.contains)
+    // the dir levels the schema declares: the bucket, and the band; then
+    // the commit version when versioned
+    val dirLevels = StructType((bucketCol +: bandCol.toSeq).filter(schema.fieldNames.contains)
       .map(schema(_)))
-    val dataSchema = StructType(schema.filterNot(f => partSchema.fieldNames.contains(f.name)))
-    // every file under `paths`, with its dir levels' values, by bucket
-    val byBucket = paths.distinct.groupBy(bucketOf).toSeq.sortBy(_._1).map { case (b, ps) =>
-      b -> ps.flatMap { p =>
-        val dir = fs.makeQualified(new HPath(p))
-        val values = InternalRow.fromSeq(b +: (if (partSchema.size > 1)
-          Seq(bandOf(p)).map(band => if (band >= 0) band else null) else Nil))
-        val files = m.pathFiles.get(p) match {
-          case Some(listed) => listed.toSeq.sortBy(_._1).map { case (n, len) => (new HPath(dir, n), len) }
-          case None => fs.listStatus(dir).toSeq
-            .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-            .map(st => (st.getPath, st.getLen))
-        }
-        files.map { case (file, len) =>
-          PartitionedFile(values, SparkPath.fromPath(file), 0L, len, Array.empty[String],
-            0L, len, Map.empty)
+    val partSchema =
+      if (versioned) dirLevels.add(BucketStore.CommitCol, LongType) else dirLevels
+    val dataSchema = StructType(schema.filterNot(f => dirLevels.fieldNames.contains(f.name)))
+    def commitOf(p: String): Long =
+      p.split('/').find(_.startsWith(s"${BucketStore.CommitCol}="))
+        .map(_.stripPrefix(s"${BucketStore.CommitCol}=").toLong).getOrElse(-1L)
+    // every file under `paths`, with its dir levels' values and its
+    // number, by bucket
+    val files = filesOf(m, paths, fs)
+    val byBucket = files.indices.groupBy(i => bucketOf(files(i)._1)).toSeq.sortBy(_._1)
+      .map { case (b, ids) =>
+        b -> ids.map { i =>
+          val (p, name, len) = files(i)
+          val values = InternalRow.fromSeq(b +: ((if (dirLevels.size > 1)
+            Seq(bandOf(p)).map(band => if (band >= 0) band else null) else Nil) ++
+            (if (versioned) Seq(commitOf(p)) else Nil)))
+          PartitionedFile(values, SparkPath.fromPath(new HPath(fs.makeQualified(new HPath(p)), name)),
+            0L, len, Array.empty[String], 0L, len, Map.empty) -> i
         }
       }
-    }
-    val groups = if (oneTask || byBucket.isEmpty) Seq(byBucket.flatMap(_._2)) else byBucket.map(_._2)
-    // rows, not batches: the vectorized decoder still reads the pages
-    val reader = new ParquetFileFormat().buildReaderWithPartitionValues(classic, dataSchema,
+    val numbers = byBucket.iterator.flatMap(_._2).map { case (f, i) => f.urlEncodedPath -> i }.toMap
+    val groups = (if (oneTask || byBucket.isEmpty) Seq(byBucket.flatMap(_._2)) else byBucket.map(_._2))
+      .map(_.map(_._1))
+    // rows, not batches: the vectorized decoder still reads the pages.
+    // No filter: every row of a file is read, so the ordinal is the position
+    val parquet = new ParquetFileFormat().buildReaderWithPartitionValues(classic, dataSchema,
       partSchema, dataSchema, Nil, Map("returning_batch" -> "false"), hadoopConf)
+    val deleted = files.indices.flatMap { i =>
+      val (p, name, _) = files(i)
+      m.pathDeletes.get(p).flatMap(_.get(name)).map(i -> _)
+    }.toMap
+    val reader = BucketStore.positioned(parquet, numbers, deleted)
+    val tags = StructType(Seq(StructField(BucketStore.FileCol, IntegerType, nullable = false),
+      StructField(BucketStore.PosCol, IntegerType, nullable = false)))
     val rdd = new FileScanRDD(classic, reader,
-      groups.zipWithIndex.map { case (files, i) => FilePartition(i, files.toArray) },
-      StructType(dataSchema ++ partSchema), Nil, Map.empty, new FileSourceOptions(Map.empty[String, String]))
-    val output = (dataSchema ++ partSchema).map(f => AttributeReference(f.name, f.dataType, f.nullable)())
+      groups.zipWithIndex.map { case (fs, i) => FilePartition(i, fs.toArray) },
+      StructType(dataSchema ++ partSchema ++ tags), Nil, Map.empty,
+      new FileSourceOptions(Map.empty[String, String]))
+    val output = (dataSchema ++ partSchema ++ tags)
+      .map(f => AttributeReference(f.name, f.dataType, f.nullable)())
     val clustering =
       if (groups.size == 1) SinglePartition
       else KeyGroupedPartitioning(output.filter(_.name == bucketCol), byBucket.size,
@@ -269,7 +340,9 @@ final class BucketStore(val root: String, val bucketCol: String,
     val bytes = groups.iterator.flatten.map(_.fileSize).sum
     GraftColumnBridge.ofRows(spark, LogicalRDD(output, rdd, clustering)(classic,
         Some(Statistics(sizeInBytes = BigInt(bytes)))))
-      .select(schema.fieldNames.map(col(_)): _*)
+      .select((schema.fieldNames.toSeq ++
+        (if (versioned) Seq(BucketStore.CommitCol) else Nil) ++
+        (if (positions) tags.fieldNames else Nil)).map(col): _*)
   }
 
   /** Every store read but `readPaths`: `paths` as a parquet relation
@@ -279,7 +352,9 @@ final class BucketStore(val root: String, val bucketCol: String,
     * status cache for each leaf dir before it lists one; the cache here
     * answers from the manifest, so planning lists nothing and runs no
     * job. A path without a file list (a manifest written before file
-    * lists) misses, and Spark lists that dir. */
+    * lists) misses, and Spark lists that dir. Paths of which some file
+    * has deleted rows are read by `readPaths`' reader, the one reader
+    * that applies deletes. */
   private def scan(spark: SparkSession, m: Manifest, paths: Seq[String],
       versioned: Boolean): DataFrame = {
     import org.apache.hadoop.fs.{FileStatus, Path => HPath}
@@ -287,7 +362,9 @@ final class BucketStore(val root: String, val bucketCol: String,
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     import org.apache.spark.sql.types.{LongType, StructType}
     val schema = emptySchema.getOrElse(sys.error(s"$root: schema not set"))
-    if (paths.isEmpty)
+    if (paths.exists(m.pathDeletes.contains))
+      readFiles(spark, m, paths, oneTask = false, positions = false, versioned)
+    else if (paths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         if (versioned) schema.add(BucketStore.CommitCol, LongType) else schema)
     else {
@@ -414,32 +491,14 @@ final class BucketStore(val root: String, val bucketCol: String,
     val dir = Paths.get(root, "data", s"commit=$commitV")
     if (Files.exists(dir)) deleteRecursively(dir)
     // one file per leaf instead of (tasks × leaves) shards — file count
-    // stays flat as parallelism grows: a frame whose plan has no exchange
-    // and already keeps each bucket in one task (a `readPaths` read and
-    // what derives from it) is written by those tasks; any other is
-    // clustered by the partition dirs first (adaptive execution may
-    // re-plan an exchange, never a plan without one). Only a frame over
-    // RDD scans and caches can report that, so no other is planned twice
-    // (planning a frame over local rows evaluates them on the driver).
-    // The partition columns go first: stores whose partition columns have
-    // the same types then share the generated classes of the shuffle, the
-    // sort and the leaf path (the files keep the other columns, in their
-    // order)
+    // stays flat as parallelism grows: the rows are clustered by the
+    // partition dirs first. The partition columns go first: stores whose
+    // partition columns have the same types then share the generated
+    // classes of the shuffle, the sort and the leaf path (the files keep
+    // the other columns, in their order)
     val partCols = bucketCol +: bandCol.toSeq
-    val ordered = df.select((partCols ++ df.columns.filterNot(partCols.contains)).map(col): _*)
-    def clustered: Boolean = {
-      val plan = ordered.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.initialPlan
-        case p => p
-      }
-      plan.find(_.isInstanceOf[Exchange]).isEmpty && plan.outputPartitioning.satisfies(
-        ClusteredDistribution(plan.output.filter(_.name == bucketCol)))
-    }
-    val overRdds = ordered.queryExecution.withCachedData.collectLeaves().forall {
-      case _: LogicalRDD | _: InMemoryRelation => true
-      case _ => false
-    }
-    (if (overRdds && clustered) ordered else ordered.repartition(partCols.map(col): _*))
+    df.select((partCols ++ df.columns.filterNot(partCols.contains)).map(col): _*)
+      .repartition(partCols.map(col): _*)
       .write.mode("errorifexists").partitionBy(partCols: _*).parquet(dir.toString)
     leafDirs(dir)
   }
@@ -483,9 +542,8 @@ final class BucketStore(val root: String, val bucketCol: String,
     replacePaths(df, epoch, Set.empty, counters, props)
 
   /** Replace only the named leaf dirs: the new manifest drops
-    * `removePaths` and adds whatever `df` writes — the band-pruned
-    * dequeue rewrite (reads N files, rewrites N files, leaves the other
-    * O(queue/batch) files untouched). */
+    * `removePaths` and adds whatever `df` writes, leaving every other
+    * path untouched. */
   def replacePaths(df: DataFrame, epoch: Long, removePaths: Set[String],
       counters: Map[String, Long] = Map.empty,
       props: Map[String, String] = Map.empty): Unit =
@@ -495,54 +553,68 @@ final class BucketStore(val root: String, val bucketCol: String,
       commitReplaced(m, v, epoch, writeEpochData(df, v), removePaths, counters, props)
     }
 
-  /** Rewrite leaf groups that may have lost rows: `df` holds every row
-    * that remains in `groups` ((bucket, band) -> its current paths), and
-    * no row grows a group. A group whose new leaf holds as many rows as
-    * the manifest records for its paths lost nothing: the new leaf is
-    * deleted and the paths stay referenced. Every other group (also one
-    * with a path of unknown row count) is replaced by its new leaf, or
-    * emptied. `meta` turns the rows each replaced group lost into the
-    * commit's counters and props. Nothing is committed when no group
-    * lost a row, and nothing is written when the groups hold no row.
-    * Returns the rows lost per replaced group. */
-  def rewriteLeaves(df: DataFrame, epoch: Long, groups: Map[(Int, Int), Seq[String]],
-      meta: Map[(Int, Int), Long] => (Map[String, Long], Map[String, String]))
-      : Map[(Int, Int), Long] =
+  /** Delete rows that a `readPaths(paths, positions = true)` read
+    * returned: `deletes` holds, per file number of that read, the rows'
+    * positions and the rows the read returned from the file. One commit
+    * records them in the manifest, merged with the file's earlier
+    * deletes; no data file is written. A file whose rows are now all
+    * deleted leaves the manifest, and so does a path with no file left.
+    * Deletes in a path the manifest no longer references are dropped.
+    * The buckets whose files lost rows get the new version as their
+    * last-touched version. */
+  def deletePositions(paths: Seq[String], deletes: Map[Int, BucketStore.FileDelete],
+      epoch: Long, counters: Map[String, Long] = Map.empty,
+      props: Map[String, String] = Map.empty): Unit =
     withCommitLock {
       val m = readManifest()
-      if (groups.valuesIterator.flatten.forall(p => m.pathRows.get(p).contains(0L))) Map.empty
-      else {
-        val v = m.version + 1
-        val written = writeEpochData(df, v)
-        val newLeaf = written.map(l => (l.bucket, bandOf(l.path)) -> l).toMap
-        val lost = groups.flatMap { case (g, paths) =>
-          val old = paths.map(m.pathRows.get)
-          val kept = newLeaf.get(g).fold(0L)(_.rows)
-          if (old.forall(_.isDefined) && old.flatten.sum == kept) None
-          else Some(g -> math.max(0L, old.flatten.sum - kept))
-        }
-        val dropped = newLeaf.collect { case (g, l) if groups.contains(g) && !lost.contains(g) => l }
-        if (lost.isEmpty) deleteRecursively(Paths.get(root, "data", s"commit=$v"))
-        else {
-          dropped.foreach(l => deleteRecursively(Paths.get(l.path)))
-          val (counters, props) = meta(lost)
-          commitReplaced(m, v, epoch, written.filterNot(dropped.toSet),
-            lost.keysIterator.flatMap(groups).toSet, counters, props)
-        }
-        lost
-      }
+      val fs = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val files = filesOf(m, paths, fs)
+      val bucketOf = m.bucketPaths.iterator.flatMap { case (b, ps) => ps.map(_ -> b) }.toMap
+      var rows = m.pathRows
+      var listed = m.pathFiles
+      var dvs = m.pathDeletes
+      val lost = deletes.toSeq.sortBy(_._1).collect {
+        case (i, d) if !d.positions.isEmpty && bucketOf.contains(files(i)._1) =>
+          val (p, name, _) = files(i)
+          val pathDvs = dvs.getOrElse(p, Map.empty)
+          val merged = RoaringBitmap.or(d.positions,
+            pathDvs.get(name).fold(new RoaringBitmap)(_.positions))
+          if (d.positions.getLongCardinality == d.readRows && listed.contains(p)) {
+            // the file's last rows: it leaves, with its deletes
+            rows = rows.updatedWith(p)(_.map(_ - merged.getLongCardinality))
+            listed = listed.updated(p, listed(p) - name)
+            val rest = pathDvs - name
+            dvs = if (rest.isEmpty) dvs - p else dvs.updated(p, rest)
+          } else dvs = dvs.updated(p, pathDvs.updated(name, BucketStore.Deletes.of(merged)))
+          p
+      }.toSet
+      commitReplaced(m.copy(pathRows = rows, pathFiles = listed, pathDeletes = dvs),
+        m.version + 1, epoch, Nil, lost.filter(p => listed.get(p).exists(_.isEmpty)),
+        counters, props, changed = lost.map(bucketOf))
     }
+
+  /** Rows of the table: per path its row count less its deletes, from
+    * the manifest alone; a path without a recorded row count (a manifest
+    * written before row counts) is counted by a read. */
+  def rowCount(spark: SparkSession): Long = {
+    val m = readManifest()
+    val (known, unknown) = pathsOf(m, None).partition(m.pathRows.contains)
+    known.flatMap(m.liveRows).sum +
+      (if (unknown.isEmpty) 0L else scan(spark, m, unknown, versioned = false).count())
+  }
 
   /** Commit version `v` over `m`: drop `removePaths`, add `written` —
     * the one manifest merge every commit goes through. Paths, row counts,
-    * file lists and `statCol` maxima stay in step (one entry per
+    * file lists, deletes and `statCol` maxima stay in step (one entry per
     * referenced path only), and exactly the buckets that gain or lose a
-    * path get `v` as their last-touched version. */
+    * path, or whose rows `changed` in place, get `v` as their
+    * last-touched version. */
   private def commitReplaced(m: Manifest, v: Long, epoch: Long, written: Seq[LeafDir],
       removePaths: Set[String], counters: Map[String, Long],
-      props: Map[String, String]): Unit = {
+      props: Map[String, String], changed: Set[Int] = Set.empty): Unit = {
     val writtenByBucket = written.groupBy(_.bucket)
-    val touched = writtenByBucket.keySet ++
+    val touched = writtenByBucket.keySet ++ changed ++
       m.bucketPaths.collect { case (k, ps) if ps.exists(removePaths) => k }
     val merged = (m.bucketPaths.keySet ++ writtenByBucket.keySet).flatMap { k =>
       val kept = m.bucketPaths.getOrElse(k, Nil).filterNot(removePaths)
@@ -559,12 +631,14 @@ final class BucketStore(val root: String, val bucketCol: String,
       written.map(l => l.path -> l.files)
     val bv = m.bucketVersions ++ touched.map(_ -> v)
     writeManifest(Manifest(v, epoch, merged, counters, rows, bv,
-      m.props ++ props, pmax, files))
+      m.props ++ props, pmax, files, m.pathDeletes.view.filterKeys(keptPaths).toMap))
   }
 
   /** Compact leaves whose file count exceeds `maxPathsPerLeaf`: appends
     * accumulate one dir per commit in bands the dequeue never rewrites
-    * (cold score bands), so file counts there grow with epoch count.
+    * (cold score bands), so file counts there grow with epoch count. A
+    * path with deletes counts once more (its deletes are merged at every
+    * read, like a delete file); the rewrite drops the deleted rows.
     * Compaction is manifest-driven (no data read to decide), rewrites
     * only the offending leaves, and holds the commit lock across the
     * whole read+rewrite — a concurrent dequeue/append can never commit
@@ -582,7 +656,8 @@ final class BucketStore(val root: String, val bucketCol: String,
     // group leaf paths by (bucket, band); collect the overgrown groups
     val overgrown = for {
       (b, ps) <- m.bucketPaths.toSeq
-      paths <- ps.groupBy(bandOf).values if paths.size > maxPathsPerLeaf
+      paths <- ps.groupBy(bandOf).values
+      if paths.size + paths.count(m.pathDeletes.contains) > maxPathsPerLeaf
     } yield b -> paths
     if (overgrown.nonEmpty) {
       val paths = overgrown.flatMap(_._2)
@@ -606,6 +681,71 @@ final class BucketStore(val root: String, val bucketCol: String,
 object BucketStore {
   /** the column `readVersioned` adds: the version of a row's commit */
   val CommitCol = "commit"
+  /** the columns `readPaths(positions = true)` adds: the row's file, as
+    * the read numbers it, and the row's position in that file */
+  val FileCol = "__file"
+  val PosCol = "__pos"
+
+  /** The deleted rows of one file: their positions as a portable
+    * RoaringBitmap (base64 in the manifest) and its cardinality — the
+    * Iceberg deletion-vector analog. */
+  final case class Deletes(cardinality: Long, bitmap: String) {
+    def positions: RoaringBitmap = {
+      val r = new RoaringBitmap
+      r.deserialize(ByteBuffer.wrap(Base64.getDecoder.decode(bitmap)))
+      r
+    }
+  }
+  object Deletes {
+    def of(positions: RoaringBitmap): Deletes = {
+      positions.runOptimize()
+      val buf = ByteBuffer.allocate(positions.serializedSizeInBytes)
+      positions.serialize(buf)
+      Deletes(positions.getLongCardinality, Base64.getEncoder.encodeToString(buf.array))
+    }
+  }
+
+  /** Rows to delete from one file of a `readPaths` read: their positions,
+    * and the rows the read returned from the file (when the read returned
+    * no other, the file leaves the manifest). */
+  final case class FileDelete(positions: RoaringBitmap, readRows: Long)
+
+  /** `read` with the positions in `deleted` (a file's number -> its
+    * deletes) dropped, each row followed by its file's number (`numbers`,
+    * by the file's URL-encoded path) and its position in the file. */
+  private def positioned(read: PartitionedFile => Iterator[InternalRow],
+      numbers: Map[String, Int], deleted: Map[Int, Deletes])
+      : PartitionedFile => Iterator[InternalRow] = { file =>
+    val number = numbers(file.urlEncodedPath)
+    val rows = read(file)
+    val skip = deleted.get(number).fold(new RoaringBitmap)(_.positions).getIntIterator
+    val tag = new GenericInternalRow(2)
+    tag.setInt(0, number)
+    val joined = new JoinedRow
+    new Iterator[InternalRow] with java.io.Closeable {
+      private var pos = -1
+      private var row: InternalRow = null
+      def hasNext: Boolean = {
+        while (row == null && rows.hasNext) {
+          val r = rows.next()
+          pos += 1
+          if (skip.hasNext && skip.peekNext() == pos) skip.next() else row = r
+        }
+        row != null
+      }
+      def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        tag.setInt(1, pos)
+        val out = joined(row, tag)
+        row = null
+        out
+      }
+      def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
+    }
+  }
   /** manifest JSON (thread-safe once built); stores written before the
     * writer escaped control characters still read; content after the
     * document is an error, not ignored */

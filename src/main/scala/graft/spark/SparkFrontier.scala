@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 import graft.spark.FrontierExprs._
 import scala.jdk.CollectionConverters._
+import org.roaringbitmap.RoaringBitmap
 
 /** Scoring strategy as Catalyst column expressions — the Spark-native form
   * of the reference's CrawlingStrategy score functions
@@ -89,10 +90,9 @@ final case class DiscoveryConfig(
       * deterministic first-N extraction order. */
     randomSeed: Option[Long] = None)
 
-/** One (bucket, band) group of a dequeue scan: capped visible, selected
-  * and blacklisted rows, and the selected rows' hosts. */
-private final case class ScanGroup(bucket: Int, band: Int, capped: Long,
-    selected: Long, blacklisted: Long, hosts: Seq[String])
+/** One file of a dequeue scan: its bucket, its selected rows, and the
+  * rows to delete from it (selected or blacklisted). */
+private final case class ScannedFile(bucket: Int, selected: Long, delete: BucketStore.FileDelete)
 
 /** Spark-native crawl frontier over bucketed snapshot tables.
   *
@@ -178,7 +178,7 @@ final class SparkFrontier(
       * settings/default_settings.py:42, checked at batch generation —
       * worker/components/batch_generator.py:97-109): dequeued rows whose
       * lowercased hostname is in this set are DROPPED from the batch
-      * (and from the queue when their band is rewritten), exactly the
+      * (and from the queue whenever a dequeue scans them), exactly the
       * reference's "drop black-listed hostname" position in the
       * pipeline */
     val domainsBlacklist: Set[String] = Set.empty,
@@ -240,8 +240,8 @@ final class SparkFrontier(
   /** Queue files are secondarily partitioned by 0.01-score band — the
     * reference HBase rowkey interval (hbase/__init__.py:129-196) as a
     * file layout: the dequeue reads only the best bands until the budget
-    * is met and rewrites only those files, so each epoch's queue I/O is
-    * O(batch), not O(queue). */
+    * is met and deletes rows from those files only, so each epoch's queue
+    * I/O is O(batch), not O(queue). */
   val queue = new BucketStore(s"$root/queue", "partition_id", partitions,
     bandCol = Some("band"), statCol = Some("crawl_at"))
   val states = new BucketStore(s"$root/states", "sbucket", stateBuckets)
@@ -787,17 +787,20 @@ final class SparkFrontier(
     * rows, host caps), the scan DEEPENS — the reference's
     * min_requests/min_hosts retry loop (A3, hbase/__init__.py:219-266,
     * limit ×5.5 per try) — until exactness is restored or all bands are
-    * read. Only the bands that lost rows are rewritten: per-epoch queue
-    * I/O is O(batch + touched bands), not O(queue).
+    * read. Planning counts live rows: the manifest's row counts less its
+    * deletes.
     *
     * `minHosts` > 0 additionally deepens (≤3 retries, reference
     * GET_RETRIES) while a bucket's batch has fewer distinct hosts.
     *
-    * The batch is returned as soon as it is planned; the residue rewrite
-    * commits on a background thread, overlapping the caller's fetch (how
-    * a cluster hides commit latency behind fetch I/O). Crash semantics
-    * are those of one atomic manifest flip: a crash before it replays the
-    * batch. */
+    * The batch is returned as soon as it is planned; its commit runs on a
+    * background thread, overlapping the caller's fetch (how a cluster
+    * hides commit latency behind fetch I/O): one small job collects the
+    * positions of the taken rows (and of the blacklisted rows the scan
+    * found), and the manifest records them as per-file deletes
+    * (`BucketStore.deletePositions`) — no data file is written, whatever
+    * the ordering, cap or blacklist. Crash semantics are those of one
+    * atomic manifest flip: a crash before it replays the batch. */
   def nextBatch(maxNextRequests: Int, atEpoch: Long = -1L,
       minHosts: Int = 0): DataFrame = {
     awaitQueueCommit()
@@ -829,7 +832,8 @@ final class SparkFrontier(
     // instant its lag clears (ErrorAndReplaySpec pins both sides).
     val fcExcludedBuckets = flowControl &&
       m.bucketPaths.exists { case (b, _) => inflight(b) >= maxNextRequests }
-    // per bucket: bands sorted best-first with manifest row counts
+    // per bucket: bands sorted best-first with their live rows (the
+    // manifest's row counts less its deletes)
     val bandsByBucket: Map[Int, Vector[(Int, Vector[String], Long)]] =
       m.bucketPaths
         .filter { case (b, _) => !flowControl || inflight(b) < maxNextRequests }
@@ -837,7 +841,7 @@ final class SparkFrontier(
           b -> ps.groupBy(queue.bandOf).toVector.sortBy(_._1)
             .map { case (band, paths) =>
               (band, paths.toVector,
-                paths.map(p => m.pathRows.getOrElse(p, Long.MaxValue / 1024)).sum)
+                paths.map(p => m.liveRows(p).getOrElse(Long.MaxValue / 1024)).sum)
             }
         }
     // total over ACTIVE buckets (busy partitions are out of this dequeue)
@@ -878,9 +882,9 @@ final class SparkFrontier(
     // then batch rank over the CAPPED rows only — the reference's
     // collection loop (hbase/__init__.py:239-256) skips over-cap rows and
     // keeps filling the batch from deeper in the scan, so a flooded host
-    // never starves the batch. Batch, shortfall stats, and rewrite
-    // residue all come from this pass. Over-cap and invisible rows get
-    // __rank = MaxValue (never selected, ride into the rewrite residue).
+    // never starves the batch. Batch, shortfall stats, and the commit's
+    // positions all come from this pass. Over-cap and invisible rows get
+    // __rank = MaxValue (never selected, they stay queued).
     // politeness slot keys: the hostname, or (ip mode) its resolved
     // address — co-hosted hostnames then collapse into ONE window group
     // sharing one budget (reference OverusedBuffer key_type='ip'). A
@@ -901,8 +905,8 @@ final class SparkFrontier(
     }
     // F4: DOMAINS_BLACKLIST at batch-generation position (reference
     // batch_generator._is_domain_blacklisted): blacklisted hosts are
-    // never selected AND are dropped from the rewrite residue — deleted
-    // from the queue lazily, whenever their band is touched
+    // never selected AND deleted from the queue lazily, whenever a
+    // dequeue scans them
     val blCond: Column =
       if (domainsBlacklist.isEmpty) lit(false)
       else lower($"host").isInCollection(domainsBlacklist.map(_.toLowerCase))
@@ -915,8 +919,8 @@ final class SparkFrontier(
     // over the full frame equals row_number over the visible-only frame
     // under the same ordering, row by row. Invisible/blacklisted/
     // over-cap rows rank inside their own partition and are masked to
-    // MaxValue — never selected, ride into the rewrite residue,
-    // identical to the former union's tags.
+    // MaxValue — never selected, they stay queued, identical to the
+    // former union's tags.
     def tagVisibilityAware(scanned0: DataFrame): DataFrame = {
       val scanned = scanned0.withColumn("__bl", blCond)
         .withColumn("__vis", !$"__bl" && $"crawl_at" <= bound_long(nowEpoch))
@@ -954,71 +958,62 @@ final class SparkFrontier(
       }
     }
 
-    // per (bucket, band) of a scan: capped visible, selected and
-    // blacklisted rows, and the selected hosts (one job)
-    def scanStats(t: DataFrame): Array[ScanGroup] =
-      t.groupBy($"partition_id", bandExpr.as("band")).agg(
+    // per bucket of a scan: capped visible rows and the selected hosts
+    // (one job)
+    def scanStats(t: DataFrame): Map[Int, (Long, Seq[String])] =
+      t.groupBy($"partition_id").agg(
           sum(when($"__rank" < Int.MaxValue, 1L).otherwise(0L)),
-          sum(when($"__sel", 1L).otherwise(0L)),
-          sum(when($"__bl", 1L).otherwise(0L)),
           collect_set(when($"__sel", $"host")))
-        .as[(Int, Int, Long, Long, Long, Seq[String])].collect()
-        .map { case (b, band, capped, sel, bl, hosts) =>
-          ScanGroup(b, band, capped, sel, bl, hosts) }
+        .as[(Int, Long, Seq[String])].collect()
+        .map { case (b, capped, hosts) => b -> (capped, hosts) }.toMap
 
     var tries = 0
     var limit = math.max(1, maxNextRequests).toDouble
     var prefix = prefixFor(limit)
+    var paths: Seq[String] = Nil
     var tagged: DataFrame = null
-    // stats of the current `tagged`, when the deepening check ran them
-    var stats: Array[ScanGroup] = null
-    // the final prefix is proven (manifest maxima) to hold only visible
-    // rows, with no cap or blacklist holding any back
-    var visibleOnly = false
     var done = false
     def nPaths(p: Map[Int, Vector[(Int, Vector[String])]]) =
       p.valuesIterator.map(_.iterator.map(_._2.size).sum).sum
     while (!done) {
-      val paths = prefix.valuesIterator.flatMap(_.flatMap(_._2)).toSeq
+      paths = prefix.valuesIterator.flatMap(_.flatMap(_._2)).toSeq
       if (tagged != null) tagged.unpersist()
       // each bucket is read, ranked and cached in one task (all buckets
       // in one under globalOrder, whose rank spans them): no exchange
-      // between the scan, the batch and the residue write
-      tagged = tagVisibilityAware(queue.readPaths(spark, paths, oneTask = globalOrder)).cache()
+      // between the scan, the batch and the commit's positions. Each row
+      // keeps its file and position there, for the commit
+      tagged = tagVisibilityAware(
+        queue.readPaths(spark, paths, oneTask = globalOrder, positions = true)).cache()
       // plan the cache now. Under adaptive execution a frame read from a
       // cache learns the cache's clustering only once the cache is built,
       // so this builds it (one job, a task per bucket); the batch, the
-      // stats and the residue write are then planned with no exchange.
-      // Without adaptive execution the cache reports its clustering
-      // already, and this runs nothing
+      // stats and the commit's positions are then planned with no
+      // exchange. Without adaptive execution the cache reports its
+      // clustering already, and this runs nothing
       tagged.queryExecution.toRdd
-      stats = null
       // a prefix is provably sufficient WITHOUT a stats job when it
       // covers the whole queue, or when (no politeness caps and) the
       // manifest's per-path crawl_at maxima prove every scanned row
-      // visible — prefixFor already guarantees >= budget rows per bucket
+      // visible — prefixFor already guarantees >= budget live rows per
+      // bucket
       val provablyVisible = maxPerHost == 0 && minHosts <= 0 &&
         domainsBlacklist.isEmpty &&
         prefix.valuesIterator.flatMap(_.iterator.flatMap(_._2)).forall(p =>
           m.pathMax.get(p).exists(_ <= nowEpoch))
-      if (nPaths(prefix) == totalPaths || provablyVisible) {
-        done = true
-        visibleOnly = provablyVisible
-      } else {
-        stats = scanStats(tagged)
-        val byBucket = stats.groupBy(_.bucket)
+      if (nPaths(prefix) == totalPaths || provablyVisible) done = true
+      else {
+        val stats = scanStats(tagged)
         val needMore = bandsByBucket.exists { case (b, bands) =>
           val unread = bands.length > prefix.getOrElse(b, Vector.empty).length
           if (!unread) false
           else {
-            val gs = byBucket.getOrElse(b, Array.empty[ScanGroup])
+            val (capped, hosts) = stats.getOrElse(b, (0L, Nil))
             // exactness: the prefix must hold >= budget capped visible
             // rows (else deeper bands could hold batch rows we'd miss) —
             // also the reference's `count < min_requests -> retry`
-            gs.map(_.capped).sum < maxNextRequests ||
+            capped < maxNextRequests ||
               // reference min_hosts diversity retry (<= 3 tries)
-              (minHosts > 0 && gs.flatMap(_.hosts).distinct.length < minHosts &&
-                tries < 3)
+              (minHosts > 0 && hosts.length < minHosts && tries < 3)
           }
         }
         if (!needMore) done = true
@@ -1039,6 +1034,7 @@ final class SparkFrontier(
     // cache of its own
     val batch = tagged.filter($"__sel")
       .select(queueSchema.fieldNames.map(col): _*)
+    val scannedPaths = paths
 
     val scannedN =
       prefix.valuesIterator.map(_.iterator.map(_._2.size).sum).sum
@@ -1047,60 +1043,30 @@ final class SparkFrontier(
     // thread (epoch() itself joins pending commits)
     val commitEpoch = epoch
     val taggedRef = tagged
-    val scanned: Map[(Int, Int), Seq[String]] =
-      for ((b, bands) <- prefix; (band, ps) <- bands) yield (b, band) -> ps
-    // A score-pruned prefix proven visible holds only the best bands
-    // that cover the budget, and every row it loses is a selected one, so
-    // the bands that lost rows show in row counts alone: the commit
-    // rewrites the prefix's bands and keeps a new leaf only where it holds
-    // fewer rows than the manifest records for the band's paths — no
-    // Spark job to find the touched groups. Any other scan (a created_at
-    // ordering or deepening reads the whole queue) takes the stats job,
-    // which rewrites only the bands the batch touched.
-    val byRowCounts = scorePruned && visibleOnly &&
-      scanned.valuesIterator.flatten.forall(m.pathRows.contains)
-    val statsRef = stats
-    // counters and flow-control props of a commit that dequeued
-    // `taken` rows per touched (bucket, band)
-    def commitMeta(taken: Map[(Int, Int), Long]): (Map[String, Long], Map[String, String]) = {
-      val perPartition = taken.groupMapReduce(_._1._1)(_._2)(_ + _)
-      // A7: bump the in-flight gauge of every partition this batch drew from
-      val fcProps =
-        if (!flowControl) Map.empty[String, String]
-        else perPartition.map { case (b, n) => s"fc.p$b" -> (inflight(b) + n).toString }
-      (Map("dequeued" -> taken.values.sum) ++
-        perPartition.map { case (p, n) => s"dequeued.p$p" -> n }, fcProps)
-    }
-    val doCommit: () => Unit = () => labeled("dequeue residue rewrite") {
+    val doCommit: () => Unit = () => labeled("dequeue commit") {
       // The whole chain runs on the commit thread, so the caller's fetch
       // overlaps the scan+rank compute itself (the tagged cache is
       // shared — whichever job reaches a partition first computes it).
-      val taken: Map[(Int, Int), Long] =
-        if (byRowCounts)
-          queue.rewriteLeaves(
-            withBand(taggedRef.filter(!$"__sel").select(queueSchema.fieldNames.map(col): _*)),
-            commitEpoch, scanned, commitMeta)
-        else {
-          val gs = if (statsRef != null) statsRef
-            else labeled("dequeue scan stats")(scanStats(taggedRef))
-          // blacklisted rows the scan surfaced force their bands into the
-          // rewrite too — that's how they get DELETED even when no
-          // selectable row shares their band (reference: dropped at batch
-          // generation)
-          val touched = gs.filter(g => g.selected > 0 || g.blacklisted > 0)
-            .map(g => (g.bucket, g.band) -> g.selected).toMap
-          if (touched.nonEmpty) {
-            val touchedKeys = touched.keys.map { case (b, band) => s"${b}_$band" }.toSet
-            val groupKey = concat_ws("_", $"partition_id", bandExpr)
-            val remaining = taggedRef
-              .filter(!$"__sel" && !$"__bl" && groupKey.isInCollection(touchedKeys))
-              .select(queueSchema.fieldNames.map(col): _*)
-            val (counters, props) = commitMeta(touched)
-            queue.replacePaths(withBand(remaining), commitEpoch,
-              touched.keys.flatMap(scanned).toSet, counters, props)
-          }
-          touched
-        }
+      // One job over the cache: per scanned file, the positions of its
+      // selected rows and of the blacklisted rows the scan surfaced
+      // (deleted from the queue: the reference drops them at batch
+      // generation), with its selected and scanned rows. A scan of no
+      // file (an empty queue) runs none
+      val files =
+        if (scannedPaths.isEmpty) Map.empty[Int, ScannedFile]
+        else SparkFrontier.deletions(taggedRef).filter { case (_, d) => !d.delete.positions.isEmpty }
+      // rows dequeued per partition that lost a row (a partition whose
+      // only deleted rows are blacklisted ones dequeued 0)
+      val taken = files.values.groupMapReduce(_.bucket)(_.selected)(_ + _)
+      if (taken.nonEmpty) {
+        // A7: bump the in-flight gauge of every partition this batch drew from
+        val fcProps =
+          if (!flowControl) Map.empty[String, String]
+          else taken.map { case (b, n) => s"fc.p$b" -> (inflight(b) + n).toString }
+        queue.deletePositions(scannedPaths, files.map { case (i, d) => i -> d.delete },
+          commitEpoch, Map("dequeued" -> taken.values.sum) ++
+            taken.map { case (p, n) => s"dequeued.p$p" -> n }, fcProps)
+      }
       // arm/clear the DELAY_ON_EMPTY backoff (reference: delay set on an
       // empty poll, reset to 0 by any non-empty one). An empty batch with
       // flow-control-excluded buckets is "busy", not "drained" — never
@@ -1711,8 +1677,9 @@ final class SparkFrontier(
 
   /** Compact queue bands whose file count grew past the threshold
     * (appends add one dir per commit; cold bands the dequeue never
-    * rewrites accumulate them — run between epochs, like Iceberg's
-    * rewrite_data_files). Returns the number of buckets compacted. */
+    * empties accumulate them — run between epochs, like Iceberg's
+    * rewrite_data_files), a band's deletes counted as one file each.
+    * Returns the number of buckets compacted. */
   def compactQueue(maxFilesPerBand: Int = 8): Int = {
     awaitQueueCommit()
     queue.compact(spark, maxFilesPerBand, withBand).size
@@ -1728,9 +1695,10 @@ final class SparkFrontier(
     readStatesLatest().select($"fingerprint", $"state").as[(String, Int)]
       .collect().toMap
 
+  /** Rows in the queue, from its manifest (no Spark job). */
   def queueSize(): Long = {
     awaitQueueCommit()
-    queue.read(spark).count()
+    queue.rowCount(spark)
   }
 }
 
@@ -1760,6 +1728,33 @@ object SparkFrontier {
     * collected with no job. */
   private[spark] def collectInternal(df: DataFrame): Seq[InternalRow] =
     df.queryExecution.executedPlan.executeCollect().toSeq
+
+  /** Per file of a dequeue's scan cache (`nextBatch`'s tagged frame:
+    * `readPaths` positions plus the `__sel` and `__bl` verdicts), in one
+    * job: its bucket, its selected rows, and the positions of its
+    * selected and blacklisted rows with the rows the scan read. Each task
+    * reports the files of its rows; the driver merges a file that more
+    * than one task holds (ip mode moves rows to their slot's task). */
+  private[spark] def deletions(tagged: DataFrame): Map[Int, ScannedFile] =
+    tagged.select(Seq(BucketStore.FileCol, BucketStore.PosCol, "partition_id", "__sel", "__bl")
+        .map(col): _*)
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val files = scala.collection.mutable.HashMap.empty[Int, (Int, Array[Long], RoaringBitmap)]
+        rows.foreach { r =>
+          val (_, n, positions) = files.getOrElseUpdate(r.getInt(0),
+            (r.getInt(2), new Array[Long](2), new RoaringBitmap))
+          n(0) += 1
+          val selected = !r.isNullAt(3) && r.getBoolean(3)
+          if (selected) n(1) += 1
+          if (selected || (!r.isNullAt(4) && r.getBoolean(4))) positions.add(r.getInt(1))
+        }
+        files.iterator.map { case (f, (b, n, positions)) =>
+          f -> ScannedFile(b, n(1), BucketStore.FileDelete(positions, n(0))) }
+      }.collect().groupMapReduce(_._1)(_._2) { (x, y) =>
+        ScannedFile(x.bucket, x.selected + y.selected, BucketStore.FileDelete(
+          RoaringBitmap.or(x.delete.positions, y.delete.positions),
+          x.delete.readRows + y.delete.readRows))
+      }
 
   /** The distinct rows of `df` with their counts, in one job: each task
     * counts its partition's rows and the driver adds the counts up. For

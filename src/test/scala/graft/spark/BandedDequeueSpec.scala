@@ -6,8 +6,8 @@ import java.nio.file.Files
 
 /** Score-banded queue layout (T3/T4 rowkey semantics as a file layout):
   * the dequeue must read a strict subset of the queue's files — the best
-  * score bands only — and rewrite only the bands that lost rows, while
-  * returning exactly the same batch a full scan would.
+  * score bands only — and delete rows only from the files that lost
+  * them, while returning exactly the same batch a full scan would.
   * A3 (reference hbase/__init__.py:219-266): a host-capped short batch
   * deepens the scan (limit ×5.5, ≤3 tries) until min_hosts distinct
   * hosts are present. */
@@ -22,7 +22,7 @@ class BandedDequeueSpec extends AnyFunSuite {
       globalOrder = false)
   }
 
-  test("dequeue reads a strict subset of files and rewrites only touched bands") {
+  test("dequeue reads a strict subset of files and deletes only from touched bands") {
     val f = freshFrontier()
     // 2000 URLs over 40 hosts, scores spread over [0,1) → ~100 bands
     f.bulkSchedule(spark.range(2000).select(
@@ -33,6 +33,11 @@ class BandedDequeueSpec extends AnyFunSuite {
     val totalPaths = m0.bucketPaths.valuesIterator.map(_.size).sum
     assert(totalPaths > 40, s"expected a banded multi-file layout, got $totalPaths")
 
+    def dataDirs = {
+      val s = Files.list(java.nio.file.Paths.get(f.queue.root, "data"))
+      try s.count() finally s.close()
+    }
+    val dirs0 = dataDirs
     // budget 5/partition → only the best band(s) should be scanned
     val batch = f.nextBatch(5)
     val got = batch.select($"url", $"score").as[(String, Double)].collect()
@@ -44,7 +49,7 @@ class BandedDequeueSpec extends AnyFunSuite {
 
     // exactness: per partition, no remaining row may beat a selected row
     f.awaitQueueCommit()
-    val full = f.queue.read(spark) // post-rewrite queue
+    val full = f.queue.read(spark) // the queue after the batch's deletes
     assert(full.count() == 2000 - 20)
     val selByPart = batch.groupBy($"partition_id").agg(max($"score").as("ws"))
       .as[(Int, Double)].collect().toMap
@@ -55,12 +60,21 @@ class BandedDequeueSpec extends AnyFunSuite {
         assert(ws <= bs + 1e-9, s"partition $p: selected worst $ws > remaining best $bs"))
     }
 
-    // rewrite granularity: untouched band files must still be referenced
+    // delete granularity: no data file is written; the 20 rows are
+    // deleted from the scanned bands' files only (a file that lost its
+    // last row leaves), and every other file stays referenced unchanged
     val m1 = f.queue.readManifest()
-    val survivors = m0.bucketPaths.values.flatten.toSet
-      .intersect(m1.bucketPaths.values.flatten.toSet)
-    assert(survivors.nonEmpty,
-      "rewrite must keep untouched band files referenced, not rewrite the queue")
+    assert(dataDirs == dirs0, "a dequeue writes no data directory")
+    val paths0 = m0.bucketPaths.values.flatten.toSet
+    val paths1 = m1.bucketPaths.values.flatten.toSet
+    assert(paths1.subsetOf(paths0))
+    val touched = (paths0 -- paths1) ++ m1.pathDeletes.keySet
+    assert(touched.nonEmpty && touched.size <= f.lastScan.scannedPaths)
+    assert((paths0 -- paths1).toSeq.map(m0.pathRows).sum +
+      m1.pathDeletes.keySet.toSeq.map(m1.deletedRows).sum == 20L)
+    (paths1 -- touched).foreach(p => assert(m1.pathFiles(p) == m0.pathFiles(p), p))
+    assert(paths1.size > paths0.size / 2,
+      "untouched band files stay referenced; the queue is not rewritten")
   }
 
   test("successive dequeues drain the queue exactly, best band first") {

@@ -9,16 +9,16 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import graft.local.QueueOrdering
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
-/** The dequeue's residue commit. A score-pruned prefix proven visible
-  * finds the bands that lost rows from row counts alone (no Spark job);
-  * any other scan (a created_at ordering, a blacklist, caps) takes one
-  * grouped stats job. Both must commit what a stats-driven commit
-  * would: untouched bands keep their paths, and the `dequeued` counters
-  * and flow-control gauges match the batch. Also: the batch plan
-  * compiles to the same code at every epoch; a bucket is scanned, ranked
-  * and rewritten in one task, with no exchange, and its rewritten leaves
-  * hold one file each. */
+/** The dequeue's commit: the positions of the rows it took (and of the
+  * blacklisted rows its scan found) become deletes of their files in the
+  * queue manifest, for every ordering, cap and blacklist. No data file is
+  * written; exactly the files that lost rows gain deletes, every other
+  * path keeps its files, and the `dequeued` counters and flow-control
+  * gauges match the batch. Also: the batch plan compiles to the same code
+  * at every epoch, and a bucket is scanned and ranked in one task, with
+  * no exchange. */
 class DequeueCommitSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -46,6 +46,49 @@ class DequeueCommitSpec extends AnyFunSuite {
     f.bulkSchedule(spark.range(n).select(
       concat(lit("http://h"), $"id" % hosts, lit(".example/p/"), $"id").as("url"),
       (($"id" % 10).cast("double") / 10.0).as("score"), lit(0).as("depth")))
+
+  /** the live fingerprints of every path the queue references */
+  private def liveByPath(f: SparkFrontier): Map[String, Set[String]] =
+    f.queue.readManifest().bucketPaths.values.flatten.map { p =>
+      p -> f.queue.readPaths(spark, Seq(p)).select($"fingerprint").as[String].collect().toSet
+    }.toMap
+
+  private def dataDirs(f: SparkFrontier): Set[String] = {
+    val s = Files.list(java.nio.file.Paths.get(f.queue.root, "data"))
+    try s.iterator.asScala.map(_.getFileName.toString).toSet finally s.close()
+  }
+
+  /** The queue's state before a dequeue: manifest, live rows per path,
+    * data dirs. */
+  private final case class Before(m: BucketStore#Manifest, live: Map[String, Set[String]],
+      dirs: Set[String])
+  private def before(f: SparkFrontier): Before =
+    Before(f.queue.readManifest(), liveByPath(f), dataDirs(f))
+
+  /** Checks that the dequeue after `b` committed deletes only: no data
+    * directory is written; a path that lost no row keeps its files and
+    * its deletes; a path that lost rows gains deletes of exactly as many
+    * rows and keeps its files, or, having lost its last row, leaves the
+    * manifest. Returns the rows lost per bucket. */
+  private def deletesOnly(name: String, f: SparkFrontier, b: Before): Map[Int, Long] = {
+    val m1 = f.queue.readManifest()
+    assert(dataDirs(f) == b.dirs, s"$name: a dequeue writes no data directory")
+    val after = liveByPath(f)
+    assert(after.keySet.subsetOf(b.live.keySet), s"$name: a dequeue adds no path")
+    val bucketOf = b.m.bucketPaths.toSeq.flatMap { case (k, ps) => ps.map(_ -> k) }.toMap
+    b.live.toSeq.map { case (p, rows) =>
+      val n = rows.size - after.getOrElse(p, Set.empty).size
+      assert(after.get(p).forall(_.subsetOf(rows)), s"$name: $p gained rows")
+      if (n == 0) {
+        assert(m1.pathFiles.get(p) == b.m.pathFiles.get(p), s"$name: $p lost no row")
+        assert(m1.pathDeletes.get(p) == b.m.pathDeletes.get(p), s"$name: $p lost no row")
+      } else if (after.contains(p)) {
+        assert(m1.pathFiles(p) == b.m.pathFiles(p), s"$name: $p keeps its files")
+        assert(m1.deletedRows(p) - b.m.deletedRows(p) == n, s"$name: $p deletes its lost rows")
+      }
+      bucketOf(p) -> n.toLong
+    }.groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0)
+  }
 
   private def perPartition(batch: DataFrame): Map[Int, Long] =
     batch.groupBy($"partition_id").count().as[(Int, Long)].collect().toMap
@@ -85,8 +128,8 @@ class DequeueCommitSpec extends AnyFunSuite {
       "globalOrder" -> frontier(globalOrder = true),
       "maxPerHost" -> frontier(maxPerHost = 2),
       "maxPerHost over 2 salts" -> frontier(maxPerHost = 2, hostSalts = 2),
-      // the stats job's groupBy(partition_id, band) reads the same cache
-      "FIFO (stats job)" -> frontier(ordering = QueueOrdering.Fifo))
+      // a created_at ordering reads every band
+      "FIFO" -> frontier(ordering = QueueOrdering.Fifo))
     cases.foreach { case (name, f) =>
       prefill(f, 400, hosts = 13)
       val batch = f.nextBatch(7)
@@ -122,28 +165,36 @@ class DequeueCommitSpec extends AnyFunSuite {
     assert(batch.as[DequeueModel.QRow].collect().toSeq.sortBy(_.url) == model.sortBy(_.url))
     assert(model.size == 8, "fixture: the co-hosted hostnames share one budget of 4")
     f.awaitQueueCommit()
+    // the slot window moved rows between tasks: each file's deletes
+    // still cover exactly its taken rows
+    assert(f.queue.read(spark).as[DequeueModel.QRow].collect().toSeq.sortBy(_.url) ==
+      queued.diff(model).sortBy(_.url))
   }
 
-  test("a residue rewrite writes one file per leaf") {
+  test("a dequeue writes no data file: the files that lost rows gain deletes") {
     Seq("default order" -> frontier(), "globalOrder" -> frontier(globalOrder = true),
-        "FIFO (stats job, several bands per bucket)" -> frontier(ordering = QueueOrdering.Fifo))
+        "FIFO (several bands per bucket)" -> frontier(ordering = QueueOrdering.Fifo),
+        "FIFO with a blacklist" -> frontier(ordering = QueueOrdering.Fifo,
+          blacklist = Set("h3.example")))
       .foreach { case (name, f) =>
         prefill(f, 400, hosts = 13)
-        val before = f.queue.readManifest().bucketPaths.values.flatten.toSet
-        f.nextBatch(7)
-        f.awaitQueueCommit()
-        val m = f.queue.readManifest()
-        val written = m.bucketPaths.toSeq.flatMap { case (b, ps) => ps.filterNot(before).map(b -> _) }
-        assert(written.nonEmpty, s"$name: fixture: the dequeue rewrote leaves")
-        written.foreach { case (_, p) =>
-          assert(m.pathFiles(p).size == 1, s"$name: $p holds ${m.pathFiles(p)}")
-          val onDisk = Files.list(java.nio.file.Paths.get(p))
-          try assert(onDisk.filter(_.toString.endsWith(".parquet")).count() == 1, s"$name: $p")
-          finally onDisk.close()
+        val blacklisted = f.queue.read(spark).filter($"host" === "h3.example").count()
+        // two batches: the second deletes from files the first left deletes in
+        (1 to 2).foreach { round =>
+          val b = before(f)
+          val batch = f.nextBatch(7).cache()
+          val n = batch.count()
+          f.awaitQueueCommit()
+          val lost = deletesOnly(s"$name, batch $round", f, b)
+          // a FIFO scan reads every band, so it finds every blacklisted row
+          val found = if (name.endsWith("blacklist") && round == 1) blacklisted else 0L
+          assert(n > 0 && lost.values.sum == n + found, s"$name, batch $round")
+          assert(f.queue.readManifest().pathDeletes.nonEmpty, s"$name: fixture: deletes")
+          if (name.startsWith("FIFO") && round == 1)
+            assert(b.live.keySet.count(p => f.queue.readManifest().deletedRows(p) > 0) > 1,
+              s"$name: fixture: several files lost rows")
+          batch.unpersist()
         }
-        if (name.startsWith("FIFO"))
-          assert(written.groupBy(_._1).values.exists(_.size > 1),
-            "fixture: a bucket with several rewritten bands")
       }
   }
 
@@ -160,6 +211,7 @@ class DequeueCommitSpec extends AnyFunSuite {
     val m0 = f.queue.readManifest()
     assert(m0.bucketPaths.keySet == Set(0, 1, 2, 3), "fixture: rows in every bucket")
 
+    val b0 = before(f)
     val batch = f.nextBatch(5)
     val urls = batch.select($"url").as[String].collect().toSet
     assert(urls == bestRows.take(5).map(_._1).toSet)
@@ -167,43 +219,77 @@ class DequeueCommitSpec extends AnyFunSuite {
     assert(f.lastScan.scannedPaths > 5,
       "fixture: the scan reads bands of the other buckets too")
     f.awaitQueueCommit()
+    assert(deletesOnly("globalOrder", f, b0) == Map(bucketOfBest -> 5L))
     val m1 = f.queue.readManifest()
     (0 until 4).filter(_ != bucketOfBest).foreach { b =>
       assert(m1.bucketPaths(b) == m0.bucketPaths(b),
         s"bucket $b lost no row: its paths must stay referenced unchanged")
+      assert(!m1.bucketPaths(b).exists(m1.pathDeletes.contains), s"bucket $b has no delete")
     }
-    assert(m1.bucketPaths(bucketOfBest) != m0.bucketPaths(bucketOfBest))
+    // the 5 one-row bands lost their only row: their paths leave
+    assert(m0.bucketPaths(bucketOfBest).diff(m1.bucketPaths(bucketOfBest)).size == 5)
     assert(dequeuedCounters(f) == (5L, Map(bucketOfBest -> 5L)))
     assert(f.queueSize() == bestRows.size + rest.size - 5)
     batch.unpersist()
   }
 
-  test("FIFO scans the whole queue: only the bands that lost rows are rewritten (stats job)") {
+  test("FIFO scans the whole queue: only the files that lost rows gain deletes") {
     val f = frontier(globalOrder = true, ordering = QueueOrdering.Fifo)
     prefill(f, 400, hosts = 13)
-    def groups(m: BucketStore#Manifest) = m.bucketPaths.toSeq.flatMap { case (b, ps) =>
-      ps.groupBy(f.queue.bandOf).map { case (band, gps) => (b, band) -> gps.toSet } }.toMap
-    def rows(m: BucketStore#Manifest, ps: Set[String]) = ps.toSeq.map(m.pathRows).sum
-    val m0 = f.queue.readManifest()
+    val b0 = before(f)
     val batch = f.nextBatch(5)
     assert(batch.count() == 5)
     assert(f.lastScan.scannedPaths == f.lastScan.totalPaths,
       "fixture: a created_at ordering reads every band")
     f.awaitQueueCommit()
+    assert(b0.live.size > 10, "fixture: many (bucket, band) paths")
+    assert(deletesOnly("FIFO", f, b0).values.sum == 5L)
     val m1 = f.queue.readManifest()
-    val (g0, g1) = (groups(m0), groups(m1))
-    assert(g0.size > 10, "fixture: many (bucket, band) groups")
-    val rewritten = g0.keySet.filter(g => !g1.get(g).contains(g0(g)))
-    assert(rewritten.nonEmpty && rewritten.size <= 5)
-    val lost = rewritten.toSeq.map(g => rows(m0, g0(g)) - g1.get(g).fold(0L)(rows(m1, _)))
-    assert(lost.forall(_ > 0), "a band that lost no row keeps its paths")
-    assert(lost.sum == 5L)
+    val withDeletes = m1.pathDeletes.keySet
+    assert(withDeletes.nonEmpty && withDeletes.size <= 5)
+    assert(withDeletes.toSeq.map(m1.deletedRows).sum == 5L)
+    assert(m1.bucketPaths.values.flatten.toSet == b0.live.keySet,
+      "every path keeps its files: none lost its last row")
     assert(dequeuedCounters(f)._1 == 5L)
     batch.unpersist()
   }
 
+  test("a dequeue commit that fails before the manifest flip replays its batch") {
+    val root = Files.createTempDirectory("graft-dqc").toString
+    def open() = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
+      strategy = ScoreStrategy.BFS, domainsBlacklist = Set("h3.example"))
+    val f = open()
+    prefill(f, 400, hosts = 13)
+    val queue = f.queue.read(spark).as[DequeueModel.QRow].collect().toSeq
+    // the commit's manifest file cannot be written: the commit thread
+    // fails after it collected the positions, before `_CURRENT` flips
+    val v = f.queue.currentVersion
+    val blocked = java.nio.file.Paths.get(root, "queue", "manifest", s"m${v + 1}.json")
+    Files.createDirectories(blocked)
+    val batch = f.nextBatch(7).as[DequeueModel.QRow].collect().toSeq
+    assert(batch.nonEmpty)
+    intercept[java.io.IOException](f.awaitQueueCommit())
+    Files.delete(blocked)
+    assert(f.queue.currentVersion == v, "no commit")
+    // no delete is visible: not through this store, nor to a new frontier
+    assert(f.queue.read(spark).as[DequeueModel.QRow].collect().toSeq.sortBy(_.url) ==
+      queue.sortBy(_.url))
+    val resumed = open()
+    assert(resumed.queueSize() == queue.size)
+    assert(resumed.queue.read(spark).as[DequeueModel.QRow].collect().toSeq.sortBy(_.url) ==
+      queue.sortBy(_.url))
+    assert(resumed.nextBatch(7).as[DequeueModel.QRow].collect().toSeq.sortBy(_.url) ==
+      batch.sortBy(_.url), "the replayed batch")
+    resumed.awaitQueueCommit()
+    // the replayed commit lands: the batch and scanned blacklisted rows go
+    val left = resumed.queue.read(spark).as[DequeueModel.QRow].collect().toSeq
+    assert(left.filter(_.host != "h3.example").sortBy(_.url) ==
+      queue.diff(batch).filter(_.host != "h3.example").sortBy(_.url))
+    assert(resumed.queueSize() == left.size)
+  }
+
   test("dequeued counters equal the batch's per-partition counts on both commit paths") {
-    // no blacklist, no caps: the commit finds the touched bands from row counts
+    // no blacklist, no caps: the manifest proves the scan all-visible
     val plain = frontier()
     prefill(plain, 400, hosts = 13)
     val b1 = plain.nextBatch(7).cache()
@@ -212,8 +298,8 @@ class DequeueCommitSpec extends AnyFunSuite {
     assert(dequeuedCounters(plain) == (expected1.values.sum, expected1))
     assert(plain.queueSize() == 400 - expected1.values.sum)
 
-    // a blacklisted host forces the stats job; its rows are deleted but
-    // never counted as dequeued
+    // a blacklisted host's scanned rows are deleted but never counted as
+    // dequeued
     val withBl = frontier(blacklist = Set("h3.example"))
     prefill(withBl, 400, hosts = 13)
     val b2 = withBl.nextBatch(7).cache()

@@ -75,13 +75,17 @@ object DequeueModel {
       Gen.frequency(4 -> 0L, 1 -> 5L)))
   } yield Case(rows.zipWithIndex.map { case ((h, score, created, crawlAt), i) =>
       val host = s"h$h.example"
-      QRow(f"fp$i%03d", s"http://$host/p/$i", host, graft.core.Hashing.crc32Partition(host, buckets),
-        score, created, 0, crawlAt)
+      val url = s"http://$host/p/$i"
+      QRow(graft.core.Hashing.urlFingerprint(url), url, host,
+        graft.core.Hashing.crc32Partition(host, buckets), score, created, 0, crawlAt)
     }, buckets, ordering, globalOrder, maxPerHost, hostSalts, blacklist, budget, now = 3L)
 }
 
-/** `nextBatch` against `DequeueModel` over seeded random queues: the batch
-  * and the rows left in the queue, as multisets. */
+/** `nextBatch` against `DequeueModel` over seeded random queues: three
+  * batches in a row, each batch and the rows left in the queue as
+  * multisets, the rows left read both by `queue.read` and by the next
+  * dequeue's scan; then a rescore and a compaction of the queue the
+  * deletes left. */
 class DequeueModelSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -108,16 +112,41 @@ class DequeueModelSpec extends AnyFunSuite {
       "fixture: the seeds cover caps, salts, a blacklist, both scopes and every ordering")
     cases.foreach { c =>
       val f = frontierOf(c)
-      val got = f.nextBatch(c.budget, atEpoch = c.now).as[QRow].collect().toSeq
-      f.awaitQueueCommit()
-      val left = f.queue.read(spark).as[QRow].collect().toSeq
-      val want = batch(c)
-      assert(multiset(got) == multiset(want), s"batch of $c")
-      // rows neither taken nor blacklisted stay queued; a blacklisted row
-      // may be deleted (when its band is rewritten), never added
-      val rest = multiset(c.rows.diff(want).filterNot(blacklisted(c)))
-      assert(multiset(left.filterNot(blacklisted(c))) == rest, s"residue of $c")
-      assert(left.filter(blacklisted(c)).forall(c.rows.contains), s"residue of $c")
+      // the model's queue before each batch: the prefill, then the rows
+      // `queue.read` returned after the last batch, which the next
+      // batch's scan must read the same
+      var queued = c.rows
+      (1 to 3).foreach { round =>
+        val got = f.nextBatch(c.budget, atEpoch = c.now).as[QRow].collect().toSeq
+        f.awaitQueueCommit()
+        val left = f.queue.read(spark).as[QRow].collect().toSeq
+        val want = batch(c.copy(rows = queued))
+        assert(multiset(got) == multiset(want), s"batch $round of $c")
+        // rows neither taken nor blacklisted stay queued; a blacklisted row
+        // may be deleted (when its band is scanned), never added
+        val rest = multiset(queued.diff(want).filterNot(blacklisted(c)))
+        assert(multiset(left.filterNot(blacklisted(c))) == rest, s"residue $round of $c")
+        assert(multiset(left.filter(blacklisted(c))).forall { case (r, n) =>
+          multiset(queued).getOrElse(r, 0) >= n }, s"residue $round of $c")
+        assert(f.queueSize() == left.size, s"queueSize $round of $c")
+        queued = left
+      }
+      // a rescore rewrites the rescored row's band; the rows the batches
+      // deleted stay deleted
+      queued.find(!blacklisted(c)(_)).foreach { r =>
+        assert(f.updateScores(Seq((r.url, 0.3)).toDF("url", "score")) == 1L)
+        queued = queued.map(q => if (q.url == r.url) q.copy(score = 0.3) else q)
+        assert(multiset(f.queue.read(spark).as[QRow].collect().toSeq) == multiset(queued),
+          s"rescored residue of $c")
+      }
+      // compaction folds every path with deletes: the same rows, no deletes
+      f.compactQueue(1)
+      val m = f.queue.readManifest()
+      assert(m.pathDeletes.isEmpty && (m.version < 0 || !Files.readString(
+        java.nio.file.Paths.get(f.queue.root, "manifest", s"m${m.version}.json")).contains("\"deletes\"")),
+        s"compacted $c")
+      assert(multiset(f.queue.read(spark).as[QRow].collect().toSeq) == multiset(queued),
+        s"compacted residue of $c")
     }
   }
 }

@@ -38,6 +38,18 @@ class ManifestSpec extends AnyFunSuite {
       Map("/r/data/commit=3/partition_id=0/band=1" -> 0L))
     assert(s.parseManifest(4, json, "m4.json") == expected)
     assert(s.manifestJson(expected) == json)
+    // deletes: per path, per file, a cardinality and a portable bitmap
+    val dv = BucketStore.Deletes.of(org.roaringbitmap.RoaringBitmap.bitmapOf(0, 2, 3))
+    assert(dv.cardinality == 3 && dv.positions == org.roaringbitmap.RoaringBitmap.bitmapOf(0, 2, 3))
+    val withDeletes = expected.copy(
+      pathFiles = Map("/r/data/commit=1/partition_id=2/band=0" -> Map("part-0.parquet" -> 812L)),
+      pathDeletes = Map("/r/data/commit=1/partition_id=2/band=0" -> Map("part-0.parquet" -> dv)))
+    val deletesJson = json.stripSuffix("}") +
+      ""","files":{"/r/data/commit=1/partition_id=2/band=0":{"part-0.parquet":812}}""" +
+      ""","deletes":{"/r/data/commit=1/partition_id=2/band=0":{"part-0.parquet":""" +
+      s"""{"cardinality":3,"bitmap":"${dv.bitmap}"}}}}"""
+    assert(s.manifestJson(withDeletes) == deletesJson)
+    assert(s.parseManifest(4, deletesJson, "m4.json") == withDeletes)
     // the first format carried only epoch, buckets and counters
     val first = """{"epoch":2,"buckets":{"1":["/r/a"]},"counters":{"seeds":3}}"""
     assert(s.parseManifest(1, first, "m1.json") ==
@@ -118,7 +130,61 @@ class ManifestSpec extends AnyFunSuite {
     assert(f.queueSize() == rows.size)
   }
 
-  test("append, replacePaths, rewriteLeaves and compact keep paths, row counts and bucket versions in step") {
+  test("deletes name referenced files through append, dequeue, replacePaths, compact and a full drain") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val f = new SparkFrontier(spark, Files.createTempDirectory("graft-deletes").toString,
+      partitions = 4, stateBuckets = 4)
+    val s = f.queue
+    // every delete names a file the manifest references and holds at
+    // most its rows; live rows equal a read of each path and add up to
+    // queueSize; the document writes back byte for byte
+    def check(what: String): Unit = {
+      f.awaitQueueCommit()
+      val m = s.readManifest()
+      val referenced = m.bucketPaths.values.flatten.toSet
+      assert(m.pathDeletes.keySet.subsetOf(referenced), what)
+      m.pathDeletes.foreach { case (p, ds) =>
+        ds.foreach { case (name, d) =>
+          assert(m.pathFiles(p).contains(name), s"$what: $p/$name")
+          assert(d.cardinality > 0 && d.cardinality <= spark.read.parquet(s"$p/$name").count(),
+            s"$what: $p/$name")
+        }
+      }
+      referenced.foreach(p =>
+        assert(m.liveRows(p).contains(s.readPaths(spark, Seq(p)).count()), s"$what: $p"))
+      assert(f.queueSize() == s.read(spark).count(), what)
+      val json = Files.readString(Paths.get(s.root, "manifest", s"m${m.version}.json"))
+      assert(s.manifestJson(s.parseManifest(m.version, json, "m.json")) == json, what)
+      assert(json.contains("\"deletes\"") == m.pathDeletes.nonEmpty, what)
+    }
+    f.bulkSchedule(spark.range(400).select(
+      concat(lit("http://h"), $"id" % 13, lit(".example/p/"), $"id").as("url"),
+      (($"id" % 10).cast("double") / 10.0).as("score"), lit(0).as("depth")))
+    check("append")
+    f.nextBatch(7).count()
+    check("dequeue")
+    assert(s.readManifest().pathDeletes.nonEmpty, "fixture: the dequeue deleted rows")
+    // a path with deletes rewritten as it reads: it leaves with its deletes
+    val m = s.readManifest()
+    val p = m.pathDeletes.keys.min
+    s.replacePaths(s.readPaths(spark, Seq(p)).withColumn("band", lit(s.bandOf(p))),
+      m.epoch, Set(p))
+    check("replacePaths")
+    assert(!s.readManifest().pathDeletes.contains(p))
+    f.nextBatch(7).count()
+    check("second dequeue")
+    val rows = s.read(spark).collect().toSet
+    f.compactQueue(1)
+    check("compact")
+    assert(s.readManifest().pathDeletes.isEmpty && s.read(spark).collect().toSet == rows)
+    while (f.nextBatch(50).count() > 0) check("drain")
+    check("drained")
+    // every file lost its last row and left, and so did every path
+    assert(f.queueSize() == 0 && s.readManifest().bucketPaths.isEmpty)
+  }
+
+  test("append, replacePaths, deletePositions and compact keep paths, row counts and bucket versions in step") {
     val spark = SparkTestBase.spark
     import spark.implicits._
     for (banded <- Seq(true, false)) {
@@ -139,8 +205,9 @@ class ManifestSpec extends AnyFunSuite {
       var prev = s.readManifest()
       // after each commit: one row count per referenced path, equal to the
       // leaf's parquet rows, one file list per referenced path, equal to
-      // the leaf's parquet files and lengths, and a new version for
-      // exactly `touched`
+      // the leaf's parquet files and lengths, deletes only of listed
+      // files, each at most the file's rows, live rows equal to a read of
+      // the path, and a new version for exactly `touched`
       def committed(what: String, touched: Set[Int]): Unit = {
         val m = s.readManifest()
         val ctx = s"${if (banded) "banded" else "unbanded"} $what"
@@ -155,6 +222,14 @@ class ManifestSpec extends AnyFunSuite {
             .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.length).toMap
           finally onDisk.close()
           assert(m.pathFiles(p) == files, s"$ctx: $p")
+          assert(m.liveRows(p).contains(s.readPaths(spark, Seq(p)).count()), s"$ctx: $p")
+        }
+        m.pathDeletes.foreach { case (p, ds) =>
+          assert(ds.nonEmpty && ds.keySet.subsetOf(m.pathFiles(p).keySet), s"$ctx: $p")
+          ds.foreach { case (name, d) =>
+            assert(d.cardinality == d.positions.getLongCardinality, s"$ctx: $p/$name")
+            assert(d.cardinality <= spark.read.parquet(s"$p/$name").count(), s"$ctx: $p/$name")
+          }
         }
         val bumped = m.bucketVersions.collect {
           case (b, v) if !prev.bucketVersions.get(b).contains(v) => b }.toSet
@@ -174,22 +249,35 @@ class ManifestSpec extends AnyFunSuite {
         .unionByName(rows(80 until 81, _ => 3)), 3, b2.toSet)
       committed("replacePaths", Set(2, 3))
 
-      // buckets 0 and 1 rewritten; only bucket 0 loses rows
-      val m = s.readManifest()
-      val groups = for (b <- Seq(0, 1); (band, ps) <- m.bucketPaths(b).groupBy(s.bandOf))
-        yield (b, band) -> ps
-      val lost = s.rewriteLeaves(
-        s.readBuckets(spark, Some(Set(0, 1))).filter($"fingerprint" =!= "fp-0"), 4,
-        groups.toMap, l => (Map("lost" -> l.values.sum), Map.empty))
-      assert(lost == Map((0, 0) -> 1L))
-      committed("rewriteLeaves", Set(0))
+      // buckets 0 and 1 read; only bucket 0 loses a row (fp-0), and no
+      // data file is written
+      val read01 = s.readManifest().bucketPaths.filter(_._1 < 2).values.flatten.toSeq
+      val positions = s.readPaths(spark, read01, positions = true)
+        .select($"fingerprint", col(BucketStore.FileCol), col(BucketStore.PosCol))
+        .as[(String, Int, Int)].collect()
+      val deletes = positions.groupBy(_._2).collect { case (file, rs) if rs.exists(_._1 == "fp-0") =>
+        file -> BucketStore.FileDelete(
+          org.roaringbitmap.RoaringBitmap.bitmapOf(rs.filter(_._1 == "fp-0").map(_._3): _*), rs.length)
+      }
+      val dataDirs = Files.list(Paths.get(s.root, "data"))
+      val dirsBefore = try dataDirs.count() finally dataDirs.close()
+      s.deletePositions(read01, deletes, 4, Map("lost" -> 1L))
+      committed("deletePositions", Set(0))
+      val dataDirsAfter = Files.list(Paths.get(s.root, "data"))
+      assert(try dataDirsAfter.count() == dirsBefore finally dataDirsAfter.close())
+      assert(s.readManifest().pathDeletes.values.flatMap(_.values).map(_.cardinality).sum == 1L)
+      assert(s.read(spark).filter($"fingerprint" === "fp-0").isEmpty)
 
       val rowsBefore = s.read(spark).count()
-      val overgrown = s.readManifest().bucketPaths.collect {
-        case (b, ps) if ps.groupBy(s.bandOf).values.exists(_.size > 1) => b }.toSet
-      assert(overgrown.contains(1))
+      // a path with deletes counts one more file
+      val mc = s.readManifest()
+      val overgrown = mc.bucketPaths.collect {
+        case (b, ps) if ps.groupBy(s.bandOf).values
+          .exists(g => g.size + g.count(mc.pathDeletes.contains) > 1) => b }.toSet
+      assert(overgrown.contains(0) && overgrown.contains(1))
       assert(s.compact(spark, maxPathsPerLeaf = 1) == overgrown)
       committed("compact", overgrown)
+      assert(s.readManifest().pathDeletes.isEmpty, "compaction drops the deleted rows")
       assert(versions(overgrown).max == s.currentVersion)
       assert(s.read(spark).count() == rowsBefore)
 

@@ -44,8 +44,7 @@ import org.roaringbitmap.RoaringBitmap
   *  - replacePaths = rewrite only the named leaf dirs; other paths stay
   *    referenced untouched
   *  - deletePositions = delete rows by position (the dequeue): the
-  *    manifest alone records them, no data file is written; every read
-  *    applies them in one place, `readPaths`' reader
+  *    manifest alone records them, no data file is written
   *  - commit = write manifest, then atomically flip _CURRENT; a crashed
   *    epoch leaves the previous snapshot intact (resume-from-checkpoint);
   *    every commit merges the manifest in one place (`commitReplaced`)
@@ -57,6 +56,12 @@ import org.roaringbitmap.RoaringBitmap
   *  - per-path file names and lengths ride in the manifest too, and every
   *    read is planned from them: no directory is listed (an Iceberg scan
   *    plans from its manifests' file lists the same way)
+  *  - one reader: every read (`read`, `readBuckets`, `readAt`,
+  *    `readVersioned`, `readPaths`, and those of `rowCount` and
+  *    `compact`) goes through `readFiles`, the one place that maps the
+  *    manifest's file lists to Spark partitions, applies the deletes,
+  *    fills typed nulls for added columns and lists a leaf dir only for
+  *    a manifest written before file lists
   *  - commits are serialized (JVM monitor + OS file lock) and clean up
   *    orphan commit dirs from crashed writers, so a crash between the
   *    data write and the _CURRENT flip never bricks the store
@@ -87,7 +92,7 @@ final class BucketStore(val root: String, val bucketCol: String,
       /** per-path max of statCol (absent = unknown, be conservative) */
       pathMax: Map[String, Long] = Map.empty,
       /** per-path `.parquet` file name -> byte length (absent = written
-        * before file lists: Spark lists that dir) */
+        * before file lists: a read lists that dir) */
       pathFiles: Map[String, Map[String, Long]] = Map.empty,
       /** per-path file name -> the positions of its deleted rows (a file
         * with no deleted row has no entry) */
@@ -121,7 +126,8 @@ final class BucketStore(val root: String, val bucketCol: String,
   }
   @transient @volatile private var lastParsed: ((Long, Long, FileTime), Manifest) = null
 
-  /** Manifest `v` from its JSON; a malformed document fails naming `file`.
+  /** Manifest `v` from its JSON; a malformed document fails naming `file`,
+    * and so does a delete of a file its path's file list does not hold.
     * Keys added after the first format (rows, bucketv, props, pathmax,
     * files, deletes) read as empty when absent. */
   private[spark] def parseManifest(v: Long, json: String, file: String): Manifest =
@@ -130,7 +136,7 @@ final class BucketStore(val root: String, val bucketCol: String,
       def fields(k: String): List[(String, JsonNode)] =
         Option(j.get(k)).toList.flatMap(_.properties().asScala.map(e => e.getKey -> e.getValue))
       def longs(k: String): Map[String, Long] = fields(k).map { case (f, n) => f -> n.asLong() }.toMap
-      Manifest(v,
+      val m = Manifest(v,
         j.required("epoch").asLong(),
         j.required("buckets").properties().asScala.map { e =>
           e.getKey.toInt -> e.getValue.asScala.map(_.asText()).toList
@@ -149,6 +155,9 @@ final class BucketStore(val root: String, val bucketCol: String,
               e.getValue.required("bitmap").asText())
           }.toMap
         }.toMap)
+      for ((p, ds) <- m.pathDeletes; listed <- m.pathFiles.get(p); name <- ds.keys)
+        require(listed.contains(name), s"deletes name $p/$name, a file its path does not list")
+      m
     } catch {
       case NonFatal(e) =>
         throw new IllegalStateException(s"unreadable manifest $file: ${e.getMessage}", e)
@@ -211,20 +220,20 @@ final class BucketStore(val root: String, val bucketCol: String,
 
   /** `readBuckets` of the table at manifest `m`. */
   def readAt(spark: SparkSession, m: Manifest, only: Option[Set[Int]] = None): DataFrame =
-    scan(spark, m, pathsOf(m, only), versioned = false)
+    readFiles(spark, m, pathsOf(m, only))
 
   /** `readBuckets` plus the `commit` column: the version of the commit
     * that wrote each row (strictly monotonic — the Iceberg sequence-number
     * analog), which merge-on-read views resolve by. */
   def readVersioned(spark: SparkSession, only: Option[Set[Int]] = None): DataFrame = {
     val m = readManifest()
-    scan(spark, m, pathsOf(m, only), versioned = true)
+    readFiles(spark, m, pathsOf(m, only), versioned = true)
   }
 
   /** Spark's size estimate of `read`, a read of the table at `m` (the
     * optimized plan's `sizeInBytes`, the number its broadcast decision
-    * compares). A table with no path has size 0: Spark's estimate of an
-    * empty frame is its default size, not 0. */
+    * compares). A table with no path has size 0: Spark estimates a
+    * projection of a read of no file at 1 byte, not 0. */
   def sizeInBytes(m: Manifest, read: DataFrame): Long =
     if (m.bucketPaths.isEmpty) 0L
     else read.queryExecution.optimizedPlan.stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong
@@ -242,7 +251,7 @@ final class BucketStore(val root: String, val bucketCol: String,
     * bucket then needs no exchange: the rows are already where the
     * bucket's task is. The files come from the manifest's lists; a path
     * without one (a manifest written before file lists) is listed here.
-    * Spark's size estimate is the files' bytes, as for `scan`.
+    * Spark's size estimate is the files' bytes.
     * Each file is read whole, in order from row 0, so a row's position
     * in its file is its ordinal there; the positions the manifest marks
     * deleted are dropped. With `positions`, each row also carries its
@@ -254,7 +263,7 @@ final class BucketStore(val root: String, val bucketCol: String,
     * before a column existed keeps reading after the upgrade). */
   def readPaths(spark: SparkSession, paths: Seq[String], oneTask: Boolean = false,
       positions: Boolean = false): DataFrame =
-    readFiles(spark, readManifest(), paths, oneTask, positions, versioned = false)
+    readFiles(spark, readManifest(), paths, oneTask, positions)
 
   /** The files of `paths` at `m`, numbered: path by path, each path's
     * files by name. A leaf dir never changes, so any manifest that
@@ -272,8 +281,9 @@ final class BucketStore(val root: String, val bucketCol: String,
 
   /** `readPaths` at `m`; `versioned` adds the `commit` column of
     * `readVersioned` (the commit=V dir level of each file). */
-  private def readFiles(spark: SparkSession, m: Manifest, paths: Seq[String], oneTask: Boolean,
-      positions: Boolean, versioned: Boolean): DataFrame = {
+  private def readFiles(spark: SparkSession, m: Manifest, paths: Seq[String],
+      oneTask: Boolean = false, positions: Boolean = false,
+      versioned: Boolean = false): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
     import org.apache.spark.paths.SparkPath
     import org.apache.spark.sql.GraftColumnBridge
@@ -343,56 +353,6 @@ final class BucketStore(val root: String, val bucketCol: String,
       .select((schema.fieldNames.toSeq ++
         (if (versioned) Seq(BucketStore.CommitCol) else Nil) ++
         (if (positions) tags.fieldNames else Nil)).map(col): _*)
-  }
-
-  /** Every store read but `readPaths`: `paths` as a parquet relation
-    * (Spark packs the files into tasks by size) whose files come
-    * from `m`'s file lists (leaf dirs are immutable, so any manifest that
-    * records a path records its files). Spark's file index asks its
-    * status cache for each leaf dir before it lists one; the cache here
-    * answers from the manifest, so planning lists nothing and runs no
-    * job. A path without a file list (a manifest written before file
-    * lists) misses, and Spark lists that dir. Paths of which some file
-    * has deleted rows are read by `readPaths`' reader, the one reader
-    * that applies deletes. */
-  private def scan(spark: SparkSession, m: Manifest, paths: Seq[String],
-      versioned: Boolean): DataFrame = {
-    import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-    import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    import org.apache.spark.sql.types.{LongType, StructType}
-    val schema = emptySchema.getOrElse(sys.error(s"$root: schema not set"))
-    if (paths.exists(m.pathDeletes.contains))
-      readFiles(spark, m, paths, oneTask = false, positions = false, versioned)
-    else if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        if (versioned) schema.add(BucketStore.CommitCol, LongType) else schema)
-    else {
-      val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val blockSize = fs.getDefaultBlockSize(new HPath(root))
-      val dirs = paths.map(p => p -> fs.makeQualified(new HPath(p)))
-      val recorded: Map[HPath, Array[FileStatus]] = dirs.flatMap { case (p, dir) =>
-        m.pathFiles.get(p).map(files => dir -> files.toArray.sortBy(_._1).map {
-          case (name, len) => new FileStatus(len, false, 1, blockSize, 0L, new HPath(dir, name))
-        })
-      }.toMap
-      val manifestFiles = new FileStatusCache {
-        override def getLeafFiles(dir: HPath): Option[Array[FileStatus]] = recorded.get(dir)
-        def putLeafFiles(dir: HPath, files: Array[FileStatus]): Unit = ()
-        def invalidateAll(): Unit = ()
-      }
-      // the declared schema types the partition values (bucket, band;
-      // `commit` is inferred) and spares a schema-inference job; fields
-      // absent from older files read as typed nulls
-      val index = new InMemoryFileIndex(spark, dirs.map(_._2),
-        Map("basePath" -> s"$root/data"), Some(schema), manifestFiles)
-      val dataSchema = StructType(schema.filterNot(f =>
-        index.partitionSchema.fieldNames.contains(f.name)))
-      spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-          dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
-        .select(schema.fieldNames.map(col(_)) ++
-          (if (versioned) Seq(col(BucketStore.CommitCol).cast(LongType)) else Nil): _*)
-    }
   }
 
   /** Declared schema (also used for reads before the first commit). */
@@ -601,7 +561,7 @@ final class BucketStore(val root: String, val bucketCol: String,
     val m = readManifest()
     val (known, unknown) = pathsOf(m, None).partition(m.pathRows.contains)
     known.flatMap(m.liveRows).sum +
-      (if (unknown.isEmpty) 0L else scan(spark, m, unknown, versioned = false).count())
+      (if (unknown.isEmpty) 0L else readFiles(spark, m, unknown).count())
   }
 
   /** Commit version `v` over `m`: drop `removePaths`, add `written` —
@@ -638,31 +598,38 @@ final class BucketStore(val root: String, val bucketCol: String,
     * accumulate one dir per commit in bands the dequeue never rewrites
     * (cold score bands), so file counts there grow with epoch count. A
     * path with deletes counts once more (its deletes are merged at every
-    * read, like a delete file); the rewrite drops the deleted rows.
-    * Compaction is manifest-driven (no data read to decide), rewrites
-    * only the offending leaves, and holds the commit lock across the
-    * whole read+rewrite — a concurrent dequeue/append can never commit
-    * between compaction's snapshot and its rewrite (which would
-    * resurrect removed rows) — it is the Iceberg `rewrite_data_files`
-    * analog. `decorate` maps the leaves' versioned read (`readVersioned`'s
-    * columns) to the rows written back: it re-adds write-path partition
-    * columns the read drops (the queue's band, derived from score) or
-    * resolves a merge-on-read delta log by `commit` (the fold is then
-    * also a dedup); a `commit` column it leaves is dropped. Returns the
-    * buckets whose leaves were compacted. */
+    * read, like a delete file); the rewrite drops the deleted rows. A
+    * leaf whose deleted rows are at least its live rows is compacted
+    * too, however few its files: its reads decode more deleted rows
+    * than they return. Compaction is manifest-driven (no data read to
+    * decide), rewrites only the offending leaves, and holds the commit
+    * lock across the whole read+rewrite — a concurrent dequeue/append can
+    * never commit between compaction's snapshot and its rewrite (which
+    * would resurrect removed rows) — it is the Iceberg
+    * `rewrite_data_files` analog. `decorate` maps the leaves' versioned
+    * read (`readVersioned`'s columns) to the rows written back: it
+    * re-adds write-path partition columns the read drops (the queue's
+    * band, derived from score) or resolves a merge-on-read delta log by
+    * `commit` (the fold is then also a dedup); a `commit` column it
+    * leaves is dropped. Returns the buckets whose leaves were compacted. */
   def compact(spark: SparkSession, maxPathsPerLeaf: Int = 8,
       decorate: DataFrame => DataFrame = identity): Set[Int] = withCommitLock {
     val m = readManifest()
+    // deleted rows at least the live rows, from the manifest's counts
+    def drained(paths: List[String]): Boolean = {
+      val deleted = paths.map(m.deletedRows).sum
+      deleted > 0 && paths.forall(m.pathRows.contains) && deleted >= paths.flatMap(m.liveRows).sum
+    }
     // group leaf paths by (bucket, band); collect the overgrown groups
     val overgrown = for {
       (b, ps) <- m.bucketPaths.toSeq
       paths <- ps.groupBy(bandOf).values
-      if paths.size + paths.count(m.pathDeletes.contains) > maxPathsPerLeaf
+      if paths.size + paths.count(m.pathDeletes.contains) > maxPathsPerLeaf || drained(paths)
     } yield b -> paths
     if (overgrown.nonEmpty) {
       val paths = overgrown.flatMap(_._2)
       replacePaths(
-        decorate(scan(spark, m, paths, versioned = true)).drop(BucketStore.CommitCol),
+        decorate(readFiles(spark, m, paths, versioned = true)).drop(BucketStore.CommitCol),
         m.epoch, paths.toSet, counters = Map("compacted_leaves" -> overgrown.size.toLong))
     }
     overgrown.map(_._1).toSet
@@ -712,13 +679,24 @@ object BucketStore {
 
   /** `read` with the positions in `deleted` (a file's number -> its
     * deletes) dropped, each row followed by its file's number (`numbers`,
-    * by the file's URL-encoded path) and its position in the file. */
+    * by the file's URL-encoded path) and its position in the file. A
+    * delete whose bitmap does not hold its recorded cardinality, or
+    * names a position past the file's rows, fails the read naming the
+    * file. */
   private def positioned(read: PartitionedFile => Iterator[InternalRow],
       numbers: Map[String, Int], deleted: Map[Int, Deletes])
       : PartitionedFile => Iterator[InternalRow] = { file =>
     val number = numbers(file.urlEncodedPath)
+    def hostile(what: String) =
+      new IllegalStateException(s"deletes of ${file.urlEncodedPath}: $what")
+    val skip = deleted.get(number).fold(new RoaringBitmap) { d =>
+      val positions = d.positions
+      if (positions.getLongCardinality != d.cardinality)
+        throw hostile(s"the bitmap holds ${positions.getLongCardinality} positions, " +
+          s"the manifest records ${d.cardinality}")
+      positions
+    }.getIntIterator
     val rows = read(file)
-    val skip = deleted.get(number).fold(new RoaringBitmap)(_.positions).getIntIterator
     val tag = new GenericInternalRow(2)
     tag.setInt(0, number)
     val joined = new JoinedRow
@@ -731,6 +709,8 @@ object BucketStore {
           pos += 1
           if (skip.hasNext && skip.peekNext() == pos) skip.next() else row = r
         }
+        if (row == null && skip.hasNext)
+          throw hostile(s"position ${skip.peekNext()} is past the file's ${pos + 1} rows")
         row != null
       }
       def next(): InternalRow = {

@@ -124,14 +124,6 @@ final class SparkFrontier(
     val strategy: ScoreStrategy = ScoreStrategy.BFS,
     /** politeness: max requests per host per epoch (0 = unlimited) */
     val maxPerHost: Int = 0,
-    /** salted skew-splitting of hot domains (north rule): the per-host
-      * politeness window partitions by (host, salt) with the budget split
-      * across salts, while the host-global cap stays ≤ maxPerHost. The
-      * dequeue ranks each bucket in the task that reads it, so the salt
-      * groups of a host share that task: salts split the cap, they no
-      * longer spread a host over tasks. Requires maxPerHost % hostSalts
-      * == 0. */
-    val hostSalts: Int = 1,
     /** politeness slot key (reference get_slot_key key_type,
       * core/__init__.py:10-25, feeding OverusedBuffer and the queue's
       * host-cap collection): None (default) budgets per hostname; a
@@ -166,14 +158,6 @@ final class SparkFrontier(
       * filters; a transform that filters rows out drops them from the
       * chain, like a middleware returning None) */
     val linkTransforms: Seq[DataFrame => DataFrame] = Nil,
-    /** score bands per unit score in the queue's file layout (the T3
-      * rowkey interval resolution; 100 = the reference's 0.01 buckets,
-      * hbase/__init__.py:129-196). More bands = finer dequeue pruning
-      * (smaller scan prefix) but more leaf dirs; tune up for frontiers
-      * whose scores concentrate in a narrow range. The setting is
-      * sticky per store: a store opened with a different value has its
-      * files re-banded once, like the legacy band-less migration. */
-    val scoreBands: Int = 100,
     /** first-class DOMAINS_BLACKLIST (reference
       * settings/default_settings.py:42, checked at batch generation —
       * worker/components/batch_generator.py:97-109): dequeued rows whose
@@ -286,17 +270,13 @@ final class SparkFrontier(
   private def sbucketCol(fp: Column): Column =
     pmod(xxhash64(fp), lit(stateBuckets)).cast(IntegerType)
 
-  /** Score band at 1/scoreBands resolution, clamped to
-    * [0, scoreBands-1] (score 1.0 joins the last band, like the
+  /** Score band at 1/ScoreBands resolution, clamped to
+    * [0, ScoreBands-1] (score 1.0 joins the last band, like the
     * reference's right-inclusive last interval). The queue pops lowest
     * score first, so band 0 is the best band. */
   private def bandExpr: Column =
-    least(greatest(floor($"score" * scoreBands).cast(IntegerType), lit(0)),
-      lit(scoreBands - 1))
-  /** sticky per-store banding marker (queue manifest props) */
-  private val bandsKey = "queue.scoreBands"
-  private def bandsProp: Map[String, String] =
-    Map(bandsKey -> scoreBands.toString)
+    least(greatest(floor($"score" * SparkFrontier.ScoreBands).cast(IntegerType), lit(0)),
+      lit(SparkFrontier.ScoreBands - 1))
   private def withBand(df: DataFrame): DataFrame =
     df.withColumn("band", bandExpr)
 
@@ -329,8 +309,7 @@ final class SparkFrontier(
       .withColumn("depth", lit(0))
       .withColumn("crawl_at", lit(0L))
       .select(queueSchema.fieldNames.map(col): _*)
-    queue.append(withBand(df), epoch, Map("seeds" -> seedUrls.length.toLong),
-      props = bandsProp)
+    queue.append(withBand(df), epoch, Map("seeds" -> seedUrls.length.toLong))
   }
 
   /** Discovery seed bootstrap (reference process_seeds,
@@ -354,8 +333,7 @@ final class SparkFrontier(
       .withColumn("depth", lit(0))
       .withColumn("crawl_at", lit(0L))
       .select(queueSchema.fieldNames.map(col): _*)
-    queue.append(withBand(df), epoch,
-      Map("robots_probes" -> probes.length.toLong), props = bandsProp)
+    queue.append(withBand(df), epoch, Map("robots_probes" -> probes.length.toLong))
   }
 
   /** Seed injection from a DataFrame with a `url` column (streaming /
@@ -379,7 +357,7 @@ final class SparkFrontier(
       .select((queueSchema.fieldNames.map(col) :+ sbucketCol($"fingerprint").as("sbucket")): _*)
       .cache()
     queue.append(withBand(fresh.select(queueSchema.fieldNames.map(col): _*)),
-      epoch, props = props ++ bandsProp)
+      epoch, props = props)
     val updates = fresh
       .select($"fingerprint", lit(graft.local.States.Queued).as("state"), $"sbucket")
       .select(statesSchema.fieldNames.map(col): _*)
@@ -650,11 +628,9 @@ final class SparkFrontier(
       .orderBy(monotonically_increasing_id().desc)
     val up = up0.withColumn("__rn", row_number().over(lastW))
       .filter($"__rn" === 1).drop("__rn")
-    // the dequeue's one-time legacy/re-band migration must run here too:
-    // on a legacy band-less store bandOf = -1 never matches the computed
-    // band (rewritten rows would duplicate their never-removed source
-    // file), and under a CHANGED scoreBands a removed file can hold rows
-    // whose new band is untouched (silent row loss)
+    // the dequeue's one-time legacy migration must run here too: on a
+    // legacy band-less store bandOf = -1 never matches the computed band
+    // (rewritten rows would duplicate their never-removed source file)
     val m = ensureBandLayout()
     val buckets = up.select($"__pid").distinct().as[Int].collect().toSet
       .intersect(m.bucketPaths.keySet)
@@ -701,7 +677,7 @@ final class SparkFrontier(
       .withColumn("created_at", pmod(xxhash64(col("url")), lit(1L << 40)))
       .withColumn("crawl_at", lit(0L))
       .select(queueSchema.fieldNames.map(col): _*)
-    queue.append(withBand(rows), epoch, props = bandsProp)
+    queue.append(withBand(rows), epoch)
   }
 
   /** One-time band-layout migration, shared by every queue
@@ -709,22 +685,14 @@ final class SparkFrontier(
     * (pre-banded) queue paths have no band= level and can't be
     * band-pruned or band-rewritten — migrate them into the banded
     * layout once (a store written by an older build resumes losslessly).
-    * Likewise, a store written under a DIFFERENT scoreBands setting:
-    * its band ids map to different score ranges, so the prefix planner
-    * would prune wrongly — re-band everything once. Returns a manifest
-    * whose paths are all banded under the current scoreBands. */
+    * Returns a manifest whose paths are all banded. */
   private def ensureBandLayout(): queue.Manifest = {
     var m = queue.readManifest()
-    val rebandAll =
-      m.props.get(bandsKey).map(_.toInt).getOrElse(100) != scoreBands &&
-        m.bucketPaths.nonEmpty
-    val legacyPaths = m.bucketPaths.valuesIterator.flatten
-      .filter(p => rebandAll || queue.bandOf(p) < 0).toSet
+    val legacyPaths = m.bucketPaths.valuesIterator.flatten.filter(queue.bandOf(_) < 0).toSet
     if (legacyPaths.nonEmpty) {
       queue.replacePaths(withBand(queue.readPaths(spark, legacyPaths.toSeq)),
         m.epoch, legacyPaths,
-        counters = Map("migrated_legacy_paths" -> legacyPaths.size.toLong),
-        props = bandsProp)
+        counters = Map("migrated_legacy_paths" -> legacyPaths.size.toLong))
       m = queue.readManifest()
     }
     m
@@ -927,20 +895,14 @@ final class SparkFrontier(
       def visKeyed(keys: Column*): WindowSpec =
         Window.partitionBy(keys: _*).orderBy(orderCols: _*)
       if (maxPerHost > 0) {
-        require(hostSalts == 1 || maxPerHost % hostSalts == 0,
-          s"maxPerHost=$maxPerHost must divide evenly across hostSalts=$hostSalts")
-        val (hw, perGroupCap) =
-          if (hostSalts > 1) {
-            val salt = pmod(xxhash64($"fingerprint"), lit(hostSalts))
-            (visKeyed(slotKeys :+ salt :+ $"__vis": _*), maxPerHost / hostSalts)
-          } else (visKeyed(slotKeys :+ $"__vis": _*), maxPerHost)
+        val hw = visKeyed(slotKeys :+ $"__vis": _*)
         val rankVisW =
           if (globalOrder) visKeyed($"__capped")
           else visKeyed($"partition_id", $"__capped")
         scanned
           .withColumn("__hrank",
             when($"__vis", row_number().over(hw)).otherwise(lit(Int.MaxValue)))
-          .withColumn("__capped", $"__vis" && $"__hrank" <= perGroupCap)
+          .withColumn("__capped", $"__vis" && $"__hrank" <= maxPerHost)
           .withColumn("__rank",
             when($"__capped", row_number().over(rankVisW))
               .otherwise(lit(Int.MaxValue)))
@@ -1542,8 +1504,7 @@ final class SparkFrontier(
     def commitQueue(): Unit =
       if ((nScheduled > 0 || revisitIntervalEpochs.isDefined) &&
           queue.readManifest().epoch < epochNo)
-        queue.append(withBand(toAppend), epochNo, Map("scheduled" -> nScheduled),
-          props = bandsProp)
+        queue.append(withBand(toAppend), epochNo, Map("scheduled" -> nScheduled))
 
     // domain_metadata delta (A4/J2/§2.7): per-domain queued_pages bump,
     // robots bodies fetched this epoch, capped subdomain set, fatal
@@ -1703,6 +1664,10 @@ final class SparkFrontier(
 }
 
 object SparkFrontier {
+  /** Score bands per unit score in the queue's file layout: the
+    * reference's 0.01 rowkey interval (hbase/__init__.py:129-196). */
+  val ScoreBands = 100
+
   /** `df` with its rows read by Spark tasks. When every leaf of its plan
     * is a local relation (rows the driver holds, e.g. a `Seq.toDF`),
     * Spark's optimizer folds a projection over it into a new local

@@ -123,6 +123,38 @@ class BandedDequeueSpec extends AnyFunSuite {
     assert(f.nextBatch(3).count() == 3)
   }
 
+  test("compaction folds a one-file band whose deleted rows reach its live rows") {
+    val f = new SparkFrontier(spark, Files.createTempDirectory("graft-fold").toString,
+      partitions = 1, stateBuckets = 1, strategy = ScoreStrategy.BFS, globalOrder = true)
+    // 10 URLs of one host at one score: one bucket, one band, one file
+    f.bulkSchedule(spark.range(10).select(concat(lit("http://fold.com/p/"), $"id").as("url"),
+      lit(0.5).as("score"), lit(0).as("depth")))
+    val Seq(p) = f.queue.readManifest().bucketPaths.values.flatten.toSeq
+    assert(f.queue.readManifest().pathFiles(p).size == 1, "fixture: one file")
+    def drain(n: Int): BucketStore#Manifest = {
+      assert(f.nextBatch(n).count() == n)
+      f.awaitQueueCommit()
+      f.queue.readManifest()
+    }
+    // drained past half: 6 rows deleted, 4 live
+    val drained = drain(6)
+    assert(drained.deletedRows(p) == 6 && drained.liveRows(p).contains(4L))
+    val live = f.queue.read(spark).collect().toSet
+    assert(f.compactQueue() == 1, "1 path + 1 deletes is under the file bound")
+    val folded = f.queue.readManifest()
+    val Seq(q) = folded.bucketPaths.values.flatten.toSeq
+    assert(q != p && folded.pathDeletes.isEmpty && folded.pathRows(q) == 4)
+    assert(!Files.readString(java.nio.file.Paths.get(f.queue.root, "manifest",
+      s"m${folded.version}.json")).contains("\"deletes\""))
+    assert(f.queue.read(spark).collect().toSet == live && f.queueSize() == 4)
+    // 1 deleted of 3 live stays; 2 deleted of 2 live folds
+    drain(1)
+    assert(f.compactQueue() == 0)
+    assert(drain(1).deletedRows(q) == 2)
+    assert(f.compactQueue() == 1 && f.queue.readManifest().pathDeletes.isEmpty)
+    assert(f.queueSize() == 2 && f.queue.read(spark).count() == 2)
+  }
+
   test("legacy band-less queue layout migrates on first dequeue, loses nothing") {
     val root = Files.createTempDirectory("graft-legacy").toString
     // simulate a store written by a pre-banded build: same root, same
@@ -162,46 +194,6 @@ class BandedDequeueSpec extends AnyFunSuite {
     val m = f.queue.readManifest()
     assert(m.bucketPaths.valuesIterator.flatten.forall(p => f.queue.bandOf(p) >= 0),
       "all paths banded after migration")
-  }
-
-  test("scoreBands knob: a store opened under different banding re-bands once, loses nothing") {
-    val root = Files.createTempDirectory("graft-reband").toString
-    val f100 = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.BFS, globalOrder = false)
-    f100.bulkSchedule(spark.range(300).select(
-      concat(lit("http://rb"), $"id" % 12, lit(".com/p/"), $"id").as("url"),
-      (($"id" % 100).cast("double") / 100.0).as("score"), lit(0).as("depth")))
-
-    // reopen at 20 bands: first dequeue re-bands the whole store once
-    val f20 = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.BFS, globalOrder = false,
-      scoreBands = 20)
-    var drained = Vector.empty[(Double, String)]
-    var continue = true
-    while (continue) {
-      val b = f20.nextBatch(10).select($"score", $"url").as[(Double, String)].collect()
-      if (b.isEmpty) continue = false else drained ++= b
-    }
-    assert(drained.length == 300 && drained.map(_._2).distinct.size == 300,
-      s"re-banding must not lose or duplicate rows: ${drained.length}")
-    f20.awaitQueueCommit()
-    val m = f20.queue.readManifest()
-    assert(m.props.get("queue.scoreBands").contains("20"), m.props.toString)
-    // a THIRD open at the same 20 bands must not re-migrate
-    val f20b = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
-      strategy = ScoreStrategy.BFS, globalOrder = false,
-      scoreBands = 20)
-    f20b.bulkSchedule(spark.range(5).select(
-      concat(lit("http://rb0.com/q/"), $"id").as("url"),
-      lit(0.31).as("score"), lit(0).as("depth")))
-    assert(f20b.nextBatch(5).count() == 5)
-    f20b.awaitQueueCommit()
-    val m2 = f20b.queue.readManifest()
-    assert(m2.bucketPaths.valuesIterator.flatten
-      .forall(p => f20b.queue.bandOf(p) >= 0 && f20b.queue.bandOf(p) < 20),
-      "all paths banded within [0, 20) after migration")
-    assert(m2.counters.get("migrated_legacy_paths").isEmpty,
-      "same-banding reopen must not migrate again")
   }
 
   test("A3 deepening: capped hot host does not starve the batch (min_hosts diversity)") {

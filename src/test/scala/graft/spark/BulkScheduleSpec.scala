@@ -19,13 +19,13 @@ class BulkScheduleSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  // 40 hosts over 4 buckets, scores over 10 bands, two depths
+  // 40 hosts over 4 buckets, scores over the first 10 bands, two depths
   private val rows = (0 until 800).map(i =>
-    (s"http://h${i % 40}.example/p/$i", (i % 97) / 97.0, i % 2))
+    (s"http://h${i % 40}.example/p/$i", (i % 97) / 970.0, i % 2))
 
   private def frontier(s: SparkSession = spark) =
     new SparkFrontier(s, Files.createTempDirectory("graft-bulk").toString,
-      partitions = 4, stateBuckets = 4, scoreBands = 10)
+      partitions = 4, stateBuckets = 4)
 
   /** the queue's rows with their band (the leaf dir level), by count */
   private def queueRows(f: SparkFrontier): Map[Row, Int] = {

@@ -25,13 +25,11 @@ class DequeueCommitSpec extends AnyFunSuite {
 
   private def frontier(s: SparkSession = spark, globalOrder: Boolean = false,
       blacklist: Set[String] = Set.empty, flowControl: Boolean = false,
-      ordering: QueueOrdering = QueueOrdering.ScoreCreated, maxPerHost: Int = 0,
-      hostSalts: Int = 1) =
+      ordering: QueueOrdering = QueueOrdering.ScoreCreated, maxPerHost: Int = 0) =
     new SparkFrontier(s, Files.createTempDirectory("graft-dqc").toString,
       partitions = 4, stateBuckets = 4, strategy = ScoreStrategy.BFS,
       globalOrder = globalOrder, domainsBlacklist = blacklist,
-      flowControl = flowControl, ordering = ordering, maxPerHost = maxPerHost,
-      hostSalts = hostSalts)
+      flowControl = flowControl, ordering = ordering, maxPerHost = maxPerHost)
 
   private object Aqe extends AdaptiveSparkPlanHelper
   /** the shuffles of `df`'s executed plan and of the cached plans it reads */
@@ -127,7 +125,6 @@ class DequeueCommitSpec extends AnyFunSuite {
       "default order" -> frontier(),
       "globalOrder" -> frontier(globalOrder = true),
       "maxPerHost" -> frontier(maxPerHost = 2),
-      "maxPerHost over 2 salts" -> frontier(maxPerHost = 2, hostSalts = 2),
       // a created_at ordering reads every band
       "FIFO" -> frontier(ordering = QueueOrdering.Fifo))
     cases.foreach { case (name, f) =>
@@ -160,7 +157,7 @@ class DequeueCommitSpec extends AnyFunSuite {
     val batch = f.nextBatch(100)
     assert(shuffles(batch).nonEmpty, "the slot window's exchange")
     val model = DequeueModel.batch(DequeueModel.Case(queued, 2, QueueOrdering.ScoreCreated,
-      globalOrder = false, maxPerHost = 4, hostSalts = 1, blacklist = Set.empty, budget = 100,
+      globalOrder = false, maxPerHost = 4, blacklist = Set.empty, budget = 100,
       now = f.epoch), r => resolver(r.host))
     assert(batch.as[DequeueModel.QRow].collect().toSeq.sortBy(_.url) == model.sortBy(_.url))
     assert(model.size == 8, "fixture: the co-hosted hostnames share one budget of 4")

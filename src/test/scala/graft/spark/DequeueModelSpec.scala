@@ -4,22 +4,19 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-import org.apache.spark.sql.types.StringType
-import org.apache.spark.unsafe.types.UTF8String
 import graft.local.QueueOrdering
 import java.nio.file.Files
 
 /** The dequeue's rank rule in plain Scala, over a whole queue: per bucket
   * (or over every bucket under `globalOrder`) the visible rows in
-  * `batchOrder` + url, each politeness slot (and salt) capped, blacklisted
+  * `batchOrder` + url, each politeness slot capped, blacklisted
   * hosts dropped, the budget taken. */
 object DequeueModel {
   final case class QRow(fingerprint: String, url: String, host: String, partition_id: Int,
       score: Double, created_at: Long, depth: Int, crawl_at: Long)
 
   final case class Case(rows: Seq[QRow], buckets: Int, ordering: QueueOrdering,
-      globalOrder: Boolean, maxPerHost: Int, hostSalts: Int, blacklist: Set[String],
+      globalOrder: Boolean, maxPerHost: Int, blacklist: Set[String],
       budget: Int, now: Long)
 
   def order(o: QueueOrdering): Ordering[QRow] = {
@@ -36,11 +33,6 @@ object DequeueModel {
     }
   }
 
-  /** Spark's `pmod(xxhash64(fingerprint), salts)` */
-  def salt(fingerprint: String, salts: Int): Long =
-    Math.floorMod(XxHash64Function.hash(UTF8String.fromString(fingerprint), StringType, 42L),
-      salts.toLong)
-
   def blacklisted(c: Case)(r: QRow): Boolean =
     c.blacklist.map(_.toLowerCase).contains(r.host.toLowerCase)
 
@@ -50,8 +42,7 @@ object DequeueModel {
     val visible = c.rows.filter(r => !blacklisted(c)(r) && r.crawl_at <= c.now)
     val capped =
       if (c.maxPerHost == 0) visible
-      else visible.groupBy(r => (slot(r), salt(r.fingerprint, c.hostSalts))).values
-        .flatMap(_.sorted(ord).take(c.maxPerHost / c.hostSalts)).toSeq
+      else visible.groupBy(slot).values.flatMap(_.sorted(ord).take(c.maxPerHost)).toSeq
     val ranked = if (c.globalOrder) Seq(capped) else capped.groupBy(_.partition_id).values.toSeq
     ranked.flatMap(_.sorted(ord).take(c.budget))
   }
@@ -65,7 +56,6 @@ object DequeueModel {
       QueueOrdering.ScoreCreatedDesc, QueueOrdering.Fifo, QueueOrdering.Lifo)
     globalOrder <- Gen.oneOf(false, true)
     maxPerHost <- Gen.oneOf(0, 0, 2, 4)
-    hostSalts <- if (maxPerHost == 4) Gen.oneOf(1, 2) else Gen.const(1)
     blacklist <- Gen.oneOf(Set.empty[String], Set("H1.example"))
     budget <- Gen.choose(1, 8)
     n <- Gen.choose(0, 48)
@@ -78,7 +68,7 @@ object DequeueModel {
       val url = s"http://$host/p/$i"
       QRow(graft.core.Hashing.urlFingerprint(url), url, host,
         graft.core.Hashing.crc32Partition(host, buckets), score, created, 0, crawlAt)
-    }, buckets, ordering, globalOrder, maxPerHost, hostSalts, blacklist, budget, now = 3L)
+    }, buckets, ordering, globalOrder, maxPerHost, blacklist, budget, now = 3L)
 }
 
 /** `nextBatch` against `DequeueModel` over seeded random queues: three
@@ -95,11 +85,12 @@ class DequeueModelSpec extends AnyFunSuite {
   def frontierOf(c: Case, ipResolver: Option[String => String] = None): SparkFrontier = {
     val f = new SparkFrontier(spark, Files.createTempDirectory("graft-dqm").toString,
       partitions = c.buckets, stateBuckets = 2, strategy = ScoreStrategy.BFS,
-      globalOrder = c.globalOrder, maxPerHost = c.maxPerHost, hostSalts = c.hostSalts,
+      globalOrder = c.globalOrder, maxPerHost = c.maxPerHost,
       domainsBlacklist = c.blacklist, ordering = c.ordering, ipResolver = ipResolver)
     if (c.rows.nonEmpty)
       f.queue.append(c.rows.toDF().withColumn("band",
-        least(greatest(floor($"score" * f.scoreBands).cast("int"), lit(0)), lit(f.scoreBands - 1))), 0L)
+        least(greatest(floor($"score" * SparkFrontier.ScoreBands).cast("int"), lit(0)),
+          lit(SparkFrontier.ScoreBands - 1))), 0L)
     f
   }
 
@@ -107,9 +98,9 @@ class DequeueModelSpec extends AnyFunSuite {
     val cases = (0 until 24).flatMap(i => genCase(Gen.Parameters.default, Seed(800L + i)))
     assert(cases.size == 24)
     assert(cases.exists(_.maxPerHost > 0) && cases.exists(_.globalOrder) &&
-      cases.exists(_.buckets == 4) && cases.exists(_.hostSalts == 2) &&
-      cases.exists(_.blacklist.nonEmpty) && cases.map(_.ordering).distinct.size == 5,
-      "fixture: the seeds cover caps, salts, a blacklist, both scopes and every ordering")
+      cases.exists(_.buckets == 4) && cases.exists(_.blacklist.nonEmpty) &&
+      cases.map(_.ordering).distinct.size == 5,
+      "fixture: the seeds cover caps, a blacklist, both scopes and every ordering")
     cases.foreach { c =>
       val f = frontierOf(c)
       // the model's queue before each batch: the prefill, then the rows

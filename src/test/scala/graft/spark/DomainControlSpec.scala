@@ -135,30 +135,6 @@ class DomainControlSpec extends AnyFunSuite {
     assert(row.toList == List(0.01), s"last update wins: ${row.toList}")
   }
 
-  test("updateScores on a store written under a different scoreBands re-bands first (no row loss)") {
-    val root = Files.createTempDirectory("graft-upreband").toString
-    val f50 = new SparkFrontier(spark, root, partitions = 2, stateBuckets = 2,
-      strategy = ScoreStrategy.BFS, globalOrder = true,
-      scoreBands = 50)
-    f50.bulkSchedule(spark.range(20).select(
-      concat(lit("http://rb.com/p/"), $"id").as("url"),
-      (($"id" % 10).cast("double") / 10.0).as("score"), lit(0).as("depth")))
-    // reopen under the default 100-band layout and update scores BEFORE
-    // any nextBatch: the on-disk band dirs still reflect scoreBands=50,
-    // so without the migration a removed file could hold rows whose
-    // 100-band id is untouched (dropped from the rewrite = row loss)
-    val f100 = new SparkFrontier(spark, root, partitions = 2, stateBuckets = 2,
-      strategy = ScoreStrategy.BFS, globalOrder = true)
-    val n = f100.updateScores(
-      Seq(("http://rb.com/p/7", 0.05)).toDF("url", "score"))
-    assert(n == 1L)
-    assert(f100.queueSize() == 20,
-      "re-band-then-update must preserve every queued row")
-    val sc = f100.queue.read(spark).filter($"url" === "http://rb.com/p/7")
-      .select($"score").as[Double].collect()
-    assert(sc.toList == List(0.05))
-  }
-
   test("MAX_SITEMAPS: sub-sitemap probes per parent capped, ordinary links unaffected") {
     val root = Files.createTempDirectory("graft-maxsm").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,

@@ -1,7 +1,7 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
@@ -101,6 +101,9 @@ class ManifestSpec extends AnyFunSuite {
       yield (s"http://h$h.example/p$b", (b + 0.5) / 100, 0)
     f.bulkSchedule(rows.toDF("url", "score", "depth"))
     assert(f.queue.readManifest().bucketPaths.valuesIterator.flatten.size > 32)
+    f.states.append(rows.zipWithIndex.map { case ((u, _, _), i) => (u, 1, i % 4) }
+      .toDF("fingerprint", "state", "sbucket"), 1)
+    assert(f.states.readManifest().bucketPaths.size == 4)
     assert(s.conf.getAll == before)
 
     // jobs of this thread's group; a marker job ends the count, since the
@@ -116,7 +119,8 @@ class ManifestSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "plan")
-      f.queue.read(s).queryExecution.optimizedPlan
+      Seq(f.queue.read(s), f.queue.readVersioned(s), f.queue.readBuckets(s, Some(Set(0, 1))),
+        f.states.readAt(s, f.states.readManifest())).foreach(_.queryExecution.optimizedPlan)
       sc.setJobGroup(group, "marker")
       sc.parallelize(Seq(1), 1).count()
       val jobs = Iterator.continually(Option(started.poll(60, java.util.concurrent.TimeUnit.SECONDS))
@@ -130,15 +134,107 @@ class ManifestSpec extends AnyFunSuite {
     assert(f.queueSize() == rows.size)
   }
 
+  test("a read planned from a manifest with file lists lists no directory") {
+    val s = SparkTestBase.spark.newSession()
+    import s.implicits._
+    // the reads' Hadoop file system counts its listings
+    s.conf.set("fs.file.impl", classOf[ListCountingFileSystem].getName)
+    s.conf.set("fs.file.impl.disable.cache", "true")
+    val f = new SparkFrontier(s, Files.createTempDirectory("graft-nolist").toString,
+      partitions = 4, stateBuckets = 4)
+    f.bulkSchedule((0 until 200).map(i => (s"http://h${i % 8}.example/p$i", (i % 20) / 100.0, 0))
+      .toDF("url", "score", "depth"))
+    f.states.append((0 until 50).map(i => (s"fp-$i", 1, i % 4))
+      .toDF("fingerprint", "state", "sbucket"), 1)
+    // the listings of a read's planning and execution
+    def listings(read: => DataFrame): Int = {
+      val before = ListCountingFileSystem.calls.get
+      read.count()
+      ListCountingFileSystem.calls.get - before
+    }
+    val reads: Seq[() => DataFrame] = Seq(() => f.queue.read(s), () => f.queue.readVersioned(s),
+      () => f.queue.readBuckets(s, Some(Set(0, 1))),
+      () => f.states.readAt(s, f.states.readManifest()))
+    reads.foreach(r => assert(listings(r()) == 0))
+    // without file lists, as written before them, the same reads list
+    // their leaves
+    Seq(f.queue, f.states).foreach { store =>
+      val file = Paths.get(store.root, "manifest", s"m${store.currentVersion}.json")
+      Files.writeString(file, store.manifestJson(store.readManifest().copy(pathFiles = Map.empty)))
+    }
+    reads.foreach(r => assert(listings(r()) > 0))
+  }
+
+  /** a store of one path holding one file of `n` rows: the store, the
+    * path and the file's name */
+  private def onePath(n: Int): (BucketStore, String, String) = {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val s = new BucketStore(Files.createTempDirectory("graft-hostile").toString, "bucket", 1)
+    s.emptySchema = Some(StructType(Seq(StructField("fingerprint", StringType),
+      StructField("bucket", IntegerType))))
+    s.append((0 until n).map(i => (s"fp-$i", 0)).toDF("fingerprint", "bucket"), 1)
+    val Seq((p, files)) = s.readManifest().pathFiles.toSeq
+    val Seq(name) = files.keys.toSeq
+    (s, p, name)
+  }
+
+  /** `s` reopened after its current manifest's deletes became `deletes` */
+  private def withDeletes(s: BucketStore,
+      deletes: Map[String, Map[String, BucketStore.Deletes]]): BucketStore = {
+    val file = Paths.get(s.root, "manifest", s"m${s.currentVersion}.json")
+    Files.writeString(file, s.manifestJson(s.readManifest().copy(pathDeletes = deletes)))
+    val reopened = new BucketStore(s.root, s.bucketCol, s.buckets)
+    reopened.emptySchema = s.emptySchema
+    reopened
+  }
+
+  /** the messages of `e` and of its causes */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+
+  test("a delete of a file its path does not list fails the manifest parse, naming both") {
+    val (s, p, name) = onePath(4)
+    val dv = BucketStore.Deletes.of(org.roaringbitmap.RoaringBitmap.bitmapOf(1))
+    assert(withDeletes(s, Map(p -> Map(name -> dv))).readManifest().deletedRows(p) == 1)
+    val e = intercept[IllegalStateException](
+      withDeletes(s, Map(p -> Map("part-gone.parquet" -> dv))).readManifest())
+    assert(e.getMessage.contains(s"m${s.currentVersion}.json") &&
+      e.getMessage.contains(s"$p/part-gone.parquet"), e.getMessage)
+  }
+
+  test("a delete position past its file's rows fails the read, naming the file") {
+    val spark = SparkTestBase.spark
+    val (s, p, name) = onePath(4)
+    def deleting(pos: Int) = withDeletes(s,
+      Map(p -> Map(name -> BucketStore.Deletes.of(org.roaringbitmap.RoaringBitmap.bitmapOf(pos)))))
+    assert(deleting(3).read(spark).count() == 3, "the last row's position deletes it")
+    val e = intercept[Exception](deleting(4).read(spark).collect())
+    assert(messages(e).contains(name) && messages(e).contains("position 4"), messages(e))
+  }
+
+  test("a delete whose bitmap differs from its recorded cardinality fails the read, naming the file") {
+    val spark = SparkTestBase.spark
+    val (s, p, name) = onePath(4)
+    val dv = BucketStore.Deletes.of(org.roaringbitmap.RoaringBitmap.bitmapOf(0, 2))
+    val hostile = withDeletes(s, Map(p -> Map(name -> dv.copy(cardinality = 3))))
+    assert(hostile.readManifest().liveRows(p).contains(1L), "fixture: the manifest counts 1 live row")
+    val e = intercept[Exception](hostile.read(spark).collect())
+    assert(messages(e).contains(name) && messages(e).contains("records 3"), messages(e))
+  }
+
   test("deletes name referenced files through append, dequeue, replacePaths, compact and a full drain") {
     val spark = SparkTestBase.spark
     import spark.implicits._
     val f = new SparkFrontier(spark, Files.createTempDirectory("graft-deletes").toString,
       partitions = 4, stateBuckets = 4)
     val s = f.queue
+    def commitOf(p: String): Long =
+      p.split('/').find(_.startsWith("commit=")).get.stripPrefix("commit=").toLong
     // every delete names a file the manifest references and holds at
     // most its rows; live rows equal a read of each path and add up to
-    // queueSize; the document writes back byte for byte
+    // queueSize; a versioned read holds the live rows, each with the
+    // commit of its path; the document writes back byte for byte
     def check(what: String): Unit = {
       f.awaitQueueCommit()
       val m = s.readManifest()
@@ -154,6 +250,12 @@ class ManifestSpec extends AnyFunSuite {
       referenced.foreach(p =>
         assert(m.liveRows(p).contains(s.readPaths(spark, Seq(p)).count()), s"$what: $p"))
       assert(f.queueSize() == s.read(spark).count(), what)
+      val versioned = s.readVersioned(spark).collect().toSeq
+        .map(r => (Row.fromSeq(r.toSeq.init), r.getAs[Long](BucketStore.CommitCol)))
+      assert(versioned.size == f.queueSize(), what)
+      val byPath = referenced.toSeq.flatMap(p =>
+        s.readPaths(spark, Seq(p)).collect().map(_ -> commitOf(p)))
+      assert(DequeueModel.multiset(versioned) == DequeueModel.multiset(byPath), what)
       val json = Files.readString(Paths.get(s.root, "manifest", s"m${m.version}.json"))
       assert(s.manifestJson(s.parseManifest(m.version, json, "m.json")) == json, what)
       assert(json.contains("\"deletes\"") == m.pathDeletes.nonEmpty, what)
@@ -294,4 +396,16 @@ class ManifestSpec extends AnyFunSuite {
       assert(s.read(spark).collect().toSet == rowsNow)
     }
   }
+}
+
+/** The local file system, counting the `listStatus` calls of every
+  * instance. */
+class ListCountingFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
+  override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    ListCountingFileSystem.calls.incrementAndGet()
+    super.listStatus(p)
+  }
+}
+object ListCountingFileSystem {
+  val calls = new java.util.concurrent.atomic.AtomicInteger
 }

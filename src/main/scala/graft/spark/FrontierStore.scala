@@ -334,7 +334,12 @@ final class BucketStore(val root: String, val bucketCol: String,
       val (p, name, _) = files(i)
       m.pathDeletes.get(p).flatMap(_.get(name)).map(i -> _)
     }.toMap
-    val reader = BucketStore.positioned(parquet, numbers, deleted)
+    // each path with a row count: its files' numbers and that count, by
+    // its last file's number
+    val pathRows = files.indices.groupBy(i => files(i)._1).collect {
+      case (p, ids) if m.pathRows.contains(p) => ids.max -> (ids, m.pathRows(p))
+    }
+    val reader = BucketStore.positioned(parquet, numbers, deleted, pathRows)
     val tags = StructType(Seq(StructField(BucketStore.FileCol, IntegerType, nullable = false),
       StructField(BucketStore.PosCol, IntegerType, nullable = false)))
     val rdd = new FileScanRDD(classic, reader,
@@ -397,15 +402,17 @@ final class BucketStore(val root: String, val bucketCol: String,
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = BucketStore.footerEc
+    val conf = BucketStore.hadoopConf()
     Await.result(
       Future.traverse(leafPaths) { case (bucket, p) => Future {
-        val (rows, mx, files) = footerStats(p)
+        val (rows, mx, files) = footerStats(p, conf)
         LeafDir(bucket, s"$root/${rel(p)}", rows, mx, files)
       }},
       Duration.Inf)
   }
 
-  private def footerStats(dir: Path): (Long, Option[Long], Map[String, Long]) = {
+  private def footerStats(dir: Path, conf: org.apache.hadoop.conf.Configuration)
+      : (Long, Option[Long], Map[String, Long]) = {
     var rows = 0L
     var mx: Option[Long] = statCol.map(_ => Long.MinValue)
     val files = Map.newBuilder[String, Long]
@@ -413,7 +420,6 @@ final class BucketStore(val root: String, val bucketCol: String,
       .filter(p => p.getFileName.toString.endsWith(".parquet"))
       .foreach { p =>
         val hpath = new org.apache.hadoop.fs.Path(p.toUri)
-        val conf = new org.apache.hadoop.conf.Configuration()
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hpath, conf)
         files += p.getFileName.toString -> in.getLength
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -498,19 +504,23 @@ final class BucketStore(val root: String, val bucketCol: String,
   /** Append rows (must contain bucketCol and, when banded, bandCol).
     * Untouched buckets unchanged. */
   def append(df: DataFrame, epoch: Long, counters: Map[String, Long] = Map.empty,
-      props: Map[String, String] = Map.empty): Unit =
-    replacePaths(df, epoch, Set.empty, counters, props)
+      props: Map[String, String] = Map.empty, beforeFlip: () => Unit = () => ()): Unit =
+    replacePaths(df, epoch, Set.empty, counters, props, beforeFlip)
 
   /** Replace only the named leaf dirs: the new manifest drops
     * `removePaths` and adds whatever `df` writes, leaving every other
-    * path untouched. */
+    * path untouched. `beforeFlip` runs once the data is written, before
+    * the manifest flips: if it throws, the commit does not happen and its
+    * data dir is an orphan, which the next write clears. */
   def replacePaths(df: DataFrame, epoch: Long, removePaths: Set[String],
       counters: Map[String, Long] = Map.empty,
-      props: Map[String, String] = Map.empty): Unit =
+      props: Map[String, String] = Map.empty, beforeFlip: () => Unit = () => ()): Unit =
     withCommitLock {
       val m = readManifest()
       val v = m.version + 1
-      commitReplaced(m, v, epoch, writeEpochData(df, v), removePaths, counters, props)
+      val written = writeEpochData(df, v)
+      beforeFlip()
+      commitReplaced(m, v, epoch, written, removePaths, counters, props)
     }
 
   /** Delete rows that a `readPaths(paths, positions = true)` read
@@ -527,8 +537,7 @@ final class BucketStore(val root: String, val bucketCol: String,
       props: Map[String, String] = Map.empty): Unit =
     withCommitLock {
       val m = readManifest()
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(BucketStore.hadoopConf())
       val files = filesOf(m, paths, fs)
       val bucketOf = m.bucketPaths.iterator.flatMap { case (b, ps) => ps.map(_ -> b) }.toMap
       var rows = m.pathRows
@@ -682,11 +691,24 @@ object BucketStore {
     * by the file's URL-encoded path) and its position in the file. A
     * delete whose bitmap does not hold its recorded cardinality, or
     * names a position past the file's rows, fails the read naming the
-    * file. */
+    * file. `pathRows` holds, by the number of a path's last file, the
+    * numbers of the path's files and the path's row count: once a task
+    * has decoded them all, another count fails the read naming the file
+    * (the parquet reader reads the row groups whose midpoint lies within
+    * the recorded length, so a length shorter than the file's can drop
+    * rows). */
   private def positioned(read: PartitionedFile => Iterator[InternalRow],
-      numbers: Map[String, Int], deleted: Map[Int, Deletes])
-      : PartitionedFile => Iterator[InternalRow] = { file =>
-    val number = numbers(file.urlEncodedPath)
+      numbers: Map[String, Int], deleted: Map[Int, Deletes],
+      pathRows: Map[Int, (Seq[Int], Long)]): PartitionedFile => Iterator[InternalRow] = {
+    // rows decoded per file number, by the task this function runs in
+    val decoded = scala.collection.mutable.Map.empty[Int, Long]
+    file => positionedFile(read, file, numbers(file.urlEncodedPath), deleted, pathRows, decoded)
+  }
+
+  private def positionedFile(read: PartitionedFile => Iterator[InternalRow],
+      file: PartitionedFile, number: Int, deleted: Map[Int, Deletes],
+      pathRows: Map[Int, (Seq[Int], Long)],
+      decoded: scala.collection.mutable.Map[Int, Long]): Iterator[InternalRow] = {
     def hostile(what: String) =
       new IllegalStateException(s"deletes of ${file.urlEncodedPath}: $what")
     val skip = deleted.get(number).fold(new RoaringBitmap) { d =>
@@ -711,6 +733,14 @@ object BucketStore {
         }
         if (row == null && skip.hasNext)
           throw hostile(s"position ${skip.peekNext()} is past the file's ${pos + 1} rows")
+        if (row == null && !decoded.contains(number)) {
+          decoded(number) = pos + 1L
+          for ((ids, recorded) <- pathRows.get(number) if ids.forall(decoded.contains)) {
+            val held = ids.map(decoded).sum
+            if (held != recorded) throw new IllegalStateException(s"rows of ${file.urlEncodedPath}: " +
+              s"its path's ${ids.size} file(s) hold $held rows, the manifest records $recorded")
+          }
+        }
         row != null
       }
       def next(): InternalRow = {
@@ -740,6 +770,16 @@ object BucketStore {
     * OverlappingFileLockException on same-JVM re-acquisition) */
   private val heldRoots = new ThreadLocal[scala.collection.mutable.Set[String]] {
     override def initialValue() = scala.collection.mutable.Set.empty[String]
+  }
+  /** A Hadoop configuration for one commit's file access: a copy of the
+    * default resources parsed once (parsing `core-default.xml` costs
+    * milliseconds, a copy of the parsed properties a few hundredths). */
+  private[spark] def hadoopConf(): org.apache.hadoop.conf.Configuration =
+    new org.apache.hadoop.conf.Configuration(hadoopDefaults)
+  private lazy val hadoopDefaults = {
+    val c = new org.apache.hadoop.conf.Configuration()
+    c.size() // parses the default resources: a copy clones them, parsing nothing
+    c
   }
   /** bounded pool for the commit-time parquet footer walks (driver-side
     * metadata IO, independent per leaf) */

@@ -425,9 +425,11 @@ final class SparkFrontier(
   private def mergeStateUpdates(updates: DataFrame, touched: Set[Int],
       epochNo: Long, bloom: Boolean, counters: Map[String, Long],
       props: Map[String, String] = Map.empty,
-      /** delta keys prebuilt from `updates` (lets the epoch loop run
-        * the collect job concurrently with its other store commits) */
-      prebuiltDeltas: Option[Map[Int, Array[Long]]] = None)
+      /** runs once the delta is written, before the manifest flips: the
+        * epoch loop joins its other commits here (one that failed keeps
+        * the flip from happening) and returns the delta keys one of them
+        * prebuilt from `updates` */
+      beforeFlip: () => Option[Map[Int, Array[Long]]] = () => None)
       : Unit = {
     if (touched.isEmpty) return
     states.withTableLock {
@@ -436,7 +438,9 @@ final class SparkFrontier(
       // previously-committed key, so merging just this batch's keys keeps
       // it complete
       val pre = states.readManifest()
-      states.append(updates, epochNo, counters, props)
+      var prebuiltDeltas: Option[Map[Int, Array[Long]]] = None
+      states.append(updates, epochNo, counters, props,
+        beforeFlip = () => prebuiltDeltas = beforeFlip())
       if (bloom) {
         val newV = states.currentVersion
         // incremental merge of the update keys into fresh sidecars —
@@ -710,14 +714,16 @@ final class SparkFrontier(
     * (delayOnEmptyEpochs backoff); MinValue = no backoff armed */
   @volatile private var emptyBackoffUntil: Long = Long.MinValue
 
-  /** In-flight background dequeue commit, on its own short-lived thread
-    * (like processCrawled's side commits); `failure` holds what it threw. */
-  private final class QueueCommit(body: () => Unit) extends Thread("graft-queue-commit") {
+  /** A store commit on its own short-lived daemon thread (the dequeue's,
+    * `graft-queue-commit`, and an epoch's, `graft-epoch-commit`);
+    * `failure` holds what it threw. */
+  private final class CommitThread(name: String, body: () => Unit) extends Thread(name) {
     @volatile var failure: Throwable = null
     setDaemon(true)
     override def run(): Unit = try body() catch { case t: Throwable => failure = t }
   }
-  @transient @volatile private var pendingCommit: QueueCommit = null
+  /** In-flight background dequeue commit. */
+  @transient @volatile private var pendingCommit: CommitThread = null
   /** The last dequeue's scan cache: its batch is derived from it, so it is
     * dropped only at the next dequeue, when that batch has been consumed. */
   @transient private var lastTagged: DataFrame = null
@@ -1045,7 +1051,7 @@ final class SparkFrontier(
     // every queue-store entry point joins it via awaitQueueCommit() (the
     // commitGate makes the handoff atomic with those joins)
     commitGate.synchronized {
-      val c = new QueueCommit(doCommit)
+      val c = new CommitThread("graft-queue-commit", doCommit)
       c.start()
       pendingCommit = c
     }
@@ -1055,10 +1061,10 @@ final class SparkFrontier(
 
   /** Last processed-epoch marker (jid analog, worker/strategy.py:53-71):
     * replayed event batches are dropped. The marker rides in the STATES
-    * commit — the last store an epoch touches — so "marker set" implies
-    * "every store committed" with zero extra manifest flips (stores
-    * written by older builds carried it in the queue manifest; both are
-    * read). */
+    * manifest flip — which waits for every other commit of the epoch —
+    * so "marker set" implies "every store committed" with zero extra
+    * manifest flips (stores written by older builds carried it in the
+    * queue manifest; both are read). */
   private val jidKey = "jid.lastProcessed"
   def lastProcessedEpoch: Long = {
     awaitQueueCommit()
@@ -1103,6 +1109,18 @@ final class SparkFrontier(
         * redirect_from/redirect_to sets in domain_metadata (reference
         * _get_domain_after_redirects, discovery/__init__.py:478-507) */
       redirectPairs: Option[DataFrame] = None): Unit = {
+    // the commit threads the epoch starts: whatever fails, none outlives
+    // the call
+    val commits = scala.collection.mutable.ArrayBuffer.empty[CommitThread]
+    try processEpoch(pages, links, epochNo, errors, domainData, aliasSeen, redirectPairs, commits)
+    finally commits.foreach(_.join())
+  }
+
+  /** `processCrawled`'s epoch; every commit thread it starts is added to `commits`. */
+  private def processEpoch(pages: DataFrame, links: DataFrame, epochNo: Long,
+      errors: Option[DataFrame], domainData: Option[DataFrame], aliasSeen: Option[DataFrame],
+      redirectPairs: Option[DataFrame],
+      commits: scala.collection.mutable.ArrayBuffer[CommitThread]): Unit = {
     if (epochNo <= lastProcessedEpoch) return // stale replay (jid filter)
     // The batch's pages and failed fetches, collected once: at most the
     // dequeue budget of rows, which the crawler (and the log replay)
@@ -1119,6 +1137,54 @@ final class SparkFrontier(
     val aliasFps = aliasSeen.toSeq.flatMap(a =>
       fingerprints(SparkFrontier.collectInternal(a.select($"fingerprint"))))
 
+    // metadata sink (S7): one record per fetched document per epoch;
+    // failed fetches record the error string as their status
+    // (reference sqlalchemy models.py:28 `error` column). Its rows are
+    // the fetches alone, so its append starts now, beside the links
+    // pipeline (the reference's DB worker writes metadata from the spider
+    // log while the strategy worker works on the links, SURVEY §3.2)
+    def commitMetadata(): Unit =
+      if ((pageRows.nonEmpty || errorRows.nonEmpty) &&
+          metadata.readManifest().epoch < epochNo) {
+        val okMeta = pages
+          .select($"fingerprint", $"url", $"depth", $"score", $"created_at")
+          .withColumn("fetched_epoch", bound_long(epochNo))
+          .withColumn("status", lit("200"))
+        val allMeta = errors match {
+          case Some(err) =>
+            val errCreated =
+              if (err.columns.contains("created_at")) col("created_at")
+              else lit(null).cast(LongType)
+            okMeta.unionByName(
+              err.select($"fingerprint", $"url", $"depth", $"score",
+                errCreated.as("created_at"),
+                coalesce($"error", lit("error")).as("status"))
+                .withColumn("fetched_epoch", bound_long(epochNo)))
+          case None => okMeta
+        }
+        metadata.append(
+          allMeta
+            .withColumn("partition_id", host_partition(url_host($"url"), partitions))
+            .withColumn("method", lit("GET"))
+            .withColumn("meta",
+              lit(null).cast(MapType(BinaryType, BinaryType)))
+            .select(metadataSchema.fieldNames.map(col): _*),
+          epochNo)
+      }
+
+    // The epoch's store commits: one concurrent wave, each commit on its
+    // own thread; only the states manifest flip, which joins them all,
+    // comes after them (see the states merge below)
+    def startCommit(desc: String)(body: => Unit): Unit = {
+      val c = new CommitThread("graft-epoch-commit", () => labeled(desc)(body))
+      commits += c
+      c.start()
+    }
+    def joinCommits(): Unit = {
+      commits.foreach(_.join())
+      commits.map(_.failure).find(_ != null).foreach(t => throw t)
+    }
+    startCommit("metadata append")(commitMetadata())
     def isProbeUrl(u: Column): Column =
       u.endsWith("/robots.txt") || u.rlike("sitemap[^/]*\\.xml$")
     // strategy-issued probe links: the PARENT page is itself a probe
@@ -1471,10 +1537,6 @@ final class SparkFrontier(
     val touched = updStats.keySet.map(_._1)
     def nInState(state: Int): Long = updStats.collect { case ((_, s), n) if s == state => n }.sum
     val nScheduled = nInState(graft.local.States.Queued)
-    // provable-emptiness counters (skip whole commits below): a nonempty
-    // `pages`/`errors` frame always contributes CRAWLED/ERROR states
-    val nCrawledStates = nInState(graft.local.States.Crawled)
-    val nErrorStates = nInState(graft.local.States.Error)
     probeCache.foreach(_.unpersist())
 
     // revisit: crawled pages re-enter the queue, visible `interval`
@@ -1492,15 +1554,11 @@ final class SparkFrontier(
     // Per-table replay guards: each store skips commits for epochs it
     // has already applied (its manifest epoch is monotone), so a replay
     // after a crash BETWEEN the epoch's commits heals the stores that
-    // missed out without duplicating the ones that didn't. The jid
-    // marker rides in the states commit — the LAST store an epoch
-    // touches — so only a fully-applied epoch gets the fast-path drop at
-    // the top of this method. Provably-empty commits are skipped
-    // entirely (per-epoch fixed cost = manifest flips × footer walks),
-    // and the three independent side commits (queue / domain_metadata /
-    // metadata — separate stores, separate locks, all replay-guarded)
-    // run CONCURRENTLY; only the states commit must come after them all,
-    // because its jid marker asserts "epoch fully applied".
+    // missed out without duplicating the ones that didn't. Provably-empty
+    // commits are skipped entirely (per-epoch fixed cost = manifest flips
+    // × footer walks). The queue and domain_metadata appends (separate
+    // stores, separate locks, all replay-guarded) join the metadata
+    // append started above, and the states delta is written beside them.
     def commitQueue(): Unit =
       if ((nScheduled > 0 || revisitIntervalEpochs.isDefined) &&
           queue.readManifest().epoch < epochNo)
@@ -1549,69 +1607,27 @@ final class SparkFrontier(
         epochNo)
     }
 
-    // metadata sink (S7): one record per fetched document per epoch;
-    // failed fetches record the error string as their status
-    // (reference sqlalchemy models.py:28 `error` column)
-    def commitMetadata(): Unit =
-      if ((nCrawledStates > 0 || nErrorStates > 0) &&
-          metadata.readManifest().epoch < epochNo) {
-        val okMeta = pages
-          .select($"fingerprint", $"url", $"depth", $"score", $"created_at")
-          .withColumn("fetched_epoch", bound_long(epochNo))
-          .withColumn("status", lit("200"))
-        val allMeta = errors match {
-          case Some(err) =>
-            val errCreated =
-              if (err.columns.contains("created_at")) col("created_at")
-              else lit(null).cast(LongType)
-            okMeta.unionByName(
-              err.select($"fingerprint", $"url", $"depth", $"score",
-                errCreated.as("created_at"),
-                coalesce($"error", lit("error")).as("status"))
-                .withColumn("fetched_epoch", bound_long(epochNo)))
-          case None => okMeta
-        }
-        metadata.append(
-          allMeta
-            .withColumn("partition_id", host_partition(url_host($"url"), partitions))
-            .withColumn("method", lit("GET"))
-            .withColumn("meta",
-              lit(null).cast(MapType(BinaryType, BinaryType)))
-            .select(metadataSchema.fieldNames.map(col): _*),
-          epochNo)
-      }
-
-    val commitErrs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val willMergeStates = touched.nonEmpty && states.readManifest().epoch < epochNo
     // the bloom delta BUILD (a Spark job over the cached updates, no
-    // commit) also runs in the parallel window; only the persist happens
-    // under the states lock later
+    // commit) also runs in the wave; only the persist follows the flip
     @volatile var prebuiltDeltas: Option[Map[Int, Array[Long]]] = None
-    val parallelWork: Seq[() => Unit] =
-      Seq(() => labeled("queue append")(commitQueue()),
-        () => labeled("domain-metadata append")(commitDomainMeta()),
-        () => labeled("metadata append")(commitMetadata())) ++
-        (if (bloomOn && willMergeStates)
-          Seq(() => labeled("bloom delta keys")(
-            { prebuiltDeltas = Some(bloomSeen.buildDeltas(updates)) }))
-        else Nil)
-    val sideCommits = parallelWork.map(f => new Thread(() =>
-      try f() catch { case t: Throwable => commitErrs.add(t) }))
-    sideCommits.foreach(_.start())
-    sideCommits.foreach(_.join())
-    if (!commitErrs.isEmpty) throw commitErrs.peek()
+    startCommit("queue append")(commitQueue())
+    startCommit("domain-metadata append")(commitDomainMeta())
+    if (bloomOn && willMergeStates)
+      startCommit("bloom delta keys") { prebuiltDeltas = Some(bloomSeen.buildDeltas(updates)) }
 
-    // states merge commit (replay-guarded like the other stores) — the
-    // LAST commit of the epoch, so the jid marker rides in it for free:
-    // "marker set" still implies "epoch fully applied" with no extra
-    // manifest flip, and a crash anywhere earlier leaves it unset
+    // states merge commit (replay-guarded like the other stores): its
+    // delta is written beside the commits above, and its manifest flip
+    // waits for them all and happens only if they all succeeded. So the
+    // jid marker rides in it for free: "marker set" implies "epoch fully
+    // applied" with no extra manifest flip, and a failure anywhere leaves
+    // it unset
     if (willMergeStates) labeled("states merge") {
-      val nCrawled = pageRows.length.toLong
       mergeStateUpdates(updates, touched, epochNo, bloomOn,
-        Map("crawled" -> nCrawled, "queued" -> nScheduled),
+        Map("crawled" -> pageRows.length.toLong, "queued" -> nScheduled),
         props = Map(jidKey -> epochNo.toString),
-        prebuiltDeltas = prebuiltDeltas)
-    }
+        beforeFlip = () => { joinCommits(); prebuiltDeltas })
+    } else joinCommits()
 
     // A7 only: release the in-flight gauge in one final queue-manifest
     // flip (the gauge lives in the queue manifest, where the dequeue

@@ -1,10 +1,12 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.local.Graphs
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Request-error path (reference core/manager.py:572-580, ERROR=3 at
   * core/components.py:97-101), jid/epoch stale-event filtering
@@ -120,6 +122,117 @@ class ErrorAndReplaySpec extends AnyFunSuite {
     // second replay of the now-complete epoch is a full no-op
     f.processCrawled(pages3, noLinks, epochNo = 3)
     assert(f.metadata.read(spark).count() == mBefore + 1)
+  }
+
+  /** Three epochs of a small crawl on `s`: each epoch's fetched pages,
+    * their extracted links (new URLs, in-batch duplicates, links to pages
+    * already crawled) and, in the last, a failed fetch. */
+  private def crawl(s: SparkSession): Seq[(DataFrame, DataFrame, Option[DataFrame])] = {
+    import s.implicits._
+    def u(i: Int) = s"http://wave.example/$i"
+    def pages(ps: (Int, Int, Long)*) = ps.map { case (i, depth, created) =>
+      (graft.core.Hashing.urlFingerprint(u(i)), u(i), depth, 0.1 * depth, created)
+    }.toDF("fingerprint", "url", "depth", "score", "created_at")
+    // (parent depth, parent created_at, link index, link target)
+    def links(ls: (Int, Long, Int, Int)*) = ls.map { case (depth, created, idx, to) =>
+      (0.1 * depth, created, depth, idx, u(to))
+    }.toDF("parent_score", "parent_created", "parent_depth", "link_idx", "link_url")
+    val failed = Seq((graft.core.Hashing.urlFingerprint(u(8)), u(8), 2, 0.2, "fetch failed: 503"))
+      .toDF("fingerprint", "url", "depth", "score", "error")
+    Seq(
+      (pages((1, 0, 1L)), links((0, 1L, 0, 2), (0, 1L, 1, 3)), None),
+      (pages((2, 1, 10L), (3, 1, 11L)),
+        links((1, 10L, 0, 1), (1, 10L, 1, 4), (1, 11L, 0, 4), (1, 11L, 1, 5), (1, 11L, 2, 2)), None),
+      (pages((4, 2, 20L), (5, 2, 21L)), links((2, 20L, 0, 6), (2, 20L, 1, 3), (2, 21L, 0, 7)),
+        Some(failed)))
+  }
+
+  private def waveFrontier(s: SparkSession, root: String,
+      linkTransforms: Seq[DataFrame => DataFrame] = Nil) =
+    new SparkFrontier(s, root, partitions = 4, stateBuckets = 4,
+      strategy = ScoreStrategy.BFS, globalOrder = true, linkTransforms = linkTransforms)
+
+  private def applyEpochs(f: SparkFrontier, s: SparkSession, epochs: Range): Unit = {
+    val c = crawl(s)
+    for (e <- epochs) {
+      val (pages, links, errors) = c(e - 1)
+      f.processCrawled(pages, links, e, errors)
+    }
+  }
+
+  /** the seen set, the metadata rows and the queue rows */
+  private def outcome(f: SparkFrontier, s: SparkSession) =
+    (f.stateSnapshot(), f.metadata.read(s).collect().map(_.toString).sorted.toSeq,
+      f.queue.read(s).collect().map(_.toString).sorted.toSeq)
+
+  private lazy val uninterrupted = SparkTestBase.sides.map { case (side, s) =>
+    val f = waveFrontier(s, Files.createTempDirectory("graft-wave").toString)
+    applyEpochs(f, s, 1 to 3)
+    side -> outcome(f, s)
+  }.toMap
+
+  test("a failing metadata commit: the states manifest does not flip, and the replay heals") {
+    for ((side, s) <- SparkTestBase.sides) {
+      val root = Files.createTempDirectory("graft-wave-meta").toString
+      val f = waveFrontier(s, root)
+      applyEpochs(f, s, 1 to 1)
+      val (sv, mv) = (f.states.currentVersion, f.metadata.currentVersion)
+      val blocked = Paths.get(root, "metadata", "manifest", s"m${mv + 1}.json")
+      Files.createDirectories(blocked)
+      intercept[java.io.IOException](applyEpochs(f, s, 2 to 2))
+      Files.delete(blocked)
+      assert(f.metadata.currentVersion == mv)
+      assert(f.states.currentVersion == sv, s"$side: the states manifest flipped")
+      assert(f.lastProcessedEpoch == 1L)
+      assert(f.queue.readManifest().epoch == 2L, "fixture: the queue append committed")
+      val resumed = waveFrontier(s, root)
+      applyEpochs(resumed, s, 2 to 3)
+      assert(outcome(resumed, s) == uninterrupted(side), side)
+    }
+  }
+
+  test("a failing states flip after the metadata flip: the replay skips metadata and applies states") {
+    for ((side, s) <- SparkTestBase.sides) {
+      val root = Files.createTempDirectory("graft-wave-states").toString
+      val f = waveFrontier(s, root)
+      applyEpochs(f, s, 1 to 1)
+      val sv = f.states.currentVersion
+      val blocked = Paths.get(root, "states", "manifest", s"m${sv + 1}.json")
+      Files.createDirectories(blocked)
+      intercept[java.io.IOException](applyEpochs(f, s, 2 to 2))
+      Files.delete(blocked)
+      assert(f.states.currentVersion == sv && f.lastProcessedEpoch == 1L, side)
+      assert(f.metadata.readManifest().epoch == 2L, "fixture: the metadata append committed")
+      val (mv, metaRows) = (f.metadata.currentVersion, f.metadata.read(s).count())
+      val resumed = waveFrontier(s, root)
+      applyEpochs(resumed, s, 2 to 2)
+      assert(resumed.metadata.currentVersion == mv && resumed.metadata.read(s).count() == metaRows,
+        s"$side: the replay must skip metadata")
+      assert(resumed.lastProcessedEpoch == 2L)
+      applyEpochs(resumed, s, 3 to 3)
+      assert(outcome(resumed, s) == uninterrupted(side), side)
+    }
+  }
+
+  test("a links pipeline that throws: the epoch's metadata commit is joined first, and the replay heals") {
+    val root = Files.createTempDirectory("graft-wave-links").toString
+    @volatile var failing = false
+    val boom: DataFrame => DataFrame = df =>
+      if (failing) throw new IllegalStateException("links pipeline fails") else df
+    val f = waveFrontier(spark, root, Seq(boom))
+    applyEpochs(f, spark, 1 to 1)
+    failing = true
+    val e = intercept[IllegalStateException](applyEpochs(f, spark, 2 to 2))
+    assert(e.getMessage == "links pipeline fails")
+    assert(f.metadata.readManifest().epoch == 2L,
+      "the metadata commit started with the epoch ran to its end before the rethrow")
+    val live = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-") && t.getName != "graft-footer")
+    assert(live.isEmpty, live.map(_.getName))
+    assert(f.lastProcessedEpoch == 1L)
+    failing = false
+    applyEpochs(waveFrontier(spark, root, Seq(boom)), spark, 2 to 3)
+    assert(outcome(waveFrontier(spark, root), spark) == uninterrupted("exact"))
   }
 
   test("A7 flow control: busy partitions yield no batch until results are processed") {

@@ -179,15 +179,19 @@ class ManifestSpec extends AnyFunSuite {
     (s, p, name)
   }
 
-  /** `s` reopened after its current manifest's deletes became `deletes` */
-  private def withDeletes(s: BucketStore,
-      deletes: Map[String, Map[String, BucketStore.Deletes]]): BucketStore = {
+  /** `s` reopened after `edit` rewrote its current manifest */
+  private def edited(s: BucketStore)(edit: s.Manifest => s.Manifest): BucketStore = {
     val file = Paths.get(s.root, "manifest", s"m${s.currentVersion}.json")
-    Files.writeString(file, s.manifestJson(s.readManifest().copy(pathDeletes = deletes)))
+    Files.writeString(file, s.manifestJson(edit(s.readManifest())))
     val reopened = new BucketStore(s.root, s.bucketCol, s.buckets)
     reopened.emptySchema = s.emptySchema
     reopened
   }
+
+  /** `s` reopened after its current manifest's deletes became `deletes` */
+  private def withDeletes(s: BucketStore,
+      deletes: Map[String, Map[String, BucketStore.Deletes]]): BucketStore =
+    edited(s)(_.copy(pathDeletes = deletes))
 
   /** the messages of `e` and of its causes */
   private def messages(e: Throwable): String =
@@ -221,6 +225,32 @@ class ManifestSpec extends AnyFunSuite {
     assert(hostile.readManifest().liveRows(p).contains(1L), "fixture: the manifest counts 1 live row")
     val e = intercept[Exception](hostile.read(spark).collect())
     assert(messages(e).contains(name) && messages(e).contains("records 3"), messages(e))
+  }
+
+  test("a file length or row count in the manifest that differs from the file's fails the read or reads the file whole") {
+    val spark = SparkTestBase.spark
+    val (s, p, name) = onePath(4)
+    val len = s.readManifest().pathFiles(p)(name)
+    assert(Files.size(Paths.get(p, name)) == len, "fixture: the manifest records the file's length")
+    val rows = s.read(spark).collect().toSeq
+    // the parquet reader finds the footer at the file's own length and
+    // reads the row groups whose midpoint lies within the recorded one
+    for (wrong <- Seq(0L, 1L, len / 4, len / 2, len - 1, len + 1, 2 * len)) {
+      val hostile = edited(s)(m => m.copy(pathFiles = Map(p -> Map(name -> wrong))))
+      scala.util.Try(hostile.read(spark).collect().toSeq) match {
+        case scala.util.Success(got) => assert(got == rows, s"length $wrong")
+        case scala.util.Failure(e) =>
+          assert(messages(e).contains(name) && messages(e).contains("the manifest records 4"),
+            s"length $wrong: ${messages(e)}")
+      }
+    }
+    val e = intercept[Exception](
+      edited(s)(m => m.copy(pathFiles = Map(p -> Map(name -> 0L)))).read(spark).collect())
+    assert(messages(e).contains(s"$name: its path's 1 file(s) hold 0 rows"), messages(e))
+    val e2 = intercept[Exception](edited(s)(m =>
+      m.copy(pathFiles = Map(p -> Map(name -> len)), pathRows = Map(p -> 5L))).read(spark).collect())
+    assert(messages(e2).contains(s"$name: its path's 1 file(s) hold 4 rows, the manifest records 5"),
+      messages(e2))
   }
 
   test("deletes name referenced files through append, dequeue, replacePaths, compact and a full drain") {

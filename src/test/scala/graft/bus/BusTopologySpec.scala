@@ -1,5 +1,6 @@
 package graft.bus
 
+import graft.TempDirs
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -16,11 +17,11 @@ import graft.spark.{GraphTables, ScoreStrategy, SparkCrawler, SparkFrontier, Spa
   * routing (partitioners.py), the kafkabus lag rule + zeromq ready/busy
   * marks for feed availability, and crawl-result equality (URL-seen set
   * and states) with the in-engine crawler on the same graph. */
-class BusTopologySpec extends AnyFunSuite {
+class BusTopologySpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
+  private def tmp(p: String) = tempDir(p).toString
 
   // ---------------- log-level semantics ----------------
 

@@ -1,8 +1,8 @@
 package graft.codecs
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 import scala.collection.immutable.ArraySeq
 import graft.spark.{ScoreStrategy, SparkFrontier, SparkTestBase}
 import CValue._
@@ -13,12 +13,12 @@ import BusMessage._
   * into the engine as a normal epoch: states merge, URL-seen dedup,
   * link scheduling, and error metadata all apply. Both codecs feed the
   * same replay path. */
-class ReplaySpec extends AnyFunSuite {
+class ReplaySpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def mkFrontier(): SparkFrontier =
-    new SparkFrontier(spark, Files.createTempDirectory("graft-replay").toString,
+    new SparkFrontier(spark, tempDir("graft-replay").toString,
       partitions = 2, stateBuckets = 2, strategy = ScoreStrategy.BFS,
       globalOrder = true)
 

@@ -1,11 +1,11 @@
 package graft.images
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.local.Graphs
 import graft.spark.{GraphTables, SparkTestBase, SparkFrontier, SparkCrawler, ScoreStrategy}
-import java.nio.file.Files
 
-class ImageSpec extends AnyFunSuite {
+class ImageSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   test("png row round-trips exactly; jpeg row clears 40dB PSNR; captions match") {
@@ -29,7 +29,7 @@ class ImageSpec extends AnyFunSuite {
     val images = GraphTables.imagesDS(spark, graph).cache()
     assert(images.count() == graph.nodes.size)
 
-    val root = Files.createTempDirectory("graft-img").toString
+    val root = tempDir("graft-img").toString
     val frontier = new SparkFrontier(spark, root, partitions = 4,
       stateBuckets = 4, strategy = ScoreStrategy.BFS, globalOrder = true)
     frontier.addSeeds(graph.seeds)

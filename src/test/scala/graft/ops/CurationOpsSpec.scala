@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.spark.SparkTestBase
@@ -8,13 +9,13 @@ import graft.spark.SparkTestBase
   * CONTROLLED corpus (the DuckDB oracle pins them on the driver's
   * synthetic tables; this pins the behavioral contract on hand-built
   * documents where every expected value is derivable by eye). */
-class CurationOpsSpec extends AnyFunSuite {
+class CurationOpsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   /** Write a tiny documents table (the testdata schema) to a temp dir. */
   private def corpus(rows: Seq[(Long, String, String, String, Long)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cur").toString
+    val dir = tempDir("graft-cur").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

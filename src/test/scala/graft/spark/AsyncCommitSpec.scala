@@ -1,8 +1,8 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** The dequeue's residue-rewrite commit runs on a background thread and
   * overlaps the caller's consumption of the batch. Every other queue
@@ -10,7 +10,7 @@ import java.nio.file.Files
   * OBSERVATIONALLY IDENTICAL to joining the commit before consuming —
   * same per-epoch batches, same final store state — including when
   * writes interleave with the drain. */
-class AsyncCommitSpec extends AnyFunSuite {
+class AsyncCommitSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -23,7 +23,7 @@ class AsyncCommitSpec extends AnyFunSuite {
 
   private def mk(): SparkFrontier =
     new SparkFrontier(spark,
-      Files.createTempDirectory("graft-async").toString,
+      tempDir("graft-async").toString,
       partitions = 4, stateBuckets = 4, strategy = ScoreStrategy.BFS,
       globalOrder = false)
 

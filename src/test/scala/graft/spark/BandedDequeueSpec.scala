@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -11,12 +12,12 @@ import java.nio.file.Files
   * A3 (reference hbase/__init__.py:219-266): a host-capped short batch
   * deepens the scan (limit ×5.5, ≤3 tries) until min_hosts distinct
   * hosts are present. */
-class BandedDequeueSpec extends AnyFunSuite {
+class BandedDequeueSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def freshFrontier(maxPerHost: Int = 0): SparkFrontier = {
-    val root = Files.createTempDirectory("graft-band").toString
+    val root = tempDir("graft-band").toString
     new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, maxPerHost = maxPerHost,
       globalOrder = false)
@@ -124,7 +125,7 @@ class BandedDequeueSpec extends AnyFunSuite {
   }
 
   test("compaction folds a one-file band whose deleted rows reach its live rows") {
-    val f = new SparkFrontier(spark, Files.createTempDirectory("graft-fold").toString,
+    val f = new SparkFrontier(spark, tempDir("graft-fold").toString,
       partitions = 1, stateBuckets = 1, strategy = ScoreStrategy.BFS, globalOrder = true)
     // 10 URLs of one host at one score: one bucket, one band, one file
     f.bulkSchedule(spark.range(10).select(concat(lit("http://fold.com/p/"), $"id").as("url"),
@@ -156,7 +157,7 @@ class BandedDequeueSpec extends AnyFunSuite {
   }
 
   test("legacy band-less queue layout migrates on first dequeue, loses nothing") {
-    val root = Files.createTempDirectory("graft-legacy").toString
+    val root = tempDir("graft-legacy").toString
     // simulate a store written by a pre-banded build: same root, same
     // manifest format, but no band= level in the data paths
     val f0 = freshFrontier() // only for the schema/exprs

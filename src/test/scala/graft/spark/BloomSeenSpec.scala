@@ -1,21 +1,21 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.local.{Graphs, LocalFrontier, FrontierTester, DFSStrategy, QueueOrdering}
-import java.nio.file.Files
 
 /** The Bloom prefilter must be invisible to correctness: crawl order and
   * URL-seen set identical with and without it; sidecars survive restart.
   * The frontier runs its Bloom side only for a states table above the
   * broadcast threshold, so the crawls that need it run in
   * `SparkTestBase.bloomSide`, where the threshold is off. */
-class BloomSeenSpec extends AnyFunSuite {
+class BloomSeenSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   test("bloom sidecar roundtrip (murmur128 seen-keys), version stamps") {
     import spark.implicits._
     import graft.core.Hashing.seenKey
-    val root = Files.createTempDirectory("bloom-rt").toString
+    val root = tempDir("bloom-rt").toString
     val bs = new BloomSeen(root)
     val df = Seq((0, "fp-a"), (0, "fp-b"), (1, "fp-c"))
       .toDF("sbucket", "fingerprint")
@@ -33,7 +33,7 @@ class BloomSeenSpec extends AnyFunSuite {
   test("incremental mergeUpdates keeps old keys and adds new ones, bumps version") {
     import spark.implicits._
     import graft.core.Hashing.seenKey
-    val root = Files.createTempDirectory("bloom-inc").toString
+    val root = tempDir("bloom-inc").toString
     val bs = new BloomSeen(root)
     bs.rebuild(Seq((0, "old-1"), (0, "old-2")).toDF("sbucket", "fingerprint"),
       Set(0), version = 3)
@@ -56,7 +56,7 @@ class BloomSeenSpec extends AnyFunSuite {
     // bucket's sidecar is absent ⇒ stale ⇒ rows route through the exact
     // anti-join; the crawl must not re-schedule seen URLs (ADVICE:
     // 'missing bloom != no seen keys')
-    val root = Files.createTempDirectory("bloom-stale").toString
+    val root = tempDir("bloom-stale").toString
     val f1 = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.DFS, globalOrder = true)
     f1.addSeeds(Graphs.site03.seeds)
@@ -87,7 +87,7 @@ class BloomSeenSpec extends AnyFunSuite {
 
   test("bloom-prefiltered crawl == exact crawl == oracle (order + states)") {
     def sparkRun(s: org.apache.spark.sql.SparkSession): (List[String], Map[String, Int]) = {
-      val root = Files.createTempDirectory("bloom-crawl").toString
+      val root = tempDir("bloom-crawl").toString
       val f = new SparkFrontier(s, root, partitions = 4, stateBuckets = 4,
         strategy = ScoreStrategy.DFS, globalOrder = true)
       f.addSeeds(Graphs.site03.seeds)
@@ -105,7 +105,7 @@ class BloomSeenSpec extends AnyFunSuite {
 
   test("a states table crossing the broadcast threshold mid-crawl == oracle") {
     val s = spark.newSession()
-    val root = Files.createTempDirectory("bloom-cross").toString
+    val root = tempDir("bloom-cross").toString
     val f = new SparkFrontier(s, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.DFS, globalOrder = true)
     f.addSeeds(Graphs.site03.seeds)

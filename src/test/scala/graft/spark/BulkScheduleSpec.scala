@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -7,7 +8,6 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.util.QueryExecutionListener
-import java.nio.file.Files
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 /** `bulkSchedule` and `addSeedsDF` over a frame of rows the driver
@@ -15,7 +15,7 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
   * projection folded into a local relation on the driver), and the
   * queue (and states) written are the ones a distributed source of the
   * same rows gives. */
-class BulkScheduleSpec extends AnyFunSuite {
+class BulkScheduleSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -24,7 +24,7 @@ class BulkScheduleSpec extends AnyFunSuite {
     (s"http://h${i % 40}.example/p/$i", (i % 97) / 970.0, i % 2))
 
   private def frontier(s: SparkSession = spark) =
-    new SparkFrontier(s, Files.createTempDirectory("graft-bulk").toString,
+    new SparkFrontier(s, tempDir("graft-bulk").toString,
       partitions = 4, stateBuckets = 4)
 
   /** the queue's rows with their band (the leaf dir level), by count */
@@ -51,7 +51,7 @@ class BulkScheduleSpec extends AnyFunSuite {
   test("a local frame and a distributed source of the same rows schedule the same queue") {
     val local = frontier()
     local.bulkSchedule(rows.toDF("url", "score", "depth"))
-    val dir = Files.createTempDirectory("graft-bulk-src").resolve("rows").toString
+    val dir = tempDir("graft-bulk-src").resolve("rows").toString
     rows.toDF("url", "score", "depth").write.parquet(dir)
     val distributed = frontier()
     val source = spark.read.parquet(dir)
@@ -74,7 +74,7 @@ class BulkScheduleSpec extends AnyFunSuite {
 
   test("addSeedsDF schedules a local frame as it does a distributed source, and marks every seed queued") {
     val urls = rows.map(_._1)
-    val dir = Files.createTempDirectory("graft-seeds-src").resolve("urls").toString
+    val dir = tempDir("graft-seeds-src").resolve("urls").toString
     urls.toDF("url").write.parquet(dir)
     val fs = Seq(frontier(), frontier())
     fs(0).addSeedsDF(urls.toDF("url"))

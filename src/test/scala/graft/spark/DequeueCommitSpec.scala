@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,14 +20,14 @@ import scala.jdk.CollectionConverters._
   * gauges match the batch. Also: the batch plan compiles to the same code
   * at every epoch, and a bucket is scanned and ranked in one task, with
   * no exchange. */
-class DequeueCommitSpec extends AnyFunSuite {
+class DequeueCommitSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def frontier(s: SparkSession = spark, globalOrder: Boolean = false,
       blacklist: Set[String] = Set.empty, flowControl: Boolean = false,
       ordering: QueueOrdering = QueueOrdering.ScoreCreated, maxPerHost: Int = 0) =
-    new SparkFrontier(s, Files.createTempDirectory("graft-dqc").toString,
+    new SparkFrontier(s, tempDir("graft-dqc").toString,
       partitions = 4, stateBuckets = 4, strategy = ScoreStrategy.BFS,
       globalOrder = globalOrder, domainsBlacklist = blacklist,
       flowControl = flowControl, ordering = ordering, maxPerHost = maxPerHost)
@@ -145,7 +146,7 @@ class DequeueCommitSpec extends AnyFunSuite {
     val Seq(a, c) = inBucket(0).take(2)
     val b = inBucket(1).head
     val resolver: String => String = h => if (h == a || h == b) "10.0.0.1" else "10.9.9.9"
-    val f = new SparkFrontier(spark, Files.createTempDirectory("graft-dqc").toString,
+    val f = new SparkFrontier(spark, tempDir("graft-dqc").toString,
       partitions = 2, stateBuckets = 2, strategy = ScoreStrategy.BFS,
       maxPerHost = 4, ipResolver = Some(resolver))
     f.bulkSchedule(spark.range(30).select(
@@ -252,7 +253,7 @@ class DequeueCommitSpec extends AnyFunSuite {
   }
 
   test("a dequeue commit that fails before the manifest flip replays its batch") {
-    val root = Files.createTempDirectory("graft-dqc").toString
+    val root = tempDir("graft-dqc").toString
     def open() = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, domainsBlacklist = Set("h3.example"))
     val f = open()

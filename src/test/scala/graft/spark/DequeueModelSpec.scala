@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -76,14 +77,14 @@ object DequeueModel {
   * multisets, the rows left read both by `queue.read` and by the next
   * dequeue's scan; then a rescore and a compaction of the queue the
   * deletes left. */
-class DequeueModelSpec extends AnyFunSuite {
+class DequeueModelSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
   import DequeueModel._
 
   /** a frontier whose queue holds exactly `c.rows` */
   def frontierOf(c: Case, ipResolver: Option[String => String] = None): SparkFrontier = {
-    val f = new SparkFrontier(spark, Files.createTempDirectory("graft-dqm").toString,
+    val f = new SparkFrontier(spark, tempDir("graft-dqm").toString,
       partitions = c.buckets, stateBuckets = 2, strategy = ScoreStrategy.BFS,
       globalOrder = c.globalOrder, maxPerHost = c.maxPerHost,
       domainsBlacklist = c.blacklist, ordering = c.ordering, ipResolver = ipResolver)

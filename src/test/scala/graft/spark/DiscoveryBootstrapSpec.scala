@@ -1,7 +1,7 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Discovery bootstrap protocol (reference strategy/discovery):
   * seeds schedule a robots.txt PROBE at 0.9 (process_seeds, :191-213);
@@ -11,12 +11,12 @@ import java.nio.file.Files
   * `<loc>` URLs (parse_sitemap); ordinary links are then denied by the
   * STORED robots body. Dequeue is highest-score-first
   * (ScoreCreatedDesc) — the ordering discovery's scores are designed for. */
-class DiscoveryBootstrapSpec extends AnyFunSuite {
+class DiscoveryBootstrapSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   test("robots probe -> sitemap + home -> links, robots deny from domain_metadata") {
-    val root = Files.createTempDirectory("graft-boot").toString
+    val root = tempDir("graft-boot").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.Basic, globalOrder = true,
       ordering = graft.local.QueueOrdering.ScoreCreatedDesc,
@@ -73,7 +73,7 @@ class DiscoveryBootstrapSpec extends AnyFunSuite {
   }
 
   test("sitemap INDEX recurses: nested sitemaps probed at 0.9, their locs crawled") {
-    val root = Files.createTempDirectory("graft-smidx").toString
+    val root = tempDir("graft-smidx").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.Basic, globalOrder = true,
       ordering = graft.local.QueueOrdering.ScoreCreatedDesc,

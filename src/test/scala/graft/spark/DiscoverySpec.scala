@@ -1,16 +1,16 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.local.Graphs
 import graft.core.{UrlUtil, Hashing}
-import java.nio.file.Files
 
 /** Discovery-lite strategy (reference strategy/discovery/__init__.py):
   * per-domain max_pages budget over a persistent domain_metadata table,
   * same-domain link filter, home-page classification, host-hash score
   * justification. */
-class DiscoverySpec extends AnyFunSuite {
+class DiscoverySpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -48,7 +48,7 @@ class DiscoverySpec extends AnyFunSuite {
 
   test("per-domain max_pages budget stops each domain at the budget (SITE_09)") {
     for ((side, s) <- SparkTestBase.sides) withClue(s"$side: ") {
-      val root = Files.createTempDirectory("graft-disc").toString
+      val root = tempDir("graft-disc").toString
       val budget = 2
       val f = new SparkFrontier(s, root, partitions = 4, stateBuckets = 4,
         strategy = ScoreStrategy.Basic, globalOrder = true,
@@ -93,7 +93,7 @@ class DiscoverySpec extends AnyFunSuite {
 
   test("same-domain filter keeps the crawl inside the seeds' 2nd-level domains") {
     for ((side, s) <- SparkTestBase.sides) withClue(s"$side: ") {
-      val root = Files.createTempDirectory("graft-samedom").toString
+      val root = tempDir("graft-samedom").toString
       val f = new SparkFrontier(s, root, partitions = 4, stateBuckets = 4,
         strategy = ScoreStrategy.Basic, globalOrder = true,
         discovery = Some(DiscoveryConfig(maxPagesPerDomain = 100,

@@ -1,8 +1,8 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Domain-level crawl controls: fatal-error flags and operator bans in
   * domain_metadata (is_accessible_domain / is_domain_to_ignore,
@@ -11,12 +11,12 @@ import java.nio.file.Files
   * (worker/components/batch_generator.py:97-109), the dont_queue
   * score-update channel (core/manager.py:769-798), and the per-domain
   * redirect netloc sets (discovery/__init__.py:478-507). */
-class DomainControlSpec extends AnyFunSuite {
+class DomainControlSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   test("fatal fetch error stops all further scheduling into the domain") {
-    val root = Files.createTempDirectory("graft-fatal").toString
+    val root = tempDir("graft-fatal").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = true,
       discovery = Some(DiscoveryConfig(maxPagesPerDomain = 100,
@@ -45,7 +45,7 @@ class DomainControlSpec extends AnyFunSuite {
   }
 
   test("banDomains: operator ban stops scheduling; flag is sticky in domain_metadata") {
-    val root = Files.createTempDirectory("graft-ban").toString
+    val root = tempDir("graft-ban").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = true,
       discovery = Some(DiscoveryConfig(maxPagesPerDomain = 100,
@@ -66,7 +66,7 @@ class DomainControlSpec extends AnyFunSuite {
   }
 
   test("DOMAINS_BLACKLIST drops blacklisted hosts at dequeue and deletes them with the band") {
-    val root = Files.createTempDirectory("graft-bl").toString
+    val root = tempDir("graft-bl").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = false,
       domainsBlacklist = Set("BAD.com")) // case-insensitive match
@@ -89,7 +89,7 @@ class DomainControlSpec extends AnyFunSuite {
   }
 
   test("updateScores (dont_queue): rows move across bands, order follows, nothing duplicates") {
-    val root = Files.createTempDirectory("graft-upsc").toString
+    val root = tempDir("graft-upsc").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = true)
     f.bulkSchedule(spark.range(100).select(
@@ -116,7 +116,7 @@ class DomainControlSpec extends AnyFunSuite {
   }
 
   test("updateScores: duplicate updates for one URL apply last-wins, no queue fan-out") {
-    val root = Files.createTempDirectory("graft-updup").toString
+    val root = tempDir("graft-updup").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = true)
     f.bulkSchedule(spark.range(10).select(
@@ -136,7 +136,7 @@ class DomainControlSpec extends AnyFunSuite {
   }
 
   test("MAX_SITEMAPS: sub-sitemap probes per parent capped, ordinary links unaffected") {
-    val root = Files.createTempDirectory("graft-maxsm").toString
+    val root = tempDir("graft-maxsm").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = true,
       discovery = Some(DiscoveryConfig(maxPagesPerDomain = 1000,
@@ -161,7 +161,7 @@ class DomainControlSpec extends AnyFunSuite {
   }
 
   test("cross-domain probe/home redirects feed capped redirect_from/redirect_to sets") {
-    val root = Files.createTempDirectory("graft-rdom").toString
+    val root = tempDir("graft-rdom").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = true)
     // home page of from.com 301s to to.com; a deep (non-home, non-probe)

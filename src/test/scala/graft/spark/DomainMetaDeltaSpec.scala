@@ -1,8 +1,8 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** LSM semantics of the domain_metadata store (the round-4 treatment —
   * same shape the states store got in round 3; reference anchor: the
@@ -11,7 +11,7 @@ import java.nio.file.Files
   * O(contrib) rows/files, readers resolve with the commutative fold,
   * compaction folds the log back down, and the per-epoch robots read is
   * bucket-pruned to the batch's parent domains. */
-class DomainMetaDeltaSpec extends AnyFunSuite {
+class DomainMetaDeltaSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -22,7 +22,7 @@ class DomainMetaDeltaSpec extends AnyFunSuite {
       "link_idx", "link_url")
 
   test("merge APPENDS O(contrib) delta rows; existing delta files never rewritten") {
-    val root = Files.createTempDirectory("graft-dmlsm").toString
+    val root = tempDir("graft-dmlsm").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = true)
     f.banDomains(Seq("a.com", "b.com"))
@@ -42,7 +42,7 @@ class DomainMetaDeltaSpec extends AnyFunSuite {
   }
 
   test("merge-on-read: counters sum across epochs, robots latest-wins by commit, flags sticky") {
-    val root = Files.createTempDirectory("graft-dmread").toString
+    val root = tempDir("graft-dmread").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.Basic, globalOrder = true,
       discovery = Some(DiscoveryConfig(maxPagesPerDomain = 100,
@@ -84,7 +84,7 @@ class DomainMetaDeltaSpec extends AnyFunSuite {
   }
 
   test("compactDomainMeta folds the delta log; resolved view unchanged") {
-    val root = Files.createTempDirectory("graft-dmcomp").toString
+    val root = tempDir("graft-dmcomp").toString
     val f = new SparkFrontier(spark, root, partitions = 2, stateBuckets = 2,
       strategy = ScoreStrategy.BFS, globalOrder = true)
     (0 until 10).foreach(i => f.banDomains(Seq(s"d$i.com")))
@@ -108,7 +108,7 @@ class DomainMetaDeltaSpec extends AnyFunSuite {
   }
 
   test("per-epoch robots read is bucket-pruned to the batch's parent domains") {
-    val root = Files.createTempDirectory("graft-dmprune").toString
+    val root = tempDir("graft-dmprune").toString
     val f = new SparkFrontier(spark, root, partitions = 8, stateBuckets = 4,
       strategy = ScoreStrategy.Basic, globalOrder = true,
       discovery = Some(DiscoveryConfig(maxPagesPerDomain = 100,

@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,12 +12,12 @@ import scala.jdk.CollectionConverters._
 /** Request-error path (reference core/manager.py:572-580, ERROR=3 at
   * core/components.py:97-101), jid/epoch stale-event filtering
   * (worker/strategy.py:53-71), and commit-crash resilience. */
-class ErrorAndReplaySpec extends AnyFunSuite {
+class ErrorAndReplaySpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   test("fetch error: ERROR=3 state, error metadata, never re-scheduled, no links") {
-    val root = Files.createTempDirectory("graft-err").toString
+    val root = tempDir("graft-err").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = true)
     f.addSeeds(Graphs.site02.seeds)
@@ -58,7 +59,7 @@ class ErrorAndReplaySpec extends AnyFunSuite {
   }
 
   test("jid filter: a replayed epoch batch is a no-op") {
-    val root = Files.createTempDirectory("graft-jid").toString
+    val root = tempDir("graft-jid").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = true)
     val pages = Seq(("fp-1", "http://a.com/1", 0, 0.0, 1L))
@@ -91,7 +92,7 @@ class ErrorAndReplaySpec extends AnyFunSuite {
     // states merge and the jid marker: pre-stamp the queue manifest with
     // epoch 3, then replay the full epoch — the queue commit must skip
     // (no duplicate rows), the states/metadata commits must apply
-    val root = Files.createTempDirectory("graft-heal").toString
+    val root = tempDir("graft-heal").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = true)
     val pages = Seq(("fp-9", "http://h.com/9", 0, 0.0, 1L))
@@ -166,14 +167,14 @@ class ErrorAndReplaySpec extends AnyFunSuite {
       f.queue.read(s).collect().map(_.toString).sorted.toSeq)
 
   private lazy val uninterrupted = SparkTestBase.sides.map { case (side, s) =>
-    val f = waveFrontier(s, Files.createTempDirectory("graft-wave").toString)
+    val f = waveFrontier(s, tempDir("graft-wave").toString)
     applyEpochs(f, s, 1 to 3)
     side -> outcome(f, s)
   }.toMap
 
   test("a failing metadata commit: the states manifest does not flip, and the replay heals") {
     for ((side, s) <- SparkTestBase.sides) {
-      val root = Files.createTempDirectory("graft-wave-meta").toString
+      val root = tempDir("graft-wave-meta").toString
       val f = waveFrontier(s, root)
       applyEpochs(f, s, 1 to 1)
       val (sv, mv) = (f.states.currentVersion, f.metadata.currentVersion)
@@ -193,7 +194,7 @@ class ErrorAndReplaySpec extends AnyFunSuite {
 
   test("a failing states flip after the metadata flip: the replay skips metadata and applies states") {
     for ((side, s) <- SparkTestBase.sides) {
-      val root = Files.createTempDirectory("graft-wave-states").toString
+      val root = tempDir("graft-wave-states").toString
       val f = waveFrontier(s, root)
       applyEpochs(f, s, 1 to 1)
       val sv = f.states.currentVersion
@@ -215,7 +216,7 @@ class ErrorAndReplaySpec extends AnyFunSuite {
   }
 
   test("a links pipeline that throws: the epoch's metadata commit is joined first, and the replay heals") {
-    val root = Files.createTempDirectory("graft-wave-links").toString
+    val root = tempDir("graft-wave-links").toString
     @volatile var failing = false
     val boom: DataFrame => DataFrame = df =>
       if (failing) throw new IllegalStateException("links pipeline fails") else df
@@ -236,7 +237,7 @@ class ErrorAndReplaySpec extends AnyFunSuite {
   }
 
   test("A7 flow control: busy partitions yield no batch until results are processed") {
-    val root = Files.createTempDirectory("graft-fc").toString
+    val root = tempDir("graft-fc").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = false,
       flowControl = true)
@@ -267,7 +268,7 @@ class ErrorAndReplaySpec extends AnyFunSuite {
     // conflating "partitions busy" with "queue drained" — so dequeues
     // kept short-circuiting for the whole backoff window AFTER the lag
     // cleared. Busy-empty must not arm; genuinely-drained still must.
-    val root = Files.createTempDirectory("graft-fcdelay").toString
+    val root = tempDir("graft-fcdelay").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = false,
       flowControl = true, delayOnEmptyEpochs = 100)
@@ -316,7 +317,7 @@ class ErrorAndReplaySpec extends AnyFunSuite {
   }
 
   test("orphan commit dir from a crashed writer does not brick the store") {
-    val root = Files.createTempDirectory("graft-orphan").toString
+    val root = tempDir("graft-orphan").toString
     val store = new BucketStore(s"$root/t", "b", 4)
     store.emptySchema = Some(StructType(Seq(
       StructField("b", IntegerType), StructField("v", LongType))))

@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
@@ -14,7 +15,7 @@ import java.nio.file.{Files, Paths}
   * into BENCH_r04). This spec drives ~50 banded commits + a crashed-dir
   * cleanup + a compaction through one store and asserts the process fd
   * count does not grow with commit count. */
-class FdLeakSpec extends AnyFunSuite {
+class FdLeakSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -26,7 +27,7 @@ class FdLeakSpec extends AnyFunSuite {
   }
 
   test("50 banded commits + crashed-commit cleanup + compact leak no fds") {
-    val root = Files.createTempDirectory("fdleak").toString
+    val root = tempDir("fdleak").toString
     val store = new BucketStore(root, "bucket", 4, bandCol = Some("band"),
       statCol = Some("created_at"))
     store.emptySchema = Some(StructType(Seq(

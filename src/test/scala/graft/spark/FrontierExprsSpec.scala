@@ -1,10 +1,11 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.spark.FrontierExprs._
 
-class FrontierExprsSpec extends AnyFunSuite {
+class FrontierExprsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   test("expressions compute golden vectors inside codegen") {
@@ -41,7 +42,7 @@ class FrontierExprsSpec extends AnyFunSuite {
 
   test("bloom probe runs as a native expression inside whole-stage codegen") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("bloom-cg").toString
+    val root = tempDir("bloom-cg").toString
     val bs = new BloomSeen(root)
     bs.rebuild(Seq((0, "fp-1"), (0, "fp-2")).toDF("sbucket", "fingerprint"),
       Set(0), version = 1)

@@ -1,8 +1,8 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Home-page fallback scheduling on probe failures (reference
   * discovery/__init__.py: request_error :267-281 →
@@ -11,7 +11,7 @@ import java.nio.file.Files
   * domain's probe can fail still schedules its home page at 0.8, so
   * robots-less domains get crawled; a fatal (DNS-class) error kills the
   * domain instead). */
-class HomeFallbackSpec extends AnyFunSuite {
+class HomeFallbackSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -24,7 +24,7 @@ class HomeFallbackSpec extends AnyFunSuite {
         fatalErrorPattern = "DNSLookupError")))
 
   test("robots probe 404 (non-fatal): home page scheduled at 0.8 and crawled") {
-    val root = Files.createTempDirectory("graft-hf404").toString
+    val root = tempDir("graft-hf404").toString
     val f = discFrontier(root)
     val web = Seq(
       ("http://norobots.com/", Seq("http://norobots.com/a")))
@@ -44,7 +44,7 @@ class HomeFallbackSpec extends AnyFunSuite {
   }
 
   test("fatal probe error (DNS-class) kills the domain: no home-page fallback") {
-    val root = Files.createTempDirectory("graft-hffatal").toString
+    val root = tempDir("graft-hffatal").toString
     // the crawler's synthesized error string is "fetch failed: <url>" —
     // making that the fatal pattern turns the probe failure DNS-class
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
@@ -69,7 +69,7 @@ class HomeFallbackSpec extends AnyFunSuite {
   }
 
   test("sitemap probe failure still schedules the home page (accessible domain)") {
-    val root = Files.createTempDirectory("graft-hfsm").toString
+    val root = tempDir("graft-hfsm").toString
     val f = discFrontier(root)
     val robotsBody = "User-agent: *\nSitemap: http://smfail.com/sitemap.xml\n"
     val bodies = Seq(("http://smfail.com/robots.txt", robotsBody))
@@ -88,7 +88,7 @@ class HomeFallbackSpec extends AnyFunSuite {
   }
 
   test("invalid robots body: home page scheduled, sitemap directives NOT probed") {
-    val root = Files.createTempDirectory("graft-hfinv").toString
+    val root = tempDir("graft-hfinv").toString
     val f = discFrontier(root)
     // not a valid robots.txt (no User-agent/Disallow/Allow/Sitemap
     // structure the validator accepts) but contains a Sitemap:-looking
@@ -115,7 +115,7 @@ class HomeFallbackSpec extends AnyFunSuite {
     // banned/fatal/budget row out of the very join that must drop its
     // home-page fallback (no caller-supplied parentDBuckets here: the
     // bus-replay / bench-mode path)
-    val root = Files.createTempDirectory("graft-hfbanprune").toString
+    val root = tempDir("graft-hfbanprune").toString
     val f = discFrontier(root)
     val part = (h: String) => graft.core.Hashing.crc32Partition(h, 4)
     val banned = (1 to 50).map(i => s"banned$i.com")

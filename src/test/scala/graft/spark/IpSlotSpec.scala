@@ -1,20 +1,20 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** ip-mode politeness slots (reference get_slot_key key_type='ip',
   * core/__init__.py:10-25, used by OverusedBuffer and the HBase queue's
   * host-cap collection): co-hosted hostnames resolve to one slot key
   * and share ONE per-slot budget. The resolver is injected (production:
   * a cached DNS lookup; here: the deterministic stub). */
-class IpSlotSpec extends AnyFunSuite {
+class IpSlotSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   test("ip mode: two hosts on one resolved IP share one maxPerHost budget") {
-    val root = Files.createTempDirectory("graft-ipslot").toString
+    val root = tempDir("graft-ipslot").toString
     // resolver maps both a.com and b.com to one address, c.com elsewhere
     val resolver: String => String = {
       case "a.com" | "b.com" => "10.0.0.1"
@@ -41,7 +41,7 @@ class IpSlotSpec extends AnyFunSuite {
   }
 
   test("host mode (default) unchanged: per-hostname budgets") {
-    val root = Files.createTempDirectory("graft-hostslot").toString
+    val root = tempDir("graft-hostslot").toString
     val f = new SparkFrontier(spark, root, partitions = 2, stateBuckets = 2,
       strategy = ScoreStrategy.BFS, globalOrder = true,
       maxPerHost = 4)

@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -12,10 +13,10 @@ import scala.jdk.CollectionConverters._
   * with an error that names the file, every commit keeps it in step
   * with the leaves it references, and reads are planned from it without
   * listing a directory. */
-class ManifestSpec extends AnyFunSuite {
+class ManifestSpec extends AnyFunSuite with TempDirs {
 
   private def store() =
-    new BucketStore(Files.createTempDirectory("graft-manifest").toString,
+    new BucketStore(tempDir("graft-manifest").toString,
       "partition_id", 4, bandCol = Some("band"))
 
   test("a manifest in the existing format parses to the same Manifest and writes back identically") {
@@ -94,7 +95,7 @@ class ManifestSpec extends AnyFunSuite {
     val listingThreshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     assert(s.conf.get(listingThreshold) == "32", "fixture: Spark's default listing threshold")
     val before = s.conf.getAll
-    val f = new SparkFrontier(s, Files.createTempDirectory("graft-nolist").toString, partitions = 4)
+    val f = new SparkFrontier(s, tempDir("graft-nolist").toString, partitions = 4)
     assert(s.conf.getAll == before)
     // 16 hosts over 4 buckets, 20 score bands: more leaves than the threshold
     val rows = for (h <- 0 until 16; b <- 0 until 20)
@@ -140,7 +141,7 @@ class ManifestSpec extends AnyFunSuite {
     // the reads' Hadoop file system counts its listings
     s.conf.set("fs.file.impl", classOf[ListCountingFileSystem].getName)
     s.conf.set("fs.file.impl.disable.cache", "true")
-    val f = new SparkFrontier(s, Files.createTempDirectory("graft-nolist").toString,
+    val f = new SparkFrontier(s, tempDir("graft-nolist").toString,
       partitions = 4, stateBuckets = 4)
     f.bulkSchedule((0 until 200).map(i => (s"http://h${i % 8}.example/p$i", (i % 20) / 100.0, 0))
       .toDF("url", "score", "depth"))
@@ -170,7 +171,7 @@ class ManifestSpec extends AnyFunSuite {
   private def onePath(n: Int): (BucketStore, String, String) = {
     val spark = SparkTestBase.spark
     import spark.implicits._
-    val s = new BucketStore(Files.createTempDirectory("graft-hostile").toString, "bucket", 1)
+    val s = new BucketStore(tempDir("graft-hostile").toString, "bucket", 1)
     s.emptySchema = Some(StructType(Seq(StructField("fingerprint", StringType),
       StructField("bucket", IntegerType))))
     s.append((0 until n).map(i => (s"fp-$i", 0)).toDF("fingerprint", "bucket"), 1)
@@ -256,7 +257,7 @@ class ManifestSpec extends AnyFunSuite {
   test("deletes name referenced files through append, dequeue, replacePaths, compact and a full drain") {
     val spark = SparkTestBase.spark
     import spark.implicits._
-    val f = new SparkFrontier(spark, Files.createTempDirectory("graft-deletes").toString,
+    val f = new SparkFrontier(spark, tempDir("graft-deletes").toString,
       partitions = 4, stateBuckets = 4)
     val s = f.queue
     def commitOf(p: String): Long =
@@ -320,7 +321,7 @@ class ManifestSpec extends AnyFunSuite {
     val spark = SparkTestBase.spark
     import spark.implicits._
     for (banded <- Seq(true, false)) {
-      val s = new BucketStore(Files.createTempDirectory("graft-merge").toString,
+      val s = new BucketStore(tempDir("graft-merge").toString,
         "bucket", 4, bandCol = if (banded) Some("band") else None)
       s.emptySchema = Some(StructType(Seq(StructField("fingerprint", StringType),
         StructField("bucket", IntegerType)) ++

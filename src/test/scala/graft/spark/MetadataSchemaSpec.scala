@@ -1,21 +1,21 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** Metadata-table column parity with the reference's document store
   * (sqlalchemy/models.py:19-30: url, fingerprint, depth, created_at,
   * status_code, score, error, meta, headers, cookies, method) and the
   * additive-evolution guarantee: a store written before the new columns
   * existed keeps reading after the upgrade (typed nulls). */
-class MetadataSchemaSpec extends AnyFunSuite {
+class MetadataSchemaSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   test("metadata rows carry created_at, method, and the meta escape hatch") {
-    val root = Files.createTempDirectory("graft-metacols").toString
+    val root = tempDir("graft-metacols").toString
     val f = new SparkFrontier(spark, root, partitions = 2, stateBuckets = 2,
       strategy = ScoreStrategy.BFS, globalOrder = true)
     val web = Seq(("http://m.com/1", Seq("http://m.com/2")))
@@ -38,7 +38,7 @@ class MetadataSchemaSpec extends AnyFunSuite {
   }
 
   test("additive evolution: a pre-upgrade metadata store reads with typed nulls") {
-    val root = Files.createTempDirectory("graft-metaevo").toString
+    val root = tempDir("graft-metaevo").toString
     // simulate a store written by the previous build: no created_at /
     // method / meta columns
     val oldSchema = StructType(Seq(

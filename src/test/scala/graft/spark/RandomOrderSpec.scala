@@ -1,7 +1,7 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Seeded random-order scheduling (reference consume_randomly,
   * discovery/__init__.py:65-75, used by _schedule_requests:431-455, and
@@ -12,7 +12,7 @@ import java.nio.file.Files
   * extraction order. Same seed ⇒ bit-identical crawl; different seeds ⇒
   * different samples; no seed ⇒ the deterministic extraction order the
   * rest of the suite pins. */
-class RandomOrderSpec extends AnyFunSuite {
+class RandomOrderSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -22,7 +22,7 @@ class RandomOrderSpec extends AnyFunSuite {
   /** One discovery crawl over a single-domain site: home page linking 12
     * pages under a budget that binds. Returns the crawl sequence. */
   private def crawl(seed: Option[Long], budget: Int = 8): Seq[String] = {
-    val root = Files.createTempDirectory("graft-rand").toString
+    val root = tempDir("graft-rand").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.Basic, globalOrder = true,
       ordering = graft.local.QueueOrdering.ScoreCreatedDesc,

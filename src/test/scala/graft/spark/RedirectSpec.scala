@@ -1,20 +1,20 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** J3 canonical solver in the crawl loop (Corresponding2First,
   * contrib/canonicalsolvers/basic.py:37-49): the dequeued url keeps the
   * document identity, links come from the redirect landing page, and
   * every chain member is URL-seen so other links to it never re-crawl.
   * Plus the 2.11 middleware chain over extracted links. */
-class RedirectSpec extends AnyFunSuite {
+class RedirectSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   test("redirect chain: identity kept, landing links followed, chain members deduped") {
-    val root = Files.createTempDirectory("graft-redir").toString
+    val root = tempDir("graft-redir").toString
     val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = true)
     // a1 -> {a2, a5}; a2 redirects to a3 (whose page links a4); a5 links
@@ -44,7 +44,7 @@ class RedirectSpec extends AnyFunSuite {
   }
 
   test("middleware chain filters and runs in declared order") {
-    val root = Files.createTempDirectory("graft-mw").toString
+    val root = tempDir("graft-mw").toString
     val order = scala.collection.mutable.ArrayBuffer.empty[String]
     val dropSkip: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       df => { order += "drop"; df.filter(!$"link_url".contains("skip")) }

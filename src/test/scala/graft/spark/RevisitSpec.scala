@@ -1,19 +1,19 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.local.Graphs
-import java.nio.file.Files
 
 /** Revisit scheduling (reference tests/test_revisiting_backend.py:38-56:
   * with a short revisit interval, some URL reappears within a few
   * iterations) + the metadata sink (S7). */
-class RevisitSpec extends AnyFunSuite {
+class RevisitSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import org.apache.spark.sql.functions._
 
   test("crawled URLs reappear after the revisit interval; metadata logs every fetch") {
     for ((side, s) <- SparkTestBase.sides) withClue(s"$side: ") {
-      val root = Files.createTempDirectory("graft-revisit").toString
+      val root = tempDir("graft-revisit").toString
       val graph = Graphs.site01
       val frontier = new SparkFrontier(s, root, partitions = 4,
         stateBuckets = 4, strategy = ScoreStrategy.BFS, globalOrder = true,
@@ -52,7 +52,7 @@ class RevisitSpec extends AnyFunSuite {
     // for DELAY_ON_EMPTY; any non-empty batch resets the delay. Engine
     // analog: epoch-valued backoff, skipped dequeues do NO planning.
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-delayempty").toString
+    val root = tempDir("graft-delayempty").toString
     val url = "http://solo.example/only"
     val web = Seq((url, Seq.empty[String])).toDF("url", "outlinks")
     val frontier = new SparkFrontier(spark, root, partitions = 2,

@@ -1,15 +1,15 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.local.{Graphs, CrawlGraph, LocalFrontier, FrontierTester, BFSStrategy, DFSStrategy, QueueOrdering}
-import java.nio.file.Files
 
 /** The Spark engine must reproduce the reference crawl ordering and
   * URL-seen set (north rule) — checked against the same published oracles
   * the local conformance engine pins, plus checkpoint-resume. */
-class SparkFrontierSpec extends AnyFunSuite {
+class SparkFrontierSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   private def webDF(graph: CrawlGraph, s: SparkSession = spark) =
@@ -25,7 +25,7 @@ class SparkFrontierSpec extends AnyFunSuite {
 
   private def sparkRun(graph: CrawlGraph, strategy: ScoreStrategy, mnr: Int,
       tag: String, s: SparkSession = spark): (List[String], Map[String, Int]) = {
-    val root = Files.createTempDirectory(s"graft-$tag").toString
+    val root = tempDir(s"graft-$tag").toString
     val frontier = new SparkFrontier(s, root, partitions = 4,
       stateBuckets = 4, strategy = strategy, globalOrder = true)
     frontier.addSeeds(graph.seeds)
@@ -106,7 +106,7 @@ class SparkFrontierSpec extends AnyFunSuite {
   private def sparkRunFailing(graph: CrawlGraph, strategy: ScoreStrategy,
       ordering: QueueOrdering, mnr: Int, failed: Set[String], tag: String,
       s: SparkSession): (List[String], Map[String, Int]) = {
-    val frontier = new SparkFrontier(s, Files.createTempDirectory(s"graft-$tag").toString,
+    val frontier = new SparkFrontier(s, tempDir(s"graft-$tag").toString,
       partitions = 4, stateBuckets = 4, strategy = strategy, globalOrder = true,
       ordering = ordering)
     frontier.addSeeds(graph.seeds)
@@ -184,7 +184,7 @@ class SparkFrontierSpec extends AnyFunSuite {
   private def sparkRunOrdered(graph: CrawlGraph, strategy: ScoreStrategy,
       ordering: QueueOrdering, mnr: Int, tag: String,
       s: SparkSession = spark): List[String] = {
-    val root = Files.createTempDirectory(s"graft-$tag").toString
+    val root = tempDir(s"graft-$tag").toString
     val frontier = new SparkFrontier(s, root, partitions = 4,
       stateBuckets = 4, strategy = strategy, globalOrder = true,
       ordering = ordering)
@@ -226,7 +226,7 @@ class SparkFrontierSpec extends AnyFunSuite {
   }
 
   test("checkpoint-resume: killing the driver mid-crawl loses nothing") {
-    val root = Files.createTempDirectory("graft-resume").toString
+    val root = tempDir("graft-resume").toString
     val graph = Graphs.site03
     val f1 = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
       strategy = ScoreStrategy.BFS, globalOrder = true)
@@ -251,7 +251,7 @@ class SparkFrontierSpec extends AnyFunSuite {
 
   test("politeness cap: no more than maxPerHost per host per epoch; " +
        "withheld URLs are deferred, not dropped") {
-    val root = Files.createTempDirectory("graft-polite").toString
+    val root = tempDir("graft-polite").toString
     val graph = Graphs.site09
     val frontier = new SparkFrontier(spark, root, partitions = 4,
       stateBuckets = 4, strategy = ScoreStrategy.DFS, maxPerHost = 1,

@@ -1,5 +1,6 @@
 package graft.spark
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.local.Graphs
@@ -13,7 +14,7 @@ import java.nio.file.{Files, Paths}
   * data but no per-bucket versions (a pre-versioning build) must be
   * treated STALE, never vacuously fresh. Runs on the Bloom side, so the
   * sidecars are kept however small the table. */
-class StatesDeltaSpec extends AnyFunSuite {
+class StatesDeltaSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.bloomSide
   import spark.implicits._
 
@@ -29,7 +30,7 @@ class StatesDeltaSpec extends AnyFunSuite {
       .toDF("parent_score", "parent_created", "parent_depth", "link_idx", "link_url")
 
   test("states merge appends O(update) delta files; earlier files stay referenced") {
-    val root = Files.createTempDirectory("lsm-append").toString
+    val root = tempDir("lsm-append").toString
     val f = frontier(root)
     f.processCrawled(pagesDF("fp-a" -> "http://a.com/1"),
       linksDF("http://a.com/2", "http://a.com/3", "http://b.com/1"), 1)
@@ -51,7 +52,7 @@ class StatesDeltaSpec extends AnyFunSuite {
   }
 
   test("merge-on-read last-wins: QUEUED deltas superseded by CRAWLED, raw log keeps both") {
-    val root = Files.createTempDirectory("lsm-mor").toString
+    val root = tempDir("lsm-mor").toString
     val f = frontier(root)
     f.processCrawled(pagesDF("fp-a" -> "http://a.com/1"), linksDF("http://a.com/2"), 1)
     val fp2 = graft.core.Hashing.urlFingerprint("http://a.com/2")
@@ -64,7 +65,7 @@ class StatesDeltaSpec extends AnyFunSuite {
   }
 
   test("compactStates folds deltas to one file per bucket; view and bloom freshness survive") {
-    val root = Files.createTempDirectory("lsm-compact").toString
+    val root = tempDir("lsm-compact").toString
     val f = frontier(root)
     // 6 epochs: each crawls the url the previous epoch queued (its QUEUED
     // delta is superseded by a CRAWLED one) and queues the next
@@ -105,7 +106,7 @@ class StatesDeltaSpec extends AnyFunSuite {
 
   test("crawler auto-compaction is invisible to correctness and bounds file counts") {
     def crawlSite02(compactEvery: Int): (List[String], Map[String, Int], Int) = {
-      val root = Files.createTempDirectory(s"lsm-auto$compactEvery").toString
+      val root = tempDir(s"lsm-auto$compactEvery").toString
       val f = new SparkFrontier(spark, root, partitions = 4, stateBuckets = 4,
         strategy = ScoreStrategy.DFS, globalOrder = true)
       f.addSeeds(Graphs.site02.seeds)
@@ -130,7 +131,7 @@ class StatesDeltaSpec extends AnyFunSuite {
     // the probe must route through the exact anti-join (no re-crawl),
     // and the first merge must REBUILD the sidecars, not stamp
     // delta-only blooms as complete
-    val root = Files.createTempDirectory("lsm-legacy").toString
+    val root = tempDir("lsm-legacy").toString
     val f1 = frontier(root)
     f1.addSeeds(Graphs.site03.seeds)
     val c1 = new SparkCrawler(f1, GraphTables.webDF(spark, Graphs.site03), 5)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
@@ -17,7 +18,7 @@ import scala.jdk.CollectionConverters._
   * NOTE: no `processAllAvailable()` here — the gate's timeout re-arming
   * keeps scheduling drain batches, so quiescence never latches; the
   * test polls the cumulative grant set instead. */
-class FetchGateSpec extends AnyFunSuite {
+class FetchGateSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -125,7 +126,7 @@ class FetchGateSpec extends AnyFunSuite {
     // nextBatch rows convert 1:1 into GateEvents and every politeness
     // invariant holds over REAL engine output, not synthetic events.
     import graft.spark.{SparkFrontier, ScoreStrategy}
-    val root = java.nio.file.Files.createTempDirectory("gate-seam").toString
+    val root = tempDir("gate-seam").toString
     val frontier = new SparkFrontier(spark, root, partitions = 2,
       stateBuckets = 2, strategy = ScoreStrategy.BFS, globalOrder = true)
     val floodUrls = (1 to 6).map(i => s"http://flood.example/p/$i")

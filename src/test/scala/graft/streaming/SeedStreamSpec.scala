@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.spark.{SparkFrontier, SparkCrawler, ScoreStrategy, GraphTables, SparkTestBase}
 import graft.local.Graphs
@@ -8,12 +9,12 @@ import java.nio.file.{Files, Paths}
 /** Streaming seed ingestion: files land in a directory, a Structured
   * Streaming query schedules them; the stream checkpoint makes ingestion
   * exactly-once across restarts. */
-class SeedStreamSpec extends AnyFunSuite {
+class SeedStreamSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestBase.spark
 
   test("seed files ingest exactly once across stream restarts, then crawl") {
-    val root = Files.createTempDirectory("graft-seedstream").toString
-    val seedsDir = Files.createTempDirectory("graft-seeds").toString
+    val root = tempDir("graft-seedstream").toString
+    val seedsDir = tempDir("graft-seeds").toString
     val frontier = new SparkFrontier(spark, root, partitions = 4,
       stateBuckets = 4, strategy = ScoreStrategy.BFS, globalOrder = true)
     val stream = new SeedStream(frontier, seedsDir)
@@ -44,8 +45,8 @@ class SeedStreamSpec extends AnyFunSuite {
     // stream checkpoint after a successful ingest — the source re-offers
     // the old files (with RESTARTED batch ids); the states-based seed
     // dedup must reject them WITHOUT dropping genuinely new files
-    val root = Files.createTempDirectory("graft-seedreplay").toString
-    val seedsDir = Files.createTempDirectory("graft-seeds2").toString
+    val root = tempDir("graft-seedreplay").toString
+    val seedsDir = tempDir("graft-seeds2").toString
     val frontier = new SparkFrontier(spark, root, partitions = 4,
       stateBuckets = 4, strategy = ScoreStrategy.BFS, globalOrder = true)
     Files.writeString(Paths.get(seedsDir, "s.txt"), "http://aaa.com/1\n")

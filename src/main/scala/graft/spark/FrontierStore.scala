@@ -2,7 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import java.nio.file.{Files, Paths, Path, StandardCopyOption, StandardOpenOption}
 import java.nio.channels.FileChannel
 import java.nio.file.attribute.{BasicFileAttributes, FileTime}
@@ -15,7 +15,8 @@ import java.nio.ByteBuffer
 import java.util.Base64
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory, PartitionedFile}
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.roaringbitmap.RoaringBitmap
 
 /** Bucket-partitioned, manifest-committed table — Iceberg-style semantics
@@ -47,12 +48,16 @@ import org.roaringbitmap.RoaringBitmap
   *    manifest alone records them, no data file is written
   *  - commit = write manifest, then atomically flip _CURRENT; a crashed
   *    epoch leaves the previous snapshot intact (resume-from-checkpoint);
-  *    every commit merges the manifest in one place (`commitReplaced`)
+  *    every commit merges the manifest in one place (`commitReplaced`).
+  *    The manifest flip is the only commit: data files are written in
+  *    place by one leaf writer (`BucketStore.LeafWriter`), with no
+  *    `_temporary` dir, rename or `_SUCCESS` marker, since a file that no
+  *    manifest lists is not part of the table
   *  - readVersioned carries each row's commit version (the commit=V dir
   *    level), so merge-on-read views resolve deltas without knowing the
   *    layout
-  *  - per-path row counts ride in the manifest (parquet footer stats at
-  *    commit time) so a dequeue plans its band prefix without any read
+  *  - per-path row counts ride in the manifest (counted by the writer)
+  *    so a dequeue plans its band prefix without any read
   *  - per-path file names and lengths ride in the manifest too, and every
   *    read is planned from them: no directory is listed (an Iceberg scan
   *    plans from its manifests' file lists the same way)
@@ -68,9 +73,9 @@ import org.roaringbitmap.RoaringBitmap
   */
 final class BucketStore(val root: String, val bucketCol: String,
     val buckets: Int, val bandCol: Option[String] = None,
-    /** long column whose per-path MAX is tracked in the manifest from
-      * the parquet footer stats (e.g. the queue's crawl_at — lets the
-      * dequeue prove a scan all-visible without reading data) */
+    /** long column whose per-path MAX the writer records in the
+      * manifest (e.g. the queue's crawl_at — lets the dequeue prove a
+      * scan all-visible without reading data) */
     val statCol: Option[String] = None) extends Serializable {
 
   private def currentPath = Paths.get(root, "_CURRENT")
@@ -293,7 +298,7 @@ final class BucketStore(val root: String, val bucketCol: String,
     import org.apache.spark.sql.catalyst.plans.physical.{KeyGroupedPartitioning, SinglePartition}
     import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+    import org.apache.spark.sql.types.{IntegerType, StructField}
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val schema = emptySchema.getOrElse(sys.error(s"$root: schema not set"))
     val hadoopConf = classic.sessionState.newHadoopConf()
@@ -363,92 +368,23 @@ final class BucketStore(val root: String, val bucketCol: String,
   /** Declared schema (also used for reads before the first commit). */
   @transient var emptySchema: Option[org.apache.spark.sql.types.StructType] = None
 
-  private final case class LeafDir(bucket: Int, path: String, rows: Long,
-      statMax: Option[Long], files: Map[String, Long])
-
   /** List a directory's entries, materialized. `Files.list` holds an open
-    * DirectoryStream (one fd) until closed — leaking it per leaf dir per
-    * commit exhausts the process fd limit over a long crawl (buckets ×
-    * bands fds per bulkSchedule). Always close before returning. */
+    * DirectoryStream (one fd) until closed — leaking it per directory per
+    * commit exhausts the process fd limit over a long crawl. Always close
+    * before returning. */
   private def listDir(p: Path): Seq[Path] = {
     val s = Files.list(p)
     try s.iterator.asScala.toVector finally s.close()
   }
 
-  /** Walk the committed dir: bucket level, plus band level when banded;
-    * row counts + statCol max from the parquet footers, and the files'
-    * names and lengths (driver-side metadata only, no Spark job — the
-    * Iceberg-manifest file-stats analog). */
-  private def leafDirs(commitDir: Path): Seq[LeafDir] = {
-    if (!Files.exists(commitDir)) return Nil
-    def rel(p: Path): String =
-      Paths.get(root).relativize(p).toString.replace(java.io.File.separatorChar, '/')
-    val bucketDirs = listDir(commitDir)
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(s"$bucketCol="))
-    val leafPaths: Seq[(Int, Path)] = bucketDirs.flatMap { bp =>
-      val bucket = bp.getFileName.toString.stripPrefix(s"$bucketCol=").toInt
-      val leaves = bandCol match {
-        case Some(bc) =>
-          listDir(bp)
-            .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(s"$bc="))
-        case None => Seq(bp)
-      }
-      leaves.map(bucket -> _)
-    }
-    // footer walks are independent driver-side IO; done sequentially
-    // their cost scales with leaf count (buckets × touched bands) and
-    // was the dequeue commit's anti-scaling term at high partition
-    // counts — run them on a bounded pool instead
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = BucketStore.footerEc
-    val conf = BucketStore.hadoopConf()
-    Await.result(
-      Future.traverse(leafPaths) { case (bucket, p) => Future {
-        val (rows, mx, files) = footerStats(p, conf)
-        LeafDir(bucket, s"$root/${rel(p)}", rows, mx, files)
-      }},
-      Duration.Inf)
-  }
-
-  private def footerStats(dir: Path, conf: org.apache.hadoop.conf.Configuration)
-      : (Long, Option[Long], Map[String, Long]) = {
-    var rows = 0L
-    var mx: Option[Long] = statCol.map(_ => Long.MinValue)
-    val files = Map.newBuilder[String, Long]
-    listDir(dir)
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .foreach { p =>
-        val hpath = new org.apache.hadoop.fs.Path(p.toUri)
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hpath, conf)
-        files += p.getFileName.toString -> in.getLength
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          rows += r.getRecordCount
-          statCol.foreach { sc =>
-            r.getFooter.getBlocks.forEach { block =>
-              block.getColumns.forEach { cc =>
-                if (cc.getPath.toDotString == sc) {
-                  val st = cc.getStatistics
-                  if (st == null || st.isEmpty || !st.hasNonNullValue) mx = None
-                  else {
-                    val v: Option[Long] = st.genericGetMax match {
-                      case l: java.lang.Long => Some(l.longValue())
-                      case i: java.lang.Integer => Some(i.longValue())
-                      case _ => None // unknown physical type: no stat
-                    }
-                    mx = for (m <- mx; x <- v) yield math.max(m, x)
-                  }
-                }
-              }
-            }
-          }
-        } finally r.close()
-      }
-    (rows, mx.filter(_ != Long.MinValue), files.result())
-  }
-
-  private def writeEpochData(df: DataFrame, commitV: Long): Seq[LeafDir] = {
+  /** Write `df`'s rows as version `commitV`'s leaves: one parquet file per
+    * leaf, its stats taken by the writer (`BucketStore.LeafWriter`). Rows
+    * the driver holds (every leaf of the plan a local relation) are
+    * written on the driver with no job; other rows are clustered by leaf
+    * and written by the tasks of one job, which return their leaves. No
+    * commit protocol: a file that no manifest lists is not part of the
+    * table, so the manifest flip is the commit. */
+  private def writeEpochData(df: DataFrame, commitV: Long): Seq[BucketStore.LeafDir] = {
     // every commit writes a fresh immutable directory (keyed by manifest
     // version, which is strictly monotonic) — a rewrite can never clobber
     // files still referenced by the live manifest. A leftover dir from a
@@ -456,17 +392,19 @@ final class BucketStore(val root: String, val bucketCol: String,
     // unreferenced by any manifest <= current, so it is safe to clear.
     val dir = Paths.get(root, "data", s"commit=$commitV")
     if (Files.exists(dir)) deleteRecursively(dir)
-    // one file per leaf instead of (tasks × leaves) shards — file count
-    // stays flat as parallelism grows: the rows are clustered by the
-    // partition dirs first. The partition columns go first: stores whose
-    // partition columns have the same types then share the generated
-    // classes of the shuffle, the sort and the leaf path (the files keep
-    // the other columns, in their order)
+    // the partition columns go first: the writer reads a row's leaf from
+    // them and writes the other columns, in their order
     val partCols = bucketCol +: bandCol.toSeq
-    df.select((partCols ++ df.columns.filterNot(partCols.contains)).map(col): _*)
-      .repartition(partCols.map(col): _*)
-      .write.mode("errorifexists").partitionBy(partCols: _*).parquet(dir.toString)
-    leafDirs(dir)
+    val rows = df.select((partCols ++ df.columns.filterNot(partCols.contains)).map(col): _*)
+    val writer = BucketStore.LeafWriter(rows, s"$root/data/commit=$commitV", partCols, statCol)
+    if (SparkFrontier.isLocal(df))
+      writer.write(SparkFrontier.collectInternal(rows).sortBy(writer.leaf).iterator).toSeq
+    else {
+      val clustered = rows.repartition(partCols.map(col): _*)
+        .sortWithinPartitions(partCols.map(col): _*)
+      SQLExecution.withNewExecutionId(clustered.queryExecution, Some("leaf write"))(
+        clustered.queryExecution.toRdd.mapPartitions(writer.write).collect().toSeq)
+    }
   }
 
   private def deleteRecursively(p: Path): Unit = {
@@ -579,7 +517,7 @@ final class BucketStore(val root: String, val bucketCol: String,
     * referenced path only), and exactly the buckets that gain or lose a
     * path, or whose rows `changed` in place, get `v` as their
     * last-touched version. */
-  private def commitReplaced(m: Manifest, v: Long, epoch: Long, written: Seq[LeafDir],
+  private def commitReplaced(m: Manifest, v: Long, epoch: Long, written: Seq[BucketStore.LeafDir],
       removePaths: Set[String], counters: Map[String, Long],
       props: Map[String, String], changed: Set[Int] = Set.empty): Unit = {
     val writtenByBucket = written.groupBy(_.bucket)
@@ -781,10 +719,87 @@ object BucketStore {
     c.size() // parses the default resources: a copy clones them, parsing nothing
     c
   }
-  /** bounded pool for the commit-time parquet footer walks (driver-side
-    * metadata IO, independent per leaf) */
-  private[spark] val footerEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(16,
-        r => { val t = new Thread(r, "graft-footer"); t.setDaemon(true); t }))
+  /** A leaf a commit wrote: its bucket, its path, its rows, the max of
+    * the store's `statCol` over them (absent when a row has none), and
+    * its files' names and lengths. */
+  private[spark] final case class LeafDir(bucket: Int, path: String, rows: Long,
+      statMax: Option[Long], files: Map[String, Long])
+
+  /** The one leaf writer: writes rows grouped by leaf (the partition
+    * columns first, then the data columns), one parquet file per leaf,
+    * through Spark's own parquet output writer, so the file format and
+    * compression are those of a `DataFrameWriter`. Each leaf's stats
+    * come from the rows written and the closed file; no footer is read
+    * back. It runs on the driver or in a task alike. */
+  private[spark] final class LeafWriter(dir: String, partCols: Seq[String],
+      dataSchema: StructType, stat: Option[Int], factory: OutputWriterFactory,
+      conf: org.apache.spark.util.SerializableConfiguration) extends Serializable {
+    private def part(r: InternalRow, i: Int): Int =
+      if (r.isNullAt(i)) throw new IllegalArgumentException(s"null ${partCols(i)}: no leaf")
+      else r.getInt(i)
+    /** a row's leaf: its bucket and band (0 with no band) */
+    def leaf(r: InternalRow): (Int, Int) = (part(r, 0), if (partCols.size > 1) part(r, 1) else 0)
+
+    /** Write `rows`, which hold each leaf's rows together, and return the
+      * leaves written. A leaf is recorded only once its file is closed. */
+    def write(rows: Iterator[InternalRow]): Iterator[LeafDir] = {
+      import org.apache.hadoop.mapreduce.TaskAttemptID
+      import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+      val ctx = new TaskAttemptContextImpl(conf.value, new TaskAttemptID)
+      val ext = factory.getFileExtension(ctx)
+      val k = partCols.size
+      val data = org.apache.spark.sql.catalyst.ProjectingInternalRow(dataSchema, k until k + dataSchema.size)
+      val done = Vector.newBuilder[LeafDir]
+      var at: (Int, Int) = null
+      var path: String = null
+      var out: OutputWriter = null
+      var (n, max, nulls) = (0L, Long.MinValue, false)
+      def finish(): Unit = if (out != null) {
+        out.close()
+        val file = new java.io.File(out.path)
+        out = null
+        done += LeafDir(at._1, path, n, if (stat.isEmpty || nulls) None else Some(max),
+          Map(file.getName -> file.length))
+      }
+      try {
+        rows.foreach { r =>
+          val l = leaf(r)
+          if (l != at) {
+            finish()
+            at = l
+            path = s"$dir/${partCols.head}=${l._1}" + partCols.drop(1).map(c => s"/$c=${l._2}").mkString
+            out = factory.newInstance(s"$path/part-${java.util.UUID.randomUUID}$ext", dataSchema, ctx)
+            n = 0L; max = Long.MinValue; nulls = false
+          }
+          data.project(r)
+          out.write(data)
+          n += 1
+          stat.foreach(i => if (r.isNullAt(i)) nulls = true else max = math.max(max, r.getLong(i)))
+        }
+        finish()
+      } catch {
+        case NonFatal(e) =>
+          // the partial file is an orphan that the version's next write clears
+          if (out != null) try out.close() catch { case NonFatal(c) => e.addSuppressed(c) }
+          throw e
+      }
+      done.result().iterator
+    }
+  }
+  object LeafWriter {
+    /** The writer of `rows` (the partition columns `partCols` first) into
+      * the leaves under `dir`; the max of `statCol` is kept when it is a
+      * long column. */
+    def apply(rows: DataFrame, dir: String, partCols: Seq[String],
+        statCol: Option[String]): LeafWriter = {
+      val session = rows.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val job = org.apache.hadoop.mapreduce.Job.getInstance(session.sessionState.newHadoopConf())
+      val dataSchema = StructType(rows.schema.drop(partCols.size))
+      val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+        .prepareWrite(session, job, Map.empty, dataSchema)
+      new LeafWriter(dir, partCols, dataSchema,
+        statCol.map(rows.schema.fieldIndex).filter(i => rows.schema(i).dataType == LongType),
+        factory, new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
+    }
+  }
 }

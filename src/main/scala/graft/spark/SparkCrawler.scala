@@ -69,7 +69,8 @@ final class SparkCrawler(
         // the epoch reads it as a local relation: no job reads it again
         val toRow = CatalystTypeConverters.createToScalaConverter(dequeued.schema)
         val rows = SparkCrawler.sortRows(
-          SparkFrontier.collectInternal(dequeued).map(toRow(_).asInstanceOf[Row]),
+          frontier.labeled("batch")(SparkFrontier.collectInternal(dequeued))
+            .map(toRow(_).asInstanceOf[Row]),
           dequeued.schema, frontier.batchOrder :+ ("url" -> true))
         val ordered = rows.map(_.getAs[String]("url")).toList
         if (ordered.nonEmpty) sequence.append(ordered)

@@ -190,7 +190,7 @@ final class SparkFrontier(
 
   /** Label the Spark jobs of a phase (guide: setJobDescription is
     * thread-local, so concurrent side commits keep distinct labels). */
-  private def labeled[T](desc: String)(body: => T): T = {
+  private[spark] def labeled[T](desc: String)(body: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"graft: $desc")
@@ -1375,7 +1375,7 @@ final class SparkFrontier(
         // bound into the plan: no broadcast exchange, whose job's tasks
         // compile their stage anew every epoch
         val seen = spark.sparkContext.broadcast[Map[UTF8String, Any]](
-          SparkFrontier.collectInternal(seenPersisted).collect {
+          labeled("seen set")(SparkFrontier.collectInternal(seenPersisted)).collect {
             case r if !r.isNullAt(0) => r.getUTF8String(0) -> r.getUTF8String(0) }.toMap)
         broadcasts += seen
         deduped.filter(bound_lookup(seen, StringType, $"fingerprint").isNull)
@@ -1526,11 +1526,12 @@ final class SparkFrontier(
     // per-epoch overhead is per-job latency × job count). It materializes
     // `scheduled`; `updates` itself is a projection of that cache and the
     // driver's rows, so it has no cache of its own
-    val updates = fetchStates
-      .union(scheduled.select($"fingerprint")
-        .withColumn("state", lit(graft.local.States.Queued)))
+    def withSbucket(rows: DataFrame): DataFrame = rows
       .withColumn("sbucket", sbucketCol($"fingerprint"))
       .select(statesSchema.fieldNames.map(col): _*)
+    val updates = withSbucket(fetchStates
+      .union(scheduled.select($"fingerprint")
+        .withColumn("state", lit(graft.local.States.Queued))))
     val updStats = labeled("links pipeline + state-update stats")(
       SparkFrontier.countRows(updates.select($"sbucket", $"state")))
       .map { case (r, n) => (r.getInt(0), r.getInt(1)) -> n }
@@ -1538,6 +1539,9 @@ final class SparkFrontier(
     def nInState(state: Int): Long = updStats.collect { case ((_, s), n) if s == state => n }.sum
     val nScheduled = nInState(graft.local.States.Queued)
     probeCache.foreach(_.unpersist())
+    // the states delta: with nothing scheduled, the fetches' own states
+    // alone, rows the driver holds, which the store writes with no job
+    val delta = if (nScheduled == 0) withSbucket(fetchStates) else updates
 
     // revisit: crawled pages re-enter the queue, visible `interval`
     // epochs from now (reference crawl_at, hbase/__init__.py:124)
@@ -1555,8 +1559,8 @@ final class SparkFrontier(
     // has already applied (its manifest epoch is monotone), so a replay
     // after a crash BETWEEN the epoch's commits heals the stores that
     // missed out without duplicating the ones that didn't. Provably-empty
-    // commits are skipped entirely (per-epoch fixed cost = manifest flips
-    // × footer walks). The queue and domain_metadata appends (separate
+    // commits are skipped entirely (per-epoch fixed cost = manifest
+    // flips × write jobs). The queue and domain_metadata appends (separate
     // stores, separate locks, all replay-guarded) join the metadata
     // append started above, and the states delta is written beside them.
     def commitQueue(): Unit =
@@ -1614,7 +1618,7 @@ final class SparkFrontier(
     startCommit("queue append")(commitQueue())
     startCommit("domain-metadata append")(commitDomainMeta())
     if (bloomOn && willMergeStates)
-      startCommit("bloom delta keys") { prebuiltDeltas = Some(bloomSeen.buildDeltas(updates)) }
+      startCommit("bloom delta keys") { prebuiltDeltas = Some(bloomSeen.buildDeltas(delta)) }
 
     // states merge commit (replay-guarded like the other stores): its
     // delta is written beside the commits above, and its manifest flip
@@ -1623,7 +1627,7 @@ final class SparkFrontier(
     // applied" with no extra manifest flip, and a failure anywhere leaves
     // it unset
     if (willMergeStates) labeled("states merge") {
-      mergeStateUpdates(updates, touched, epochNo, bloomOn,
+      mergeStateUpdates(delta, touched, epochNo, bloomOn,
         Map("crawled" -> pageRows.length.toLong, "queued" -> nScheduled),
         props = Map(jidKey -> epochNo.toString),
         beforeFlip = () => { joinCommits(); prebuiltDeltas })
@@ -1694,14 +1698,19 @@ object SparkFrontier {
     * still push projections into its source. */
   private[spark] def overTasks(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.execution.LogicalRDD
     val qe = df.queryExecution
-    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) df
+    if (!isLocal(df)) df
     else GraftColumnBridge.ofRows(df.sparkSession, LogicalRDD(qe.analyzed.output, qe.toRdd)(
       df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       Some(qe.optimizedPlan.stats)))
   }
+
+  /** Whether the driver holds `df`'s rows: every leaf of its plan is a
+    * local relation (e.g. a `Seq.toDF`). */
+  private[spark] def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
 
   /** `df`'s rows as Catalyst rows, collected without Dataset's generated
     * deserializer: the collects of an epoch's few driver-side rows then

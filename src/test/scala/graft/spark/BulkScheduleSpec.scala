@@ -6,7 +6,6 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.util.QueryExecutionListener
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
@@ -96,7 +95,7 @@ class BulkScheduleSpec extends AnyFunSuite with TempDirs {
     val writes = new LinkedBlockingQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.analyzed.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand])) writes.add(qe)
+        if (funcName == "leaf write") writes.add(qe)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     s.listenerManager.register(listener)

@@ -228,7 +228,7 @@ class ErrorAndReplaySpec extends AnyFunSuite with TempDirs {
     assert(f.metadata.readManifest().epoch == 2L,
       "the metadata commit started with the epoch ran to its end before the rethrow")
     val live = Thread.getAllStackTraces.keySet.asScala
-      .filter(t => t.isAlive && t.getName.startsWith("graft-") && t.getName != "graft-footer")
+      .filter(t => t.isAlive && t.getName.startsWith("graft-"))
     assert(live.isEmpty, live.map(_.getName))
     assert(f.lastProcessedEpoch == 1L)
     failing = false

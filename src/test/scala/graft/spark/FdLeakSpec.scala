@@ -7,8 +7,8 @@ import java.nio.file.{Files, Paths}
 
 /** Regression for the round-4 bench crash: every `Files.list` in
   * BucketStore used to leak one directory fd (the stream's backing
-  * DirectoryStream was never closed). One `leafDirs` walk opens
-  * buckets + leaves + per-leaf file listings, so a bulkSchedule over
+  * DirectoryStream was never closed). One commit's directory walk then
+  * opened buckets + leaves + per-leaf file listings, so a bulkSchedule over
   * 32 buckets × ~100 score bands leaked thousands of fds in a single
   * commit; ~16 sequential bench sessions then blew the process limit
   * ("Too many open files" inside BypassMergeSortShuffleWriter, 32 min
@@ -59,7 +59,7 @@ class FdLeakSpec extends AnyFunSuite with TempDirs {
       }
       store.append(epochDf(e), e.toLong)
     }
-    // band-pruned rewrite (replacePaths) + compaction both re-walk leaves
+    // band-pruned rewrite (replacePaths) + compaction both write leaves
     val m = store.readManifest()
     val somePaths = m.bucketPaths(0).take(4)
     store.replacePaths(store.readPaths(spark, somePaths), m.epoch, somePaths.toSet)

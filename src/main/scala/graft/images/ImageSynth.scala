@@ -161,6 +161,8 @@ object ImageSynth {
     override def isCachedMemory: Boolean = true
   }
   private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
+  /** the length of this thread's raw-byte scratch buffer */
+  private[images] def scratchBytes: Int = scratch.get().bb.length
 
   def seedOf(url: String): Long =
     Hashing.murmur128(UrlUtil.canonicalize(url).getBytes("UTF-8"), 42)._1
@@ -435,7 +437,7 @@ object ImageSynth {
     * (compressed deflate, other color types, nonzero filters — e.g. the
     * driver's parquet-fixture payloads) returns null and takes the
     * ImageIO path. */
-  private def decodeStoredPng(bytes: Array[Byte]): BufferedImage = {
+  private[images] def decodeStoredPng(bytes: Array[Byte]): BufferedImage = {
     def u8(i: Int): Int = bytes(i) & 0xff
     def be32(i: Int): Int =
       (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
@@ -444,8 +446,13 @@ object ImageSynth {
     val h = be32(20)
     // bit depth 8, color type 2 (truecolor), no interlace
     if (u8(24) != 8 || u8(25) != 2 || u8(28) != 0) return null
+    // the raw rows, sized in Long (a hostile IHDR overflows Int): they
+    // must fit in the bytes after IHDR, or the file is not ours, and the
+    // scratch buffer is not grown for it
+    val rawSize = h.toLong * (1L + 3L * w)
+    if (w <= 0 || h <= 0 || rawSize > bytes.length - 33) return null
     val rowLen = 1 + 3 * w
-    val rawLen = h * rowLen
+    val rawLen = rawSize.toInt
     val raw = scratch.get().bbuf(rawLen)
     // walk chunks; concatenate IDAT payloads' stored blocks into raw
     var pos = 33 // after IHDR chunk

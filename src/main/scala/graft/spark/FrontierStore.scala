@@ -15,8 +15,8 @@ import java.nio.ByteBuffer
 import java.util.Base64
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory, PartitionedFile}
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.roaringbitmap.RoaringBitmap
 
 /** Bucket-partitioned, manifest-committed table — Iceberg-style semantics
@@ -52,7 +52,10 @@ import org.roaringbitmap.RoaringBitmap
   *    The manifest flip is the only commit: data files are written in
   *    place by one leaf writer (`BucketStore.LeafWriter`), with no
   *    `_temporary` dir, rename or `_SUCCESS` marker, since a file that no
-  *    manifest lists is not part of the table
+  *    manifest lists is not part of the table. The writer creates its
+  *    files through java.nio, so no write forks a process, and writes no
+  *    `.crc` file: parquet's page checksums, verified by every read,
+  *    stand for it
   *  - readVersioned carries each row's commit version (the commit=V dir
   *    level), so merge-on-read views resolve deltas without knowing the
   *    layout
@@ -66,7 +69,13 @@ import org.roaringbitmap.RoaringBitmap
   *    `compact`) goes through `readFiles`, the one place that maps the
   *    manifest's file lists to Spark partitions, applies the deletes,
   *    fills typed nulls for added columns and lists a leaf dir only for
-  *    a manifest written before file lists
+  *    a manifest written before file lists. `readLocal` reads the same
+  *    files the same way on the driver, with no job (the small seen
+  *    set). The parquet reader and the writer's set-up are built once
+  *    per store, session and schema, so a read broadcasts no Hadoop
+  *    configuration after the first
+  *  - `sizeInBytes` is Spark's size estimate of a read, from the
+  *    manifest's file lengths alone: deciding a join side plans no read
   *  - commits are serialized (JVM monitor + OS file lock) and clean up
   *    orphan commit dirs from crashed writers, so a crash between the
   *    data write and the _CURRENT flip never bricks the store
@@ -235,13 +244,24 @@ final class BucketStore(val root: String, val bucketCol: String,
     readFiles(spark, m, pathsOf(m, only), versioned = true)
   }
 
-  /** Spark's size estimate of `read`, a read of the table at `m` (the
-    * optimized plan's `sizeInBytes`, the number its broadcast decision
-    * compares). A table with no path has size 0: Spark estimates a
-    * projection of a read of no file at 1 byte, not 0. */
-  def sizeInBytes(m: Manifest, read: DataFrame): Long =
+  /** Spark's size estimate of a read of `cols` of the table at `m`: the
+    * number Spark's broadcast decision compares for that read, taken
+    * from the manifest's file lengths with no read planned. A read's
+    * estimate is its files' bytes, and Spark's optimizer scales a
+    * projection of it by the row size of the projected columns over
+    * that of the read's output (never below 1 byte); so is this one. A
+    * table with no path has size 0. */
+  def sizeInBytes(m: Manifest, cols: Seq[String]): Long =
     if (m.bucketPaths.isEmpty) 0L
-    else read.queryExecution.optimizedPlan.stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong
+    else {
+      import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils.getSizePerRow
+      import org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes
+      val output = toAttributes(BucketStore.FileReader.output(layout(versioned = false)))
+      val bytes = filesOf(m, pathsOf(m, None), localFs).iterator.map(_._3).sum
+      val scaled = BigInt(bytes) * getSizePerRow(output.filter(a => cols.contains(a.name))) /
+        getSizePerRow(output)
+      scaled.max(1).min(Long.MaxValue).toLong
+    }
 
   private def pathsOf(m: Manifest, only: Option[Set[Int]]): Seq[String] =
     m.bucketPaths
@@ -284,57 +304,72 @@ final class BucketStore(val root: String, val bucketCol: String,
       }
     }
 
-  /** `readPaths` at `m`; `versioned` adds the `commit` column of
-    * `readVersioned` (the commit=V dir level of each file). */
-  private def readFiles(spark: SparkSession, m: Manifest, paths: Seq[String],
-      oneTask: Boolean = false, positions: Boolean = false,
-      versioned: Boolean = false): DataFrame = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    import org.apache.spark.paths.SparkPath
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.FileSourceOptions
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.catalyst.plans.logical.Statistics
-    import org.apache.spark.sql.catalyst.plans.physical.{KeyGroupedPartitioning, SinglePartition}
-    import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    import org.apache.spark.sql.types.{IntegerType, StructField}
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+  /** the local file system of a commit's manifest edits */
+  private def localFs = new org.apache.hadoop.fs.Path(root).getFileSystem(BucketStore.hadoopConf())
+
+  /** The schema's dir levels as a read returns them (the bucket, and the
+    * band; then the commit version when `versioned`), and its other
+    * columns: the read's partition and data schemas. */
+  private def layout(versioned: Boolean): (StructType, StructType) = {
     val schema = emptySchema.getOrElse(sys.error(s"$root: schema not set"))
-    val hadoopConf = classic.sessionState.newHadoopConf()
-    val fs = new HPath(root).getFileSystem(hadoopConf)
-    val bucketOf = m.bucketPaths.iterator.flatMap { case (b, ps) => ps.map(_ -> b) }.toMap
-    // the dir levels the schema declares: the bucket, and the band; then
-    // the commit version when versioned
     val dirLevels = StructType((bucketCol +: bandCol.toSeq).filter(schema.fieldNames.contains)
       .map(schema(_)))
-    val partSchema =
-      if (versioned) dirLevels.add(BucketStore.CommitCol, LongType) else dirLevels
-    val dataSchema = StructType(schema.filterNot(f => dirLevels.fieldNames.contains(f.name)))
+    (if (versioned) dirLevels.add(BucketStore.CommitCol, LongType) else dirLevels,
+      StructType(schema.filterNot(f => dirLevels.fieldNames.contains(f.name))))
+  }
+
+  /** The parquet reader of `readFiles` for `spark`, plain or `versioned`.
+    * Building one broadcasts its Hadoop configuration, so each is built
+    * once per session and schema. The configuration is the reader's own
+    * copy of the session's, with parquet's page-checksum verification on:
+    * the leaf writer writes a checksum per page and no `.crc` file. A
+    * change to the session's configuration after the store's first read
+    * does not reach it. */
+  private def readerFor(spark: SparkSession, versioned: Boolean): BucketStore.FileReader =
+    readers.computeIfAbsent((spark, emptySchema, versioned), _ => {
+      import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val (partSchema, dataSchema) = layout(versioned)
+      val conf = classic.sessionState.newHadoopConfWithOptions(
+        Map(org.apache.parquet.hadoop.ParquetInputFormat.PAGE_VERIFY_CHECKSUM_ENABLED -> "true"))
+      // rows, not batches: the vectorized decoder still reads the pages.
+      // No filter: every row of a file is read, so the ordinal is the position
+      BucketStore.FileReader(new ParquetFileFormat().buildReaderWithPartitionValues(classic,
+        dataSchema, partSchema, dataSchema, Nil, Map("returning_batch" -> "false"), conf),
+        (partSchema, dataSchema), conf)
+    })
+  @transient private lazy val readers = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, Option[StructType], Boolean), BucketStore.FileReader]()
+
+  /** The files a read of `paths` at `m` reads, by number (see `filesOf`),
+    * each with its bucket as Spark's file partition, whose values are its
+    * dir levels'; and the read of one of them: the reader's rows, with
+    * the manifest's deletes dropped and its row counts checked
+    * (`BucketStore.positioned`), each followed by its file's number and
+    * its position there. A read in a task and one on the driver read a
+    * file the same way. */
+  private def scan(spark: SparkSession, m: Manifest, paths: Seq[String], versioned: Boolean)
+      : (IndexedSeq[(Int, PartitionedFile)], PartitionedFile => Iterator[InternalRow],
+        BucketStore.FileReader) = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.spark.paths.SparkPath
+    val reader = readerFor(spark, versioned)
+    val fs = new HPath(root).getFileSystem(reader.conf)
+    val bucketOf = m.bucketPaths.iterator.flatMap { case (b, ps) => ps.map(_ -> b) }.toMap
     def commitOf(p: String): Long =
       p.split('/').find(_.startsWith(s"${BucketStore.CommitCol}="))
         .map(_.stripPrefix(s"${BucketStore.CommitCol}=").toLong).getOrElse(-1L)
-    // every file under `paths`, with its dir levels' values and its
-    // number, by bucket
+    val banded = reader.layout._1.fieldNames.contains(bandCol.getOrElse(""))
     val files = filesOf(m, paths, fs)
-    val byBucket = files.indices.groupBy(i => bucketOf(files(i)._1)).toSeq.sortBy(_._1)
-      .map { case (b, ids) =>
-        b -> ids.map { i =>
-          val (p, name, len) = files(i)
-          val values = InternalRow.fromSeq(b +: ((if (dirLevels.size > 1)
-            Seq(bandOf(p)).map(band => if (band >= 0) band else null) else Nil) ++
-            (if (versioned) Seq(commitOf(p)) else Nil)))
-          PartitionedFile(values, SparkPath.fromPath(new HPath(fs.makeQualified(new HPath(p)), name)),
-            0L, len, Array.empty[String], 0L, len, Map.empty) -> i
-        }
-      }
-    val numbers = byBucket.iterator.flatMap(_._2).map { case (f, i) => f.urlEncodedPath -> i }.toMap
-    val groups = (if (oneTask || byBucket.isEmpty) Seq(byBucket.flatMap(_._2)) else byBucket.map(_._2))
-      .map(_.map(_._1))
-    // rows, not batches: the vectorized decoder still reads the pages.
-    // No filter: every row of a file is read, so the ordinal is the position
-    val parquet = new ParquetFileFormat().buildReaderWithPartitionValues(classic, dataSchema,
-      partSchema, dataSchema, Nil, Map("returning_batch" -> "false"), hadoopConf)
+    val partitioned = files.map { case (p, name, len) =>
+      val b = bucketOf(p)
+      val values = InternalRow.fromSeq(b +: ((if (banded)
+        Seq(bandOf(p)).map(band => if (band >= 0) band else null) else Nil) ++
+        (if (versioned) Seq(commitOf(p)) else Nil)))
+      b -> PartitionedFile(values, SparkPath.fromPath(new HPath(fs.makeQualified(new HPath(p)), name)),
+        0L, len, Array.empty[String], 0L, len, Map.empty)
+    }
+    val numbers = partitioned.iterator.map(_._2.urlEncodedPath).zipWithIndex.toMap
     val deleted = files.indices.flatMap { i =>
       val (p, name, _) = files(i)
       m.pathDeletes.get(p).flatMap(_.get(name)).map(i -> _)
@@ -344,15 +379,29 @@ final class BucketStore(val root: String, val bucketCol: String,
     val pathRows = files.indices.groupBy(i => files(i)._1).collect {
       case (p, ids) if m.pathRows.contains(p) => ids.max -> (ids, m.pathRows(p))
     }
-    val reader = BucketStore.positioned(parquet, numbers, deleted, pathRows)
-    val tags = StructType(Seq(StructField(BucketStore.FileCol, IntegerType, nullable = false),
-      StructField(BucketStore.PosCol, IntegerType, nullable = false)))
-    val rdd = new FileScanRDD(classic, reader,
+    (partitioned, BucketStore.positioned(reader.read, numbers, deleted, pathRows), reader)
+  }
+
+  /** `readPaths` at `m`; `versioned` adds the `commit` column of
+    * `readVersioned` (the commit=V dir level of each file). */
+  private def readFiles(spark: SparkSession, m: Manifest, paths: Seq[String],
+      oneTask: Boolean = false, positions: Boolean = false,
+      versioned: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge
+    import org.apache.spark.sql.catalyst.FileSourceOptions
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical.Statistics
+    import org.apache.spark.sql.catalyst.plans.physical.{KeyGroupedPartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD}
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val schema = emptySchema.getOrElse(sys.error(s"$root: schema not set"))
+    val (files, read, reader) = scan(spark, m, paths, versioned)
+    val byBucket = files.groupBy(_._1).toSeq.sortBy(_._1).map { case (b, fs) => b -> fs.map(_._2) }
+    val groups = if (oneTask || byBucket.isEmpty) Seq(files.map(_._2)) else byBucket.map(_._2)
+    val rdd = new FileScanRDD(classic, read,
       groups.zipWithIndex.map { case (fs, i) => FilePartition(i, fs.toArray) },
-      StructType(dataSchema ++ partSchema ++ tags), Nil, Map.empty,
-      new FileSourceOptions(Map.empty[String, String]))
-    val output = (dataSchema ++ partSchema ++ tags)
-      .map(f => AttributeReference(f.name, f.dataType, f.nullable)())
+      reader.output, Nil, Map.empty, new FileSourceOptions(Map.empty[String, String]))
+    val output = reader.output.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
     val clustering =
       if (groups.size == 1) SinglePartition
       else KeyGroupedPartitioning(output.filter(_.name == bucketCol), byBucket.size,
@@ -362,7 +411,35 @@ final class BucketStore(val root: String, val bucketCol: String,
         Some(Statistics(sizeInBytes = BigInt(bytes)))))
       .select((schema.fieldNames.toSeq ++
         (if (versioned) Seq(BucketStore.CommitCol) else Nil) ++
-        (if (positions) tags.fieldNames else Nil)).map(col): _*)
+        (if (positions) Seq(BucketStore.FileCol, BucketStore.PosCol) else Nil)).map(col): _*)
+  }
+
+  /** The rows of `paths` at `m`, as `readPaths` reads them, read on the
+    * driver with no Spark job: the same files, reader, deletes and
+    * row-count checks as a read in tasks. Each row holds `cols`, copied.
+    * A file that fails to read fails the call, naming the file. For the
+    * few rows of a small table (a leaf never changes, so a caller may
+    * keep what it read while a manifest lists the leaf). */
+  private[spark] def readLocal(spark: SparkSession, m: Manifest, paths: Seq[String],
+      cols: Seq[String]): Vector[InternalRow] = {
+    val (files, read, reader) = scan(spark, m, paths, versioned = false)
+    val fields = cols.map(c => reader.output.fieldIndex(c) -> reader.output(c).dataType)
+    val out = Vector.newBuilder[InternalRow]
+    for ((_, file) <- files) {
+      var rows: Iterator[InternalRow] = Iterator.empty
+      try {
+        rows = read(file)
+        rows.foreach(r => out += new GenericInternalRow(fields.map { case (i, t) =>
+          InternalRow.copyValue(r.get(i, t)) }.toArray))
+      } catch {
+        case NonFatal(e) =>
+          throw new IllegalStateException(s"read of ${file.urlEncodedPath} failed: ${e.getMessage}", e)
+      } finally rows match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
+    }
+    out.result()
   }
 
   /** Declared schema (also used for reads before the first commit). */
@@ -396,7 +473,11 @@ final class BucketStore(val root: String, val bucketCol: String,
     // them and writes the other columns, in their order
     val partCols = bucketCol +: bandCol.toSeq
     val rows = df.select((partCols ++ df.columns.filterNot(partCols.contains)).map(col): _*)
-    val writer = BucketStore.LeafWriter(rows, s"$root/data/commit=$commitV", partCols, statCol)
+    val dataSchema = StructType(rows.schema.drop(partCols.size))
+    // the max of `statCol` is kept when it is a long column
+    val writer = new BucketStore.LeafWriter(s"$root/data/commit=$commitV", partCols, dataSchema,
+      statCol.map(rows.schema.fieldIndex).filter(i => rows.schema(i).dataType == LongType),
+      writeConf(rows.sparkSession, dataSchema))
     if (SparkFrontier.isLocal(df))
       writer.write(SparkFrontier.collectInternal(rows).sortBy(writer.leaf).iterator).toSeq
     else {
@@ -406,6 +487,23 @@ final class BucketStore(val root: String, val bucketCol: String,
         clustered.queryExecution.toRdd.mapPartitions(writer.write).collect().toSeq)
     }
   }
+
+  /** The Hadoop configuration the leaf writer writes `dataSchema` with:
+    * Spark's parquet write set-up (`ParquetFileFormat.prepareWrite`) for
+    * `spark`, so the format and compression are those of a
+    * `DataFrameWriter`. Built once per session and schema (the schema's
+    * nullability is the file's). */
+  private def writeConf(spark: SparkSession, dataSchema: StructType)
+      : org.apache.spark.util.SerializableConfiguration =
+    writeConfs.computeIfAbsent((spark, dataSchema), _ => {
+      val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val job = org.apache.hadoop.mapreduce.Job.getInstance(session.sessionState.newHadoopConf())
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+        .prepareWrite(session, job, Map.empty, dataSchema)
+      new org.apache.spark.util.SerializableConfiguration(job.getConfiguration)
+    })
+  @transient private lazy val writeConfs = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, StructType), org.apache.spark.util.SerializableConfiguration]()
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p))
@@ -475,8 +573,7 @@ final class BucketStore(val root: String, val bucketCol: String,
       props: Map[String, String] = Map.empty): Unit =
     withCommitLock {
       val m = readManifest()
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(BucketStore.hadoopConf())
-      val files = filesOf(m, paths, fs)
+      val files = filesOf(m, paths, localFs)
       val bucketOf = m.bucketPaths.iterator.flatMap { case (b, ps) => ps.map(_ -> b) }.toMap
       var rows = m.pathRows
       var listed = m.pathFiles
@@ -725,14 +822,35 @@ object BucketStore {
   private[spark] final case class LeafDir(bucket: Int, path: String, rows: Long,
       statMax: Option[Long], files: Map[String, Long])
 
+  /** A store's parquet reader for one session (`readerFor`): Spark's
+    * reader of one file, the read's partition and data schemas, and the
+    * Hadoop configuration it reads with. */
+  private final case class FileReader(read: PartitionedFile => Iterator[InternalRow],
+      layout: (StructType, StructType), conf: org.apache.hadoop.conf.Configuration) {
+    def output: StructType = FileReader.output(layout)
+  }
+  private object FileReader {
+    /** the columns a read returns: the data, the dir levels, then each
+      * row's file and position */
+    def output(layout: (StructType, StructType)): StructType =
+      StructType(layout._2 ++ layout._1 ++ Seq(
+        StructField(FileCol, IntegerType, nullable = false),
+        StructField(PosCol, IntegerType, nullable = false)))
+  }
+
   /** The one leaf writer: writes rows grouped by leaf (the partition
     * columns first, then the data columns), one parquet file per leaf,
-    * through Spark's own parquet output writer, so the file format and
-    * compression are those of a `DataFrameWriter`. Each leaf's stats
-    * come from the rows written and the closed file; no footer is read
-    * back. It runs on the driver or in a task alike. */
+    * through Spark's parquet write support with the settings of Spark's
+    * write set-up (`conf`), so the file format and compression are those
+    * of a `DataFrameWriter`. The files are written through java.nio, as
+    * the manifests are: Hadoop's local file system would fork a `chmod`
+    * for every directory, file and `.crc` file it creates. Parquet's page
+    * checksums, which the store's reader verifies, stand for the `.crc`
+    * file. Each leaf's stats come from the rows written and the closed
+    * file; no footer is read back. It runs on the driver or in a task
+    * alike. */
   private[spark] final class LeafWriter(dir: String, partCols: Seq[String],
-      dataSchema: StructType, stat: Option[Int], factory: OutputWriterFactory,
+      dataSchema: StructType, stat: Option[Int],
       conf: org.apache.spark.util.SerializableConfiguration) extends Serializable {
     private def part(r: InternalRow, i: Int): Int =
       if (r.isNullAt(i)) throw new IllegalArgumentException(s"null ${partCols(i)}: no leaf")
@@ -743,23 +861,22 @@ object BucketStore {
     /** Write `rows`, which hold each leaf's rows together, and return the
       * leaves written. A leaf is recorded only once its file is closed. */
     def write(rows: Iterator[InternalRow]): Iterator[LeafDir] = {
-      import org.apache.hadoop.mapreduce.TaskAttemptID
-      import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-      val ctx = new TaskAttemptContextImpl(conf.value, new TaskAttemptID)
-      val ext = factory.getFileExtension(ctx)
+      import org.apache.parquet.hadoop.{ParquetOutputFormat => F, ParquetWriter}
+      val c = conf.value
+      val codec = F.getCompression(c)
       val k = partCols.size
       val data = org.apache.spark.sql.catalyst.ProjectingInternalRow(dataSchema, k until k + dataSchema.size)
       val done = Vector.newBuilder[LeafDir]
       var at: (Int, Int) = null
       var path: String = null
-      var out: OutputWriter = null
+      var file: Path = null
+      var out: ParquetWriter[InternalRow] = null
       var (n, max, nulls) = (0L, Long.MinValue, false)
       def finish(): Unit = if (out != null) {
         out.close()
-        val file = new java.io.File(out.path)
         out = null
         done += LeafDir(at._1, path, n, if (stat.isEmpty || nulls) None else Some(max),
-          Map(file.getName -> file.length))
+          Map(file.getFileName.toString -> Files.size(file)))
       }
       try {
         rows.foreach { r =>
@@ -768,7 +885,15 @@ object BucketStore {
             finish()
             at = l
             path = s"$dir/${partCols.head}=${l._1}" + partCols.drop(1).map(c => s"/$c=${l._2}").mkString
-            out = factory.newInstance(s"$path/part-${java.util.UUID.randomUUID}$ext", dataSchema, ctx)
+            file = Paths.get(path, s"part-${java.util.UUID.randomUUID}${codec.getExtension}.parquet")
+            Files.createDirectories(file.getParent)
+            // the properties Hadoop's parquet output format reads from `c`
+            out = new RowWriterBuilder(new org.apache.parquet.io.LocalOutputFile(file)).withConf(c)
+              .withCompressionCodec(codec).withRowGroupSize(F.getLongBlockSize(c))
+              .withPageSize(F.getPageSize(c)).withDictionaryPageSize(F.getDictionaryPageSize(c))
+              .withDictionaryEncoding(F.getEnableDictionary(c)).withWriterVersion(F.getWriterVersion(c))
+              .withPageWriteChecksumEnabled(F.getPageWriteChecksumEnabled(c))
+              .withValidation(F.getValidation(c)).build()
             n = 0L; max = Long.MinValue; nulls = false
           }
           data.project(r)
@@ -786,20 +911,15 @@ object BucketStore {
       done.result().iterator
     }
   }
-  object LeafWriter {
-    /** The writer of `rows` (the partition columns `partCols` first) into
-      * the leaves under `dir`; the max of `statCol` is kept when it is a
-      * long column. */
-    def apply(rows: DataFrame, dir: String, partCols: Seq[String],
-        statCol: Option[String]): LeafWriter = {
-      val session = rows.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val job = org.apache.hadoop.mapreduce.Job.getInstance(session.sessionState.newHadoopConf())
-      val dataSchema = StructType(rows.schema.drop(partCols.size))
-      val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-        .prepareWrite(session, job, Map.empty, dataSchema)
-      new LeafWriter(dir, partCols, dataSchema,
-        statCol.map(rows.schema.fieldIndex).filter(i => rows.schema(i).dataType == LongType),
-        factory, new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
-    }
+
+  /** A parquet writer of Catalyst rows through Spark's write support,
+    * which takes the rows' schema and Spark's format settings from the
+    * writer's configuration. */
+  private final class RowWriterBuilder(file: org.apache.parquet.io.OutputFile)
+      extends org.apache.parquet.hadoop.ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
+    override protected def self(): RowWriterBuilder = this
+    override protected def getWriteSupport(conf: org.apache.hadoop.conf.Configuration)
+        : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
   }
 }

@@ -394,15 +394,45 @@ final class SparkFrontier(
   private def bloomPays(seenSetBytes: Long): Boolean =
     seenSetBytes > spark.sessionState.conf.autoBroadcastJoinThreshold
 
-  /** The exact anti-join's build side over states `m`: its fingerprints. */
-  private def seenSet(m: states.Manifest): DataFrame =
-    states.readAt(spark, m).select($"fingerprint")
-
-  /** Spark's size estimate of `seenSet(m)` — the number Spark compares
-    * with the same threshold when it plans that join; 0 while the table
-    * is empty. */
+  /** Spark's size estimate of a read of the states' fingerprints at `m`
+    * (the exact anti-join's build side) — the number Spark compares with
+    * the same threshold when it plans that join, from the manifest's file
+    * lengths alone; 0 while the table is empty. */
   private[spark] def seenSetBytes(m: states.Manifest): Long =
-    states.sizeInBytes(m, seenSet(m))
+    states.sizeInBytes(m, Seq("fingerprint"))
+
+  /** The states' fingerprints at `m` as the lookup of the exact seen check
+    * at or below the broadcast size: the small side of the membership
+    * test, a hash table held on the driver and probed, not rebuilt from a
+    * scan each epoch. Each states leaf is read once, on the driver with
+    * no Spark job (`BucketStore.readLocal`), and kept while a manifest
+    * lists it with the same deletes (a leaf dir never changes): an epoch
+    * reads only the leaves committed since the last call. A leaf that
+    * leaves the manifest (a compaction) rebuilds the table from the
+    * leaves kept. */
+  private[spark] def seenKeys(m: states.Manifest): Map[UTF8String, Any] = seenLock.synchronized {
+    val listed = m.bucketPaths.valuesIterator.flatten.map(p => p -> m.pathDeletes.get(p)).toMap
+    val kept = seenLeaves.filter { case (p, (d, _)) => listed.get(p).contains(d) }
+    val added = (listed -- kept.keySet).toSeq.sortBy(_._1).map { case (p, d) =>
+      p -> (d, states.readLocal(spark, m, Seq(p), Seq("fingerprint")).collect {
+        case r if !r.isNullAt(0) => r.getUTF8String(0) })
+    }
+    val base = if (kept.size == seenLeaves.size) seenTable
+      else kept.valuesIterator.flatMap(_._2).map(f => f -> f).toMap
+    seenTable = base ++ added.iterator.flatMap(_._2._2).map(f => f -> f)
+    seenLeaves = kept ++ added
+    seenTable
+  }
+  /** drop the driver-held seen set: the Bloom side has taken over */
+  private def dropSeenKeys(): Unit = seenLock.synchronized {
+    seenLeaves = Map.empty
+    seenTable = Map.empty
+  }
+  @transient private lazy val seenLock = new Object
+  /** per states leaf held: its deletes and its fingerprints */
+  @transient private var seenLeaves =
+    Map.empty[String, (Option[Map[String, BucketStore.Deletes]], Vector[UTF8String])]
+  @transient private var seenTable = Map.empty[UTF8String, Any]
 
   /** Merge state rows (fingerprint, state, sbucket) into the states
     * store + refresh the touched buckets' Bloom sidecars incrementally
@@ -1320,10 +1350,8 @@ final class SparkFrontier(
     var budgetDBuckets: Option[Set[Int]] = parentDB
     val wantDB = discovery.exists(_.maxPagesPerDomain > 0) && parentDB.isEmpty
     val statesManifest = states.readManifest()
-    // the exact anti-join's build side, planned once: its size estimate
-    // decides the Bloom side, and the join reads the same scan
-    val seenPersisted = seenSet(statesManifest)
-    val bloomOn = bloomPays(states.sizeInBytes(statesManifest, seenPersisted))
+    val bloomOn = bloomPays(seenSetBytes(statesManifest))
+    if (bloomOn) dropSeenKeys()
     val notSeenPersisted =
       if (statesManifest.bucketPaths.isEmpty)
         // states empty (first epochs): nothing is seen — skip the probe
@@ -1370,13 +1398,11 @@ final class SparkFrontier(
             states.readBuckets(spark, Some(maybeBuckets)).select($"fingerprint"),
             Seq("fingerprint"), "left_anti"))
       } else {
-        // at or below the broadcast size the states' fingerprints are
-        // collected — the rows a broadcast join would ship — into a lookup
-        // bound into the plan: no broadcast exchange, whose job's tasks
-        // compile their stage anew every epoch
-        val seen = spark.sparkContext.broadcast[Map[UTF8String, Any]](
-          labeled("seen set")(SparkFrontier.collectInternal(seenPersisted)).collect {
-            case r if !r.isNullAt(0) => r.getUTF8String(0) -> r.getUTF8String(0) }.toMap)
+        // at or below the broadcast size the states' fingerprints — the
+        // rows a broadcast join would ship — are a lookup the driver holds
+        // (`seenKeys`, no Spark job), bound into the plan: no broadcast
+        // exchange, whose job's tasks compile their stage anew every epoch
+        val seen = spark.sparkContext.broadcast(seenKeys(statesManifest))
         broadcasts += seen
         deduped.filter(bound_lookup(seen, StringType, $"fingerprint").isNull)
       }

@@ -100,6 +100,23 @@ class PngCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("a hostile IHDR size falls back without growing the decode buffer") {
+    // a 45-byte PNG: signature, IHDR declaring w x h truecolor, IEND
+    def declaring(w: Int, h: Int): Array[Byte] = java.nio.ByteBuffer.allocate(45)
+      .put(Array(0x89, 'P', 'N', 'G', 13, 10, 26, 10).map(_.toByte))
+      .putInt(13).put("IHDR".getBytes("US-ASCII")).putInt(w).putInt(h)
+      .put(Array[Byte](8, 2, 0, 0, 0)).putInt(0)
+      .putInt(0).put("IEND".getBytes("US-ASCII")).putInt(0).array()
+    // 300 MB of rows; rows whose Int size wraps to 0; to a negative size
+    for ((w, h) <- Seq((10000, 10000), (0x55555555, 1), (46341, 46341))) {
+      // on a fresh thread, whose scratch buffer starts empty
+      var got: (AnyRef, Int) = null
+      val t = new Thread(() => got = (ImageSynth.decodeStoredPng(declaring(w, h)), ImageSynth.scratchBytes))
+      t.start(); t.join()
+      assert(got == ((null, 0)), s"$w x $h")
+    }
+  }
+
   test("reused JPEG output stream: interleaved sizes stay independent") {
     // encode a larger JPEG, then a smaller one, then the larger again —
     // a stale high-water mark or flushedPos in the reused stream would

@@ -124,20 +124,15 @@ class LeafWriterSpec extends AnyFunSuite with TempDirs {
   for ((placement, frame) <- Seq[(String, (SparkSession, Seq[(String, Option[Long], Int, Int)]) => DataFrame)](
       "driver" -> localFrame, "tasks" -> fileFrame))
     test(s"a write that fails partway ($placement) moves nothing; the version's next append clears it and commits") {
-      // a session whose file system fails the creation of a chosen file
-      val failing = spark.newSession()
-      failing.conf.set("fs.file.impl", classOf[FailingCreateFileSystem].getName)
-      failing.conf.set("fs.file.impl.disable.cache", "true")
       val (first, second) = rows.splitAt(20)
       val s = store(s"graft-leaf-crash-$placement")
       s.append(localFrame(spark, first), 0)
       val v = s.currentVersion
       val (manifest, before) = (s.manifestJson(s.readManifest()), reads(s))
-      val input = frame(failing, second)
+      val input = frame(spark, second)
 
-      FailingCreateFileSystem.created.set(0)
-      FailingCreateFileSystem.failAt.set(2)
-      val e = try intercept[Exception](s.append(input, 1)) finally FailingCreateFileSystem.failAt.set(-1)
+      // the JVM fails the creation of the write's second parquet file
+      val e = FailingCreate.failingAt(2, s.root)(intercept[Exception](s.append(input, 1)))
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(c => String.valueOf(c.getMessage).contains("injected")), e)
       // a failed task's siblings may still be closing their files
@@ -199,20 +194,23 @@ class LeafWriterSpec extends AnyFunSuite with TempDirs {
   }
 }
 
-/** The local file system, failing the creation of the `failAt`-th
-  * parquet file since `created` was last reset (-1: none fails). */
-class FailingCreateFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
-  override def create(f: org.apache.hadoop.fs.Path,
-      permission: org.apache.hadoop.fs.permission.FsPermission, overwrite: Boolean,
-      bufferSize: Int, replication: Short, blockSize: Long,
-      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
-    if (f.getName.endsWith(".parquet") &&
-        FailingCreateFileSystem.created.incrementAndGet() == FailingCreateFileSystem.failAt.get)
-      throw new java.io.IOException(s"injected: create $f")
-    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+/** Fails the creation of a chosen parquet file in this JVM: the leaf
+  * writer creates its files through java.nio, which asks the security
+  * manager before it opens a file for writing. */
+object FailingCreate {
+  /** `body`, during which the JVM fails the creation of the `n`-th
+    * parquet file under `root` it opens for writing; any other access is
+    * allowed */
+  def failingAt[T](n: Int, root: String)(body: => T): T = {
+    val created = new AtomicInteger
+    val manager = new SecurityManager {
+      override def checkPermission(p: java.security.Permission): Unit = ()
+      override def checkPermission(p: java.security.Permission, context: Any): Unit = ()
+      override def checkWrite(file: String): Unit =
+        if (file.startsWith(root) && file.endsWith(".parquet") && created.incrementAndGet() == n)
+          throw new SecurityException(s"injected: create $file")
+    }
+    System.setSecurityManager(manager)
+    try body finally System.setSecurityManager(null)
   }
-}
-object FailingCreateFileSystem {
-  val created = new AtomicInteger
-  val failAt = new AtomicInteger(-1)
 }

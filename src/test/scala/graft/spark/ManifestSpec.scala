@@ -194,6 +194,21 @@ class ManifestSpec extends AnyFunSuite with TempDirs {
       deletes: Map[String, Map[String, BucketStore.Deletes]]): BucketStore =
     edited(s)(_.copy(pathDeletes = deletes))
 
+  /** The reads of a store's whole table: in Spark tasks, and on the
+    * driver with no job (`readLocal`, the seen set's read); a hostile
+    * manifest must fail both the same way. */
+  private def reads(s: BucketStore): Seq[(String, () => Seq[Row])] = {
+    val spark = SparkTestBase.spark
+    val schema = s.emptySchema.get
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(schema)
+    Seq("tasks" -> (() => s.read(spark).collect().toSeq),
+      "driver" -> { () =>
+        val m = s.readManifest()
+        s.readLocal(spark, m, m.bucketPaths.valuesIterator.flatten.toSeq, schema.fieldNames.toSeq)
+          .map(r => toRow(r).asInstanceOf[Row])
+      })
+  }
+
   /** the messages of `e` and of its causes */
   private def messages(e: Throwable): String =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
@@ -214,8 +229,11 @@ class ManifestSpec extends AnyFunSuite with TempDirs {
     def deleting(pos: Int) = withDeletes(s,
       Map(p -> Map(name -> BucketStore.Deletes.of(org.roaringbitmap.RoaringBitmap.bitmapOf(pos)))))
     assert(deleting(3).read(spark).count() == 3, "the last row's position deletes it")
-    val e = intercept[Exception](deleting(4).read(spark).collect())
-    assert(messages(e).contains(name) && messages(e).contains("position 4"), messages(e))
+    for ((side, read) <- reads(deleting(3))) assert(read().size == 3, side)
+    for ((side, read) <- reads(deleting(4))) {
+      val e = intercept[Exception](read())
+      assert(messages(e).contains(name) && messages(e).contains("position 4"), s"$side: ${messages(e)}")
+    }
   }
 
   test("a delete whose bitmap differs from its recorded cardinality fails the read, naming the file") {
@@ -224,8 +242,10 @@ class ManifestSpec extends AnyFunSuite with TempDirs {
     val dv = BucketStore.Deletes.of(org.roaringbitmap.RoaringBitmap.bitmapOf(0, 2))
     val hostile = withDeletes(s, Map(p -> Map(name -> dv.copy(cardinality = 3))))
     assert(hostile.readManifest().liveRows(p).contains(1L), "fixture: the manifest counts 1 live row")
-    val e = intercept[Exception](hostile.read(spark).collect())
-    assert(messages(e).contains(name) && messages(e).contains("records 3"), messages(e))
+    for ((side, read) <- reads(hostile)) {
+      val e = intercept[Exception](read())
+      assert(messages(e).contains(name) && messages(e).contains("records 3"), s"$side: ${messages(e)}")
+    }
   }
 
   test("a file length or row count in the manifest that differs from the file's fails the read or reads the file whole") {
@@ -236,22 +256,25 @@ class ManifestSpec extends AnyFunSuite with TempDirs {
     val rows = s.read(spark).collect().toSeq
     // the parquet reader finds the footer at the file's own length and
     // reads the row groups whose midpoint lies within the recorded one
-    for (wrong <- Seq(0L, 1L, len / 4, len / 2, len - 1, len + 1, 2 * len)) {
-      val hostile = edited(s)(m => m.copy(pathFiles = Map(p -> Map(name -> wrong))))
-      scala.util.Try(hostile.read(spark).collect().toSeq) match {
-        case scala.util.Success(got) => assert(got == rows, s"length $wrong")
+    for (wrong <- Seq(0L, 1L, len / 4, len / 2, len - 1, len + 1, 2 * len);
+         (side, read) <- reads(edited(s)(m => m.copy(pathFiles = Map(p -> Map(name -> wrong)))))) {
+      scala.util.Try(read()) match {
+        case scala.util.Success(got) => assert(got == rows, s"$side, length $wrong")
         case scala.util.Failure(e) =>
           assert(messages(e).contains(name) && messages(e).contains("the manifest records 4"),
-            s"length $wrong: ${messages(e)}")
+            s"$side, length $wrong: ${messages(e)}")
       }
     }
-    val e = intercept[Exception](
-      edited(s)(m => m.copy(pathFiles = Map(p -> Map(name -> 0L)))).read(spark).collect())
-    assert(messages(e).contains(s"$name: its path's 1 file(s) hold 0 rows"), messages(e))
-    val e2 = intercept[Exception](edited(s)(m =>
-      m.copy(pathFiles = Map(p -> Map(name -> len)), pathRows = Map(p -> 5L))).read(spark).collect())
-    assert(messages(e2).contains(s"$name: its path's 1 file(s) hold 4 rows, the manifest records 5"),
-      messages(e2))
+    for ((side, read) <- reads(edited(s)(m => m.copy(pathFiles = Map(p -> Map(name -> 0L)))))) {
+      val e = intercept[Exception](read())
+      assert(messages(e).contains(s"$name: its path's 1 file(s) hold 0 rows"), s"$side: ${messages(e)}")
+    }
+    for ((side, read) <- reads(edited(s)(m =>
+        m.copy(pathFiles = Map(p -> Map(name -> len)), pathRows = Map(p -> 5L))))) {
+      val e2 = intercept[Exception](read())
+      assert(messages(e2).contains(s"$name: its path's 1 file(s) hold 4 rows, the manifest records 5"),
+        s"$side: ${messages(e2)}")
+    }
   }
 
   test("deletes name referenced files through append, dequeue, replacePaths, compact and a full drain") {
